@@ -2,7 +2,8 @@
 frontier/seen/ledger tables, one atomic commit per crawl round).
 
 tables.JobStateStore (plain parquet + atomic manifest renames) is the
-sandbox implementation; IcebergJobStateStore is the cluster skeleton.
+one implementation; an Iceberg-backed store would follow the mapping
+table below.
 The engine reaches its catalog ONLY through this protocol
 (plans/frontier.py FrontierEngine.store_backend), so swapping backends
 is a one-attribute change and the full test suite runs against whichever
@@ -81,39 +82,3 @@ class CatalogBackend(Protocol):
     def metrics_paths(self) -> List[str]: ...
     def vacuum(self, staging_age_s: float = 3600.0) -> Dict[str, int]: ...
 
-
-_ICEBERG_MSG = (
-    "IcebergJobStateStore requires a Spark session with the Iceberg "
-    "runtime (spark.sql.catalog.<name> = org.apache.iceberg.spark."
-    "SparkCatalog), which this sandbox does not ship. Use "
-    "tables.JobStateStore (the parquet+CAS stand-in) — the engine is "
-    "backend-agnostic through CatalogBackend."
-)
-
-
-class IcebergJobStateStore:
-    """Cluster skeleton: same surface as JobStateStore, backed by an
-    Iceberg catalog (see the module docstring's mapping table). Every
-    method raises until the Iceberg runtime is present — constructing it
-    in-sandbox fails fast with the reason, so a mis-wired deployment
-    cannot silently fall through to local files."""
-
-    def __init__(self, spark, catalog: str, namespace: str, job_id: str):
-        confs = spark.sparkContext.getConf().getAll()
-        if not any(
-            k == f"spark.sql.catalog.{catalog}" and "iceberg" in v.lower()
-            for k, v in confs
-        ):
-            raise NotImplementedError(_ICEBERG_MSG)
-        self.spark = spark
-        self.catalog = catalog
-        self.namespace = namespace
-        self.job_id = job_id
-        self.dir = f"{catalog}.{namespace}.{job_id}"
-
-    def __getattr__(self, name: str):
-        # reached only for names not set on the instance: every protocol
-        # method lands here until the real implementation exists
-        if name.startswith("_"):
-            raise AttributeError(name)
-        raise NotImplementedError(f"{name}: {_ICEBERG_MSG}")

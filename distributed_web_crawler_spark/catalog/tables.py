@@ -7,9 +7,9 @@ The Iceberg runtime jar is not available in this container, so this module
 provides the same two commit primitives with plain parquet + atomic manifest
 renames (`os.replace`). The cluster swap is CODE, not prose: the engine
 reaches its catalog only through the `CatalogBackend` protocol
-(catalog/backend.py — with the per-method Iceberg mapping table and the
-`IcebergJobStateStore` skeleton); this class is the sandbox implementation
-of that protocol, verified by tests/test_catalog_backend.py:
+(catalog/backend.py — with the per-method Iceberg mapping table); this
+class is the sandbox implementation of that protocol, verified by
+tests/test_catalog_backend.py:
 
 * ``JobStateStore`` — per-crawl-job round log. Each round directory holds
   ONE bucket-partitioned parquet file-set of the round's newly-discovered

@@ -1,17 +1,11 @@
 """CatalogBackend seam (catalog/backend.py, r7 VERDICT #8): the parquet
 stand-in satisfies the protocol the engine codes against, the engine's
-store factory routes through it, the protocol's surface matches what
-FrontierEngine actually calls, and the Iceberg skeleton refuses cleanly
-in-sandbox instead of silently falling back to local files."""
+store factory routes through it, and the protocol's surface matches what
+FrontierEngine actually calls."""
 
 import re
 
-import pytest
-
-from distributed_web_crawler_spark.catalog.backend import (
-    CatalogBackend,
-    IcebergJobStateStore,
-)
+from distributed_web_crawler_spark.catalog.backend import CatalogBackend
 from distributed_web_crawler_spark.catalog.tables import JobStateStore
 
 
@@ -61,7 +55,3 @@ def test_protocol_covers_every_engine_call(tmp_path):
     missing = calls - members
     assert not missing, f"engine calls outside the protocol: {sorted(missing)}"
 
-
-def test_iceberg_skeleton_refuses_cleanly(spark):
-    with pytest.raises(NotImplementedError, match="Iceberg runtime"):
-        IcebergJobStateStore(spark, "ice", "crawl", "j1")

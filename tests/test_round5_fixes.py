@@ -136,14 +136,3 @@ def test_bfs_releases_interim_caches(spark):
     release_checkpoint(out)
     assert not (set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before)
 
-
-def test_shared_pool_knob_collapses_pools(spark, monkeypatch):
-    """SPARK_GRAFT_SHARED_POOL=1 (the FIFO-vs-FAIR A/B knob for scaling
-    campaigns) routes every engine thread into one shared pool."""
-    monkeypatch.setenv("SPARK_GRAFT_SHARED_POOL", "1")
-
-    def probe():
-        return spark.sparkContext.getLocalProperty("spark.scheduler.pool")
-
-    pools = {_pool_submit(spark, probe).result() for _ in range(6)}
-    assert pools == {"frontier-shared"}

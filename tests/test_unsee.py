@@ -5,9 +5,9 @@ The reference's only forget mechanism is Redis cache-TTL expiry
 then re-crawl everything. On the persistent 10^10-row seen table the
 analog is a targeted merge-on-read delete: one committed tombstone round
 suppresses older seen rows at read time (both in the DataFrame view and
-in the probe's numpy exact re-check), the cuckoo filter deletes the
-hashes exactly (bloom stays stale-positive and is rescued by the exact
-re-check), compaction folds the deletes physically, vacuum reclaims the
+in the probe's numpy exact re-check), the Bloom blobs keep their stale
+positive bits and the exact re-check rescues those URLs as new,
+compaction folds the deletes physically, vacuum reclaims the
 delete files, and `reseed=True` re-enters the URLs at their ORIGINAL
 depths in the same atomic commit so a resume re-fetches their payloads
 without disturbing the client payload's depth structure."""
@@ -20,11 +20,10 @@ from distributed_web_crawler_spark.plans.frontier import EngineConfig, FrontierE
 from distributed_web_crawler_spark.plans.ledger import CrawlService, JobCache, JobLedger
 
 
-def _engine(spark, corpus_1k, tmp_path, **cfg):
+def _engine(spark, corpus_1k, tmp_path):
     spec, path = corpus_1k
-    kw = dict(use_bloom=True, seen_buckets=8, compact_seen_every=None)
-    kw.update(cfg)
-    eng = FrontierEngine(spark, str(tmp_path / "wh"), path, spec, EngineConfig(**kw))
+    cfg = EngineConfig(use_bloom=True, seen_buckets=8, compact_seen_every=None)
+    eng = FrontierEngine(spark, str(tmp_path / "wh"), path, spec, cfg)
     seed_i = next(i for i in range(spec.n) if len(C.out_links(i, spec)) >= 3)
     return eng, spec, seed_i
 
@@ -51,9 +50,8 @@ def _pick_victims(rows, k=3):
     return out[:k]
 
 
-@pytest.mark.parametrize("seen_filter", ["cuckoo", "bloom"])
-def test_unsee_suppresses_everywhere(spark, corpus_1k, tmp_path, seen_filter):
-    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path, seen_filter=seen_filter)
+def test_unsee_suppresses_everywhere(spark, corpus_1k, tmp_path):
+    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path)
     eng.run_job("u1", C.url_of(seed_i, spec), 3)
     before = _seen_rows(eng, "u1")
     victims = _pick_victims(before)
@@ -67,12 +65,12 @@ def test_unsee_suppresses_everywhere(spark, corpus_1k, tmp_path, seen_filter):
 
     # idempotent: the gate is the (already suppressed) exact seen view
     assert eng.unsee_urls("u1", victims)["n_unseen"] == 0
-    # unknown URLs are never tombstoned (cuckoo delete contract)
+    # unknown URLs are never tombstoned (the gate is the exact seen table)
     assert eng.unsee_urls("u1", ["https://crawl.test/nope/x"])["n_unseen"] == 0
 
     # the PROBE view agrees with the DataFrame view: unseen URLs come back
     # fresh, still-seen URLs stay filtered — this exercises the numpy
-    # bucket_seen suppression (and for bloom, the stale-positive rescue)
+    # bucket_seen suppression and the stale-positive rescue
     store = eng.store("u1")
     still = [u for _h, u, _d in after][:3]
     keyed = eng._with_keys(
@@ -95,32 +93,8 @@ def test_unsee_suppresses_everywhere(spark, corpus_1k, tmp_path, seen_filter):
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_cuckoo_blob_membership_deleted(spark, corpus_1k, tmp_path):
-    from distributed_web_crawler_spark.functions import cuckoo as CK
-    from distributed_web_crawler_spark.functions import urls as U
-
-    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path, seen_filter="cuckoo")
-    eng.run_job("u2", C.url_of(seed_i, spec), 3)
-    victims = _pick_victims(_seen_rows(eng, "u2"))
-    eng.unsee_urls("u2", victims)
-
-    store = eng.store("u2")
-    keyed = eng._with_keys(
-        spark.createDataFrame(pd.DataFrame({"url": victims}))
-    ).collect()
-    blobs = store.bloom_blobs()
-    import numpy as np
-
-    for row in keyed:
-        filt = CK.load_blobs(blobs[row["seen_bucket"]], eng.cfg.cuckoo)
-        assert not CK.contains(
-            filt, np.array([row["url_hash"]], dtype=np.int64), eng.cfg.cuckoo
-        )[0]
-
-
-@pytest.mark.parametrize("seen_filter", ["cuckoo", "bloom"])
-def test_unsee_reseed_recrawls_at_original_depths(spark, corpus_1k, tmp_path, seen_filter):
-    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path, seen_filter=seen_filter)
+def test_unsee_reseed_recrawls_at_original_depths(spark, corpus_1k, tmp_path):
+    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path)
     seed = C.url_of(seed_i, spec)
     eng.run_job("u3", seed, 3)
     before = _seen_rows(eng, "u3")
@@ -145,7 +119,7 @@ def test_unsee_reseed_recrawls_at_original_depths(spark, corpus_1k, tmp_path, se
 
 
 def test_compaction_folds_tombstones_and_vacuum_reclaims(spark, corpus_1k, tmp_path):
-    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path, seen_filter="cuckoo")
+    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path)
     eng.run_job("u4", C.url_of(seed_i, spec), 3)
     victims = _pick_victims(_seen_rows(eng, "u4"))
     eng.unsee_urls("u4", victims)
@@ -177,7 +151,7 @@ def test_unsee_matching_predicate_delete(spark, corpus_1k, tmp_path):
     """DELETE FROM seen WHERE ... — predicate deletes evaluated over the
     suppressed view, with the same atomic reseed path. Host-granularity
     recrawl is the target scenario (a host's content changed)."""
-    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path, seen_filter="cuckoo")
+    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path)
     seed = C.url_of(seed_i, spec)
     eng.run_job("u7", seed, 3)
     before = {(r["url"], r["depth"]) for r in eng.seen_df("u7").collect()}
@@ -213,7 +187,7 @@ def test_unsee_crash_before_commit_is_swept(spark, corpus_1k, tmp_path):
     contract as a crawl round."""
     import os
 
-    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path, seen_filter="cuckoo")
+    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path)
     eng.run_job("u6", C.url_of(seed_i, spec), 3)
     before = _seen_rows(eng, "u6")
     victims = _pick_victims(before)
@@ -261,7 +235,7 @@ def _fold_changes(rows, state=None):
 
 
 def test_seen_changes_changelog(spark, corpus_1k, tmp_path):
-    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path, seen_filter="cuckoo")
+    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path)
     seed = C.url_of(seed_i, spec)
     eng.run_job("u5", seed, 3)
     victims = _pick_victims(_seen_rows(eng, "u5"))
@@ -298,7 +272,7 @@ def test_time_travel_snapshots(spark, corpus_1k, tmp_path):
     readable snapshot; compaction alone never expires one (covered files
     survive until vacuum); vacuum expires exactly the snapshots whose
     rounds it swept, while the post-compaction snapshot stays readable."""
-    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path, seen_filter="cuckoo")
+    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path)
     seed = C.url_of(seed_i, spec)
     eng.run_job("tt", seed, 3)
     store = eng.store("tt")
@@ -341,7 +315,7 @@ def test_seen_round_retention_and_aged_recrawl(spark, corpus_1k, tmp_path):
     cross-checked against the changelog's insert rounds, retained through
     compaction+vacuum (not collapsed to the compaction's upto) — the
     column that makes aged/TTL recrawl a predicate delete."""
-    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path, seen_filter="cuckoo")
+    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path)
     seed = C.url_of(seed_i, spec)
     eng.run_job("a1", seed, 3)
 
@@ -385,7 +359,7 @@ def test_reseed_under_politeness_and_robots(spark, corpus_1k, tmp_path):
     spec, path = corpus_1k
     eng = FrontierEngine(
         spark, str(tmp_path / "wh"), path, spec,
-        EngineConfig(use_bloom=True, seen_buckets=8, seen_filter="cuckoo",
+        EngineConfig(use_bloom=True, seen_buckets=8,
                      politeness=PolitenessPolicy(), robots=RobotsPolicy()),
     )
     seed_i = next(i for i in range(spec.n) if len(C.out_links(i, spec)) >= 3)
@@ -409,7 +383,7 @@ def test_service_recrawl_refreshes_cache(spark, corpus_1k, tmp_path):
     wh = str(tmp_path / "wh")
     eng = FrontierEngine(
         spark, wh, path, spec,
-        EngineConfig(use_bloom=True, seen_buckets=8, seen_filter="cuckoo"),
+        EngineConfig(use_bloom=True, seen_buckets=8),
     )
     svc = CrawlService(engine=eng, ledger=JobLedger(wh), cache=JobCache(wh))
     seed_i = next(i for i in range(spec.n) if len(C.out_links(i, spec)) >= 3)
@@ -438,50 +412,50 @@ def test_service_recrawl_refreshes_cache(spark, corpus_1k, tmp_path):
     svc.ledger.complete("J1")
 
 
-def test_cuckoo_unsee_rebuilds_blobs_from_live_rows(spark, corpus_1k, tmp_path):
-    """After an unsee, the committed cuckoo blobs must (a) contain EVERY
-    live seen hash — the no-false-negative invariant that an in-place
-    delete_hashes breaks when a deleted and a surviving key share
-    (bucket, fingerprint) — and (b) actually drop the victims (filter
-    tightness, the point of the cuckoo arm over bloom)."""
+def test_unsee_blobs_keep_every_live_hash(spark, corpus_1k, tmp_path):
+    """After an unsee, with and without reseed, the committed Bloom blobs
+    must contain EVERY live seen hash: a miss would be trusted as
+    definitely-new and crawl the URL twice."""
     import numpy as np
 
-    from distributed_web_crawler_spark.functions import cuckoo as CK
+    from distributed_web_crawler_spark.functions import bloom as B
 
-    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path, seen_filter="cuckoo")
-    eng.run_job("u8", C.url_of(seed_i, spec), 3)
-    before = _seen_rows(eng, "u8")
-    victims = _pick_victims(before)
-    eng.unsee_urls("u8", victims)
+    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path)
+    for job, reseed in (("u8", False), ("u8r", True)):
+        eng.run_job(job, C.url_of(seed_i, spec), 3)
+        eng.unsee_urls(job, _pick_victims(_seen_rows(eng, job)), reseed=reseed)
 
-    store = eng.store("u8")
-    live = eng.seen_df("u8").select("url_hash", "seen_bucket").collect()
-    victim_hashes = {h for h, u, _d in before if u in set(victims)}
-    by_bucket: dict = {}
-    for r in live:
-        by_bucket.setdefault(r["seen_bucket"], []).append(r["url_hash"])
-    blobs = store.bloom_blobs()
-    _FM, params = eng._seen_filter()
-    for bucket, hashes in by_bucket.items():
-        filt = CK.load_blobs(blobs.get(bucket), params)
-        assert CK.contains(filt, np.array(hashes, dtype=np.int64), params).all(), bucket
-        gone = np.array(
-            [h for h in victim_hashes if h % eng.cfg.seen_buckets == bucket],
-            dtype=np.int64,
-        )
-        if len(gone):
-            # deterministic corpus → a flip here is a real regression, not flake
-            assert not CK.contains(filt, gone, params).any(), bucket
+        by_bucket: dict = {}
+        for r in eng.seen_df(job).select("url_hash", "seen_bucket").collect():
+            by_bucket.setdefault(r["seen_bucket"], []).append(r["url_hash"])
+        blobs = eng.store(job).bloom_blobs()
+        for bucket, hashes in by_bucket.items():
+            filt = B.load_blobs(blobs.get(bucket), eng.cfg.bloom)
+            assert B.contains(filt, np.array(hashes, dtype=np.int64), eng.cfg.bloom).all(), (
+                job, bucket,
+            )
 
 
 def test_seen_filter_config_is_pinned_per_job(spark, corpus_1k, tmp_path):
     """ADVICE r7: resuming a job store under a different seen-filter
-    config silently reinterprets the blob bytes (bloom bits as a cuckoo
-    table or vice versa) — false negatives duplicate crawls with no
-    error. The seed commit records the filter identity; resume/unsee
-    under any other kind, params, bucket count, or use_bloom raises."""
-    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path, seen_filter="bloom")
-    eng.run_job("u9", C.url_of(seed_i, spec), 2)
+    config silently reinterprets the blob bytes — false negatives
+    duplicate crawls with no error. The seed commit records the filter
+    identity; resume/unsee under any other kind, params, bucket count, or
+    use_bloom raises."""
+    import json
+
+    from distributed_web_crawler_spark.functions.bloom import BloomParams
+
+    eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path)
+    seed = C.url_of(seed_i, spec)
+    eng.run_job("u9", seed, 2)
+    store = eng.store("u9")
+    # the persisted identity keeps the layout every earlier bloom store
+    # was written with, so those stores resume unchanged
+    assert store.read_commit(0)["seen_filter"] == {
+        "kind": "bloom", "seen_buckets": 8, "use_bloom": True,
+        "n_bits": BloomParams().n_bits, "n_hashes": BloomParams().n_hashes,
+    }
 
     def resumed(**cfg):
         kw = dict(use_bloom=True, seen_buckets=8, compact_seen_every=None)
@@ -491,14 +465,20 @@ def test_seen_filter_config_is_pinned_per_job(spark, corpus_1k, tmp_path):
         )
 
     with pytest.raises(ValueError, match="seen-filter config mismatch"):
-        resumed(seen_filter="cuckoo").run_job("u9", C.url_of(seed_i, spec), 2)
-    with pytest.raises(ValueError, match="seen-filter config mismatch"):
         resumed(seen_buckets=16).unsee_urls("u9", ["https://crawl.test/x"])
     with pytest.raises(ValueError, match="seen-filter config mismatch"):
-        resumed(use_bloom=False).run_job("u9", C.url_of(seed_i, spec), 2)
-    from distributed_web_crawler_spark.functions.bloom import BloomParams
-
+        resumed(use_bloom=False).run_job("u9", seed, 2)
     with pytest.raises(ValueError, match="seen-filter config mismatch"):
-        resumed(bloom=BloomParams(n_bits=1 << 16)).run_job("u9", C.url_of(seed_i, spec), 2)
+        resumed(bloom=BloomParams(n_bits=1 << 16)).run_job("u9", seed, 2)
     # the ORIGINAL config keeps working (resume of a done job is a no-op)
-    assert resumed().run_job("u9", C.url_of(seed_i, spec), 2)["done"]
+    assert resumed().run_job("u9", seed, 2)["done"]
+
+    # a store left by the removed cuckoo filter: its blob bytes are not
+    # bloom bits, so resuming it must fail instead of probing them
+    for r in store.committed_rounds():
+        info = store.read_commit(r)
+        info["seen_filter"]["kind"] = "cuckoo"
+        with open(store._commit_path(r), "w") as f:
+            json.dump(info, f)
+    with pytest.raises(ValueError, match="seen-filter config mismatch"):
+        resumed().run_job("u9", seed, 2)
