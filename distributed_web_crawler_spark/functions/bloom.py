@@ -12,12 +12,14 @@ Design (scale-first):
   url_hashes by bucket; each group task reads the bucket's previous blob
   from shared storage, ORs in the new bits (numpy, vectorized), writes the
   staged blob for the next commit. The driver never sees the hashes.
-* Probe runs partition-wise: candidates are exchanged by bucket and a
-  ``mapInPandas`` task loads only its bucket's blob from storage (no
-  broadcast of the full filter set — at 10^10 URLs the blobs total tens of
-  GB, far beyond broadcast). Bloom NEGATIVES are guaranteed-new (no false
-  negatives); POSITIVES go to an exact anti-join against the (bucket-pruned)
-  seen table, so a false positive can never lose a URL (SURVEY.md §5.3).
+* The probe runs in the same bucket task as the blob update: the round's
+  raw candidates are grouped by bucket, and each group task loads only its
+  bucket's blob (no broadcast of the full filter set — at 10^10 URLs the
+  blobs total tens of GB, far beyond broadcast), probes its deduplicated
+  hashes, then ORs the fresh ones into that same filter. Bloom NEGATIVES
+  are guaranteed-new (no false negatives); POSITIVES are re-checked exactly
+  against that bucket's seen hashes, so a false positive can never lose a
+  URL (SURVEY.md §5.3).
 
 Double hashing (Kirsch–Mitzenmacher): position_j = h1 + j*h2 mod m, with
 h1/h2 split from the 64-bit xxhash — the standard public construction.

@@ -4,7 +4,7 @@ This is the Spark-first re-expression of the reference master's drain loop
 (Server/Cluster/Master/master.go:270-299, 620-686): the per-depth task maps
 become a frontier table, the worker RPC fan-out becomes one vectorized
 fetch-join + extraction stage per sub-round, the mutex-guarded visited maps
-become a partitioned Bloom-filtered seen table probed by anti-join, and the
+become a partitioned Bloom-filtered seen table probed inside the write, and the
 depth barrier becomes the natural action barrier between rounds. One atomic
 commit per sub-round (catalog/tables.py) is the resume anchor — strictly
 better than the reference's from-scratch job reassignment
@@ -17,12 +17,14 @@ Scale shape per round (what survives 1000 executors × 100 TB):
   storage buckets the round touches — never a full corpus scan, and the
   binary `bytes` column is only read by the optional payload-verify stage
   (column pruning, SURVEY.md §7 risk (e)).
-* dedup: Bloom probe partition-wise by seen-bucket (no broadcast of blobs),
-  exact anti-join only on Bloom positives against the seen parquet pruned
-  to the positives' own buckets (PartitionFilters). False positives
-  re-check exactly; URLs are never lost. Per-round seen deltas are merged
-  by compact_seen every cfg.compact_seen_every rounds, so both the
-  re-check and result reads list O(1) roots regardless of crawl age.
+* dedup: no stage of its own. The raw candidate stream goes straight to
+  the bucketed write (ONE exchange, by seen-bucket); each write task dedups
+  its group with numpy, probes the bucket's Bloom blob (no broadcast of
+  blobs) and exact-checks only the positives against that bucket's seen
+  hashes, so false positives are rescued and URLs are never lost. Per-round
+  seen deltas are merged by compact_seen every cfg.compact_seen_every
+  rounds, so both the re-check and result reads list O(1) roots regardless
+  of crawl age.
 * politeness window: one shuffle by host, budgets data-determined so
   local[8] and local[32] produce identical admissions.
 * writes: the round's new URLs are written ONCE, bucket-partitioned, in a
@@ -108,8 +110,8 @@ class EngineConfig:
     # an unbounded in-memory frame — the guard holds even when an operator
     # leaves seen_buckets at a value too small for their crawl
     max_group_rows: int = 2_000_000
-    # count the per-round candidate set (extra materialization of the
-    # extract+dedup pipeline) — rich metrics for tests, off for benchmarks
+    # count the robots-blocked candidates per round (n_blocked; an extra
+    # job per round) — rich metrics for tests, off for benchmarks
     detailed_metrics: bool = True
     # merge per-round seen deltas into one bucketed table whenever the
     # component count exceeds this (0/None disables). Keeps the per-round
@@ -162,6 +164,11 @@ class RoundStats:
     n_blocked: int
     n_pending_after: int
     wall_ms: int
+    # Bloom positives among the distinct candidates, and how many of them
+    # the exact re-check found unseen (filter false positives plus stale
+    # bits of unseen URLs); 0 without the Bloom filter
+    n_probe_pos: int = 0
+    n_probe_fp: int = 0
 
 
 class FrontierEngine:
@@ -372,130 +379,24 @@ class FrontierEngine:
         return os.path.relpath(path, store.dir)
 
     # ------------------------------------------------------------ seen probe
-    def _filter_new(self, store: JobStateStore, keyed: DataFrame, persisted: Optional[list] = None):
-        """Within-round dedup (U3) fused with the seen anti-join (U2/J1).
-        Input is the round's keyed candidate stream WITH duplicates; returns
-        (fresh, deduped) where `deduped` is the distinct candidate view
-        (for metrics).
-
-        Bloom path — ONE exchange total: the probe's fine key is a pure
-        function of url_hash, so hash-partitioning by it co-locates every
-        duplicate; the probe task drops duplicates per partition (a running
-        per-partition hash set across its Arrow batches) and Bloom-checks
-        the survivors in the same pass. The separate dropDuplicates
-        exchange this replaces shuffled the full candidate set a second
-        time per round. Exact re-check of positives then scans ONLY the
-        positives' own seen buckets (PartitionFilter-pruned) — re-check
-        cost tracks the FP count, not seen-set age or size."""
-        if not self.cfg.use_bloom or not store.seen_paths():
-            deduped = keyed.dropDuplicates(["url_hash"]).persist()
-            if persisted is not None:
-                persisted.append(deduped)
-            if not store.seen_paths():
-                return deduped, deduped
-            fresh = deduped.join(self._seen_df(store).select("url_hash"), "url_hash", "left_anti")
-            return fresh, deduped
-
-        blobs = {b: p for b, p in store.bloom_blobs().items()}
-        params = self.cfg.bloom
-        # exact re-check INPUTS for filter positives: a Bloom false
-        # positive must never lose a URL. The re-check runs INSIDE the
-        # probe task (numpy isin against the positive buckets' own seen
-        # url_hash column, loaded lazily per bucket from these roots) —
-        # the r6 layout ran it as a separate anti-join whose subplan
-        # executed lazily inside the fused WRITE job, adding a positives
-        # exchange + a seen-scan stage to every round's writes_ms while
-        # the write tasks themselves measured ~0 (profiled r7). IO is
-        # still bucket-pruned: a task reads a bucket's hashes only when
-        # that bucket has positives this round; buckets with none cost
-        # nothing — re-check IO tracks the positive set, not crawl age.
-        # (The fine_key refinement below can split one bucket across up
-        # to 8 tasks, so a hot bucket's hash column may be read up to 8×;
-        # at 10^10 scale seen_buckets ≫ cores, the refinement disappears
-        # and each touched bucket loads exactly once.)
-        def _abs(p: str) -> str:
-            return os.path.join(store.dir, p) if not os.path.isabs(p) else p
-
-        seen_roots = [(c, _abs(p)) for c, p in store.seen_components()]
-        # tombstone suppression (unsee_urls): a tombstone from round t kills
-        # matching hashes from components with effective round < t only —
-        # identical to the _seen_df merge-on-read rule, applied in numpy so
-        # the probe's exact re-check can never resurrect an unseen URL
-        tomb_roots = [(t, _abs(p)) for t, p in store.tombstone_components()]
-
-        def dedup_probe(batches):
-            import glob as _glob
-
-            import numpy as np
-            import pandas as pd  # noqa: F401
-            import pyarrow.parquet as _pq
-
-            cache: dict = {}
-            seen_arr: dict = {}
-            seen_hashes: set = set()  # per-PARTITION dedup state (one task = one partition)
-
-            def load_hashes(root: str, bucket: int) -> np.ndarray:
-                parts = []
-                for f in sorted(_glob.glob(os.path.join(root, f"seen_bucket={bucket}", "*.parquet"))):
-                    parts.append(_pq.read_table(f, columns=["url_hash"])["url_hash"].to_numpy())
-                return np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
-
-            def bucket_seen(bucket: int) -> np.ndarray:
-                arr = seen_arr.get(bucket)
-                if arr is None:
-                    tl = [(t, load_hashes(root, bucket)) for t, root in tomb_roots]
-                    parts = []
-                    for c, root in seen_roots:
-                        a = load_hashes(root, bucket)
-                        if len(a):
-                            kills = [ta for t, ta in tl if t > c and len(ta)]
-                            if kills:
-                                a = a[~np.isin(a, np.concatenate(kills))]
-                        parts.append(a)
-                    arr = np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
-                    seen_arr[bucket] = arr
-                return arr
-
-            for pdf in batches:
-                pdf = pdf[~pdf["url_hash"].isin(seen_hashes)].drop_duplicates("url_hash")
-                seen_hashes.update(pdf["url_hash"].tolist())
-                out = []
-                for bucket, grp in pdf.groupby("seen_bucket"):
-                    filt = cache.get(bucket)
-                    if filt is None:
-                        filt = B.load_blobs(blobs.get(int(bucket)), params)
-                        cache[bucket] = filt
-                    hashes = grp["url_hash"].to_numpy()
-                    maybe = B.contains(filt, hashes, params)
-                    seen_flag = maybe
-                    if maybe.any():
-                        # exact membership for the positives only: False =
-                        # filter FP, rescued right here instead of via a
-                        # downstream anti-join
-                        seen_flag = maybe.copy()
-                        seen_flag[maybe] = np.isin(hashes[maybe], bucket_seen(int(bucket)))
-                    g = grp.copy()
-                    g["maybe_seen"] = seen_flag
-                    out.append(g)
-                yield pd.concat(out) if out else pdf.assign(maybe_seen=False)
-
-        schema = keyed.schema.add("maybe_seen", "boolean")
-        # exchange on a refinement of seen_bucket (multiple-of-buckets key):
-        # each task still touches few blobs, but every reducer gets work
-        # (hashing on the bucket alone leaves ~37% of reducers empty)
-        fine_key = F.pmod(F.col("url_hash"), F.lit(self.cfg.seen_buckets * 8))
-        n_par = 2 * self.spark.sparkContext.defaultParallelism  # finer tasks smooth stragglers
-        probed = keyed.repartition(n_par, fine_key).mapInPandas(dedup_probe, schema=schema)
-        probed = probed.persist()
-        if persisted is not None:
-            persisted.append(probed)
-        # maybe_seen is now EXACT (filter positives were re-checked in-task)
-        fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        return fresh, probed
+    def _filter_new(self, store: JobStateStore, keyed: DataFrame, persisted: list):
+        """Within-round dedup (U3) and the exact seen anti-join (U2/J1) for
+        engines WITHOUT the Bloom filter. Input is the round's keyed
+        candidate stream WITH duplicates; returns (fresh, deduped) where
+        `deduped` is the distinct candidate view (persisted into
+        `persisted`, for metrics).
+        The Bloom path never comes here: its dedup, probe and exact re-check
+        run inside the fused write task (_write_bucketed with probe=True)."""
+        deduped = keyed.dropDuplicates(["url_hash"]).persist()
+        persisted.append(deduped)
+        if not store.seen_paths():
+            return deduped, deduped
+        fresh = deduped.join(self._seen_df(store).select("url_hash"), "url_hash", "left_anti")
+        return fresh, deduped
 
     def _write_bucketed(
         self, store: JobStateStore, out_dir: str, rows: DataFrame, bloom_round: Optional[int] = None,
-        slice_col: Optional[str] = None, approx_rows: Optional[int] = None,
+        slice_col: Optional[str] = None, approx_rows: Optional[int] = None, probe: bool = False,
     ) -> tuple:
         """ONE shuffle, one pass: group rows by seen_bucket; each task writes
         its bucket's parquet part (hive layout, `seen_bucket=<b>/`) AND — for
@@ -503,17 +404,37 @@ class FrontierEngine:
         returns (bucket, n). Fusing the writes replaces the three separate
         jobs of the v1 loop (stage `_new` parquet → read back → rewrite as
         seen delta + bloom pass + full next-frontier rewrite) that made
-        `writes_ms` the only phase DEGRADING from 8→32 cores. Worker-side
-        pyarrow writes are the low-level-writer pattern (what an Iceberg
-        writer task does); atomicity still comes from commit.json, and
-        abort_round() sweeps orphans. Row counts come back with the stats —
-        no read-back count job.
+        the round's writes the only phase DEGRADING from 8→32 cores.
+        Worker-side pyarrow writes are the low-level-writer pattern (what an
+        Iceberg writer task does); atomicity still comes from commit.json,
+        and abort_round() sweeps orphans. Row counts come back with the
+        stats — no read-back count job.
+
+        `probe=True` (Bloom engines, the round's new-URL write) takes the
+        raw keyed candidate stream WITH duplicates and seen URLs, and each
+        group task runs the whole seen chain before writing:
+        1. within-group dedup (np.unique on url_hash — every copy of a URL
+           has the same hash, hence the same (bucket, chunk) group);
+        2. Bloom probe against the bucket's previous blob — negatives are
+           definitely new;
+        3. exact re-check of the positives against the bucket's committed
+           seen hashes (tombstones applied under the t > c rule of
+           _seen_view), so a false positive or an unseen URL's stale bits
+           never lose a URL;
+        4. the parquet part, only if fresh rows are left;
+        5. the blob fold into the filter step 2 already loaded.
+        The round's new-URL path thus has ONE exchange (extract → this
+        groupBy); the re-check reads a bucket's seen hashes only when that
+        group has positives, so its IO tracks the positive set, not crawl
+        age. A group whose rows were all seen writes no part and no blob,
+        and its bucket is left out of the returned stats — a commit must
+        never point a bucket's bloom manifest at a round without its blob.
 
         With `slice_col` (the politeness schedule's `due` sub-round), rows
         are grouped by (slice, seen_bucket) and land under
         ``out_dir/<slice_col>=<v>/seen_bucket=<b>/`` so each slice is an
         independently-readable file-set root; stats become
-        (slice, bucket, n). Without it, stats are (None, bucket, n).
+        (slice, bucket, n). Without it, stats are (bucket, n).
 
         Memory guard (`approx_rows`): each pandas group is one bucket's
         whole round in one task's memory. Call sites pass the row count
@@ -528,16 +449,24 @@ class FrontierEngine:
         (bloom.load_blobs) reproduces the unchunked blob exactly and no
         two tasks ever write one file.
 
-        Returns ``(stats, task_ms)``: the per-bucket stat tuples plus the
-        summed worker-side phase timers of THIS write job. The timers used
-        to be stashed on ``self.last_write_task_ms``, but the deferred-slice
-        write runs concurrently in a pool thread alongside the main write —
-        whichever finished last won the attribute and the bench's
-        write_conv/pq/bloom_ms phases could report the wrong job's numbers."""
+        Returns ``(stats, task)``: the per-bucket stat tuples plus the
+        summed worker-side numbers of THIS write job — phase timers
+        (conv/pq/probe/bloom_ms), its group count (n_tasks) and, with
+        `probe`, the distinct candidates, Bloom positives and positives the
+        exact re-check found unseen (n_candidates, n_probe_pos,
+        n_probe_fp). They are returned rather than stashed on the engine
+        because the deferred-slice write runs concurrently in a pool
+        thread alongside the main write."""
         blobs = store.bloom_blobs() if (self.cfg.use_bloom and bloom_round is not None) else None
         params = self.cfg.bloom
         update_blooms = blobs is not None
+        if probe and not update_blooms:
+            raise ValueError("probe=True needs use_bloom and a bloom_round")
         r = bloom_round
+        # exact re-check inputs: committed seen components and tombstones,
+        # (round, absolute root) — read executor-side, bucket by bucket
+        seen_roots = [(c, os.path.abspath(p)) for c, p in store.seen_components()] if probe else []
+        tomb_roots = [(t, os.path.abspath(p)) for t, p in store.tombstone_components()] if probe else []
         chunks = 1
         if approx_rows:
             per_bucket = approx_rows / max(1, self.cfg.seen_buckets)
@@ -551,9 +480,35 @@ class FrontierEngine:
             )
             keys = keys + ["_wchunk"]
 
+        def bucket_seen(bucket: int):
+            """The bucket's live seen hashes: every component's url_hash
+            column minus the hashes of tombstones from strictly later
+            rounds."""
+            import glob
+
+            import numpy as np
+            import pyarrow.parquet as pq
+
+            def load(root: str):
+                files = sorted(glob.glob(os.path.join(root, f"seen_bucket={bucket}", "*.parquet")))
+                cols = [pq.read_table(f, columns=["url_hash"])["url_hash"].to_numpy() for f in files]
+                return np.concatenate(cols) if cols else np.empty(0, dtype=np.int64)
+
+            tombs = [(t, load(root)) for t, root in tomb_roots]
+            parts = []
+            for c, root in seen_roots:
+                a = load(root)
+                kills = [ta for t, ta in tombs if t > c and len(ta)]
+                if len(a) and kills:
+                    a = a[~np.isin(a, np.concatenate(kills))]
+                parts.append(a)
+            return np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
+
         def build(key, pdf):
             import time as _time
+            import uuid
 
+            import numpy as np
             import pandas as pd
             import pyarrow as pa
             import pyarrow.parquet as pq
@@ -566,60 +521,84 @@ class FrontierEngine:
             else:
                 sl, bucket = -1, int(key[0])
                 part_dir = os.path.join(out_dir, f"seen_bucket={bucket}")
-            os.makedirs(part_dir, exist_ok=True)
-            table = pa.table(
-                {
-                    "url": pa.array(pdf["url"], pa.string()),
-                    "host": pa.array(pdf["host"], pa.string()),
-                    "url_hash": pa.array(pdf["url_hash"], pa.int64()),
-                    "depth": pa.array(pdf["depth"], pa.int32()),
-                }
-            )
-            t_conv = _time.monotonic()
-            # deterministic FINAL name + atomic replace: a retried/speculative
-            # task attempt overwrites the same file (same row set) instead of
-            # appending a duplicate part — groupBy gives one call per bucket.
-            # The TMP name is unique PER ATTEMPT: two live attempts of the
-            # same group (speculation, or a zombie master racing the
-            # timeout-steal winner) must not interleave writes into one tmp
-            # file and os.replace a torn part into the committed layout.
-            # Dot-prefix keeps staging invisible to Spark listings.
-            import uuid
-
-            stem = f"part-{bucket:05d}" if chunk == 0 else f"part-{bucket:05d}-{chunk:03d}"
-            path = os.path.join(part_dir, f"{stem}.parquet")
-            tmp = os.path.join(part_dir, f".{stem}.{uuid.uuid4().hex[:12]}.tmp")
-            pq.write_table(table, tmp)
-            os.replace(tmp, path)
-            t_pq = _time.monotonic()
-            if update_blooms:
+            filt = None
+            n_cand = n_pos = n_fp = 0
+            if probe:
+                # sorted-unique order also makes the part's row order
+                # independent of the shuffle's arrival order
+                _, first = np.unique(pdf["url_hash"].to_numpy(), return_index=True)
+                pdf = pdf.take(first)
+                hashes = pdf["url_hash"].to_numpy()
+                n_cand = len(hashes)
                 filt = B.load_blobs(blobs.get(bucket), params)
-                B.add_hashes(filt, pdf["url_hash"].to_numpy(), params)
-                B.write_blob(store.bloom_blob_path(r, bucket, chunk), filt)
+                maybe = B.contains(filt, hashes, params)
+                n_pos = int(maybe.sum())
+                if n_pos:
+                    fresh = ~maybe
+                    fresh[maybe] = ~np.isin(hashes[maybe], bucket_seen(bucket))
+                    n_fp = int(fresh[maybe].sum())
+                    pdf = pdf[fresh]
+            t_probe = _time.monotonic()
+            n = len(pdf)
+            t_conv = t_pq = t_probe
+            if n:
+                table = pa.table(
+                    {
+                        "url": pa.array(pdf["url"], pa.string()),
+                        "host": pa.array(pdf["host"], pa.string()),
+                        "url_hash": pa.array(pdf["url_hash"], pa.int64()),
+                        "depth": pa.array(pdf["depth"], pa.int32()),
+                    }
+                )
+                t_conv = _time.monotonic()
+                # deterministic FINAL name + atomic replace: a retried/speculative
+                # task attempt overwrites the same file (same row set) instead of
+                # appending a duplicate part — groupBy gives one call per bucket.
+                # The TMP name is unique PER ATTEMPT: two live attempts of the
+                # same group (speculation, or a zombie master racing the
+                # timeout-steal winner) must not interleave writes into one tmp
+                # file and os.replace a torn part into the committed layout.
+                # Dot-prefix keeps staging invisible to Spark listings.
+                os.makedirs(part_dir, exist_ok=True)
+                stem = f"part-{bucket:05d}" if chunk == 0 else f"part-{bucket:05d}-{chunk:03d}"
+                path = os.path.join(part_dir, f"{stem}.parquet")
+                tmp = os.path.join(part_dir, f".{stem}.{uuid.uuid4().hex[:12]}.tmp")
+                pq.write_table(table, tmp)
+                os.replace(tmp, path)
+                t_pq = _time.monotonic()
+                if update_blooms:
+                    if filt is None:
+                        filt = B.load_blobs(blobs.get(bucket), params)
+                    B.add_hashes(filt, pdf["url_hash"].to_numpy(), params)
+                    B.write_blob(store.bloom_blob_path(r, bucket, chunk), filt)
             t_bloom = _time.monotonic()
-            # per-task phase timers ride back on the stats row (no extra job):
-            # conv = pandas→Arrow, pq = parquet write, bloom = blob fold+write.
-            # Worker-visible time only — shuffle/Arrow-IPC transfer cost is the
-            # gap between the job's wall and max-per-slot sums of these.
+            # per-task numbers ride back on the stats row (no extra job):
+            # probe = dedup + Bloom probe + exact re-check, conv = pandas→Arrow,
+            # pq = parquet write, bloom = blob fold+write. Worker-visible time
+            # only — shuffle/Arrow-IPC transfer cost is the gap between the
+            # job's wall and max-per-slot sums of these.
             return pd.DataFrame({
-                "slice": [sl], "bucket": [bucket], "n": [len(pdf)],
-                "conv_ms": [int((t_conv - t_entry) * 1000)],
+                "slice": [sl], "bucket": [bucket], "n": [n],
+                "probe_ms": [int((t_probe - t_entry) * 1000)],
+                "conv_ms": [int((t_conv - t_probe) * 1000)],
                 "pq_ms": [int((t_pq - t_conv) * 1000)],
                 "bloom_ms": [int((t_bloom - t_pq) * 1000)],
+                "n_candidates": [n_cand], "n_probe_pos": [n_pos], "n_probe_fp": [n_fp],
             })
 
+        summed = ("probe_ms", "conv_ms", "pq_ms", "bloom_ms", "n_candidates", "n_probe_pos", "n_probe_fp")
         stats = rows.groupBy(*keys).applyInPandas(
-            build, schema="slice int, bucket int, n long, conv_ms long, pq_ms long, bloom_ms long"
+            build,
+            schema="slice int, bucket int, n long, " + ", ".join(f"{k} long" for k in summed),
         ).collect()
-        task_ms = {
-            "conv_ms": sum(row["conv_ms"] for row in stats),
-            "pq_ms": sum(row["pq_ms"] for row in stats),
-            "bloom_ms": sum(row["bloom_ms"] for row in stats),
-            "n_tasks": len(stats),
-        }
+        task = {k: sum(row[k] for row in stats) for k in summed}
+        task["n_tasks"] = len(stats)
+        # groups that wrote nothing (all rows already seen) are not stats:
+        # callers take touched Bloom buckets from these tuples
+        stats = [row for row in stats if row["n"] > 0]
         if slice_col:
-            return [(row["slice"], row["bucket"], row["n"]) for row in stats], task_ms
-        return [(row["bucket"], row["n"]) for row in stats], task_ms
+            return [(row["slice"], row["bucket"], row["n"]) for row in stats], task
+        return [(row["bucket"], row["n"]) for row in stats], task
 
     def _compact_manifest(
         self, store: JobStateStore, r: int, manifest: List[list], phases: dict
@@ -1242,9 +1221,10 @@ class FrontierEngine:
                 )
             t = _mark("fetch_submit_ms", t)
 
-            # ---- extract + dedup + seen anti-join + robots (skip at last depth, F4)
-            n_candidates = n_new = n_blocked = 0
+            # ---- extract + robots (skip at last depth, F4)
+            n_candidates = n_new = n_blocked = n_probe_pos = n_probe_fp = 0
             new_rows = None
+            probe = self.cfg.use_bloom
             if d + 1 < depth_limit and n_admitted > 0:
                 # extraction parallelism must not be bound to the frontier's
                 # file count — pin it to 2× cores (CPU-bound Python stage;
@@ -1254,34 +1234,35 @@ class FrontierEngine:
                 keyed = self._with_keys(links.select("url", "host"))
                 if self.cfg.robots is not None:
                     # blocked URLs never enter the seen set, so the robots filter
-                    # commutes with both dedup stages; counting BEFORE the
+                    # commutes with dedup and the seen probe; counting BEFORE the
                     # within-round dedup is multiplicity-preserving — every
                     # discovery occurrence of a blocked URL counts, matching the
                     # oracle (oracle/crawler.py:141-147) at any depth, not just
                     # where the fixture happens to have no within-round dups.
-                    # The count is metrics-only, so it is gated like n_candidates
-                    # (-1 when detailed metrics are off — no extra job per round)
+                    # The count is metrics-only and costs a job per round, so
+                    # it is gated by cfg.detailed_metrics (-1 when off)
                     keyed = keyed.withColumn("_blocked", blocked_expr(F.col("url"))).persist()
                     persisted.append(keyed)
                     n_blocked = keyed.filter(F.col("_blocked")).count() if self.cfg.detailed_metrics else -1
                     keyed = keyed.filter(~F.col("_blocked")).drop("_blocked")
-                # U3 within-round dedup fused with the U2 cross-depth probe —
-                # one exchange for both (see _filter_new); `deduped` is the
-                # distinct candidate view for metrics
-                fresh, deduped = self._filter_new(store, keyed, persisted)
-                n_candidates = deduped.count() if self.cfg.detailed_metrics else -1
-                new_rows = fresh.withColumn("depth", F.lit(d + 1)).select(
+                if not probe:
+                    # no Bloom filter: dropDuplicates + exact left-anti join
+                    keyed, deduped = self._filter_new(store, keyed, persisted)
+                    n_candidates = deduped.count()
+                new_rows = keyed.withColumn("depth", F.lit(d + 1)).select(
                     "url", "host", "url_hash", "seen_bucket", "depth"
                 )
 
             # ---- stage writes into the round dir (visible only after commit):
-            # ONE fused shuffle+write job for the new URLs (parquet + seen delta
-            # + bloom blobs all from the same pass, counts from its stats — no
-            # read-back), a second ONLY at sub-round 0 when politeness scheduled
-            # future slices (written once, partitioned by due sub-round), and NO
-            # next-frontier rewrite: untouched depths AND not-yet-due slices
-            # carry over in the manifest by reference
-            t = _mark("extract_dedup_ms", t)
+            # ONE fused shuffle+write job for the new URLs — with Bloom it
+            # takes the raw candidates and dedups, probes and exact-checks
+            # them in the write task itself (see _write_bucketed), so the
+            # new-URL path has one exchange; parquet + seen delta + bloom
+            # blobs come from the same pass, counts from its stats (no
+            # read-back). A second job ONLY at sub-round 0 when politeness
+            # scheduled future slices (written once, partitioned by due
+            # sub-round), and NO next-frontier rewrite: untouched depths AND
+            # not-yet-due slices carry over in the manifest by reference
             deferred_future = (
                 _pool_submit(
                     self.spark,
@@ -1295,22 +1276,24 @@ class FrontierEngine:
             touched: List[int] = []
             n_new = 0
             if new_rows is not None:
-                # upper bound on the write's row count (new <= candidates <=
-                # admitted × max out-degree): over-estimating only shrinks the
-                # chunked groups, never breaks the memory guard
-                stats, write_task_ms = self._write_bucketed(
+                # upper bound on the write's input row count (raw candidates
+                # <= admitted × max out-degree): over-estimating only shrinks
+                # the chunked groups, never breaks the memory guard
+                stats, task = self._write_bucketed(
                     store, store.new_path(r), new_rows, bloom_round=r,
-                    approx_rows=n_admitted * C.MAX_OUT_DEGREE,
+                    approx_rows=n_admitted * C.MAX_OUT_DEGREE, probe=probe,
                 )
                 touched = sorted({s[0] for s in stats})
                 n_new = sum(s[1] for s in stats)
+                if probe:
+                    n_candidates = task["n_candidates"]
+                    n_probe_pos, n_probe_fp = task["n_probe_pos"], task["n_probe_fp"]
                 # worker-side breakdown of THIS write job (summed across its
-                # tasks): lets the bench attribute writes_ms to Arrow
-                # conversion / parquet encode / bloom fold vs shuffle+sched.
-                # Returned with the stats (not an instance attribute) so the
-                # concurrent deferred-slice write can't clobber it.
-                for k, v in write_task_ms.items():
-                    phases[f"write_{k}"] = v
+                # tasks): lets the bench attribute extract_write_ms to the
+                # probe / Arrow conversion / parquet encode / bloom fold vs
+                # extraction + shuffle + scheduling
+                for k in ("probe_ms", "conv_ms", "pq_ms", "bloom_ms", "n_tasks"):
+                    phases[f"write_{k}"] = task[k]
             sched_entries: List[list] = []
             if deferred_future is not None:
                 def_stats, _ = deferred_future.result()
@@ -1338,7 +1321,7 @@ class FrontierEngine:
                 # round of overlap), so per-round wall is max(verify, rest),
                 # not their sum. This round's persisted frames stay alive until
                 # its verify finalizes.
-                t = _mark("writes_ms", t)
+                t = _mark("extract_write_ms", t)
                 self._finalize_verify(store)
                 if payload_future is None:
                     for df_ in persisted:
@@ -1347,7 +1330,7 @@ class FrontierEngine:
             else:
                 for df_ in persisted:
                     df_.unpersist()
-                t = _mark("writes_ms", t)
+                t = _mark("extract_write_ms", t)
                 payload_stats = payload_future.result() if payload_future is not None else None
                 _mark("fetch_verify_wait_ms", t)
 
@@ -1426,6 +1409,8 @@ class FrontierEngine:
                 n_blocked=n_blocked,
                 n_pending_after=n_pending_after,
                 wall_ms=0,
+                n_probe_pos=n_probe_pos,
+                n_probe_fp=n_probe_fp,
             )
         except BaseException:
             # a mid-round failure must not leak this round's in-flight
@@ -1488,6 +1473,8 @@ class FrontierEngine:
                 "n_blocked": pa.array([s.n_blocked], pa.int64()),
                 "n_pending_after": pa.array([s.n_pending_after], pa.int64()),
                 "wall_ms": pa.array([s.wall_ms], pa.int64()),
+                "n_probe_pos": pa.array([s.n_probe_pos], pa.int64()),
+                "n_probe_fp": pa.array([s.n_probe_fp], pa.int64()),
             }
         )
         pq.write_table(table, os.path.join(store.metrics_path(r), "part-0.parquet"))

@@ -89,11 +89,10 @@ def main():
     # bench.py runs the drain with pipeline_verify: round r's decode+verify
     # overlaps round r+1's compute, so fetch_verify_wait_ms is residual wait
     # (~0 when the overlap fully hides it) and phases no longer sum to wall.
-    # Since r7 the extract→probe→write pipeline executes as ONE fused Spark
-    # job whose wall lands in writes_ms (extract_dedup_ms is plan
-    # construction only) — that fused job is the representative compute
-    # phase; its worker-side write cost rides in write_conv/pq/bloom_ms.
-    extract_speedup = (p8.get("writes_ms", 0) or 1) / (p32.get("writes_ms", 1) or 1)
+    # The extract→dedup→probe→write pipeline executes as ONE Spark job with
+    # one exchange, timed as extract_write_ms — the representative compute
+    # phase; its worker-side cost rides in write_probe/conv/pq/bloom_ms.
+    extract_speedup = (p8.get("extract_write_ms", 0) or 1) / (p32.get("extract_write_ms", 1) or 1)
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     md = f"""# BENCH/BASELINE.md — scaling evidence ({date.today().isoformat()})
 
@@ -104,7 +103,7 @@ both "sizes" share one JVM, one OS page cache, one disk, and one driver.
 
 Job: drain a {seeds}-seed frontier to depth 2 over a {crawl_n}-page
 image+caption corpus — slim fetch join + blob point reads, vectorized
-extraction, Bloom+exact anti-join dedup, payload decode + per-row PSNR/
+extraction, in-write Bloom probe + exact re-check, payload decode + per-row PSNR/
 phash/caption verification. Seed/bootstrap commit excluded (amortized to
 zero at the 10^10 target); drain rounds only.
 
@@ -146,10 +145,11 @@ and a resume bit-identical.
 ## Reading the numbers
 
 The compute phases scale: the fused extract→probe→write round job (one
-Spark job since r7 — its wall lands in `writes_ms`; the filter-positive
-exact re-check runs inside the probe task, so no per-round anti-join or
-separate seen scan remains) speeds up {extract_speedup:.2f}× with 4×
-cores, and payload decode+verify (the heaviest real work at the 10^10
+Spark job with one exchange — its wall lands in `extract_write_ms`; the
+within-round dedup, the Bloom probe and the exact re-check of its
+positives all run inside the bucketed write task, so no per-round
+anti-join, probe stage or separate seen scan remains) speeds up
+{extract_speedup:.2f}× with 4× cores, and payload decode+verify (the heaviest real work at the 10^10
 target) is PIPELINED across rounds since r4: round r's verify overlaps
 round r+1's compute, so its phase row shows residual wait (~0 when fully
 hidden) and the per-phase rows no longer sum to wall clock. What does not

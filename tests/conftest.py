@@ -25,3 +25,30 @@ def corpus_1k(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("corpus1k") / "corpus")
     build_corpus(spark, spec, path, slices=8)
     return spec, path
+
+
+@pytest.fixture
+def fused_probe(spark):
+    """Run a Bloom engine's fused new-URL write (dedup → Bloom probe →
+    exact re-check → part + blob) over `urls`, duplicates allowed, as the
+    uncommitted round `r` of `store`; the staged round is dropped again.
+    Returns (urls written, the write's task counters)."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    def run(eng, store, urls, r):
+        df = eng._with_keys(spark.createDataFrame(pd.DataFrame({"url": list(urls)})))
+        df = df.withColumn("host", F.lit("")).withColumn("depth", F.lit(1))
+        out = store.new_path(r)
+        try:
+            _, task = eng._write_bucketed(store, out, df, bloom_round=r, probe=True)
+            got = (
+                [row["url"] for row in spark.read.schema("url string").parquet(out).collect()]
+                if os.path.isdir(out)
+                else []
+            )
+        finally:
+            store.abort_round(r)
+        return got, task
+
+    return run

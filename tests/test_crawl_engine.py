@@ -3,6 +3,8 @@ compared order-insensitively within a depth and ordered across depths; the
 seen set and the per-(depth, sub-round) politeness schedule must match
 exactly. Also covers resume (W2) and payload verification (input_hint)."""
 
+import os
+
 import pytest
 
 from distributed_web_crawler_spark.fixtures import corpus as C
@@ -64,11 +66,19 @@ def test_bloom_path_matches_exact(spark, corpus_1k, tmp_path):
     spec, _ = corpus_1k
     seed_i = pick_seed(spec)
     # tiny filters force false positives → exact re-check must rescue them
-    cfg = EngineConfig(use_bloom=True, seen_buckets=8, bloom=BloomParams(n_bits=1 << 10, n_hashes=3))
+    # (1,024-bit filters gave none on this 13-URL crawl; 8 bits give 4)
+    cfg = EngineConfig(use_bloom=True, seen_buckets=8, bloom=BloomParams(n_bits=8, n_hashes=1))
     eng = engine_for(spark, tmp_path, corpus_1k, cfg)
     s = eng.run_job("bloom", C.url_of(seed_i, spec), 3)
     assert s["done"]
     assert_matches_oracle(eng, "bloom", seed_i, 3, crawl(seed_i, 3, spec), spec)
+    # the fused write's probe counters: new = distinct candidates minus the
+    # positives the exact re-check confirmed as seen, and the forced false
+    # positives show up
+    m = eng.metrics_df("bloom").collect()
+    for row in m:
+        assert row["n_new"] == row["n_candidates"] - (row["n_probe_pos"] - row["n_probe_fp"]), row
+    assert sum(row["n_probe_fp"] for row in m) > 0
 
 
 def test_politeness_schedule_matches_oracle(spark, corpus_1k, tmp_path):
@@ -202,24 +212,21 @@ def test_blocked_seed_yields_empty_job(spark, corpus_1k, tmp_path):
     assert s["done"] and s["n_seen"] == 0
 
 
-def test_fused_dedup_across_arrow_batches(spark, corpus_1k, tmp_path):
-    """The probe task dedups with a running per-partition hash set that
-    must survive ARROW BATCH boundaries (maxRecordsPerBatch=2048): a
-    candidate set with every URL duplicated many times — large enough
-    that one partition spans several batches — must come out exactly
-    distinct, with seen URLs removed and unseen kept (fixtures keep the
-    candidate sets far below one batch, so this path is otherwise
-    untested until production scale)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
+def test_fused_dedup_across_arrow_batches(spark, corpus_1k, tmp_path, fused_probe):
+    """The fused write task dedups, Bloom-probes and exact-checks a whole
+    bucket group at once, however many ARROW BATCHES it arrives in
+    (maxRecordsPerBatch=2048; each group here holds ~3,600 rows): a
+    candidate set with every URL duplicated many times must be written
+    exactly once per URL, with seen URLs dropped and unseen kept, and the
+    task's counters must be true counts (fixtures keep the candidate sets
+    far below one batch, so this path is otherwise untested until
+    production scale)."""
     from distributed_web_crawler_spark.fixtures import corpus as C
-    from distributed_web_crawler_spark.functions import urls as U
     from distributed_web_crawler_spark.plans.frontier import EngineConfig, FrontierEngine
 
     spec, path = corpus_1k
     eng = FrontierEngine(
-        spark, str(tmp_path / "wh"), path, spec, EngineConfig(use_bloom=True, seen_buckets=8)
+        spark, str(tmp_path / "wh"), path, spec, EngineConfig(use_bloom=True, seen_buckets=2)
     )
     seed_i = next(i for i in range(spec.n) if len(C.out_links(i, spec)) >= 3)
     eng.run_job("fb", C.url_of(seed_i, spec), 2)
@@ -228,21 +235,106 @@ def test_fused_dedup_across_arrow_batches(spark, corpus_1k, tmp_path):
     assert len(seen_urls) >= 4
 
     # 600 distinct URLs (some seen, some not) x 12 copies = 7200 rows in
-    # ONE partition -> >3 Arrow batches through the probe task
+    # 2 bucket groups
     distinct_urls = sorted(seen_urls) + [C.url_of(i, spec) for i in range(600 - len(seen_urls))]
     distinct_urls = sorted(set(distinct_urls))
-    keyed = (
-        spark.createDataFrame(pd.DataFrame({"url": distinct_urls * 12}))
-        .withColumn("host", U.host_of(F.col("url")))
-        .withColumn("url_hash", U.url_hash(F.col("url")))
-        .withColumn("seen_bucket", U.seen_bucket(F.col("url_hash"), 8))
-        .coalesce(1)
-    )
-    fresh, deduped = eng._filter_new(store, keyed)
-    got = [r["url"] for r in fresh.collect()]
-    assert len(got) == len(set(got)), "duplicates leaked across Arrow batches"
+    got, task = fused_probe(eng, store, distinct_urls * 12, store.last_committed() + 1)
+    assert len(got) == len(set(got)), "duplicates leaked into the written part"
     assert set(got) == set(distinct_urls) - seen_urls
-    assert deduped.count() == len(distinct_urls)
+    assert task["n_candidates"] == len(distinct_urls)
+    # no false negatives: every seen URL is a Bloom positive, and exactly
+    # the positives the exact re-check rejected as seen are dropped
+    assert task["n_probe_pos"] - task["n_probe_fp"] == len(seen_urls & set(distinct_urls))
+
+
+def test_all_seen_bucket_keeps_its_blob(spark, corpus_1k, tmp_path, fused_probe):
+    """A fused-write group whose candidates were ALL seen writes no part and
+    no blob and stays out of touched_blooms. Otherwise commit_round points
+    that bucket's bloom manifest at a round with no blob file, the next
+    probe reads an empty filter (false negatives) and URLs are crawled
+    twice."""
+    import numpy as np
+
+    from distributed_web_crawler_spark.functions import bloom as B
+    from distributed_web_crawler_spark.functions.xxh64 import xxh64_signed
+
+    spec, path = corpus_1k
+    nb = 64
+
+    def bucket(i):
+        return xxh64_signed(C.url_of(i, spec)) % nb
+
+    # seeds S = {p} ∪ out_links(p): round 1's candidates are out_links(S).
+    # Find a p where some bucket's round-1 candidates all lie in S, while
+    # other buckets still get new URLs.
+    for p in range(spec.n):
+        seeds = {p} | set(C.out_links(p, spec))
+        by_b: dict = {}
+        for t in {t for s in seeds for t in C.out_links(s, spec)}:
+            by_b.setdefault(bucket(t), set()).add(t)
+        full = [b for b, ts in sorted(by_b.items()) if ts <= seeds]
+        if full and any(not ts <= seeds for ts in by_b.values()):
+            break
+    else:
+        raise AssertionError("no seed set with an all-seen bucket")
+    b = full[0]
+
+    eng = engine_for(
+        spark, tmp_path, corpus_1k,
+        EngineConfig(use_bloom=True, seen_buckets=nb, compact_seen_every=None),
+    )
+    urls = sorted(C.url_of(i, spec) for i in seeds)
+    eng.run_job("as", urls, 3, max_rounds=1)
+    store = eng.store("as")
+    m0, m1 = store.read_commit(0)["bloom_manifest"], store.read_commit(1)["bloom_manifest"]
+    assert m0[str(b)] == m1[str(b)] == 0, "all-seen bucket moved its manifest round"
+    assert 1 in m1.values(), "round 1 wrote no blob at all"
+    assert not os.path.exists(os.path.join(store.new_path(1), f"seen_bucket={b}"))
+
+    # a later round still finds those hashes: the blob the manifest names
+    # exists and holds them, and a fused write over them writes nothing
+    params = eng.cfg.bloom
+    hashes = np.array([xxh64_signed(C.url_of(i, spec)) for i in by_b[b]], dtype=np.int64)
+    assert store.bloom_blobs()[b]
+    assert B.contains(B.load_blobs(store.bloom_blobs()[b], params), hashes, params).all()
+    got, task = fused_probe(eng, store, [C.url_of(i, spec) for i in by_b[b]], 2)
+    assert got == [] and task["n_probe_pos"] == len(by_b[b]) and task["n_probe_fp"] == 0
+
+    # resume to the end: no URL twice, same set as a plain multi-seed BFS
+    eng.run_job("as", urls, 3)
+    seen = [r["url"] for r in eng.seen_df("as").collect()]
+    assert len(seen) == len(set(seen))
+    want, level = set(seeds), sorted(seeds)
+    for _ in range(2):  # depths 1 and 2 (the last depth discards links)
+        level = sorted({t for i in level for t in C.out_links(i, spec)} - want)
+        want |= set(level)
+    assert sorted(seen) == sorted(C.url_of(i, spec) for i in want)
+
+
+def test_new_url_path_has_one_exchange(spark, corpus_1k, tmp_path, monkeypatch):
+    """The Bloom round's new-URL write job shuffles once: extraction output
+    → groupBy(seen_bucket) write. No probe exchange, no persisted probe
+    frame in between."""
+    from pyspark.sql.group import GroupedData
+
+    plans = []
+    orig = GroupedData.applyInPandas
+
+    def spy(self, *a, **k):
+        df = orig(self, *a, **k)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return df
+
+    monkeypatch.setattr(GroupedData, "applyInPandas", spy)
+    spec, _ = corpus_1k
+    eng = engine_for(spark, tmp_path, corpus_1k, EngineConfig(use_bloom=True))
+    eng.run_job("ex", C.url_of(pick_seed(spec), spec), 2)
+    # the extraction stage is operators/extract.py's mapInPandas `expand`
+    writes = [p for p in plans if "MapInPandas expand(" in p]
+    assert len(writes) == 1, plans  # round 1's new-URL write
+    above_extract = writes[0].split("MapInPandas expand(")[0]
+    assert above_extract.count("Exchange") == 1, writes[0]
+    assert "InMemory" not in above_extract, writes[0]
 
 
 def test_pipelined_verify_same_stats_and_results(spark, corpus_1k, tmp_path):

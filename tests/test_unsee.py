@@ -50,7 +50,7 @@ def _pick_victims(rows, k=3):
     return out[:k]
 
 
-def test_unsee_suppresses_everywhere(spark, corpus_1k, tmp_path):
+def test_unsee_suppresses_everywhere(spark, corpus_1k, tmp_path, fused_probe):
     eng, spec, seed_i = _engine(spark, corpus_1k, tmp_path)
     eng.run_job("u1", C.url_of(seed_i, spec), 3)
     before = _seen_rows(eng, "u1")
@@ -68,16 +68,16 @@ def test_unsee_suppresses_everywhere(spark, corpus_1k, tmp_path):
     # unknown URLs are never tombstoned (the gate is the exact seen table)
     assert eng.unsee_urls("u1", ["https://crawl.test/nope/x"])["n_unseen"] == 0
 
-    # the PROBE view agrees with the DataFrame view: unseen URLs come back
-    # fresh, still-seen URLs stay filtered — this exercises the numpy
-    # bucket_seen suppression and the stale-positive rescue
+    # the fused write's PROBE agrees with the DataFrame view: unseen URLs
+    # are written as fresh, still-seen URLs are not — this exercises the
+    # numpy bucket_seen suppression and the stale-positive rescue (the
+    # victims' Bloom bits stay set; the exact re-check clears them)
     store = eng.store("u1")
     still = [u for _h, u, _d in after][:3]
-    keyed = eng._with_keys(
-        spark.createDataFrame(pd.DataFrame({"url": victims + still}))
-    )
-    fresh, _ = eng._filter_new(store, keyed)
-    assert sorted(r["url"] for r in fresh.collect()) == sorted(victims)
+    got, task = fused_probe(eng, store, victims + still, store.last_committed() + 1)
+    assert sorted(got) == sorted(victims)
+    assert task["n_probe_pos"] == len(victims + still)
+    assert task["n_probe_fp"] == len(victims)
 
     # physical plan: the merge-on-read suppression must BROADCAST the
     # delete side into a LeftAnti hash join — at 10^10 rows a shuffled
