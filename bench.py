@@ -10,8 +10,6 @@ Env:
   BENCH_ONLY          'crawl' | 'queries' (default: both)
   BENCH_CRAWL_N       corpus pages for the crawl bench (default 500000)
   BENCH_CRAWL_SEEDS   frontier seed count (default 100000)
-  BENCH_PIPELINE_VERIFY  '1' (default) overlap round r's verify with round
-                      r+1's compute; '0' verify synchronously per round
   BENCH_VERIFY_PAYLOADS  '1' (default) decode+verify payloads; '0' drain
                       metadata only — isolates the Spark dataflow's scaling
                       from the decode kernel's memory-bandwidth ceiling
@@ -131,12 +129,6 @@ def _one_crawl_trial(spark, spec, corpus_path):
             politeness=PolitenessPolicy(round_duration_ms=1_000_000_000) if graded else None,
             politeness_grade="pmod(url_hash, 8)" if graded else None,
             verify_payloads=os.environ.get("BENCH_VERIFY_PAYLOADS", "1") != "0",
-            # verify is the drain's longest phase: overlap round r's verify
-            # with round r+1's compute (every row still verified; stats in
-            # the per-round verify.json sidecar). Since the r7 probe fusion
-            # the fused round job is efficient enough that the overlap can
-            # CONTEND instead of hide — A/B both modes via the env knob.
-            pipeline_verify=os.environ.get("BENCH_PIPELINE_VERIFY", "1") != "0",
         ),
     )
     seeds = sorted({url_of(xxh64(f"bench:seed:{j}") % spec.n, spec) for j in range(CRAWL_SEEDS)})

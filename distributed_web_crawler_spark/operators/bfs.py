@@ -110,11 +110,17 @@ class IterationState:
         release every interim handle — callers get a result that neither
         recomputes nor pins caches."""
         out = _local_checkpoint(df, [])
+        self.close()
+        return out
+
+    def close(self) -> None:
+        """Release every interim handle — finish() does this on success;
+        callers also run it in a `finally`, so a step that raises leaves
+        no persisted generation behind."""
         for h in self._handles:
             h.unpersist()
         self._handles = []
         _release(self._cp_blocks)
-        return out
 
 
 def bfs(edges: DataFrame, seed: DataFrame, max_depth: int, checkpoint_every: int = 4) -> DataFrame:

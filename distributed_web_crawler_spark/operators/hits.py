@@ -60,19 +60,27 @@ def hits(edges: DataFrame, n_iters: int = 2, checkpoint_every: int = 5) -> DataF
     previous aggregate), so the only data-sized move per step is the
     aggregate's own exchange. Values are unchanged — the iteration is
     integer-exact, so row order cannot change a bit."""
+    _require_iters(n_iters)
     p = edges.sparkSession.sparkContext.defaultParallelism
     raw = edges.select("src", "dst")
     edges_src = raw.repartition(p, "src").persist()
     edges_dst = raw.repartition(p, "dst").persist()
     nodes = _node_set(edges_src).persist()
-    if nodes.count() == 0:  # materializes the src cache + nodes
+    try:
+        if nodes.count() == 0:  # materializes the src cache + nodes
+            return edges.sparkSession.createDataFrame([], "url string, hub double, auth double")
+        return _iterate(nodes, edges_src, edges_dst, n_iters, checkpoint_every)
+    finally:
         for f in (edges_src, edges_dst, nodes):
             f.unpersist()
-        return edges.sparkSession.createDataFrame([], "url string, hub double, auth double")
-    out = _iterate(nodes, edges_src, edges_dst, n_iters, checkpoint_every)
-    for f in (edges_src, edges_dst, nodes):
-        f.unpersist()
-    return out
+
+
+def _require_iters(n_iters: int) -> None:
+    """Checked before anything is persisted: with no iteration
+    inflow/outflow would stay None and crash the final projection with a
+    bare AttributeError."""
+    if n_iters < 1:
+        raise ValueError(f"hits requires n_iters >= 1, got {n_iters}")
 
 
 def write_edges_dual_bucketed(
@@ -107,15 +115,16 @@ def hits_on_tables(
     the edge side never exchanges; numerically identical to hits() on the
     same graph (the iteration is integer-exact, so identical means
     bit-for-bit, not just within rounding)."""
+    _require_iters(n_iters)
     edges_src = spark.table(base_name + "_src")
     edges_dst = spark.table(base_name + "_dst")
     nodes = _node_set(edges_src).persist()
-    if nodes.count() == 0:
+    try:
+        if nodes.count() == 0:
+            return spark.createDataFrame([], "url string, hub double, auth double")
+        return _iterate(nodes, edges_src, edges_dst, n_iters, checkpoint_every)
+    finally:
         nodes.unpersist()
-        return spark.createDataFrame([], "url string, hub double, auth double")
-    out = _iterate(nodes, edges_src, edges_dst, n_iters, checkpoint_every)
-    nodes.unpersist()
-    return out
 
 
 def iteration_inflow(edges: DataFrame, outflow: DataFrame) -> DataFrame:
@@ -164,49 +173,48 @@ def _iterate(
     """The ONE copy of the iteration loop + cache-lifetime rules, shared
     by the flat and dual-bucketed paths (the hand-rolled-copies failure
     class ROUND5 retired for bfs/pagerank applies here too)."""
-    if n_iters < 1:
-        # inflow/outflow would stay None and crash the final projection
-        # with a bare AttributeError; fail with the actual contract
-        raise ValueError(f"hits requires n_iters >= 1, got {n_iters}")
     st = IterationState(checkpoint_every)
-    inflow = outflow = None
-    for it in range(1, n_iters + 1):
-        if it == 1:
-            # hub_0 ≡ 1: the first inflow is the dst in-degree (with
-            # multiplicity); computed on the outflow copy so the groupBy
-            # key matches its bucketing when the layout provides it
-            inflow = edges_for_outflow.groupBy("dst").agg(
-                F.count("*").cast("double").alias("auth")
+    inflow = outflow = last_inflow = None
+    try:
+        for it in range(1, n_iters + 1):
+            if it == 1:
+                # hub_0 ≡ 1: the first inflow is the dst in-degree (with
+                # multiplicity); computed on the outflow copy so the groupBy
+                # key matches its bucketing when the layout provides it
+                inflow = edges_for_outflow.groupBy("dst").agg(
+                    F.count("*").cast("double").alias("auth")
+                )
+            else:
+                inflow = iteration_inflow(edges_for_inflow, outflow)
+            if it == n_iters:
+                # the LAST inflow feeds BOTH the final outflow and the final
+                # projection — persist it so that fork does not recompute.
+                # Persisted manually (not st.track): a step-checkpoint at
+                # it == n_iters would release a tracked handle BEFORE the
+                # final projection reads it, forcing a full recompute chain.
+                # Interim inflows are consumed exactly once — no persist.
+                inflow = last_inflow = inflow.persist()
+            outflow = st.step(iteration_outflow(edges_for_outflow, inflow), it)
+        # r9: the normalization maxes come from the CACHED support-set frames —
+        # a node absent from outflow/inflow scores exactly 0 and hub/auth are
+        # nonnegative (sums of counts), so max over the support set IS the max
+        # over all nodes; the old path materialized (persist) and re-scanned an
+        # extra O(nodes) projection just to take the same two maxes. Two tiny
+        # cache-read aggregates instead; the final projection then flows
+        # straight into finish()'s one checkpoint pass. Values are division by
+        # the identical doubles — bit-identical output.
+        hmax = outflow.agg(F.max("hub")).collect()[0][0]
+        amax = inflow.agg(F.max("auth")).collect()[0][0]
+        return st.finish(
+            nodes.join(outflow.withColumnRenamed("src", "url").hint("shuffle_hash"), "url", "left")
+            .join(inflow.withColumnRenamed("dst", "url").hint("shuffle_hash"), "url", "left")
+            .select(
+                "url",
+                (F.coalesce(F.col("hub"), F.lit(0.0)) / F.lit(float(hmax) if hmax else 1.0)).alias("hub"),
+                (F.coalesce(F.col("auth"), F.lit(0.0)) / F.lit(float(amax) if amax else 1.0)).alias("auth"),
             )
-        else:
-            inflow = iteration_inflow(edges_for_inflow, outflow)
-        if it == n_iters:
-            # the LAST inflow feeds BOTH the final outflow and the final
-            # projection — persist it so that fork does not recompute.
-            # Persisted manually (not st.track): a step-checkpoint at
-            # it == n_iters would release a tracked handle BEFORE the
-            # final projection reads it, forcing a full recompute chain.
-            # Interim inflows are consumed exactly once — no persist.
-            inflow = inflow.persist()
-        outflow = st.step(iteration_outflow(edges_for_outflow, inflow), it)
-    # r9: the normalization maxes come from the CACHED support-set frames —
-    # a node absent from outflow/inflow scores exactly 0 and hub/auth are
-    # nonnegative (sums of counts), so max over the support set IS the max
-    # over all nodes; the old path materialized (persist) and re-scanned an
-    # extra O(nodes) projection just to take the same two maxes. Two tiny
-    # cache-read aggregates instead; the final projection then flows
-    # straight into finish()'s one checkpoint pass. Values are division by
-    # the identical doubles — bit-identical output.
-    hmax = outflow.agg(F.max("hub")).collect()[0][0]
-    amax = inflow.agg(F.max("auth")).collect()[0][0]
-    out = st.finish(
-        nodes.join(outflow.withColumnRenamed("src", "url").hint("shuffle_hash"), "url", "left")
-        .join(inflow.withColumnRenamed("dst", "url").hint("shuffle_hash"), "url", "left")
-        .select(
-            "url",
-            (F.coalesce(F.col("hub"), F.lit(0.0)) / F.lit(float(hmax) if hmax else 1.0)).alias("hub"),
-            (F.coalesce(F.col("auth"), F.lit(0.0)) / F.lit(float(amax) if amax else 1.0)).alias("auth"),
-        )
-    )  # finish() is eager — safe to release inputs below
-    inflow.unpersist()
-    return out
+        )  # finish() is eager — safe to release inputs below
+    finally:
+        st.close()
+        if last_inflow is not None:
+            last_inflow.unpersist()

@@ -67,6 +67,7 @@ def pagerank(
     # the only data-sized move per iteration is the dst aggregate's
     # exchange. w = 1.0/count(*) per src is the identical double the
     # window computed.
+    _require_iters(n_iters)
     p = edges.sparkSession.sparkContext.defaultParallelism
     e = edges.select("src", "dst").repartition(p, "src").persist()
     wframe = (
@@ -78,16 +79,22 @@ def pagerank(
         .distinct()
         .persist()
     )
-    n = nodes.count()  # materializes the edge cache + nodes
-    if n == 0:
+    try:
+        n = nodes.count()  # materializes the edge cache + nodes
+        if n == 0:
+            return edges.sparkSession.createDataFrame([], "url string, rank double")
+        return _power_iterate(nodes, e, wframe, n, n_iters, damping, checkpoint_every)
+    finally:
         for f in (nodes, wframe, e):
             f.unpersist()
-        return edges.sparkSession.createDataFrame([], "url string, rank double")
 
-    out = _power_iterate(nodes, e, wframe, n, n_iters, damping, checkpoint_every)
-    for f in (nodes, wframe, e):
-        f.unpersist()
-    return out
+
+def _require_iters(n_iters: int) -> None:
+    """Checked before anything is persisted: with no iteration the inflow
+    would stay None and crash the final projection with a bare
+    AttributeError (same guard as hits)."""
+    if n_iters < 1:
+        raise ValueError(f"pagerank requires n_iters >= 1, got {n_iters}")
 
 
 def iteration_scores(
@@ -134,38 +141,36 @@ def iteration_contribs(edges: DataFrame, scores: DataFrame) -> DataFrame:
 
 
 def _power_iterate(nodes, edges, wframe, n, n_iters, damping, checkpoint_every):
-    if n_iters < 1:
-        # inflow would stay None and crash the final projection with a
-        # bare AttributeError; fail with the actual contract (same guard
-        # hits._iterate carries)
-        raise ValueError(f"pagerank requires n_iters >= 1, got {n_iters}")
     base = (1.0 - damping) / n
     st = IterationState(checkpoint_every)
     inflow = None
-    for it in range(1, n_iters + 1):
-        if it == 1:
-            # rank_0 ≡ 1/n: no inflow frame yet — the first scores are a
-            # plain projection of the degree frame, with the same
-            # per-term product (1/n)·w the former rank_0 join summed
-            scores = wframe.select(
-                "src", (F.lit(1.0 / n) * F.col("w")).alias("rankw")
+    try:
+        for it in range(1, n_iters + 1):
+            if it == 1:
+                # rank_0 ≡ 1/n: no inflow frame yet — the first scores are a
+                # plain projection of the degree frame, with the same
+                # per-term product (1/n)·w the former rank_0 join summed
+                scores = wframe.select(
+                    "src", (F.lit(1.0 / n) * F.col("w")).alias("rankw")
+                )
+            else:
+                scores = iteration_scores(wframe, inflow, base, damping)
+            inflow = st.step(iteration_contribs(edges, scores), it)
+        # final projection: the ONE place the full node set is needed —
+        # rank = base + d·coalesce(inflow, 0), identical to the expression the
+        # per-step rank assembly used to evaluate
+        return st.finish(
+            nodes.join(
+                inflow.withColumnRenamed("dst", "url").hint("shuffle_hash"), "url", "left"
+            ).select(
+                "url",
+                (F.lit(base) + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))).alias(
+                    "rank"
+                ),
             )
-        else:
-            scores = iteration_scores(wframe, inflow, base, damping)
-        inflow = st.step(iteration_contribs(edges, scores), it)
-    # final projection: the ONE place the full node set is needed —
-    # rank = base + d·coalesce(inflow, 0), identical to the expression the
-    # per-step rank assembly used to evaluate
-    return st.finish(
-        nodes.join(
-            inflow.withColumnRenamed("dst", "url").hint("shuffle_hash"), "url", "left"
-        ).select(
-            "url",
-            (F.lit(base) + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))).alias(
-                "rank"
-            ),
         )
-    )
+    finally:
+        st.close()
 
 
 def contrib_edges_of(edges: DataFrame) -> DataFrame:
@@ -229,23 +234,24 @@ def pagerank_on_table(
 
     r9c: the iteration streams only the table's (src, dst) columns (the
     w column is lifted into the O(nodes) score side by an exchange-free
-    first(w)-per-src aggregate over the bucketed scan — every row of a
-    src carries the identical w the layout writer computed)."""
+    min(w)-per-src aggregate over the bucketed scan — every row of a src
+    carries the identical w the layout writer computed, and min keeps the
+    pick deterministic for a table where they would differ)."""
+    _require_iters(n_iters)
     t = spark.table(name)
     edges = t.select("src", "dst")
-    wframe = t.groupBy("src").agg(F.first("w").alias("w")).persist()
+    wframe = t.groupBy("src").agg(F.min("w").alias("w")).persist()
     nodes = (
         t.select(F.col("src").alias("url"))
         .unionByName(t.select(F.col("dst").alias("url")))
         .distinct()
         .persist()
     )
-    n = nodes.count()
-    if n == 0:
+    try:
+        n = nodes.count()
+        if n == 0:
+            return spark.createDataFrame([], "url string, rank double")
+        return _power_iterate(nodes, edges, wframe, n, n_iters, damping, checkpoint_every)
+    finally:
         nodes.unpersist()
         wframe.unpersist()
-        return spark.createDataFrame([], "url string, rank double")
-    out = _power_iterate(nodes, edges, wframe, n, n_iters, damping, checkpoint_every)
-    nodes.unpersist()
-    wframe.unpersist()
-    return out

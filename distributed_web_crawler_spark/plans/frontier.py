@@ -33,22 +33,21 @@ Scale shape per round (what survives 1000 executors × 100 TB):
   commit, so depths a round does not drain carry over by reference and are
   never rewritten (Iceberg-snapshot-style data-file sharing).
 * every count the driver needs comes back from manifest arithmetic or the
-  write task's own stats; nothing is re-scanned to be counted.
+  write task's own stats (run_job's n_seen is summed from the commits);
+  nothing is re-scanned to be counted.
 """
 
 from __future__ import annotations
 
 import os
 import time
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-import json
-
-from ..catalog.tables import JobStateStore, _atomic_write
+from ..catalog.tables import JobStateStore
 from ..fixtures import corpus as C
 from ..functions import bloom as B
 from ..functions import urls as U
@@ -61,7 +60,7 @@ from ..oracle.crawler import PolitenessPolicy, RobotsPolicy
 FRONTIER_SCHEMA = "url string, host string, url_hash bigint, seen_bucket int, depth int"
 
 # driver-side pool for concurrent Spark actions within a round (independent
-# job DAGs: payload verify ∥ extraction pipeline; seen/bloom/frontier writes)
+# job DAGs: payload verify ∥ extract → fused write; the deferred-slice write)
 _POOL = ThreadPoolExecutor(max_workers=4, thread_name_prefix="frontier-io")
 
 
@@ -78,9 +77,10 @@ def _pool_submit(spark: SparkSession, fn, *args, group: str | None = None):
     setting is idempotent, so re-tagging on every submit is cheap.
 
     `group` additionally tags the action's Spark jobs with a job-group id
-    so a failing round can CANCEL them (sc.cancelJobGroup) instead of
-    blocking its cleanup path behind a full verify run; the tag is cleared
-    when unset so a reused worker thread never inherits a stale group."""
+    (_Round.group: kind, store, round) so a failing round can CANCEL them
+    (sc.cancelJobGroup in _abandon) instead of blocking its cleanup path
+    behind a full verify run; the tag is cleared when unset so a reused
+    worker thread never inherits a stale group."""
 
     def run():
         import threading
@@ -135,21 +135,16 @@ class EngineConfig:
     # is how a hits/pagerank signal drives the drain (grade the frontier
     # by authority octile); keep it ≤ ~100 distinct values (the schedule's
     # offset table is hosts × grades × chunks rows, broadcast). Ignored
-    # without politeness. Part of the per-round dataflow, so the re-verify
-    # path re-derives slices with the same grade (pure function of data).
+    # without politeness.
     politeness_grade: Optional[str] = None
     bloom: B.BloomParams = field(default_factory=B.BloomParams)
-    verify_payloads: bool = False  # per-row PSNR/phash/caption invariants
-    # pipeline payload verification ACROSS rounds: round r's verify job
-    # (decode + PSNR/phash/caption, the drain's longest phase) keeps running
-    # while round r+1 admits/extracts/writes, and is awaited one round
-    # later — per-round wall becomes max(verify, rest) instead of their
-    # sum. Every admitted row is still verified; stats land in the round
-    # dir's verify.json AFTER the round's commit instead of inside it, so
-    # a driver killed between a commit and its verify finalize leaves that
-    # round's stats file absent (the rows themselves are committed and the
-    # resume path is unchanged) — the synchronous default keeps stats
-    # inside commit.json with no such window.
+    # per-row PSNR/phash/caption invariants: each round verifies its
+    # admitted pages on _POOL alongside extract → write and commits the
+    # stats in its commit.json
+    verify_payloads: bool = False
+    # ignored: payload verify has one schedule (inside the round). Kept
+    # because perfbench/workloads.py passes it; delete it in the next
+    # benchmark change
     pipeline_verify: bool = False
 
 
@@ -171,6 +166,64 @@ class RoundStats:
     n_probe_fp: int = 0
 
 
+def _seen_inserts(r: int, info: dict) -> int:
+    """Rows round r's commit added to the seen set: the seed batch at round
+    0 (the seed write is both frontier and seen delta), afterwards the
+    round's crawl discoveries plus unsee reseeds."""
+    if r == 0:
+        return info.get("n_pending_after", 0)
+    return info.get("n_new", 0) + info.get("reseed", 0)
+
+
+@dataclass
+class _Round:
+    """Working state of one round, filled in phase by phase by
+    FrontierEngine._run_round's helpers."""
+
+    store: JobStateStore
+    r: int
+    depth_limit: int
+    phases: dict = field(default_factory=dict)
+    t: float = field(default_factory=time.monotonic)
+    # frames cached for this round, released before the verify wait
+    persisted: List[DataFrame] = field(default_factory=list)
+    # cursor: the previous commit's manifest, the depth and sub-round drained
+    manifest: List[list] = field(default_factory=list)
+    d: int = 0
+    sub: int = 0
+    # admission: the manifest entries drained, the admitted rows with
+    # their fetch keys, and (sub-round 0 under politeness) the rows
+    # scheduled for later sub-rounds
+    consumed: List[list] = field(default_factory=list)
+    admitted: Optional[DataFrame] = None
+    n_admitted: int = 0
+    deferred: Optional[DataFrame] = None
+    n_deferred: int = 0
+    # in-flight _POOL jobs
+    verify: Optional[Future] = None
+    deferred_write: Optional[Future] = None
+    n_candidates: int = 0
+    n_new: int = 0
+    n_blocked: int = 0
+    n_probe_pos: int = 0
+    n_probe_fp: int = 0
+    touched: List[int] = field(default_factory=list)  # Bloom buckets written
+
+    def mark(self, key: str) -> None:
+        now = time.monotonic()
+        self.phases[key] = round((now - self.t) * 1000)
+        self.t = now
+
+    def release(self) -> None:
+        for df_ in self.persisted:
+            df_.unpersist()
+        self.persisted = []
+
+    def group(self, kind: str) -> str:
+        """Job-group id of this round's `kind` pool job (cancel handle)."""
+        return f"{kind}:{self.store.dir}:r{self.r}"
+
+
 class FrontierEngine:
     def __init__(
         self,
@@ -185,18 +238,6 @@ class FrontierEngine:
         self.corpus_path = corpus_path
         self.spec = spec
         self.cfg = cfg or EngineConfig()
-        # at most ONE in-flight pipelined verify: (round, future, persisted
-        # frames kept alive until the verify job has consumed them)
-        self._verify_inflight: Optional[tuple] = None
-        # r9 (r8 verdict Next #2, "hide the final round's verify tail"):
-        # at most one EARLY-submitted verify for a FUTURE round —
-        # (store, round, future). Round r, after committing the last
-        # depth's frontier, pre-submits round r+1's payload verify (the
-        # final depth does no extraction, so without this the job's
-        # largest verify ran with nothing to overlap but job-end
-        # bookkeeping). Round r+1 adopts the future at its submit point
-        # when the store/round/sub-round match exactly.
-        self._early_verify: Optional[tuple] = None
 
     # ------------------------------------------------------------ helpers
     # catalog seam (catalog/backend.py CatalogBackend): every store the
@@ -347,8 +388,9 @@ class FrontierEngine:
 
         seeds = [seed_url] if isinstance(seed_url, str) else list(seed_url)
         # Arrow path (a plain tuple list would serialize row-by-row via py4j)
-        df = self.spark.createDataFrame(pd.DataFrame({"url": seeds})).dropDuplicates(["url"])
-        df = self._with_keys(df).withColumn("host", U.host_of(F.col("url")))
+        df = self.spark.createDataFrame(pd.DataFrame({"url": seeds}))
+        # dedup AFTER canonicalization: spellings of one URL share a hash
+        df = self._with_keys(df).dropDuplicates(["url_hash"]).withColumn("host", U.host_of(F.col("url")))
         if self.cfg.robots is not None:
             df = df.filter(~blocked_expr(F.col("url")))
         df = df.withColumn("depth", F.lit(0)).select("url", "host", "url_hash", "seen_bucket", "depth")
@@ -655,95 +697,22 @@ class FrontierEngine:
             phases["fcompact_ms"] = round((time.monotonic() - t0) * 1000)
         return out
 
-    # ------------------------------------------------------------ pipelined verify
-    def _finalize_verify(self, store: JobStateStore) -> None:
-        """Await the in-flight pipelined verify (if any), release its
-        persisted frames, and write its stats as ``verify.json`` in the
-        (already committed) round dir. An inflight entry belonging to a
-        different job store (engine reuse after a mid-crawl abort) is
-        drained and discarded, never finalized into this store."""
-        if self._verify_inflight is None:
-            return
-        own_store, r0, fut, frames = self._verify_inflight
-        self._verify_inflight = None
-        if own_store.dir != store.dir:
-            # stale entry from a DIFFERENT job whose run_job aborted
-            # mid-round (a reused engine): it must not be finalized into
-            # THIS job's round dir. Drain + release, then — the round it
-            # belongs to is already committed — record a SUCCESSFUL result
-            # as verify.json in its OWN store (losing it would make
-            # payload_stats() silently report the round as never verified);
-            # a failure becomes a warning attributed to its own store
-            # rather than an exception raised into an unrelated job.
-            stale_stats = None
-            try:
-                stale_stats = fut.result()
-            except Exception as e:  # pragma: no cover - needs a failing stale verify
-                import warnings
-
-                warnings.warn(
-                    f"discarded pipelined verify for aborted job at "
-                    f"{own_store.dir!r} round {r0}: {e!r}"
-                )
-            finally:
-                for df_ in frames:
-                    df_.unpersist()
-            if stale_stats and os.path.isdir(own_store.round_dir(r0)):
-                _atomic_write(
-                    os.path.join(own_store.round_dir(r0), "verify.json"),
-                    json.dumps(
-                        {k: (float(v) if v is not None else None) for k, v in stale_stats.items()}
-                    ).encode(),
-                )
-            return
-        try:
-            stats = fut.result()
-        except Exception as e:
-            # round r0 is ALREADY COMMITTED (the pipelined trade, see
-            # EngineConfig.pipeline_verify): surface the failure attributed
-            # to ITS round, not the round whose finalize happened to await
-            # it — the frontier rows are durable and correct (verification
-            # checks payload invariants, it does not gate admission), but
-            # the round must be re-verified before its payloads are trusted
-            raise RuntimeError(
-                f"pipelined payload verification FAILED for already-committed "
-                f"round {r0}: its rows are durable but unverified — re-run "
-                f"verification for round {r0} before trusting its payloads"
-            ) from e
-        finally:
-            for df_ in frames:
-                df_.unpersist()
-        if stats:
-            _atomic_write(
-                os.path.join(store.round_dir(r0), "verify.json"),
-                json.dumps(
-                    {k: (float(v) if v is not None else None) for k, v in stats.items()}
-                ).encode(),
-            )
-
+    # ------------------------------------------------------------ payload verify
     def payload_stats(self, job_id: str) -> dict:
-        """round -> payload-verification stats, from commit.json (synchronous
-        mode) or the pipelined mode's verify.json sidecar."""
+        """round -> payload-verification stats, from each round's commit.json."""
         store = self.store(job_id)
         out: dict = {}
         for r in store.committed_rounds():
             stats = store.read_commit(r).get("payload")
-            if stats is None:
-                try:
-                    with open(os.path.join(store.round_dir(r), "verify.json")) as f:
-                        stats = json.load(f)
-                except FileNotFoundError:
-                    continue
-            out[r] = stats
+            if stats is not None:
+                out[r] = stats
         return out
 
     def unverified_rounds(self, job_id: str) -> List[int]:
         """Committed rounds that ADMITTED pages but carry no payload-verify
-        stats. In pipelined mode, a driver killed between a round's commit
-        and its verify finalize leaves exactly this signature — an absent
-        verify.json sidecar — so the round's rows are durable but its
-        payloads unverified (r4 VERDICT Next #8). Only meaningful when the
-        job ran with verify_payloads."""
+        stats. A round's stats are part of its commit, so under
+        verify_payloads this is always empty; it lists the rounds a job
+        committed while verify_payloads was off."""
         store = self.store(job_id)
         verified = self.payload_stats(job_id)
         return [
@@ -765,52 +734,6 @@ class FrontierEngine:
             .collect()[0]
             .asDict()
         )
-
-    def reverify_round(self, job_id: str, r: int) -> dict:
-        """Re-run payload verification for an already-committed round whose
-        verify died pre-finalize (see unverified_rounds) and write its
-        missing verify.json sidecar. The admitted set is re-derived from
-        the PREVIOUS commit's frontier manifest — sub-round 0 re-ranks the
-        pending components (the politeness schedule is a pure function of
-        the data, so the slice is reproduced exactly), later sub-rounds
-        read their stored due-slices — so this works as long as vacuum has
-        not swept the consumed components; after that the inputs are gone
-        and the read raises, which is the honest answer (re-verify before
-        maintenance, or re-crawl the round)."""
-        store = self.store(job_id)
-        prev = store.read_commit(r - 1)
-        manifest = prev["frontier_manifest"]
-        d = min(e[1] for e in manifest)
-        sub = prev["sub_round"] + 1 if prev["depth"] == d else 0
-        entries_d = [e for e in manifest if e[1] == d]
-        if sub == 0:
-            pending = self._read_components(
-                [os.path.join(store.dir, e[0]) for e in entries_d]
-            )
-            admitted = (
-                pending
-                if self.cfg.politeness is None
-                else schedule(pending, self.cfg.politeness, grade=self._grade_col())[0]
-            )
-        else:
-            consumed = [e for e in entries_d if len(e) > 3 and e[3] == sub]
-            admitted = self._read_components(
-                [os.path.join(store.dir, e[0]) for e in consumed]
-            )
-        admitted_keyed = admitted.withColumn(
-            "image_id", U.image_id_of(F.col("url"))
-        ).withColumn(
-            "corpus_bucket",
-            F.pmod(U.page_index(F.col("url")), F.lit(C.N_BUCKETS)).cast("int"),
-        )
-        stats = self._verify_stats(admitted_keyed)
-        _atomic_write(
-            os.path.join(store.round_dir(r), "verify.json"),
-            json.dumps(
-                {k: (float(v) if v is not None else None) for k, v in stats.items()}
-            ).encode(),
-        )
-        return stats
 
     # ------------------------------------------------------------ compaction
     def compact_seen(self, job_id: str) -> dict:
@@ -897,8 +820,8 @@ class FrontierEngine:
         url_list = [urls] if isinstance(urls, str) else list(urls)
         if not url_list:
             return {"round": last, "n_unseen": 0, "n_reseeded": 0}
-        cand = self.spark.createDataFrame(pd.DataFrame({"url": url_list})).dropDuplicates(["url"])
-        cand = self._with_keys(cand).withColumn("host", U.host_of(F.col("url")))
+        cand = self.spark.createDataFrame(pd.DataFrame({"url": url_list}))
+        cand = self._with_keys(cand).dropDuplicates(["url_hash"]).withColumn("host", U.host_of(F.col("url")))
         # candidate buckets bound the seen scan (PartitionFilter-pruned);
         # the distinct-bucket collect is capped by cfg.seen_buckets
         bucket_list = [row[0] for row in cand.select("seen_bucket").distinct().collect()]
@@ -1046,13 +969,6 @@ class FrontierEngine:
 
         while not info.get("done"):
             if max_rounds is not None and rounds_done >= max_rounds:
-                self._finalize_verify(store)  # drain the pipelined verify
-                # a pre-submitted NEXT-round verify (if any) is deliberately
-                # left in flight: a resume on this engine adopts it (same
-                # store, same round number); an engine reused for another
-                # job cancels+drains it at that job's submit point. It reads
-                # only committed files and persists nothing, so an owner
-                # that never resumes leaks no cached frames.
                 return {"job_id": job_id, "done": False, "last_round": last}
             r = last + 1
             t0 = time.monotonic()
@@ -1068,389 +984,273 @@ class FrontierEngine:
             if on_round is not None:
                 on_round(stats)
 
-        # the LAST round's pipelined verify has no next round to hide
-        # behind — overlap it with the job-end seen count instead (both
-        # are independent job DAGs; FAIR shares slots)
-        count_future = _pool_submit(self.spark, lambda: self.seen_df(job_id).count())
-        try:
-            self._finalize_verify(store)
-        except BaseException:
-            # a verify failure must not orphan the in-flight count job:
-            # drain it (its own outcome is moot once verify failed)
-            try:
-                count_future.result()
-            except Exception:
-                pass
-            raise
-        return {
-            "job_id": job_id,
-            "done": True,
-            "last_round": last,
-            "n_seen": count_future.result(),
-        }
+        # the seen-set size is commit arithmetic, like every other count
+        n_seen = 0
+        for rr in store.committed_rounds():
+            c = store.read_commit(rr)
+            n_seen += _seen_inserts(rr, c) - c.get("tombstone", 0)
+        return {"job_id": job_id, "done": True, "last_round": last, "n_seen": n_seen}
 
     def _run_round(self, store: JobStateStore, r: int, depth_limit: int) -> RoundStats:
-        phases: dict = {}
-
-        def _mark(key, t0):
-            phases[key] = round((time.monotonic() - t0) * 1000)
-            return time.monotonic()
-        payload_future = None
-        deferred_future = None
-        persisted: List[DataFrame] = []
+        """One BFS round as a list of named phases. The payload verify runs
+        on _POOL alongside extract → write and is awaited before the commit,
+        so a committed round always carries its own verify stats."""
+        rnd = _Round(store, r, depth_limit)
         try:
-
-            t = time.monotonic()
-            prev = store.read_commit(r - 1)
-            # the pending frontier is a MANIFEST of committed file-sets
-            # ([relpath, depth, n_rows, due_sub]); the depth cursor, the
-            # no-politeness admitted count, AND every later sub-round's admitted
-            # count are manifest arithmetic — zero Spark jobs — and only the
-            # file-sets the round actually drains are ever opened
-            manifest = prev.get("frontier_manifest")
-            if manifest is None:
-                raise ValueError(
-                    f"job store at {store.dir!r} was committed by a pre-manifest layout "
-                    "(no frontier_manifest in commit.json); rerun the job in a fresh "
-                    "warehouse — old stores are not migrated"
-                )
-            d = min(e[1] for e in manifest)
-            sub = prev["sub_round"] + 1 if prev["depth"] == d else 0
-            entries_d = [e for e in manifest if e[1] == d]
-            n_pending_d = sum(e[2] for e in entries_d)
-
-            # ---- admission. Sub-round 0 ranks the depth's ENTIRE pending set
-            # once and writes each future sub-round's slice ONCE, partitioned by
-            # its computed due sub-round (`ceil(rn/budget)-1`); every later
-            # sub-round admits its slice purely BY MANIFEST REFERENCE — no
-            # politeness window re-run, no deferred-set rewrite. (The old loop
-            # re-ranked and REWROTE the whole remainder every sub-round: a
-            # mega-host with M pending and budget k wrote O(M²/k) rows; this
-            # writes O(M) total.)
-            deferred_sched = None  # rows scheduled for future sub-rounds (sub 0 only)
-            n_deferred = 0
-            if sub == 0:
-                consumed = entries_d
-                pending = self._read_components(
-                    [os.path.join(store.dir, e[0]) for e in consumed]
-                )
-                if self.cfg.politeness is None:
-                    admitted = pending
-                    persisted = [admitted.persist()]
-                    n_admitted = n_pending_d
-                else:
-                    # persisted `ranked` ancestor: the host-window shuffle runs
-                    # ONCE, shared by the admitted count and the deferred write
-                    persisted = []
-                    admitted, deferred_sched = schedule(
-                        pending, self.cfg.politeness, persisted, grade=self._grade_col()
-                    )
-                    persisted.append(admitted.persist())
-                    n_admitted = admitted.count()
-                    n_deferred = n_pending_d - n_admitted
-            else:
-                consumed = [e for e in entries_d if len(e) > 3 and e[3] == sub]
-                if not consumed:
-                    raise ValueError(
-                        f"no frontier slice due at depth {d} sub-round {sub}: "
-                        f"schedule slices must be contiguous ({entries_d}). A "
-                        "3-element entry here means the store was committed by "
-                        "the pre-due-slice layout — rerun the job in a fresh "
-                        "warehouse (old stores are not migrated)."
-                    )
-                admitted = self._read_components(
-                    [os.path.join(store.dir, e[0]) for e in consumed]
-                )
-                persisted = [admitted.persist()]
-                n_admitted = sum(e[2] for e in consumed)
-            t = _mark("admit_ms", t)
-
-            # ---- fetch: bucket-pruned corpus scan ⋈ broadcast(admitted)
-            admitted_keyed = admitted.withColumn("image_id", U.image_id_of(F.col("url"))).withColumn(
-                "corpus_bucket", F.pmod(U.page_index(F.col("url")), F.lit(C.N_BUCKETS)).cast("int")
-            )
-            payload_future = None
-            early = self._early_verify
-            if early is not None and (
-                early[0].dir != store.dir or early[1] != r
-            ):
-                # stale early verify (engine reuse / abort between rounds):
-                # CANCEL its Spark jobs first — this round must not block
-                # synchronously behind a full verify of another job — then
-                # drain best-effort and discard; never adopt across jobs
-                self._early_verify = None
-                try:
-                    self.spark.sparkContext.cancelJobGroup(
-                        f"verify:{early[0].dir}:r{early[1]}"
-                    )
-                except Exception:  # pragma: no cover - cancellation is best-effort
-                    pass
-                try:
-                    early[2].result()
-                except Exception:  # pragma: no cover - stale drain is best-effort
-                    pass
-                early = None
-            if self.cfg.verify_payloads and n_admitted > 0 and early is not None and sub == 0 and self.cfg.politeness is None:
-                # adopt the verify pre-submitted at the END of the previous
-                # round over the identical committed row set (see the
-                # early-submit block below) — it has been running through
-                # this round's admit already
-                self._early_verify = None
-                payload_future = early[2]
-            elif self.cfg.verify_payloads and n_admitted > 0:
-                # run the payload fetch+decode CONCURRENTLY with the extraction/
-                # dedup pipeline below — they share only the cached `admitted`
-                # (Spark actions are thread-safe; two independent job DAGs).
-                # Construction happens inside the thread too: fetch_join's
-                # bucket-pruning collect would otherwise block this thread.
-                def _verify():
-                    t0 = time.monotonic()
-                    stats = self._verify_stats(admitted_keyed)
-                    # the verify job's own wall: with pipeline_verify the phase
-                    # table only shows residual WAIT, so this is the one place
-                    # an operator can still read what verification actually
-                    # cost (slot-shared elapsed, not exclusive CPU). Sync mode
-                    # keeps the stats deterministic — fetch_verify_wait_ms
-                    # already carries the timing there.
-                    if self.cfg.pipeline_verify:
-                        stats["verify_wall_ms"] = round((time.monotonic() - t0) * 1000)
-                    return stats
-
-                payload_future = _pool_submit(
-                    self.spark, _verify, group=f"verify:{store.dir}:r{r}"
-                )
-            t = _mark("fetch_submit_ms", t)
-
-            # ---- extract + robots (skip at last depth, F4)
-            n_candidates = n_new = n_blocked = n_probe_pos = n_probe_fp = 0
-            new_rows = None
-            probe = self.cfg.use_bloom
-            if d + 1 < depth_limit and n_admitted > 0:
-                # extraction parallelism must not be bound to the frontier's
-                # file count — pin it to 2× cores (CPU-bound Python stage;
-                # finer tasks smooth stragglers)
-                extract_input = admitted_keyed.repartition(2 * self.spark.sparkContext.defaultParallelism)
-                links = extract_links(extract_input, self.spec)
-                keyed = self._with_keys(links.select("url", "host"))
-                if self.cfg.robots is not None:
-                    # blocked URLs never enter the seen set, so the robots filter
-                    # commutes with dedup and the seen probe; counting BEFORE the
-                    # within-round dedup is multiplicity-preserving — every
-                    # discovery occurrence of a blocked URL counts, matching the
-                    # oracle (oracle/crawler.py:141-147) at any depth, not just
-                    # where the fixture happens to have no within-round dups.
-                    # The count is metrics-only and costs a job per round, so
-                    # it is gated by cfg.detailed_metrics (-1 when off)
-                    keyed = keyed.withColumn("_blocked", blocked_expr(F.col("url"))).persist()
-                    persisted.append(keyed)
-                    n_blocked = keyed.filter(F.col("_blocked")).count() if self.cfg.detailed_metrics else -1
-                    keyed = keyed.filter(~F.col("_blocked")).drop("_blocked")
-                if not probe:
-                    # no Bloom filter: dropDuplicates + exact left-anti join
-                    keyed, deduped = self._filter_new(store, keyed, persisted)
-                    n_candidates = deduped.count()
-                new_rows = keyed.withColumn("depth", F.lit(d + 1)).select(
-                    "url", "host", "url_hash", "seen_bucket", "depth"
-                )
-
-            # ---- stage writes into the round dir (visible only after commit):
-            # ONE fused shuffle+write job for the new URLs — with Bloom it
-            # takes the raw candidates and dedups, probes and exact-checks
-            # them in the write task itself (see _write_bucketed), so the
-            # new-URL path has one exchange; parquet + seen delta + bloom
-            # blobs come from the same pass, counts from its stats (no
-            # read-back). A second job ONLY at sub-round 0 when politeness
-            # scheduled future slices (written once, partitioned by due
-            # sub-round), and NO next-frontier rewrite: untouched depths AND
-            # not-yet-due slices carry over in the manifest by reference
-            deferred_future = (
-                _pool_submit(
-                    self.spark,
-                    self._write_bucketed, store, store.deferred_path(r), deferred_sched, None, "due",
-                    n_deferred,
-                    group=f"defwrite:{store.dir}:r{r}",
-                )
-                if n_deferred > 0
-                else None
-            )
-            touched: List[int] = []
-            n_new = 0
-            if new_rows is not None:
-                # upper bound on the write's input row count (raw candidates
-                # <= admitted × max out-degree): over-estimating only shrinks
-                # the chunked groups, never breaks the memory guard
-                stats, task = self._write_bucketed(
-                    store, store.new_path(r), new_rows, bloom_round=r,
-                    approx_rows=n_admitted * C.MAX_OUT_DEGREE, probe=probe,
-                )
-                touched = sorted({s[0] for s in stats})
-                n_new = sum(s[1] for s in stats)
-                if probe:
-                    n_candidates = task["n_candidates"]
-                    n_probe_pos, n_probe_fp = task["n_probe_pos"], task["n_probe_fp"]
-                # worker-side breakdown of THIS write job (summed across its
-                # tasks): lets the bench attribute extract_write_ms to the
-                # probe / Arrow conversion / parquet encode / bloom fold vs
-                # extraction + shuffle + scheduling
-                for k in ("probe_ms", "conv_ms", "pq_ms", "bloom_ms", "n_tasks"):
-                    phases[f"write_{k}"] = task[k]
-            sched_entries: List[list] = []
-            if deferred_future is not None:
-                def_stats, _ = deferred_future.result()
-                n_def_written = sum(s[2] for s in def_stats)
-                # self-check: the manifest records arithmetic (pending - admitted);
-                # the write stats come back for free — any divergence (e.g. a
-                # future budget expression breaking admit/schedule complementarity)
-                # must fail loudly, not corrupt n_pending_after / the done flag
-                if n_def_written != n_deferred:
-                    raise AssertionError(
-                        f"deferred write produced {n_def_written} rows, expected {n_deferred}"
-                    )
-                per_due: dict = {}
-                for due, _b, n in def_stats:
-                    per_due[due] = per_due.get(due, 0) + n
-                root = store.deferred_path(r)
-                sched_entries = [
-                    [self._rel(store, os.path.join(root, f"due={due}")), d, per_due[due], due]
-                    for due in sorted(per_due)
-                ]
-            payload_stats = None
-            if self.cfg.pipeline_verify:
-                # this round's verify keeps running through the NEXT round's
-                # compute; await the PREVIOUS round's instead (it has had a full
-                # round of overlap), so per-round wall is max(verify, rest),
-                # not their sum. This round's persisted frames stay alive until
-                # its verify finalizes.
-                t = _mark("extract_write_ms", t)
-                self._finalize_verify(store)
-                if payload_future is None:
-                    for df_ in persisted:
-                        df_.unpersist()
-                _mark("fetch_verify_wait_ms", t)
-            else:
-                for df_ in persisted:
-                    df_.unpersist()
-                t = _mark("extract_write_ms", t)
-                payload_stats = payload_future.result() if payload_future is not None else None
-                _mark("fetch_verify_wait_ms", t)
-
-            consumed_ids = {id(e) for e in consumed}
-            next_manifest = [e for e in manifest if id(e) not in consumed_ids]
-            next_manifest.extend(sched_entries)
-            if n_new > 0:
-                next_manifest.append([self._rel(store, store.new_path(r)), d + 1, n_new, 0])
-            next_manifest = self._compact_manifest(store, r, next_manifest, phases)
-            n_pending_after = sum(e[2] for e in next_manifest)
-
-            info = {
-                "depth": int(d),
-                "sub_round": int(sub),
-                "depth_limit": depth_limit,
-                "n_admitted": n_admitted,
-                "n_new": n_new,
-                "n_pending_after": n_pending_after,
-                "frontier_manifest": next_manifest,
-                "done": n_pending_after == 0,
-            }
-            if payload_stats:
-                info["payload"] = {k: (float(v) if v is not None else None) for k, v in payload_stats.items()}
-            info["phases"] = phases
-            store.commit_round(r, info, touched_blooms=touched)
-            if self.cfg.pipeline_verify and payload_future is not None:
-                # stash AFTER commit: the finalize (next round / job end) writes
-                # the stats sidecar into this round's already-committed dir
-                self._verify_inflight = (store, r, payload_future, persisted)
-            if (
-                self.cfg.pipeline_verify
-                and self.cfg.verify_payloads
-                and self.cfg.politeness is None
-                and n_new > 0
-                and not info["done"]
-                and d + 2 >= depth_limit
-                and all(e[1] == d + 1 for e in next_manifest)
-            ):
-                # EARLY-SUBMIT the NEXT (final-depth) round's verify over the
-                # rows just committed (r8 verdict Next #2): the final round
-                # does no extraction, so its verify — the job's largest —
-                # used to start only at that round's head and finalize with
-                # nothing to hide behind but the job-end seen count. With
-                # politeness off the next round admits EXACTLY this
-                # manifest (one depth, sub-round 0), so the verify input —
-                # re-read from the committed files, like the next round
-                # will — is row-identical and the stats sidecar unchanged.
-                nxt = self._read_components(
-                    [os.path.join(store.dir, e[0]) for e in next_manifest]
-                )
-                nxt_keyed = nxt.withColumn(
-                    "image_id", U.image_id_of(F.col("url"))
-                ).withColumn(
-                    "corpus_bucket",
-                    F.pmod(U.page_index(F.col("url")), F.lit(C.N_BUCKETS)).cast("int"),
-                )
-                t0e = time.monotonic()
-
-                def _early():
-                    stats = self._verify_stats(nxt_keyed)
-                    stats["verify_wall_ms"] = round((time.monotonic() - t0e) * 1000)
-                    return stats
-
-                self._early_verify = (
-                    store,
-                    r + 1,
-                    _pool_submit(self.spark, _early, group=f"verify:{store.dir}:r{r + 1}"),
-                )
-            return RoundStats(
-                round=r,
-                depth=int(d),
-                sub_round=int(sub),
-                n_admitted=n_admitted,
-                n_candidates=n_candidates,
-                n_new=n_new,
-                n_blocked=n_blocked,
-                n_pending_after=n_pending_after,
-                wall_ms=0,
-                n_probe_pos=n_probe_pos,
-                n_probe_fp=n_probe_fp,
-            )
+            self._cursor(rnd)
+            self._admit(rnd)
+            rnd.mark("admit_ms")
+            self._submit_verify(rnd)
+            rnd.mark("fetch_submit_ms")
+            new_rows = self._extract(rnd)
+            sched_entries = self._writes(rnd, new_rows)
+            rnd.release()
+            rnd.mark("extract_write_ms")
+            payload = self._finalize_verify(rnd)
+            rnd.mark("fetch_verify_wait_ms")
+            manifest = self._next_manifest(rnd, sched_entries)
+            n_pending_after = self._commit(rnd, manifest, payload)
         except BaseException:
-            # a mid-round failure must not leak this round's in-flight
-            # concurrent jobs or cached frames: the verify/deferred futures
-            # would otherwise run unobserved (and their persisted inputs
-            # stay pinned forever — _verify_inflight is only stashed on the
-            # success path, AFTER commit). CANCEL their Spark jobs first —
-            # the verify is the round's longest job and an interrupt
-            # (Ctrl-C, timeout) must not block its own cleanup behind a
-            # full verify run — then drain, release, re-raise; the futures'
-            # own outcomes are moot once the round failed.
-            # r-1's group too: with pipeline_verify the longest wait in the
-            # round is _finalize_verify awaiting the PREVIOUS round's verify
-            # — an interrupt usually lands exactly there, and that job would
-            # otherwise keep running unobserved after its input frames were
-            # unpersisted by finalize's cleanup
-            for g in (
-                f"verify:{store.dir}:r{r}",
-                f"defwrite:{store.dir}:r{r}",
-                f"verify:{store.dir}:r{r - 1}",
-                f"verify:{store.dir}:r{r + 1}",  # an early-submitted next-round verify
-            ):
+            self._abandon(rnd)
+            raise
+        return RoundStats(
+            round=r,
+            depth=rnd.d,
+            sub_round=rnd.sub,
+            n_admitted=rnd.n_admitted,
+            n_candidates=rnd.n_candidates,
+            n_new=rnd.n_new,
+            n_blocked=rnd.n_blocked,
+            n_pending_after=n_pending_after,
+            wall_ms=0,
+            n_probe_pos=rnd.n_probe_pos,
+            n_probe_fp=rnd.n_probe_fp,
+        )
+
+    def _cursor(self, rnd: _Round) -> None:
+        """The depth and sub-round this round drains. The pending frontier
+        is a MANIFEST of committed file-sets ([relpath, depth, n_rows,
+        due_sub]); the depth cursor, the no-politeness admitted count AND
+        every later sub-round's admitted count are manifest arithmetic —
+        zero Spark jobs — and only the file-sets the round actually drains
+        are ever opened."""
+        prev = rnd.store.read_commit(rnd.r - 1)
+        manifest = prev.get("frontier_manifest")
+        if manifest is None:
+            raise ValueError(
+                f"job store at {rnd.store.dir!r} was committed by a pre-manifest layout "
+                "(no frontier_manifest in commit.json); rerun the job in a fresh "
+                "warehouse — old stores are not migrated"
+            )
+        rnd.manifest = manifest
+        rnd.d = int(min(e[1] for e in manifest))
+        rnd.sub = int(prev["sub_round"] + 1 if prev["depth"] == rnd.d else 0)
+
+    def _admit(self, rnd: _Round) -> None:
+        """Admission. Sub-round 0 ranks the depth's ENTIRE pending set once
+        and schedules each future sub-round's slice by its computed due
+        sub-round (`ceil(rn/budget)-1`), written ONCE by _writes; every
+        later sub-round admits its slice purely BY MANIFEST REFERENCE — no
+        politeness window re-run, no deferred-set rewrite (re-ranking and
+        rewriting the remainder every sub-round would write O(M²/k) rows
+        for a mega-host with M pending and budget k; this writes O(M))."""
+        d = rnd.d
+        entries_d = [e for e in rnd.manifest if e[1] == d]
+        if rnd.sub == 0:
+            rnd.consumed = entries_d
+        else:
+            rnd.consumed = [e for e in entries_d if len(e) > 3 and e[3] == rnd.sub]
+            if not rnd.consumed:
+                raise ValueError(
+                    f"no frontier slice due at depth {d} sub-round {rnd.sub}: "
+                    f"schedule slices must be contiguous ({entries_d}). A "
+                    "3-element entry here means the store was committed by "
+                    "the pre-due-slice layout — rerun the job in a fresh "
+                    "warehouse (old stores are not migrated)."
+                )
+        admitted = self._read_components(
+            [os.path.join(rnd.store.dir, e[0]) for e in rnd.consumed]
+        )
+        n_pending = sum(e[2] for e in rnd.consumed)
+        if rnd.sub == 0 and self.cfg.politeness is not None:
+            # persisted `ranked` ancestor: the host-window shuffle runs
+            # ONCE, shared by the admitted count and the deferred write
+            admitted, rnd.deferred = schedule(
+                admitted, self.cfg.politeness, rnd.persisted, grade=self._grade_col()
+            )
+        rnd.persisted.append(admitted.persist())
+        rnd.n_admitted = n_pending if rnd.deferred is None else admitted.count()
+        rnd.n_deferred = n_pending - rnd.n_admitted
+        # fetch keys: the verify's bucket-pruned corpus scan ⋈
+        # broadcast(admitted), and the extraction input
+        rnd.admitted = admitted.withColumn("image_id", U.image_id_of(F.col("url"))).withColumn(
+            "corpus_bucket", F.pmod(U.page_index(F.col("url")), F.lit(C.N_BUCKETS)).cast("int")
+        )
+
+    def _submit_verify(self, rnd: _Round) -> None:
+        """Start the payload fetch+decode+verify on _POOL, CONCURRENTLY
+        with extraction and the writes — they share only the cached
+        admitted frame (Spark actions are thread-safe; two independent job
+        DAGs). Construction runs in the pool thread too: fetch_join's
+        bucket-pruning collect would otherwise block this thread."""
+        if self.cfg.verify_payloads and rnd.n_admitted > 0:
+            rnd.verify = _pool_submit(
+                self.spark, self._verify_stats, rnd.admitted, group=rnd.group("verify")
+            )
+
+    def _extract(self, rnd: _Round) -> Optional[DataFrame]:
+        """The next depth's keyed candidate rows (lazy), or None at the
+        last depth (F4) or when nothing was admitted. With Bloom they keep
+        duplicates and seen URLs — the fused write dedups and probes them;
+        without it _filter_new removes both here."""
+        if rnd.d + 1 >= rnd.depth_limit or rnd.n_admitted == 0:
+            return None
+        # extraction parallelism must not be bound to the frontier's file
+        # count — pin it to 2× cores (CPU-bound Python stage; finer tasks
+        # smooth stragglers)
+        extract_input = rnd.admitted.repartition(2 * self.spark.sparkContext.defaultParallelism)
+        keyed = self._with_keys(extract_links(extract_input, self.spec).select("url", "host"))
+        if self.cfg.robots is not None:
+            # blocked URLs never enter the seen set, so the robots filter
+            # commutes with dedup and the seen probe; counting BEFORE the
+            # within-round dedup is multiplicity-preserving — every
+            # discovery occurrence of a blocked URL counts, matching the
+            # oracle (oracle/crawler.py:141-147) at any depth, not just
+            # where the fixture happens to have no within-round dups.
+            # The count is metrics-only and costs a job per round, so
+            # it is gated by cfg.detailed_metrics (-1 when off)
+            keyed = keyed.withColumn("_blocked", blocked_expr(F.col("url"))).persist()
+            rnd.persisted.append(keyed)
+            rnd.n_blocked = keyed.filter(F.col("_blocked")).count() if self.cfg.detailed_metrics else -1
+            keyed = keyed.filter(~F.col("_blocked")).drop("_blocked")
+        if not self.cfg.use_bloom:
+            # no Bloom filter: dropDuplicates + exact left-anti join
+            keyed, deduped = self._filter_new(rnd.store, keyed, rnd.persisted)
+            rnd.n_candidates = deduped.count()
+        return keyed.withColumn("depth", F.lit(rnd.d + 1)).select(
+            "url", "host", "url_hash", "seen_bucket", "depth"
+        )
+
+    def _writes(self, rnd: _Round, new_rows: Optional[DataFrame]) -> List[list]:
+        """Stage the round's writes into its dir (visible only after
+        commit): ONE fused shuffle+write job for the new URLs — with Bloom
+        it takes the raw candidates and dedups, probes and exact-checks
+        them in the write task itself (see _write_bucketed), so the
+        new-URL path has one exchange; parquet + seen delta + bloom blobs
+        come from the same pass, counts from its stats (no read-back). A
+        second job, on _POOL, ONLY at sub-round 0 when politeness
+        scheduled future slices (written once, partitioned by due
+        sub-round), and NO next-frontier rewrite: untouched depths AND
+        not-yet-due slices carry over in the manifest by reference.
+        Returns the deferred slices' manifest entries."""
+        store, r = rnd.store, rnd.r
+        if rnd.n_deferred > 0:
+            rnd.deferred_write = _pool_submit(
+                self.spark,
+                self._write_bucketed, store, store.deferred_path(r), rnd.deferred, None, "due",
+                rnd.n_deferred,
+                group=rnd.group("defwrite"),
+            )
+        if new_rows is not None:
+            # upper bound on the write's input row count (raw candidates
+            # <= admitted × max out-degree): over-estimating only shrinks
+            # the chunked groups, never breaks the memory guard
+            stats, task = self._write_bucketed(
+                store, store.new_path(r), new_rows, bloom_round=r,
+                approx_rows=rnd.n_admitted * C.MAX_OUT_DEGREE, probe=self.cfg.use_bloom,
+            )
+            rnd.touched = sorted({s[0] for s in stats})
+            rnd.n_new = sum(s[1] for s in stats)
+            if self.cfg.use_bloom:
+                rnd.n_candidates = task["n_candidates"]
+                rnd.n_probe_pos, rnd.n_probe_fp = task["n_probe_pos"], task["n_probe_fp"]
+            # worker-side breakdown of THIS write job (summed across its
+            # tasks): lets the bench attribute extract_write_ms to the
+            # probe / Arrow conversion / parquet encode / bloom fold vs
+            # extraction + shuffle + scheduling
+            for k in ("probe_ms", "conv_ms", "pq_ms", "bloom_ms", "n_tasks"):
+                rnd.phases[f"write_{k}"] = task[k]
+        if rnd.deferred_write is None:
+            return []
+        def_stats, _ = rnd.deferred_write.result()
+        n_written = sum(s[2] for s in def_stats)
+        # self-check: the manifest records arithmetic (pending - admitted);
+        # the write stats come back for free — any divergence (e.g. a
+        # future budget expression breaking admit/schedule complementarity)
+        # must fail loudly, not corrupt n_pending_after / the done flag
+        if n_written != rnd.n_deferred:
+            raise AssertionError(
+                f"deferred write produced {n_written} rows, expected {rnd.n_deferred}"
+            )
+        per_due: dict = {}
+        for due, _b, n in def_stats:
+            per_due[due] = per_due.get(due, 0) + n
+        root = store.deferred_path(r)
+        return [
+            [self._rel(store, os.path.join(root, f"due={due}")), rnd.d, per_due[due], due]
+            for due in sorted(per_due)
+        ]
+
+    def _finalize_verify(self, rnd: _Round) -> Optional[dict]:
+        """Wait for this round's payload verify and return its stats for
+        commit.json (None when the round verified nothing)."""
+        if rnd.verify is None:
+            return None
+        stats = rnd.verify.result()
+        return {k: (float(v) if v is not None else None) for k, v in stats.items()}
+
+    def _next_manifest(self, rnd: _Round, sched_entries: List[list]) -> List[list]:
+        """The pending frontier after this round: the manifest minus the
+        consumed entries, plus the deferred slices and the new-URL set,
+        compacted when a group outgrows cfg.frontier_compact_every."""
+        consumed_ids = {id(e) for e in rnd.consumed}
+        manifest = [e for e in rnd.manifest if id(e) not in consumed_ids] + sched_entries
+        if rnd.n_new > 0:
+            manifest.append([self._rel(rnd.store, rnd.store.new_path(rnd.r)), rnd.d + 1, rnd.n_new, 0])
+        return self._compact_manifest(rnd.store, rnd.r, manifest, rnd.phases)
+
+    def _commit(self, rnd: _Round, manifest: List[list], payload: Optional[dict]) -> int:
+        """Publish the round (the resume anchor); returns n_pending_after."""
+        n_pending_after = sum(e[2] for e in manifest)
+        info = {
+            "depth": rnd.d,
+            "sub_round": rnd.sub,
+            "depth_limit": rnd.depth_limit,
+            "n_admitted": rnd.n_admitted,
+            "n_new": rnd.n_new,
+            "n_pending_after": n_pending_after,
+            "frontier_manifest": manifest,
+            "done": n_pending_after == 0,
+        }
+        if payload:
+            info["payload"] = payload
+        info["phases"] = rnd.phases
+        rnd.store.commit_round(rnd.r, info, touched_blooms=rnd.touched)
+        return n_pending_after
+
+    def _abandon(self, rnd: _Round) -> None:
+        """A mid-round failure must not leak the round's in-flight pool
+        jobs or cached frames: CANCEL their Spark jobs first — the verify
+        is the round's longest job and an interrupt (Ctrl-C, timeout) must
+        not block its own cleanup behind a full verify run — then drain
+        them and release the caches; the futures' own outcomes are moot
+        once the round failed."""
+        for g in ("verify", "defwrite"):
+            try:
+                self.spark.sparkContext.cancelJobGroup(rnd.group(g))
+            except Exception:  # pragma: no cover - cancellation is best-effort
+                pass
+        for fut in (rnd.verify, rnd.deferred_write):
+            if fut is not None:
                 try:
-                    self.spark.sparkContext.cancelJobGroup(g)
-                except Exception:  # pragma: no cover - cancellation is best-effort
-                    pass
-            early_fut = self._early_verify[2] if self._early_verify is not None else None
-            self._early_verify = None
-            for fut in (payload_future, deferred_future, early_fut):
-                if fut is not None:
-                    try:
-                        fut.result()
-                    except Exception:
-                        pass
-            for df_ in persisted:
-                try:
-                    df_.unpersist()
+                    fut.result()
                 except Exception:
                     pass
-            raise
+        for df_ in rnd.persisted:
+            try:
+                df_.unpersist()
+            except Exception:
+                pass
 
     def _write_round_metrics(self, store: JobStateStore, r: int, s: RoundStats) -> None:
         """Per-round lineage/metrics row (north rule; generalizes the
@@ -1526,10 +1326,7 @@ class FrontierEngine:
             if rr <= lo:
                 continue  # folded into the compaction prefix
             info = store.read_commit(rr)
-            n_ins = info.get("n_new", 0) + info.get("reseed", 0)
-            if rr == 0:
-                n_ins = info.get("n_pending_after", 0)
-            if n_ins > 0:
+            if _seen_inserts(rr, info) > 0:
                 p = store.seen_delta_path(rr)
                 if not os.path.isdir(p):
                     raise ValueError(
@@ -1605,13 +1402,7 @@ class FrontierEngine:
             if r <= from_round:
                 continue
             info = store.read_commit(r)
-            # inserted seen rows this round: crawl discoveries (n_new),
-            # reseeds, or the seed batch itself (round 0's pending count —
-            # the seed write is both frontier and seen delta)
-            n_ins = info.get("n_new", 0) + info.get("reseed", 0)
-            if r == 0:
-                n_ins = info.get("n_pending_after", 0)
-            if n_ins > 0:
+            if _seen_inserts(r, info) > 0:
                 p = store.seen_delta_path(r)
                 if not os.path.isdir(p):
                     raise ValueError(

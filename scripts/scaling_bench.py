@@ -86,9 +86,8 @@ def main():
         a, b = p8.get(k, 0) / 1000, p32.get(k, 0) / 1000
         speedup = a / b if b else float("inf")
         phase_rows.append(f"| {k} | {a:.1f} | {b:.1f} | {speedup:.2f}× | {speedup/4:.2f} |")
-    # bench.py runs the drain with pipeline_verify: round r's decode+verify
-    # overlaps round r+1's compute, so fetch_verify_wait_ms is residual wait
-    # (~0 when the overlap fully hides it) and phases no longer sum to wall.
+    # each round's decode+verify runs alongside its own extract → write, so
+    # fetch_verify_wait_ms is the verify time that job did not hide.
     # The extract→dedup→probe→write pipeline executes as ONE Spark job with
     # one exchange, timed as extract_write_ms — the representative compute
     # phase; its worker-side cost rides in write_probe/conv/pq/bloom_ms.
@@ -150,9 +149,9 @@ within-round dedup, the Bloom probe and the exact re-check of its
 positives all run inside the bucketed write task, so no per-round
 anti-join, probe stage or separate seen scan remains) speeds up
 {extract_speedup:.2f}× with 4× cores, and payload decode+verify (the heaviest real work at the 10^10
-target) is PIPELINED across rounds since r4: round r's verify overlaps
-round r+1's compute, so its phase row shows residual wait (~0 when fully
-hidden) and the per-phase rows no longer sum to wall clock. What does not
+target) runs concurrently with its own round's extract → write and is
+awaited before the commit, so its phase row shows only the wait that job
+did not hide. What does not
 scale in this sandbox is what a single box shares: the Arrow-batched
 decode/verify kernel is memory-bandwidth-bound across 32 sibling
 processes on one socket, so as the fused job shrinks with cores the

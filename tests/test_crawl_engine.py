@@ -16,13 +16,6 @@ from distributed_web_crawler_spark.oracle.crawler import (
 from distributed_web_crawler_spark.plans.frontier import EngineConfig, FrontierEngine
 
 
-def _strip_stats(per_round: dict) -> dict:
-    """Payload stats net of the pipelined mode's verify_wall_ms timing
-    field — the invariant counts/PSNR are what sync and piped must agree
-    on."""
-    return {r: {k: v for k, v in st.items() if k != "verify_wall_ms"} for r, st in per_round.items()}
-
-
 def pick_seed(spec, min_degree=3, skip=0):
     found = 0
     for i in range(spec.n):
@@ -337,11 +330,27 @@ def test_new_url_path_has_one_exchange(spark, corpus_1k, tmp_path, monkeypatch):
     assert "InMemory" not in above_extract, writes[0]
 
 
+def _check_verify_stats(eng, job_id):
+    """Every admitting round committed its payload stats inside its own
+    commit.json, with every admitted page verified and no sidecar file."""
+    store = eng.store(job_id)
+    stats = eng.payload_stats(job_id)
+    admitting = [r for r in store.committed_rounds() if store.read_commit(r).get("n_admitted", 0) > 0]
+    assert admitting and sorted(stats) == admitting
+    for r in admitting:
+        c = store.read_commit(r)
+        s = c["payload"]
+        assert s["n"] == c["n_admitted"] == s["n_pixels_ok"] == s["n_phash_ok"] == s["n_caption_ok"]
+        assert s["min_psnr"] >= 40.0
+        assert not os.path.exists(os.path.join(store.round_dir(r), "verify.json"))
+    return stats
+
+
 def test_pipelined_verify_same_stats_and_results(spark, corpus_1k, tmp_path):
-    """pipeline_verify overlaps round r's payload verification with round
-    r+1's compute; every admitted row is still verified — the per-round
-    stats (landing in verify.json after the commit) must equal synchronous
-    mode's commit-embedded stats, and the crawl itself is unchanged."""
+    """Payload verify runs inside the round: its stats are committed with
+    the round, a max_rounds cut plus resume reproduces them exactly, and
+    the ignored pipeline_verify flag changes nothing (no sidecar, same
+    stats, same crawl)."""
     spec, _ = corpus_1k
     seed_i = pick_seed(spec)
     sync = engine_for(
@@ -353,44 +362,51 @@ def test_pipelined_verify_same_stats_and_results(spark, corpus_1k, tmp_path):
     )
     rs = sync.run_job("pay", C.url_of(seed_i, spec), 3)
     rp = piped.run_job("pay", C.url_of(seed_i, spec), 3)
-    assert rp["done"] and rp["n_seen"] == rs["n_seen"]
+    assert rp["done"] and rp["n_seen"] == rs["n_seen"] == sync.seen_df("pay").count()
     assert sync.client_payload("pay", 3) == piped.client_payload("pay", 3)
+    ss = _check_verify_stats(sync, "pay")
+    assert _check_verify_stats(piped, "pay") == ss
 
-    ss, sp = _strip_stats(sync.payload_stats("pay")), _strip_stats(piped.payload_stats("pay"))
-    assert ss and sp == ss  # same rounds, same invariant counts, same PSNR
-    for s in sp.values():
-        assert s["n"] == s["n_pixels_ok"] == s["n_phash_ok"] == s["n_caption_ok"]
-        assert s["min_psnr"] >= 40.0
-    # pipelined stats live in the post-commit sidecar, not in commit.json
-    store = piped.store("pay")
-    assert all(store.read_commit(r).get("payload") is None for r in store.committed_rounds())
-
-    # interrupt/resume drains the in-flight verify at the cut point too
-    piped2 = engine_for(
-        spark, tmp_path / "c", corpus_1k,
-        EngineConfig(use_bloom=True, verify_payloads=True, pipeline_verify=True),
+    # a cut after one round commits that round's stats; the resume adds
+    # the rest, equal to the uninterrupted run's
+    cut = engine_for(
+        spark, tmp_path / "c", corpus_1k, EngineConfig(use_bloom=True, verify_payloads=True)
     )
-    piped2.run_job("res", C.url_of(seed_i, spec), 3, max_rounds=1)
-    assert 1 in piped2.payload_stats("res")  # finalized before the early return
-    piped2.run_job("res", C.url_of(seed_i, spec), 3)
-    assert _strip_stats(piped2.payload_stats("res")) == ss
+    assert not cut.run_job("res", C.url_of(seed_i, spec), 3, max_rounds=1)["done"]
+    assert sorted(cut.payload_stats("res")) == [1]
+    assert cut.payload_stats("res")[1] == ss[1]
+    assert cut.run_job("res", C.url_of(seed_i, spec), 3)["n_seen"] == rs["n_seen"]
+    assert _check_verify_stats(cut, "res") == ss
 
 
 def test_pipelined_verify_with_politeness_subrounds(spark, corpus_1k, tmp_path):
-    """Pipelining must also hold when a depth drains in politeness
-    sub-rounds (many small rounds, verify per admitted slice): per-round
-    stats equal synchronous mode and the crawl matches the oracle."""
+    """The same holds when a depth drains in politeness sub-rounds (many
+    small rounds, one verify per admitted slice): stats committed per
+    round, a cut plus resume equal to the uninterrupted run, the ignored
+    pipeline_verify flag without effect, and the crawl equal to the
+    oracle."""
     spec, _ = corpus_1k
-    seed_i = pick_seed(spec)
-    pol = PolitenessPolicy()
+
+    def shares_a_host(i):
+        links = set(C.out_links(i, spec))
+        return len({C.host_of(j, spec) for j in links}) < len(links)
+
+    # budget 1 per host: two depth-1 links on one host need two sub-rounds
+    seed_i = next(i for i in range(spec.n) if shares_a_host(i))
+    pol = PolitenessPolicy(round_duration_ms=500)
     mk = lambda sub, pv: engine_for(  # noqa: E731
         spark, tmp_path / sub, corpus_1k,
         EngineConfig(politeness=pol, use_bloom=True, verify_payloads=True, pipeline_verify=pv),
     )
-    sync, piped = mk("a", False), mk("b", True)
+    sync, piped, cut = mk("a", False), mk("b", True), mk("c", False)
     rs = sync.run_job("p", C.url_of(seed_i, spec), 2)
     rp = piped.run_job("p", C.url_of(seed_i, spec), 2)
-    assert rp["done"] and rp["n_seen"] == rs["n_seen"]
-    assert _strip_stats(piped.payload_stats("p")) == _strip_stats(sync.payload_stats("p"))
+    assert rp["done"] and rp["n_seen"] == rs["n_seen"] == sync.seen_df("p").count()
+    ss = _check_verify_stats(sync, "p")
+    assert len(ss) > 2  # the depth really drained in sub-rounds
+    assert _check_verify_stats(piped, "p") == ss
     want = crawl(seed_i, 2, spec, politeness=pol)
     assert piped.client_payload("p", 2) == want.levels_sorted()
+    cut.run_job("p", C.url_of(seed_i, spec), 2, max_rounds=1)
+    assert cut.run_job("p", C.url_of(seed_i, spec), 2)["n_seen"] == rs["n_seen"]
+    assert _check_verify_stats(cut, "p") == ss

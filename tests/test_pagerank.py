@@ -89,3 +89,46 @@ def test_iteration_scores_absent_sources_at_base(spark):
 
     with pytest.raises(ValueError, match="n_iters"):
         pagerank(edges, n_iters=0)
+
+
+def test_raising_calls_leave_no_persisted_rdd(spark, tmp_path, monkeypatch):
+    """pagerank/hits and their table forms validate n_iters before they
+    persist anything, and release what they did persist when an iteration
+    raises (compared as RDD-id sets, like the engine's round-failure
+    test)."""
+    import pytest
+
+    from distributed_web_crawler_spark.operators import hits as H
+    from distributed_web_crawler_spark.operators import pagerank as P
+
+    edges = spark.createDataFrame(
+        [(f"u{i}", f"u{(i * 7 + 1) % 20}") for i in range(20)], ["src", "dst"]
+    )
+    P.write_edges_bucketed(edges, "pr_leak", n_buckets=4, path=str(tmp_path / "pr"))
+    H.write_edges_dual_bucketed(edges, "hits_leak", n_buckets=4, base_path=str(tmp_path / "h"))
+    calls = [
+        lambda n: P.pagerank(edges, n_iters=n),
+        lambda n: P.pagerank_on_table(spark, "pr_leak", n_iters=n),
+        lambda n: H.hits(edges, n_iters=n),
+        lambda n: H.hits_on_tables(spark, "hits_leak", n_iters=n),
+    ]
+
+    def boom(*a, **k):
+        raise RuntimeError("simulated iteration failure")
+
+    try:
+        before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+        for call in calls:
+            with pytest.raises(ValueError, match="n_iters"):
+                call(0)
+        assert not (set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before)
+        # a failure in the second iteration, after the first step persisted
+        monkeypatch.setattr(P, "iteration_scores", boom)
+        monkeypatch.setattr(H, "iteration_inflow", boom)
+        for call in calls:
+            with pytest.raises(RuntimeError, match="simulated"):
+                call(3)
+        assert not (set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before)
+    finally:
+        for t in ("pr_leak", "hits_leak_src", "hits_leak_dst"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")

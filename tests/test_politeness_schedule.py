@@ -405,36 +405,3 @@ def test_engine_graded_drain_identical_results(spark, corpus_1k, tmp_path):
     assert res["plain"][2] == res["graded_wide"][2]
     # the tight budget really rate-limited (more committed rounds)
     assert res["graded_tight"][2] > res["plain"][2]
-
-
-def test_reverify_reproduces_graded_slices(spark, corpus_1k, tmp_path):
-    """reverify_round re-derives a round's admitted set from the manifest
-    by RE-RUNNING the politeness schedule — with a grade configured, the
-    re-derived slice must be the graded one (the grade is part of the
-    round dataflow, so forgetting it would re-verify the wrong rows)."""
-    from distributed_web_crawler_spark.fixtures import corpus as C
-    from distributed_web_crawler_spark.oracle.crawler import PolitenessPolicy
-    from distributed_web_crawler_spark.plans.frontier import EngineConfig, FrontierEngine
-
-    spec, corpus = corpus_1k
-    seeds = [C.url_of(i, spec) for i in range(0, 60, 10)]  # mega-host, budget 1
-    eng = FrontierEngine(
-        spark, str(tmp_path / "wh"), corpus, spec,
-        EngineConfig(
-            politeness=PolitenessPolicy(round_duration_ms=500),
-            politeness_grade="pmod(url_hash, 8)",
-            use_bloom=True, seen_buckets=8, detailed_metrics=False,
-            verify_payloads=True,
-        ),
-    )
-    assert eng.run_job("rv", seeds, 2)["done"]
-    store = eng.store("rv")
-    for r in store.committed_rounds():
-        if r == 0:
-            continue
-        want = store.read_commit(r).get("payload")
-        if not want:
-            continue
-        redo = eng.reverify_round("rv", r)
-        assert redo["n"] == want["n"], (r, redo, want)
-        assert redo["n_pixels_ok"] == want["n_pixels_ok"]

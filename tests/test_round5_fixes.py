@@ -1,10 +1,9 @@
-"""Round-5 hardening regressions: per-thread FAIR pools, pipelined-verify
-exception safety + cross-job isolation, seen-compact pointer read races,
-and the bfs helper's cache release."""
+"""Round-5 hardening regressions: per-thread FAIR pools, round-failure
+cache release, seen-compact pointer read races, and the bfs helper's
+cache release."""
 
 import json
 import os
-from concurrent.futures import Future
 
 import pytest
 from pyspark.sql import functions as F
@@ -39,44 +38,16 @@ def test_pool_submit_tags_fair_pools(spark):
     assert spark.sparkContext.getLocalProperty("spark.scheduler.pool") in (None, "default")
 
 
-def test_finalize_verify_routes_stale_job_entry_to_its_own_store(spark, tmp_path):
-    """An inflight verify stashed by a DIFFERENT job store (engine reuse
-    after a mid-crawl abort) must be drained + released and its SUCCESSFUL
-    stats written to ITS OWN round dir — never finalized into the new
-    job's round dir, never silently lost (its round is already committed
-    and payload_stats() must still see it as verified)."""
-    import json as _json
-
-    spec = C.CorpusSpec(n=50)
-    eng = FrontierEngine(spark, str(tmp_path / "wh"), str(tmp_path / "nope"), spec)
-    store_a = eng.store("job_a")
-    store_b = eng.store("job_b")
-    os.makedirs(store_a.round_dir(0), exist_ok=True)
-    os.makedirs(store_b.round_dir(0), exist_ok=True)
-    frame = spark.range(5).persist()
-    frame.count()
-    fut = Future()
-    fut.set_result({"n": 5.0})
-    eng._verify_inflight = (store_b, 0, fut, [frame])
-    eng._finalize_verify(store_a)  # job_a's finalize sees job_b's entry
-    assert eng._verify_inflight is None
-    assert not frame.is_cached
-    assert not os.path.exists(os.path.join(store_a.round_dir(0), "verify.json"))
-    with open(os.path.join(store_b.round_dir(0), "verify.json")) as f:
-        assert _json.load(f) == {"n": 5.0}
-
-
 def test_run_round_failure_releases_caches(spark, corpus_1k, tmp_path, monkeypatch):
     """A mid-round failure (commit refused) must drain the concurrent
-    verify future and unpersist every frame the round cached — the stash
-    only happens on the success path."""
+    verify future and unpersist every frame the round cached."""
     spec, path = corpus_1k
     eng = FrontierEngine(
         spark,
         str(tmp_path / "wh"),
         path,
         spec,
-        EngineConfig(verify_payloads=True, pipeline_verify=True),
+        EngineConfig(verify_payloads=True),
     )
     before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     calls = {"n": 0}
@@ -92,7 +63,6 @@ def test_run_round_failure_releases_caches(spark, corpus_1k, tmp_path, monkeypat
         eng.run_job("failjob", seed, depth=2)
     monkeypatch.setattr(JobStateStore, "commit_round", orig)
     assert calls["n"] == 1
-    assert eng._verify_inflight is None
     # id-SET difference, not a count compare: the async ContextCleaner may
     # drop unrelated GC'd entries mid-test (order-dependent flake found by
     # review) — what matters is that THIS call left nothing new behind

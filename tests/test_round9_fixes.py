@@ -118,14 +118,12 @@ def test_with_lang_guess_matches_expression_form(spark):
     assert a == b
 
 
-# ------------------------------------------------- early-verify (engine)
+# ------------------------------------------------- verify schedule (engine)
 
-def test_final_round_verify_is_presubmitted_and_adopted(spark, tmp_path):
-    """With pipeline_verify on and politeness off, the round that commits
-    the final depth's frontier pre-submits the next round's verify, and the
-    final round ADOPTS it (exactly one verify submission per admitting
-    round); stats sidecars exist for every admitting round and the early
-    slot is consumed."""
+def test_one_verify_per_admitting_round(spark, tmp_path):
+    """Each admitting round submits exactly one payload verify, under its
+    own round number, including the final depth's round (which does no
+    extraction), and every admitting round commits its stats."""
     import distributed_web_crawler_spark.plans.frontier as FR
     from distributed_web_crawler_spark.fixtures.corpus import CorpusSpec, url_of, out_links
     from distributed_web_crawler_spark.sources.corpus_source import build_corpus
@@ -134,7 +132,7 @@ def test_final_round_verify_is_presubmitted_and_adopted(spark, tmp_path):
     corpus = build_corpus(spark, spec, str(tmp_path / "corpus"))
     eng = FR.FrontierEngine(
         spark, str(tmp_path / "wh"), corpus, spec,
-        FR.EngineConfig(use_bloom=True, verify_payloads=True, pipeline_verify=True),
+        FR.EngineConfig(use_bloom=True, verify_payloads=True),
     )
     submits = []
     orig = FR._pool_submit
@@ -154,8 +152,7 @@ def test_final_round_verify_is_presubmitted_and_adopted(spark, tmp_path):
     assert res["done"]
     store = eng.store("j9")
     admitting = [r for r in store.committed_rounds() if store.read_commit(r).get("n_admitted", 0) > 0]
-    # one verify submission per admitting round — the final round's was the
-    # EARLY one (submitted under its round number by the previous round)
+    assert len(admitting) == 2  # depth 0, then the final depth
     assert sorted(submits) == sorted(f"verify:{store.dir}:r{r}" for r in admitting), submits
-    assert eng._early_verify is None
     assert eng.unverified_rounds("j9") == []
+    assert sorted(eng.payload_stats("j9")) == admitting
