@@ -136,26 +136,32 @@ def bfs(edges: DataFrame, seed: DataFrame, max_depth: int, checkpoint_every: int
     + Bloom seen filters, plans/frontier.py)."""
     edges = fan_out_edges(edges).persist()
     st = IterationState(checkpoint_every)
-    seen = st.step(seed.select(F.col("url"), F.lit(0).alias("depth")), 1)
-    frontier = seen
-    for d in range(1, max_depth + 1):
-        nxt = st.track(
-            edges.join(F.broadcast(frontier.select(F.col("url").alias("src"))), "src")
-            .select(F.col("dst").alias("url"))
-            .dropDuplicates(["url"])
-            .join(F.broadcast(seen.select("url")), "url", "left_anti")
-            .withColumn("depth", F.lit(d))
-            .persist()
-        )
-        if nxt.isEmpty():
-            break
-        frontier = nxt
-        was_checkpoint = d % checkpoint_every == 0
-        seen = st.step(seen.unionByName(nxt), d)
-        if was_checkpoint:
-            # the checkpoint released `nxt` with the rest of its
-            # generation: re-derive the next frontier from the (cached)
-            # checkpointed seen so nothing recomputes
-            frontier = seen.filter(F.col("depth") == d)
-    edges.unpersist()
-    return st.finish(seen)
+    try:
+        seen = st.step(seed.select(F.col("url"), F.lit(0).alias("depth")), 1)
+        frontier = seen
+        for d in range(1, max_depth + 1):
+            nxt = st.track(
+                edges.join(F.broadcast(frontier.select(F.col("url").alias("src"))), "src")
+                .select(F.col("dst").alias("url"))
+                .dropDuplicates(["url"])
+                .join(F.broadcast(seen.select("url")), "url", "left_anti")
+                .withColumn("depth", F.lit(d))
+                .persist()
+            )
+            if nxt.isEmpty():
+                break
+            frontier = nxt
+            was_checkpoint = d % checkpoint_every == 0
+            seen = st.step(seen.unionByName(nxt), d)
+            if was_checkpoint:
+                # the checkpoint released `nxt` with the rest of its
+                # generation: re-derive the next frontier from the (cached)
+                # checkpointed seen so nothing recomputes
+                frontier = seen.filter(F.col("depth") == d)
+        return st.finish(seen)
+    finally:
+        # on every exit path, a raise included: the edge cache and every
+        # tracked generation are released (finish() already closed them
+        # on success; close() is idempotent)
+        st.close()
+        edges.unpersist()

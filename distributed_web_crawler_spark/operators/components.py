@@ -21,12 +21,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import sized_tasks
+from .bfs import _local_checkpoint, _release
+
 # iteration shuffles sized to the graph: every CC round is 2 joins + an
 # aggregate + a localCheckpoint, and at session-default width a TINY
 # verified-pairs graph (hundreds of edges) pays ~10 rounds × 32-task
 # shuffle scheduling for microseconds of work (measured: 13.5 s → 7.3 s
 # on the sf0.1 cluster query just from narrowing the loop). One partition
-# per EDGES_PER_PARTITION edges, capped at 2× parallelism.
+# per EDGES_PER_PARTITION edges, capped at 2× parallelism (session.sized_tasks).
 EDGES_PER_PARTITION = 500_000
 
 
@@ -48,75 +51,85 @@ def connected_components(
     # (e.g. the whole LSH+verify pipeline in neardup_clusters) used to be
     # computed once per direction; now the reverse branch reads the cache
     fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).persist()
-    fwd.count()  # MATERIALIZE before the union reads it twice: the union's
-    # forward- and reverse-branch tasks run concurrently in one stage, and a
-    # reverse task starting before its forward twin has cached the partition
-    # would recompute the upstream anyway — the count pins the single run
-    sym = fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v"))).persist()
-    n_edges = sym.count()  # materializes the cache — paid anyway at round 1
-    fwd.unpersist()  # sym is materialized; the per-direction cache is done
-    want = max(1, min(
-        2 * spark.sparkContext.defaultParallelism,
-        -(-n_edges // EDGES_PER_PARTITION),
-    ))
+    sym = labels = None
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(want))
-    labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .persist()
-    )
     try:
+        fwd.count()  # MATERIALIZE before the union reads it twice: the
+        # union's forward- and reverse-branch tasks run concurrently in one
+        # stage, and a reverse task starting before its forward twin has
+        # cached the partition would recompute the upstream anyway — the
+        # count pins the single run
+        sym = fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v"))).persist()
+        n_edges = sym.count()  # materializes the cache — paid anyway at round 1
+        fwd.unpersist()  # sym is materialized; the per-direction cache is done
+        want = sized_tasks(spark, n_edges, EDGES_PER_PARTITION)
+        spark.conf.set("spark.sql.shuffle.partitions", str(want))
+        labels = (
+            sym.select(F.col("u").alias("node"))
+            .distinct()
+            .withColumn("component", F.col("node"))
+            .persist()
+        )
         return _propagate(sym, labels, max_iters)
     finally:
-        # guaranteed on every exit path (incl. the non-convergence raise):
-        # the 2×-edge cache must not outlive the call. Per-iteration
-        # localCheckpoint blocks are released when their frames are GC'd
-        # on the driver — bounded at O(iterations) label tables.
+        # guaranteed on every exit path (a raising input or step, the
+        # non-convergence raise): no edge or label cache outlives the
+        # call. unpersist is idempotent, and the result is a checkpointed
+        # frame that none of these back.
         spark.conf.set("spark.sql.shuffle.partitions", old)
-        sym.unpersist()
+        for df_ in (fwd, sym, labels):
+            if df_ is not None:
+                df_.unpersist()
 
 
 def _propagate(sym: DataFrame, labels: DataFrame, max_iters: int) -> DataFrame:
-    for it in range(max_iters):
-        # candidate labels: own + the label of every neighbor
-        from_neighbors = (
-            sym.join(labels.withColumnRenamed("node", "v"), "v")
-            .select(F.col("u").alias("node"), "component")
-        )
-        propagated = (
-            labels.unionByName(from_neighbors)
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-        )
-        # pointer doubling: adopt label[label] — every label value is some
-        # node's id, so the self-join resolves it; left+coalesce guards the
-        # already-minimal rows
-        lbl_of_lbl = propagated.select(
-            F.col("node").alias("component"), F.col("component").alias("c2")
-        )
-        # one materialization per round: the doubling join AND the previous
-        # label ride into the same localCheckpoint (truncating lineage), so
-        # the convergence check is a scan of the cached result — not an
-        # extra shuffle job per iteration
-        nxt_full = (
-            propagated.join(lbl_of_lbl, "component", "left")
-            .select(
-                "node",
-                F.least(F.col("component"), F.coalesce(F.col("c2"), F.col("component"))).alias(
-                    "component"
-                ),
+    blocks: list = []  # checkpoint block RDDs not yet released
+    try:
+        for it in range(max_iters):
+            # candidate labels: own + the label of every neighbor
+            from_neighbors = (
+                sym.join(labels.withColumnRenamed("node", "v"), "v")
+                .select(F.col("u").alias("node"), "component")
             )
-            .join(labels.withColumnRenamed("component", "old"), "node")
-            .localCheckpoint()
-        )
-        changed = nxt_full.filter(F.col("component") != F.col("old")).isEmpty()
-        labels.unpersist()
-        labels = nxt_full.drop("old")
-        if changed:
-            return labels
-    raise RuntimeError(f"connected_components did not converge in {max_iters} rounds")
+            propagated = (
+                labels.unionByName(from_neighbors)
+                .groupBy("node")
+                .agg(F.min("component").alias("component"))
+            )
+            # pointer doubling: adopt label[label] — every label value is
+            # some node's id, so the self-join resolves it; left+coalesce
+            # guards the already-minimal rows
+            lbl_of_lbl = propagated.select(
+                F.col("node").alias("component"), F.col("component").alias("c2")
+            )
+            # one materialization per round: the doubling join AND the
+            # previous label ride into the same localCheckpoint (truncating
+            # lineage), so the convergence check is a scan of the cached
+            # result — not an extra shuffle job per iteration
+            nxt_full = _local_checkpoint(
+                propagated.join(lbl_of_lbl, "component", "left")
+                .select(
+                    "node",
+                    F.least(
+                        F.col("component"), F.coalesce(F.col("c2"), F.col("component"))
+                    ).alias("component"),
+                )
+                .join(labels.withColumnRenamed("component", "old"), "node"),
+                blocks,
+            )
+            converged = nxt_full.filter(F.col("component") != F.col("old")).isEmpty()
+            # the eager checkpoint detached nxt_full from the previous
+            # generation: its cache and blocks are superseded
+            labels.unpersist()
+            _release(blocks[:-1])
+            del blocks[:-1]
+            labels = nxt_full.drop("old")
+            if converged:
+                return labels
+        raise RuntimeError(f"connected_components did not converge in {max_iters} rounds")
+    except BaseException:
+        _release(blocks)
+        raise
 
 
 def neardup_clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:

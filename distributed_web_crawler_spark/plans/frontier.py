@@ -56,6 +56,7 @@ from ..sources.fetch import fetch_and_verify
 from ..operators.politeness import schedule
 from ..operators.robots import blocked_expr
 from ..oracle.crawler import PolitenessPolicy, RobotsPolicy
+from ..session import sized_tasks
 
 FRONTIER_SCHEMA = "url string, host string, url_hash bigint, seen_bucket int, depth int"
 
@@ -173,6 +174,16 @@ def _seen_inserts(r: int, info: dict) -> int:
     if r == 0:
         return info.get("n_pending_after", 0)
     return info.get("n_new", 0) + info.get("reseed", 0)
+
+
+def _n_seen(store: JobStateStore) -> int:
+    """The live seen-set size, summed from the commits like every other
+    count: each round's inserts minus its tombstones."""
+    n = 0
+    for r in store.committed_rounds():
+        c = store.read_commit(r)
+        n += _seen_inserts(r, c) - c.get("tombstone", 0)
+    return n
 
 
 @dataclass
@@ -721,9 +732,9 @@ class FrontierEngine:
             if store.read_commit(r).get("n_admitted", 0) > 0 and r not in verified
         ]
 
-    def _verify_stats(self, admitted_keyed: DataFrame) -> dict:
+    def _verify_stats(self, admitted_keyed: DataFrame, n_admitted: int) -> dict:
         return (
-            fetch_and_verify(self.spark, self.corpus_path, admitted_keyed, self.spec)
+            fetch_and_verify(self.spark, self.corpus_path, admitted_keyed, self.spec, n_admitted)
             .agg(
                 F.count("*").alias("n"),
                 F.sum(F.col("pixels_ok").cast("int")).alias("n_pixels_ok"),
@@ -761,9 +772,13 @@ class FrontierEngine:
         staging = store.seen_compact_staging(last)
         df = self._seen_df(store)
         # one file per bucket (repartition BY the partition column before
-        # partitionBy, else every input partition writes a file per bucket)
+        # partitionBy, else every input partition writes a file per bucket);
+        # hashing puts each bucket in exactly one task, so the task count
+        # is free to follow the live row count (commit arithmetic) instead
+        # of paying seen_buckets tasks for a small crawl's few rows
+        n_tasks = min(self.cfg.seen_buckets, sized_tasks(self.spark, _n_seen(store)))
         (
-            df.repartition(self.cfg.seen_buckets, F.col("seen_bucket"))
+            df.repartition(n_tasks, F.col("seen_bucket"))
             .write.partitionBy("seen_bucket")
             .parquet(staging)
         )
@@ -984,12 +999,7 @@ class FrontierEngine:
             if on_round is not None:
                 on_round(stats)
 
-        # the seen-set size is commit arithmetic, like every other count
-        n_seen = 0
-        for rr in store.committed_rounds():
-            c = store.read_commit(rr)
-            n_seen += _seen_inserts(rr, c) - c.get("tombstone", 0)
-        return {"job_id": job_id, "done": True, "last_round": last, "n_seen": n_seen}
+        return {"job_id": job_id, "done": True, "last_round": last, "n_seen": _n_seen(store)}
 
     def _run_round(self, store: JobStateStore, r: int, depth_limit: int) -> RoundStats:
         """One BFS round as a list of named phases. The payload verify runs
@@ -1094,8 +1104,10 @@ class FrontierEngine:
         DAGs). Construction runs in the pool thread too: fetch_join's
         bucket-pruning collect would otherwise block this thread."""
         if self.cfg.verify_payloads and rnd.n_admitted > 0:
+            rnd.phases["verify_tasks"] = sized_tasks(self.spark, rnd.n_admitted)
             rnd.verify = _pool_submit(
-                self.spark, self._verify_stats, rnd.admitted, group=rnd.group("verify")
+                self.spark, self._verify_stats, rnd.admitted, rnd.n_admitted,
+                group=rnd.group("verify"),
             )
 
     def _extract(self, rnd: _Round) -> Optional[DataFrame]:
@@ -1106,9 +1118,15 @@ class FrontierEngine:
         if rnd.d + 1 >= rnd.depth_limit or rnd.n_admitted == 0:
             return None
         # extraction parallelism must not be bound to the frontier's file
-        # count — pin it to 2× cores (CPU-bound Python stage; finer tasks
-        # smooth stragglers)
-        extract_input = rnd.admitted.repartition(2 * self.spark.sparkContext.defaultParallelism)
+        # count — size it by the admitted rows (CPU-bound Python stage: a
+        # small round runs as 2 tasks, a bulk round at the 2× cores cap).
+        # Not 1: a 1-partition repartition plans as SinglePartition, which
+        # satisfies the write's seen_bucket clustering, so the write's
+        # exchange would vanish into the extract task. At 2 the round has
+        # one plan shape at every size — extract exchange, then the write's
+        # bucket exchange, which AQE coalesces for a small round
+        rnd.phases["extract_tasks"] = max(2, sized_tasks(self.spark, rnd.n_admitted))
+        extract_input = rnd.admitted.repartition(rnd.phases["extract_tasks"])
         keyed = self._with_keys(extract_links(extract_input, self.spec).select("url", "host"))
         if self.cfg.robots is not None:
             # blocked URLs never enter the seen set, so the robots filter

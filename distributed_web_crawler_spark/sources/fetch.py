@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..fixtures import corpus as C
 from ..functions.images import decode_any
+from ..session import sized_tasks
 from .corpus_source import blob_path
 
 SLIM_COLS = ["image_id", "fmt", "caption", "phash", "bucket", "blob_offset", "blob_len"]
@@ -30,7 +31,7 @@ FEATURES_SCHEMA = "url string, phash_dec bigint, luma double"
 _CHUNK = 32 * 1024 * 1024  # shard sub-range per exchange key
 
 
-def _exchange(df: DataFrame) -> DataFrame:
+def _exchange(df: DataFrame, n_rows: int) -> DataFrame:
     """Exchange for the point-read+decode stage, keyed by image_id hash.
 
     Keying by storage location — (bucket, offset-chunk) — looks natural but
@@ -41,12 +42,16 @@ def _exchange(df: DataFrame) -> DataFrame:
     Hashing on image_id gives every task the same shape mix (decode work is
     uniform) while `_read_ranges` still seek-orders each batch per shard —
     on object storage the per-task ranged GETs were independent anyway.
-    2× cores: finer tasks smooth residual stragglers; an explicit
-    numPartitions repartition is also exempt from AQE coalescing, which
-    otherwise shrinks byte-small exchanges under CPU-bound pandas stages
-    (measured 17 tasks for a 330k-row decode on 32 cores)."""
-    n = 2 * df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, F.col("image_id"))
+
+    Row-sized (session.sized_tasks over the caller's row count): a round
+    of a few dozen pages runs as 1 task, not 2× cores tasks that each pay
+    a pandas-UDF task's fixed cost for a handful of rows; a bulk round
+    reaches the 2× cores cap, where finer tasks smooth residual
+    stragglers. The explicit numPartitions is also exempt from AQE
+    coalescing, which at bulk scale otherwise shrinks byte-small exchanges
+    under CPU-bound pandas stages (measured 17 tasks for a 330k-row decode
+    on 32 cores)."""
+    return df.repartition(sized_tasks(df.sparkSession, n_rows), F.col("image_id"))
 
 
 def fetch_join(spark: SparkSession, corpus_path: str, admitted: DataFrame) -> DataFrame:
@@ -86,10 +91,13 @@ def _read_ranges(pdf, corpus_path):
     return out
 
 
-def fetch_and_verify(spark, corpus_path: str, admitted: DataFrame, spec: C.CorpusSpec) -> DataFrame:
+def fetch_and_verify(
+    spark, corpus_path: str, admitted: DataFrame, spec: C.CorpusSpec, n_rows: int
+) -> DataFrame:
     """Fetch + full per-row invariants vs the generator (input_hint):
     decoded pixels exact for PNG / PSNR≥40 dB for JPEG, phash equality,
-    caption equality."""
+    caption equality. `n_rows`, the admitted row count the caller already
+    holds, sizes the verify stage's task count."""
     fetched = fetch_join(spark, corpus_path, admitted)
 
     def verify(batches):
@@ -110,12 +118,13 @@ def fetch_and_verify(spark, corpus_path: str, admitted: DataFrame, spec: C.Corpu
                 )
             )
 
-    return _exchange(fetched).mapInPandas(verify, schema=VERIFY_SCHEMA)
+    return _exchange(fetched, n_rows).mapInPandas(verify, schema=VERIFY_SCHEMA)
 
 
-def fetch_and_decode(spark, corpus_path: str, admitted: DataFrame) -> DataFrame:
+def fetch_and_decode(spark, corpus_path: str, admitted: DataFrame, n_rows: int) -> DataFrame:
     """Fetch + decode + light features (the production fetch workload:
-    no generator oracle in the loop)."""
+    no generator oracle in the loop). `n_rows` sizes the stage as in
+    fetch_and_verify."""
     fetched = fetch_join(spark, corpus_path, admitted)
 
     def feats(batches):
@@ -141,4 +150,4 @@ def fetch_and_decode(spark, corpus_path: str, admitted: DataFrame) -> DataFrame:
             ph = C.phash64_batch(grays) if n else np.zeros(0, dtype=np.int64)
             yield pd.DataFrame({"url": urls, "phash_dec": ph, "luma": lumas})
 
-    return _exchange(fetched).mapInPandas(feats, schema=FEATURES_SCHEMA)
+    return _exchange(fetched, n_rows).mapInPandas(feats, schema=FEATURES_SCHEMA)

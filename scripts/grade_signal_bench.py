@@ -81,7 +81,13 @@ def main():
         ts = pr.agg(
             F.percentile_approx("rank", [i / 8.0 for i in range(1, 8)], 10000).alias("t")
         ).collect()[0]["t"]
-        grade = sum((F.col("rank") >= F.lit(float(t))).cast("int") for t in ts)
+        # an empty rank frame gives a NULL threshold array: grade everything
+        # 0 rather than crash in float(None). Tied thresholds (a heavy rank
+        # mass at one value) repeat a value; each copy adds 1 for ranks at
+        # or above it, so those octiles merge into one grade step — fewer
+        # distinct grades, same order.
+        ts = [float(t) for t in ts or []]
+        grade = sum(((F.col("rank") >= F.lit(t)).cast("int") for t in ts), F.lit(0))
         pr.select("url", grade.alias("grade")).write.format("noop").mode("overwrite").save()
         t2 = time.monotonic()
         spark.sparkContext.setJobDescription(None)

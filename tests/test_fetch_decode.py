@@ -18,7 +18,7 @@ def test_decode_features_match_metadata(spark, corpus_1k, tmp_path):
     adm = adm.withColumn("image_id", U.image_id_of(F.col("url"))).withColumn(
         "corpus_bucket", F.pmod(U.page_index(F.col("url")), F.lit(C.N_BUCKETS)).cast("int")
     )
-    feats = {r["url"]: r for r in fetch_and_decode(spark, corpus_path, adm).collect()}
+    feats = {r["url"]: r for r in fetch_and_decode(spark, corpus_path, adm, len(idx)).collect()}
     assert set(feats) == {C.url_of(i, spec) for i in idx}
     for i in idx:
         row = feats[C.url_of(i, spec)]

@@ -93,11 +93,15 @@ def test_iteration_scores_absent_sources_at_base(spark):
 
 def test_raising_calls_leave_no_persisted_rdd(spark, tmp_path, monkeypatch):
     """pagerank/hits and their table forms validate n_iters before they
-    persist anything, and release what they did persist when an iteration
-    raises (compared as RDD-id sets, like the engine's round-failure
-    test)."""
+    persist anything, and they, bfs and connected_components release what
+    they did persist when an iteration raises (compared as RDD-id sets,
+    like the engine's round-failure test)."""
     import pytest
 
+    from pyspark.sql import functions as F
+
+    from distributed_web_crawler_spark.operators import bfs as BFS
+    from distributed_web_crawler_spark.operators import components as CC
     from distributed_web_crawler_spark.operators import hits as H
     from distributed_web_crawler_spark.operators import pagerank as P
 
@@ -128,6 +132,35 @@ def test_raising_calls_leave_no_persisted_rdd(spark, tmp_path, monkeypatch):
         for call in calls:
             with pytest.raises(RuntimeError, match="simulated"):
                 call(3)
+        assert not (set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before)
+
+        # bfs: a step that raises after the edge cache, the seed generation
+        # and a frontier frame were persisted
+        orig_step = BFS.IterationState.step
+
+        def step_then_boom(self, df, it):
+            if it > 1:
+                raise RuntimeError("simulated iteration failure")
+            return orig_step(self, df, it)
+
+        monkeypatch.setattr(BFS.IterationState, "step", step_then_boom)
+        with pytest.raises(RuntimeError, match="simulated"):
+            BFS.bfs(edges, spark.createDataFrame([("u0",)], ["url"]), 4, checkpoint_every=8)
+        assert not (set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before)
+
+        # connected_components: an input that raises while the forward
+        # edge cache materializes, and a loop that raises (no convergence)
+        # after checkpointing a label generation
+        chain = spark.createDataFrame([(i, i + 1) for i in range(40)], ["a_id", "b_id"])
+
+        @F.udf("long")
+        def bad(x):
+            raise ValueError("simulated bad edge")
+
+        with pytest.raises(Exception, match="simulated bad edge"):
+            CC.connected_components(chain.withColumn("b_id", bad("b_id")))
+        with pytest.raises(RuntimeError, match="did not converge"):
+            CC.connected_components(chain, max_iters=1)
         assert not (set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before)
     finally:
         for t in ("pr_leak", "hits_leak_src", "hits_leak_dst"):
