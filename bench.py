@@ -6,7 +6,8 @@
 
 Env:
   SPARK_GRAFT_SF_DIR  parquet dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS    local[N] cores (default 32)
+  SPARK_GRAFT_CPUS    local[N] cores (default: the CPUs in this
+                      process's affinity mask)
   BENCH_ONLY          'crawl' | 'queries' (default: both)
   BENCH_CRAWL_N       corpus pages for the crawl bench (default 500000)
   BENCH_CRAWL_SEEDS   frontier seed count (default 100000)
@@ -37,8 +38,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from distributed_web_crawler_spark.session import default_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cores()
 ONLY = os.environ.get("BENCH_ONLY", "")
 CRAWL_N = int(os.environ.get("BENCH_CRAWL_N", "500000"))
 CRAWL_SEEDS = int(os.environ.get("BENCH_CRAWL_SEEDS", "100000"))

@@ -27,7 +27,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 TRIALS = int(os.environ.get("BENCH_EXTRA_TRIALS", "2"))
 PLAN_DIR = os.environ.get("BENCH_EXTRA_PLANS", "")
 TAG = os.environ.get("BENCH_EXTRA_TAG", "plan")
@@ -38,7 +37,7 @@ def main():
     from distributed_web_crawler_spark.queries import bench_queries
     from distributed_web_crawler_spark.session import get_spark
 
-    spark = get_spark(app="bench_extra", cores=CPUS)
+    spark = get_spark(app="bench_extra")
     registry = bench_queries()
     names = sys.argv[1:] or sorted(registry)
     _warm_session(spark)

@@ -11,6 +11,14 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def default_cores() -> int:
+    """`local[N]` width: SPARK_GRAFT_CPUS if set, else the CPUs this
+    process may run on (its affinity mask, so `taskset` narrows it)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or len(os.sched_getaffinity(0))
+
 
 def get_spark(
     app: str = "frontier-engine",
@@ -31,7 +39,7 @@ def get_spark(
         "NUMEXPR_NUM_THREADS",
     ):
         os.environ.setdefault(var, "1")
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     b = (
         SparkSession.builder.master(f"local[{cores}]")
@@ -67,6 +75,14 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # Python workers fork from a daemon that skips re-reading unchanged
+        # zip archives (pyspark.zip, the Spark jar) at every task's
+        # importlib.invalidate_caches(), 160–280 ms of CPU per task under
+        # the stock daemon (worker_daemon's docstring). The package root
+        # goes on the workers' PYTHONPATH so the daemon starts from any
+        # working directory.
+        .config("spark.python.daemon.module", "distributed_web_crawler_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     # RAM-backed shuffle dirs: in single-box local mode every "executor"
     # shares one disk, which otherwise becomes the non-scaling resource for
@@ -82,11 +98,14 @@ def get_spark(
 
 
 # Rows per task of a row-sized Python stage. A pandas-UDF task has a fixed
-# cost (Python-worker hand-off, Arrow framing, scheduling) that dwarfs a few
-# dozen rows of work: the verify stages of a 30-URL crawl job took 9.5 s of
-# executor time as 8-task stages and 2.0 s row-sized (local[4]). 256 keeps
-# bulk rounds (8k–16k admitted rows) at the 2× cores cap up to local[16],
-# so they plan as before.
+# cost that dwarfs a few dozen rows of work: on a reused worker, a median
+# 99 ms from job submit to UDF entry (scheduling, the worker hand-off,
+# Arrow framing), plus, under the stock pyspark.daemon, a median 224 ms of
+# zip-archive re-reads at the task's importlib.invalidate_caches(), which
+# worker_daemon removes (local[4], 4-core VM). The verify stages of a 30-URL crawl job took 9.5 s of executor
+# time as 8-task stages and 2.0 s row-sized (local[4]). 256 keeps bulk
+# rounds (8k–16k admitted rows) at the 2× cores cap up to local[16], so
+# they plan as before.
 ROWS_PER_TASK = 256
 
 
