@@ -128,7 +128,6 @@ def _one_crawl_trial(spark, spec, corpus_path):
     eng = FrontierEngine(
         spark, wh, corpus_path, spec,
         EngineConfig(
-            use_bloom=True, detailed_metrics=False,
             politeness=PolitenessPolicy(round_duration_ms=1_000_000_000) if graded else None,
             politeness_grade="pmod(url_hash, 8)" if graded else None,
             verify_payloads=os.environ.get("BENCH_VERIFY_PAYLOADS", "1") != "0",

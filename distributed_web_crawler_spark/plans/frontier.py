@@ -98,7 +98,6 @@ def _pool_submit(spark: SparkSession, fn, *args, group: str | None = None):
 class EngineConfig:
     politeness: Optional[PolitenessPolicy] = None
     robots: Optional[RobotsPolicy] = None
-    use_bloom: bool = True
     # 64 buckets at sandbox scale (≈1 file per bucket per round, and the
     # bucket-keyed fused write must expose at least 2× the core count in
     # groups or it serializes the write stage); a 10^10 deployment raises
@@ -111,9 +110,6 @@ class EngineConfig:
     # an unbounded in-memory frame — the guard holds even when an operator
     # leaves seen_buckets at a value too small for their crawl
     max_group_rows: int = 2_000_000
-    # count the robots-blocked candidates per round (n_blocked; an extra
-    # job per round) — rich metrics for tests, off for benchmarks
-    detailed_metrics: bool = True
     # merge per-round seen deltas into one bucketed table whenever the
     # component count exceeds this (0/None disables). Keeps the per-round
     # seen file listing O(1) in crawl age — without it a thousand-round
@@ -143,10 +139,15 @@ class EngineConfig:
     # admitted pages on _POOL alongside extract → write and commits the
     # stats in its commit.json
     verify_payloads: bool = False
-    # ignored: payload verify has one schedule (inside the round). Kept
-    # because perfbench/workloads.py passes it; delete it in the next
-    # benchmark change
+    # accepted for perfbench; delete at the next benchmark change (Bloom
+    # is the only seen path, so False raises; the other two are ignored)
+    use_bloom: bool = True
+    detailed_metrics: bool = True
     pipeline_verify: bool = False
+
+    def __post_init__(self):
+        if not self.use_bloom:
+            raise ValueError("use_bloom=False: the Bloom seen path is the only one")
 
 
 @dataclass
@@ -160,11 +161,12 @@ class RoundStats:
     n_blocked: int
     n_pending_after: int
     wall_ms: int
-    # Bloom positives among the distinct candidates, and how many of them
-    # the exact re-check found unseen (filter false positives plus stale
-    # bits of unseen URLs); 0 without the Bloom filter
+    # Bloom positives among the distinct candidates, how many of them the
+    # exact re-check found unseen (filter false positives plus stale bits
+    # of unseen URLs), and the seen hashes that re-check loaded
     n_probe_pos: int = 0
     n_probe_fp: int = 0
+    n_recheck_rows: int = 0
 
 
 def _seen_inserts(r: int, info: dict) -> int:
@@ -218,6 +220,7 @@ class _Round:
     n_blocked: int = 0
     n_probe_pos: int = 0
     n_probe_fp: int = 0
+    n_recheck_rows: int = 0
     touched: List[int] = field(default_factory=list)  # Bloom buckets written
 
     def mark(self, key: str) -> None:
@@ -270,15 +273,13 @@ class FrontierEngine:
         different seen_buckets yield garbage probe verdicts whose FALSE
         side is trusted as definitely-new, i.e. silent duplicate
         crawling. `kind` stays in the identity so a store written by a
-        non-bloom filter is refused instead of read as bloom bits.
-        use_bloom is part of the identity too: a resume with the filter
-        off stops folding new hashes into the blobs, so re-enabling it
-        later would probe filters missing whole rounds (stale-MISSING =
-        false negatives)."""
+        non-bloom filter is refused instead of read as bloom bits."""
         return {
             "kind": "bloom",
             "seen_buckets": self.cfg.seen_buckets,
-            "use_bloom": self.cfg.use_bloom,
+            # stores written without the filter carry False and have no
+            # blobs for their rounds, so they must still be refused
+            "use_bloom": True,
             "n_bits": self.cfg.bloom.n_bits,
             "n_hashes": self.cfg.bloom.n_hashes,
         }
@@ -299,7 +300,7 @@ class FrontierEngine:
                 f"seen-filter config mismatch: job store was written under "
                 f"{stored}, engine configured with {current}; resume with "
                 "the original EngineConfig (filter kind, params, "
-                "seen_buckets, use_bloom) or start a fresh job"
+                "seen_buckets) or start a fresh job"
             )
 
     def _grade_col(self):
@@ -432,20 +433,30 @@ class FrontierEngine:
         return os.path.relpath(path, store.dir)
 
     # ------------------------------------------------------------ seen probe
-    def _filter_new(self, store: JobStateStore, keyed: DataFrame, persisted: list):
-        """Within-round dedup (U3) and the exact seen anti-join (U2/J1) for
-        engines WITHOUT the Bloom filter. Input is the round's keyed
-        candidate stream WITH duplicates; returns (fresh, deduped) where
-        `deduped` is the distinct candidate view (persisted into
-        `persisted`, for metrics).
-        The Bloom path never comes here: its dedup, probe and exact re-check
-        run inside the fused write task (_write_bucketed with probe=True)."""
-        deduped = keyed.dropDuplicates(["url_hash"]).persist()
-        persisted.append(deduped)
-        if not store.seen_paths():
-            return deduped, deduped
-        fresh = deduped.join(self._seen_df(store).select("url_hash"), "url_hash", "left_anti")
-        return fresh, deduped
+    def _filter_new(self, rnd: _Round, new_rows: DataFrame) -> None:
+        """The round's one new-URL step: the fused write (_write_bucketed
+        with probe=True) takes the raw candidates, drops the robots-blocked
+        rows, dedups (U3), Bloom-probes and exact-checks them (U2/J1), and
+        writes the rest as next frontier, seen delta and bucket blobs. Its
+        counts come back with the write's stats and are folded into `rnd`."""
+        # upper bound on the write's input row count (raw candidates
+        # <= admitted × max out-degree): over-estimating only shrinks
+        # the chunked groups, never breaks the memory guard
+        stats, task = self._write_bucketed(
+            rnd.store, rnd.store.new_path(rnd.r), new_rows, bloom_round=rnd.r,
+            approx_rows=rnd.n_admitted * C.MAX_OUT_DEGREE, probe=True,
+        )
+        rnd.touched = sorted({s[0] for s in stats})
+        rnd.n_new = sum(s[1] for s in stats)
+        rnd.n_candidates, rnd.n_blocked = task["n_candidates"], task["n_blocked"]
+        rnd.n_probe_pos, rnd.n_probe_fp = task["n_probe_pos"], task["n_probe_fp"]
+        rnd.n_recheck_rows = task["n_recheck_rows"]
+        # worker-side breakdown of THIS write job (summed across its
+        # tasks): lets the bench attribute extract_write_ms to the
+        # probe / Arrow conversion / parquet encode / bloom fold vs
+        # extraction + shuffle + scheduling
+        for k in ("probe_ms", "conv_ms", "pq_ms", "bloom_ms", "n_tasks"):
+            rnd.phases[f"write_{k}"] = task[k]
 
     def _write_bucketed(
         self, store: JobStateStore, out_dir: str, rows: DataFrame, bloom_round: Optional[int] = None,
@@ -463,9 +474,12 @@ class FrontierEngine:
         and abort_round() sweeps orphans. Row counts come back with the
         stats — no read-back count job.
 
-        `probe=True` (Bloom engines, the round's new-URL write) takes the
-        raw keyed candidate stream WITH duplicates and seen URLs, and each
+        `probe=True` (the round's new-URL write, _filter_new) takes the raw
+        keyed candidate stream WITH duplicates and seen URLs, and each
         group task runs the whole seen chain before writing:
+        0. under robots, sum the `_blocked` flag BEFORE the dedup (every
+           discovery occurrence counts, as in oracle/crawler.py) and drop
+           those rows;
         1. within-group dedup (np.unique on url_hash — every copy of a URL
            has the same hash, hence the same (bucket, chunk) group);
         2. Bloom probe against the bucket's previous blob — negatives are
@@ -477,11 +491,13 @@ class FrontierEngine:
         4. the parquet part, only if fresh rows are left;
         5. the blob fold into the filter step 2 already loaded.
         The round's new-URL path thus has ONE exchange (extract → this
-        groupBy); the re-check reads a bucket's seen hashes only when that
-        group has positives, so its IO tracks the positive set, not crawl
-        age. A group whose rows were all seen writes no part and no blob,
-        and its bucket is left out of the returned stats — a commit must
-        never point a bucket's bloom manifest at a round without its blob.
+        groupBy). One positive makes the re-check load the bucket's WHOLE
+        live seen set, and links to seen pages make nearly every group
+        positive, so its IO grows with crawl age (n_recheck_rows counts
+        it). A group whose rows were all seen or blocked writes no part
+        and no blob, and its bucket is left out of the returned stats — a
+        commit must never point a bucket's bloom manifest at a round
+        without its blob.
 
         With `slice_col` (the politeness schedule's `due` sub-round), rows
         are grouped by (slice, seen_bucket) and land under
@@ -505,16 +521,13 @@ class FrontierEngine:
         Returns ``(stats, task)``: the per-bucket stat tuples plus the
         summed worker-side numbers of THIS write job — phase timers
         (conv/pq/probe/bloom_ms), its group count (n_tasks) and, with
-        `probe`, the distinct candidates, Bloom positives and positives the
-        exact re-check found unseen (n_candidates, n_probe_pos,
-        n_probe_fp). They are returned rather than stashed on the engine
-        because the deferred-slice write runs concurrently in a pool
-        thread alongside the main write."""
-        blobs = store.bloom_blobs() if (self.cfg.use_bloom and bloom_round is not None) else None
+        `probe`, the seen-chain counters (n_blocked, n_candidates,
+        n_probe_pos, n_probe_fp, n_recheck_rows). They are returned rather
+        than stashed on the engine because the deferred-slice write runs
+        concurrently in a pool thread alongside the main write."""
+        update_blooms = bloom_round is not None
+        blobs = store.bloom_blobs() if update_blooms else None
         params = self.cfg.bloom
-        update_blooms = blobs is not None
-        if probe and not update_blooms:
-            raise ValueError("probe=True needs use_bloom and a bloom_round")
         r = bloom_round
         # exact re-check inputs: committed seen components and tombstones,
         # (round, absolute root) — read executor-side, bucket by bucket
@@ -575,8 +588,12 @@ class FrontierEngine:
                 sl, bucket = -1, int(key[0])
                 part_dir = os.path.join(out_dir, f"seen_bucket={bucket}")
             filt = None
-            n_cand = n_pos = n_fp = 0
+            n_blk = n_cand = n_pos = n_fp = n_re = 0
             if probe:
+                if "_blocked" in pdf.columns:
+                    blocked = pdf["_blocked"].to_numpy(dtype=bool)
+                    n_blk = int(blocked.sum())
+                    pdf = pdf[~blocked]
                 # sorted-unique order also makes the part's row order
                 # independent of the shuffle's arrival order
                 _, first = np.unique(pdf["url_hash"].to_numpy(), return_index=True)
@@ -587,8 +604,10 @@ class FrontierEngine:
                 maybe = B.contains(filt, hashes, params)
                 n_pos = int(maybe.sum())
                 if n_pos:
+                    seen = bucket_seen(bucket)
+                    n_re = len(seen)
                     fresh = ~maybe
-                    fresh[maybe] = ~np.isin(hashes[maybe], bucket_seen(bucket))
+                    fresh[maybe] = ~np.isin(hashes[maybe], seen)
                     n_fp = int(fresh[maybe].sum())
                     pdf = pdf[fresh]
             t_probe = _time.monotonic()
@@ -636,10 +655,12 @@ class FrontierEngine:
                 "conv_ms": [int((t_conv - t_probe) * 1000)],
                 "pq_ms": [int((t_pq - t_conv) * 1000)],
                 "bloom_ms": [int((t_bloom - t_pq) * 1000)],
-                "n_candidates": [n_cand], "n_probe_pos": [n_pos], "n_probe_fp": [n_fp],
+                "n_blocked": [n_blk], "n_candidates": [n_cand], "n_probe_pos": [n_pos],
+                "n_probe_fp": [n_fp], "n_recheck_rows": [n_re],
             })
 
-        summed = ("probe_ms", "conv_ms", "pq_ms", "bloom_ms", "n_candidates", "n_probe_pos", "n_probe_fp")
+        summed = ("probe_ms", "conv_ms", "pq_ms", "bloom_ms", "n_blocked", "n_candidates",
+                  "n_probe_pos", "n_probe_fp", "n_recheck_rows")
         stats = rows.groupBy(*keys).applyInPandas(
             build,
             schema="slice int, bucket int, n long, " + ", ".join(f"{k} long" for k in summed),
@@ -1035,6 +1056,7 @@ class FrontierEngine:
             wall_ms=0,
             n_probe_pos=rnd.n_probe_pos,
             n_probe_fp=rnd.n_probe_fp,
+            n_recheck_rows=rnd.n_recheck_rows,
         )
 
     def _cursor(self, rnd: _Round) -> None:
@@ -1112,9 +1134,10 @@ class FrontierEngine:
 
     def _extract(self, rnd: _Round) -> Optional[DataFrame]:
         """The next depth's keyed candidate rows (lazy), or None at the
-        last depth (F4) or when nothing was admitted. With Bloom they keep
-        duplicates and seen URLs — the fused write dedups and probes them;
-        without it _filter_new removes both here."""
+        last depth (F4) or when nothing was admitted. They keep duplicates,
+        seen URLs and (under robots, flagged `_blocked`) blocked URLs — the
+        fused write counts and drops the blocked rows, then dedups and
+        probes the rest."""
         if rnd.d + 1 >= rnd.depth_limit or rnd.n_admitted == 0:
             return None
         # extraction parallelism must not be bound to the frontier's file
@@ -1128,35 +1151,20 @@ class FrontierEngine:
         rnd.phases["extract_tasks"] = max(2, sized_tasks(self.spark, rnd.n_admitted))
         extract_input = rnd.admitted.repartition(rnd.phases["extract_tasks"])
         keyed = self._with_keys(extract_links(extract_input, self.spec).select("url", "host"))
+        cols = ["url", "host", "url_hash", "seen_bucket", "depth"]
         if self.cfg.robots is not None:
-            # blocked URLs never enter the seen set, so the robots filter
-            # commutes with dedup and the seen probe; counting BEFORE the
-            # within-round dedup is multiplicity-preserving — every
-            # discovery occurrence of a blocked URL counts, matching the
-            # oracle (oracle/crawler.py:141-147) at any depth, not just
-            # where the fixture happens to have no within-round dups.
-            # The count is metrics-only and costs a job per round, so
-            # it is gated by cfg.detailed_metrics (-1 when off)
-            keyed = keyed.withColumn("_blocked", blocked_expr(F.col("url"))).persist()
-            rnd.persisted.append(keyed)
-            rnd.n_blocked = keyed.filter(F.col("_blocked")).count() if self.cfg.detailed_metrics else -1
-            keyed = keyed.filter(~F.col("_blocked")).drop("_blocked")
-        if not self.cfg.use_bloom:
-            # no Bloom filter: dropDuplicates + exact left-anti join
-            keyed, deduped = self._filter_new(rnd.store, keyed, rnd.persisted)
-            rnd.n_candidates = deduped.count()
-        return keyed.withColumn("depth", F.lit(rnd.d + 1)).select(
-            "url", "host", "url_hash", "seen_bucket", "depth"
-        )
+            # blocked URLs never enter the seen set, so the filter commutes
+            # with dedup and probe: the fused write counts and drops them
+            keyed = keyed.withColumn("_blocked", blocked_expr(F.col("url")))
+            cols.append("_blocked")
+        return keyed.withColumn("depth", F.lit(rnd.d + 1)).select(*cols)
 
     def _writes(self, rnd: _Round, new_rows: Optional[DataFrame]) -> List[list]:
         """Stage the round's writes into its dir (visible only after
-        commit): ONE fused shuffle+write job for the new URLs — with Bloom
-        it takes the raw candidates and dedups, probes and exact-checks
-        them in the write task itself (see _write_bucketed), so the
-        new-URL path has one exchange; parquet + seen delta + bloom blobs
-        come from the same pass, counts from its stats (no read-back). A
-        second job, on _POOL, ONLY at sub-round 0 when politeness
+        commit): ONE fused shuffle+write job for the new URLs
+        (_filter_new), so the new-URL path has one exchange; parquet +
+        seen delta + bloom blobs come from the same pass, counts from its
+        stats (no read-back). A second job, on _POOL, ONLY at sub-round 0 when politeness
         scheduled future slices (written once, partitioned by due
         sub-round), and NO next-frontier rewrite: untouched depths AND
         not-yet-due slices carry over in the manifest by reference.
@@ -1170,24 +1178,7 @@ class FrontierEngine:
                 group=rnd.group("defwrite"),
             )
         if new_rows is not None:
-            # upper bound on the write's input row count (raw candidates
-            # <= admitted × max out-degree): over-estimating only shrinks
-            # the chunked groups, never breaks the memory guard
-            stats, task = self._write_bucketed(
-                store, store.new_path(r), new_rows, bloom_round=r,
-                approx_rows=rnd.n_admitted * C.MAX_OUT_DEGREE, probe=self.cfg.use_bloom,
-            )
-            rnd.touched = sorted({s[0] for s in stats})
-            rnd.n_new = sum(s[1] for s in stats)
-            if self.cfg.use_bloom:
-                rnd.n_candidates = task["n_candidates"]
-                rnd.n_probe_pos, rnd.n_probe_fp = task["n_probe_pos"], task["n_probe_fp"]
-            # worker-side breakdown of THIS write job (summed across its
-            # tasks): lets the bench attribute extract_write_ms to the
-            # probe / Arrow conversion / parquet encode / bloom fold vs
-            # extraction + shuffle + scheduling
-            for k in ("probe_ms", "conv_ms", "pq_ms", "bloom_ms", "n_tasks"):
-                rnd.phases[f"write_{k}"] = task[k]
+            self._filter_new(rnd, new_rows)
         if rnd.deferred_write is None:
             return []
         def_stats, _ = rnd.deferred_write.result()
@@ -1293,6 +1284,7 @@ class FrontierEngine:
                 "wall_ms": pa.array([s.wall_ms], pa.int64()),
                 "n_probe_pos": pa.array([s.n_probe_pos], pa.int64()),
                 "n_probe_fp": pa.array([s.n_probe_fp], pa.int64()),
+                "n_recheck_rows": pa.array([s.n_recheck_rows], pa.int64()),
             }
         )
         pq.write_table(table, os.path.join(store.metrics_path(r), "part-0.parquet"))

@@ -49,7 +49,6 @@ def main():
     cfg = EngineConfig(
         politeness=PolitenessPolicy() if args.politeness else None,
         robots=RobotsPolicy(),
-        use_bloom=True,
         verify_payloads=True,
     )
     eng = FrontierEngine(spark, args.warehouse, args.corpus, spec, cfg)

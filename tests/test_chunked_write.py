@@ -11,7 +11,7 @@ from distributed_web_crawler_spark.plans.frontier import EngineConfig, FrontierE
 
 
 def _crawl(spark, path, spec, wh, **cfg_kw):
-    eng = FrontierEngine(spark, wh, path, spec, EngineConfig(use_bloom=True, **cfg_kw))
+    eng = FrontierEngine(spark, wh, path, spec, EngineConfig(**cfg_kw))
     seeds = [f"http://h0000.test/p/{i}" for i in range(0, 200, 10)]
     res = eng.run_job("j", seeds, 3)
     return eng, res

@@ -13,7 +13,7 @@ from distributed_web_crawler_spark.plans.ledger import CrawlService, JobCache, J
 def test_concurrent_jobs_with_repeated_seeds(spark, corpus_1k, tmp_path):
     spec, path = corpus_1k
     wh = str(tmp_path / "wh")
-    eng = FrontierEngine(spark, wh, path, spec, EngineConfig(use_bloom=True, seen_buckets=8))
+    eng = FrontierEngine(spark, wh, path, spec, EngineConfig(seen_buckets=8))
     svc = CrawlService(engine=eng, ledger=JobLedger(wh), cache=JobCache(wh))
 
     seeds = [i for i in range(spec.n) if len(C.out_links(i, spec)) >= 3][:3]

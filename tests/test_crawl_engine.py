@@ -47,20 +47,20 @@ def assert_matches_oracle(engine, job_id, seed_i, depth, oracle_res, spec, check
 def test_plain_bfs_matches_oracle(spark, corpus_1k, tmp_path, depth):
     spec, _ = corpus_1k
     seed_i = pick_seed(spec)
-    eng = engine_for(spark, tmp_path, corpus_1k, EngineConfig(use_bloom=False))
+    eng = engine_for(spark, tmp_path, corpus_1k, EngineConfig())
     s = eng.run_job(f"plain{depth}", C.url_of(seed_i, spec), depth)
     assert s["done"]
     assert_matches_oracle(eng, f"plain{depth}", seed_i, depth, crawl(seed_i, depth, spec), spec)
 
 
-def test_bloom_path_matches_exact(spark, corpus_1k, tmp_path):
+def test_forced_false_positives_are_rescued(spark, corpus_1k, tmp_path):
     from distributed_web_crawler_spark.functions.bloom import BloomParams
 
     spec, _ = corpus_1k
     seed_i = pick_seed(spec)
     # tiny filters force false positives → exact re-check must rescue them
     # (1,024-bit filters gave none on this 13-URL crawl; 8 bits give 4)
-    cfg = EngineConfig(use_bloom=True, seen_buckets=8, bloom=BloomParams(n_bits=8, n_hashes=1))
+    cfg = EngineConfig(seen_buckets=8, bloom=BloomParams(n_bits=8, n_hashes=1))
     eng = engine_for(spark, tmp_path, corpus_1k, cfg)
     s = eng.run_job("bloom", C.url_of(seed_i, spec), 3)
     assert s["done"]
@@ -71,6 +71,8 @@ def test_bloom_path_matches_exact(spark, corpus_1k, tmp_path):
     m = eng.metrics_df("bloom").collect()
     for row in m:
         assert row["n_new"] == row["n_candidates"] - (row["n_probe_pos"] - row["n_probe_fp"]), row
+        # the re-check loads seen hashes exactly when a group has positives
+        assert (row["n_recheck_rows"] > 0) == (row["n_probe_pos"] > 0), row
     assert sum(row["n_probe_fp"] for row in m) > 0
 
 
@@ -78,7 +80,7 @@ def test_politeness_schedule_matches_oracle(spark, corpus_1k, tmp_path):
     spec, _ = corpus_1k
     pol = PolitenessPolicy(round_duration_ms=4000)
     seed_i = pick_seed(spec)
-    cfg = EngineConfig(politeness=pol, use_bloom=False)
+    cfg = EngineConfig(politeness=pol)
     eng = engine_for(spark, tmp_path, corpus_1k, cfg)
     eng.run_job("pol", C.url_of(seed_i, spec), 3)
     assert_matches_oracle(
@@ -86,11 +88,14 @@ def test_politeness_schedule_matches_oracle(spark, corpus_1k, tmp_path):
     )
 
 
-def test_robots_matches_oracle(spark, corpus_1k, tmp_path):
+@pytest.mark.parametrize("detailed_metrics", [True, False])
+def test_robots_matches_oracle(spark, corpus_1k, tmp_path, detailed_metrics):
+    """n_blocked is the oracle's count whatever detailed_metrics says: the
+    fused write counts it for free, so the flag is ignored."""
     spec, _ = corpus_1k
     rob = RobotsPolicy()
     seed_i = pick_seed(spec)
-    cfg = EngineConfig(robots=rob, use_bloom=False)
+    cfg = EngineConfig(robots=rob, detailed_metrics=detailed_metrics)
     eng = engine_for(spark, tmp_path, corpus_1k, cfg)
     eng.run_job("rob", C.url_of(seed_i, spec), 3)
     o = crawl(seed_i, 3, spec, robots=rob)
@@ -107,7 +112,7 @@ def test_robots_blocked_count_deep(spark, corpus_1k, tmp_path):
     seed 1 does, and diverged before the fix (oracle 3 vs engine 2)."""
     spec, _ = corpus_1k
     rob = RobotsPolicy()
-    eng = engine_for(spark, tmp_path, corpus_1k, EngineConfig(robots=rob, use_bloom=False))
+    eng = engine_for(spark, tmp_path, corpus_1k, EngineConfig(robots=rob))
     eng.run_job("robd", C.url_of(1, spec), 6)
     o = crawl(1, 6, spec, robots=rob)
     assert_matches_oracle(eng, "robd", 1, 6, o, spec)
@@ -123,7 +128,7 @@ def test_resume_after_crash_before_first_commit(spark, corpus_1k, tmp_path):
 
     spec, _ = corpus_1k
     seed_i = pick_seed(spec)
-    eng = engine_for(spark, tmp_path, corpus_1k, EngineConfig(use_bloom=False))
+    eng = engine_for(spark, tmp_path, corpus_1k, EngineConfig())
     store = eng.store("crash0")
     os.makedirs(store.round_dir(0), exist_ok=True)
     spark.createDataFrame([(C.url_of(seed_i, spec),)], "url string").write.parquet(
@@ -139,7 +144,7 @@ def test_full_stack_matches_oracle(spark, corpus_1k, tmp_path):
     spec, _ = corpus_1k
     pol, rob = PolitenessPolicy(), RobotsPolicy()
     seed_i = pick_seed(spec, skip=1)
-    cfg = EngineConfig(politeness=pol, robots=rob, use_bloom=True, seen_buckets=16)
+    cfg = EngineConfig(politeness=pol, robots=rob, seen_buckets=16)
     eng = engine_for(spark, tmp_path, corpus_1k, cfg)
     eng.run_job("full", C.url_of(seed_i, spec), 3)
     o = crawl(seed_i, 3, spec, politeness=pol, robots=rob)
@@ -150,7 +155,7 @@ def test_resume_mid_crawl(spark, corpus_1k, tmp_path):
     """W2: kill after round r's commit, restart, final state identical."""
     spec, _ = corpus_1k
     seed_i = pick_seed(spec)
-    cfg = EngineConfig(use_bloom=True, seen_buckets=8)
+    cfg = EngineConfig(seen_buckets=8)
     eng = engine_for(spark, tmp_path, corpus_1k, cfg)
     s1 = eng.run_job("res", C.url_of(seed_i, spec), 3, max_rounds=1)
     assert not s1["done"]
@@ -162,7 +167,7 @@ def test_resume_mid_crawl(spark, corpus_1k, tmp_path):
 def test_payload_verification(spark, corpus_1k, tmp_path):
     spec, _ = corpus_1k
     seed_i = pick_seed(spec)
-    cfg = EngineConfig(use_bloom=False, verify_payloads=True)
+    cfg = EngineConfig(verify_payloads=True)
     eng = engine_for(spark, tmp_path, corpus_1k, cfg)
     eng.run_job("pay", C.url_of(seed_i, spec), 2)
     store = eng.store("pay")
@@ -182,7 +187,7 @@ def test_malformed_seed_completes_with_seed_only(spark, corpus_1k, tmp_path):
     spec, _ = corpus_1k
     from distributed_web_crawler_spark.oracle.crawler import PolitenessPolicy
 
-    cfg = EngineConfig(politeness=PolitenessPolicy(), robots=RobotsPolicy(), use_bloom=True)
+    cfg = EngineConfig(politeness=PolitenessPolicy(), robots=RobotsPolicy())
     eng = engine_for(spark, tmp_path, corpus_1k, cfg)
     s = eng.run_job("mal", "http://nonsense.example/xyz", 2)
     assert s["done"] and s["n_seen"] == 1
@@ -200,7 +205,7 @@ def test_blocked_seed_yields_empty_job(spark, corpus_1k, tmp_path):
     blocked = [i for i in range(spec.n) if rob.blocked(i, spec)]
     if not blocked:
         pytest.skip("no blocked page at this corpus size")
-    eng = engine_for(spark, tmp_path, corpus_1k, EngineConfig(robots=rob, use_bloom=False))
+    eng = engine_for(spark, tmp_path, corpus_1k, EngineConfig(robots=rob))
     s = eng.run_job("blk", C.url_of(blocked[0], spec), 2)
     assert s["done"] and s["n_seen"] == 0
 
@@ -219,7 +224,7 @@ def test_fused_dedup_across_arrow_batches(spark, corpus_1k, tmp_path, fused_prob
 
     spec, path = corpus_1k
     eng = FrontierEngine(
-        spark, str(tmp_path / "wh"), path, spec, EngineConfig(use_bloom=True, seen_buckets=2)
+        spark, str(tmp_path / "wh"), path, spec, EngineConfig(seen_buckets=2)
     )
     seed_i = next(i for i in range(spec.n) if len(C.out_links(i, spec)) >= 3)
     eng.run_job("fb", C.url_of(seed_i, spec), 2)
@@ -274,7 +279,7 @@ def test_all_seen_bucket_keeps_its_blob(spark, corpus_1k, tmp_path, fused_probe)
 
     eng = engine_for(
         spark, tmp_path, corpus_1k,
-        EngineConfig(use_bloom=True, seen_buckets=nb, compact_seen_every=None),
+        EngineConfig(seen_buckets=nb, compact_seen_every=None),
     )
     urls = sorted(C.url_of(i, spec) for i in seeds)
     eng.run_job("as", urls, 3, max_rounds=1)
@@ -304,10 +309,11 @@ def test_all_seen_bucket_keeps_its_blob(spark, corpus_1k, tmp_path, fused_probe)
     assert sorted(seen) == sorted(C.url_of(i, spec) for i in want)
 
 
-def test_new_url_path_has_one_exchange(spark, corpus_1k, tmp_path, monkeypatch):
-    """The Bloom round's new-URL write job shuffles once: extraction output
-    → groupBy(seen_bucket) write. No probe exchange, no persisted probe
-    frame in between."""
+@pytest.mark.parametrize("robots", [None, RobotsPolicy()], ids=["plain", "robots"])
+def test_new_url_path_has_one_exchange(spark, corpus_1k, tmp_path, monkeypatch, robots):
+    """The round's new-URL write job shuffles once: extraction output →
+    groupBy(seen_bucket) write. No probe exchange, and no persisted probe
+    or robots-count frame in between."""
     from pyspark.sql.group import GroupedData
 
     plans = []
@@ -320,7 +326,7 @@ def test_new_url_path_has_one_exchange(spark, corpus_1k, tmp_path, monkeypatch):
 
     monkeypatch.setattr(GroupedData, "applyInPandas", spy)
     spec, _ = corpus_1k
-    eng = engine_for(spark, tmp_path, corpus_1k, EngineConfig(use_bloom=True))
+    eng = engine_for(spark, tmp_path, corpus_1k, EngineConfig(robots=robots))
     eng.run_job("ex", C.url_of(pick_seed(spec), spec), 2)
     # the extraction stage is operators/extract.py's mapInPandas `expand`
     writes = [p for p in plans if "MapInPandas expand(" in p]
@@ -354,11 +360,11 @@ def test_pipelined_verify_same_stats_and_results(spark, corpus_1k, tmp_path):
     spec, _ = corpus_1k
     seed_i = pick_seed(spec)
     sync = engine_for(
-        spark, tmp_path / "a", corpus_1k, EngineConfig(use_bloom=True, verify_payloads=True)
+        spark, tmp_path / "a", corpus_1k, EngineConfig(verify_payloads=True)
     )
     piped = engine_for(
         spark, tmp_path / "b", corpus_1k,
-        EngineConfig(use_bloom=True, verify_payloads=True, pipeline_verify=True),
+        EngineConfig(verify_payloads=True, pipeline_verify=True),
     )
     rs = sync.run_job("pay", C.url_of(seed_i, spec), 3)
     rp = piped.run_job("pay", C.url_of(seed_i, spec), 3)
@@ -370,7 +376,7 @@ def test_pipelined_verify_same_stats_and_results(spark, corpus_1k, tmp_path):
     # a cut after one round commits that round's stats; the resume adds
     # the rest, equal to the uninterrupted run's
     cut = engine_for(
-        spark, tmp_path / "c", corpus_1k, EngineConfig(use_bloom=True, verify_payloads=True)
+        spark, tmp_path / "c", corpus_1k, EngineConfig(verify_payloads=True)
     )
     assert not cut.run_job("res", C.url_of(seed_i, spec), 3, max_rounds=1)["done"]
     assert sorted(cut.payload_stats("res")) == [1]
@@ -396,7 +402,7 @@ def test_pipelined_verify_with_politeness_subrounds(spark, corpus_1k, tmp_path):
     pol = PolitenessPolicy(round_duration_ms=500)
     mk = lambda sub, pv: engine_for(  # noqa: E731
         spark, tmp_path / sub, corpus_1k,
-        EngineConfig(politeness=pol, use_bloom=True, verify_payloads=True, pipeline_verify=pv),
+        EngineConfig(politeness=pol, verify_payloads=True, pipeline_verify=pv),
     )
     sync, piped, cut = mk("a", False), mk("b", True), mk("c", False)
     rs = sync.run_job("p", C.url_of(seed_i, spec), 2)

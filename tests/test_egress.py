@@ -64,7 +64,7 @@ def test_crawl_service_outbox(spark, corpus_1k, tmp_path):
     spec, path = corpus_1k
     wh = str(tmp_path / "wh")
     outbox = str(tmp_path / "outbox")
-    eng = FrontierEngine(spark, wh, path, spec, EngineConfig(use_bloom=False))
+    eng = FrontierEngine(spark, wh, path, spec, EngineConfig())
     svc = CrawlService(engine=eng, ledger=JobLedger(wh), cache=JobCache(wh), outbox=outbox)
     seed_i = next(i for i in range(spec.n) if len(C.out_links(i, spec)) >= 2)
     svc.submit("J1", "c7", C.url_of(seed_i, spec), 2)

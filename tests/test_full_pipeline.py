@@ -38,7 +38,7 @@ def test_ingress_crawl_egress_roundtrip(spark, corpus_1k, tmp_path):
     run_job_intake(spark, ingress, ledger, str(tmp_path / "ckpt_in"))
     assert ledger.get("J0") is not None and ledger.get("J1") is not None
 
-    eng = FrontierEngine(spark, wh, corpus_path, spec, EngineConfig(use_bloom=True, seen_buckets=8))
+    eng = FrontierEngine(spark, wh, corpus_path, spec, EngineConfig(seen_buckets=8))
     svc = CrawlService(engine=eng, ledger=ledger, cache=JobCache(wh), outbox=outbox)
     n_run = 0
     while svc.run_next(owner="m1") is not None:

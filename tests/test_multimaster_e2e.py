@@ -27,7 +27,7 @@ def _master(owner, wh, corpus_path, out_path):
 
     spark = get_spark(app=f"master-{owner}", cores=2, shuffle_partitions=2)
     spec = CorpusSpec(n=N_PAGES)
-    eng = FrontierEngine(spark, wh, corpus_path, spec, EngineConfig(use_bloom=False, seen_buckets=8))
+    eng = FrontierEngine(spark, wh, corpus_path, spec, EngineConfig(seen_buckets=8))
     svc = CrawlService(engine=eng, ledger=JobLedger(wh), cache=JobCache(wh))
     done = []
     while True:

@@ -12,7 +12,7 @@ from distributed_web_crawler_spark.plans.frontier import EngineConfig, FrontierE
 
 def _engine(spark, corpus_1k, tmp_path, **cfg):
     spec, path = corpus_1k
-    cfg = {"use_bloom": True, "seen_buckets": 8, **cfg}
+    cfg = {"seen_buckets": 8, **cfg}
     return FrontierEngine(spark, str(tmp_path / "wh"), path, spec, EngineConfig(**cfg))
 
 

@@ -24,7 +24,7 @@ def test_megahost_deferred_bytes_linear(spark, corpus_1k, tmp_path):
     pol = PolitenessPolicy(round_duration_ms=4000)  # host 0 budget = 8
     eng = FrontierEngine(
         spark, str(tmp_path / "wh"), path, spec,
-        EngineConfig(politeness=pol, use_bloom=True, seen_buckets=8, compact_seen_every=None),
+        EngineConfig(politeness=pol, seen_buckets=8, compact_seen_every=None),
     )
     m, k = 2000, 8
     seeds = [f"http://h0000.test/p/{i}" for i in range(m)]  # ONE mega-host
@@ -379,7 +379,7 @@ def test_engine_graded_drain_identical_results(spark, corpus_1k, tmp_path):
     # multi-seed with six mega-host URLs so a genuinely tight budget
     # (1/host/sub-round) must defer at depth 0
     seeds = [C.url_of(seed_i, spec)] + [C.url_of(i, spec) for i in range(0, 60, 10)]
-    base = dict(use_bloom=True, seen_buckets=8, detailed_metrics=False)
+    base = dict(seen_buckets=8)
     res = {}
     for name, cfg in {
         "plain": EngineConfig(**base),

@@ -58,7 +58,7 @@ def _round_one(spark, tmp_path, corpus, seeds, monkeypatch):
     spec, path = corpus
     plans = _stage_plans(spark, monkeypatch)
     eng = FrontierEngine(
-        spark, str(tmp_path / "wh"), path, spec, EngineConfig(use_bloom=True, verify_payloads=True)
+        spark, str(tmp_path / "wh"), path, spec, EngineConfig(verify_payloads=True)
     )
     eng.run_job("rs", seeds, 2, max_rounds=1)
     c = eng.store("rs").read_commit(1)
@@ -96,7 +96,7 @@ def test_compact_seen_writes_one_file_per_bucket_from_few_tasks(spark, corpus_1k
     nb = 16
     eng = FrontierEngine(
         spark, str(tmp_path / "wh"), path, spec,
-        EngineConfig(use_bloom=True, seen_buckets=nb, compact_seen_every=None),
+        EngineConfig(seen_buckets=nb, compact_seen_every=None),
     )
     seed_i = next(i for i in range(spec.n) if len(C.out_links(i, spec)) >= 3)
     n_seen = eng.run_job("cs", C.url_of(seed_i, spec), 3)["n_seen"]

@@ -21,7 +21,7 @@ def _engine(spark, corpus_1k, tmp_path, **cfg):
         str(tmp_path / "wh"),
         path,
         spec,
-        EngineConfig(use_bloom=True, seen_buckets=8, **cfg),
+        EngineConfig(seen_buckets=8, **cfg),
     )
     seed_i = next(i for i in range(spec.n) if len(C.out_links(i, spec)) >= 3)
     return eng, spec, seed_i

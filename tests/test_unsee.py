@@ -22,7 +22,7 @@ from distributed_web_crawler_spark.plans.ledger import CrawlService, JobCache, J
 
 def _engine(spark, corpus_1k, tmp_path):
     spec, path = corpus_1k
-    cfg = EngineConfig(use_bloom=True, seen_buckets=8, compact_seen_every=None)
+    cfg = EngineConfig(seen_buckets=8, compact_seen_every=None)
     eng = FrontierEngine(spark, str(tmp_path / "wh"), path, spec, cfg)
     seed_i = next(i for i in range(spec.n) if len(C.out_links(i, spec)) >= 3)
     return eng, spec, seed_i
@@ -359,7 +359,7 @@ def test_reseed_under_politeness_and_robots(spark, corpus_1k, tmp_path):
     spec, path = corpus_1k
     eng = FrontierEngine(
         spark, str(tmp_path / "wh"), path, spec,
-        EngineConfig(use_bloom=True, seen_buckets=8,
+        EngineConfig(seen_buckets=8,
                      politeness=PolitenessPolicy(), robots=RobotsPolicy()),
     )
     seed_i = next(i for i in range(spec.n) if len(C.out_links(i, spec)) >= 3)
@@ -383,7 +383,7 @@ def test_service_recrawl_refreshes_cache(spark, corpus_1k, tmp_path):
     wh = str(tmp_path / "wh")
     eng = FrontierEngine(
         spark, wh, path, spec,
-        EngineConfig(use_bloom=True, seen_buckets=8),
+        EngineConfig(seen_buckets=8),
     )
     svc = CrawlService(engine=eng, ledger=JobLedger(wh), cache=JobCache(wh))
     seed_i = next(i for i in range(spec.n) if len(C.out_links(i, spec)) >= 3)
@@ -440,8 +440,8 @@ def test_seen_filter_config_is_pinned_per_job(spark, corpus_1k, tmp_path):
     """ADVICE r7: resuming a job store under a different seen-filter
     config silently reinterprets the blob bytes — false negatives
     duplicate crawls with no error. The seed commit records the filter
-    identity; resume/unsee under any other kind, params, bucket count, or
-    use_bloom raises."""
+    identity; resume/unsee under any other kind, params or bucket count,
+    or of a store written without the Bloom filter, raises."""
     import json
 
     from distributed_web_crawler_spark.functions.bloom import BloomParams
@@ -458,7 +458,7 @@ def test_seen_filter_config_is_pinned_per_job(spark, corpus_1k, tmp_path):
     }
 
     def resumed(**cfg):
-        kw = dict(use_bloom=True, seen_buckets=8, compact_seen_every=None)
+        kw = dict(seen_buckets=8, compact_seen_every=None)
         kw.update(cfg)
         return FrontierEngine(
             spark, str(tmp_path / "wh"), corpus_1k[1], spec, EngineConfig(**kw)
@@ -467,18 +467,30 @@ def test_seen_filter_config_is_pinned_per_job(spark, corpus_1k, tmp_path):
     with pytest.raises(ValueError, match="seen-filter config mismatch"):
         resumed(seen_buckets=16).unsee_urls("u9", ["https://crawl.test/x"])
     with pytest.raises(ValueError, match="seen-filter config mismatch"):
-        resumed(use_bloom=False).run_job("u9", seed, 2)
-    with pytest.raises(ValueError, match="seen-filter config mismatch"):
         resumed(bloom=BloomParams(n_bits=1 << 16)).run_job("u9", seed, 2)
     # the ORIGINAL config keeps working (resume of a done job is a no-op)
+    assert resumed().run_job("u9", seed, 2)["done"]
+    # the removed no-Bloom path is refused up front
+    with pytest.raises(ValueError, match="use_bloom"):
+        EngineConfig(use_bloom=False)
+
+    def rewrite(key, value):
+        for r in store.committed_rounds():
+            info = store.read_commit(r)
+            info["seen_filter"][key] = value
+            with open(store._commit_path(r), "w") as f:
+                json.dump(info, f)
+
+    # a store written without the filter has no blobs for its rounds, so
+    # probing them would trust empty filters: resuming it must fail
+    rewrite("use_bloom", False)
+    with pytest.raises(ValueError, match="seen-filter config mismatch"):
+        resumed().run_job("u9", seed, 2)
+    rewrite("use_bloom", True)
     assert resumed().run_job("u9", seed, 2)["done"]
 
     # a store left by the removed cuckoo filter: its blob bytes are not
     # bloom bits, so resuming it must fail instead of probing them
-    for r in store.committed_rounds():
-        info = store.read_commit(r)
-        info["seen_filter"]["kind"] = "cuckoo"
-        with open(store._commit_path(r), "w") as f:
-            json.dump(info, f)
+    rewrite("kind", "cuckoo")
     with pytest.raises(ValueError, match="seen-filter config mismatch"):
         resumed().run_job("u9", seed, 2)

@@ -51,7 +51,7 @@ def test_unsee_sequences_match_model(spark, corpus_1k, tmp_path, seed):
     spec, path = corpus_1k
     eng = FrontierEngine(
         spark, str(tmp_path / "wh"), path, spec,
-        EngineConfig(use_bloom=True, seen_buckets=8, compact_seen_every=None),
+        EngineConfig(seen_buckets=8, compact_seen_every=None),
     )
     seed_i = next(i for i in range(spec.n) if len(C.out_links(i, spec)) >= 3)
     seed_url = C.url_of(seed_i, spec)

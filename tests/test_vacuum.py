@@ -18,7 +18,7 @@ def test_vacuum_preserves_results_and_resume(spark, corpus_1k, tmp_path):
     spec, path = corpus_1k
     pol = PolitenessPolicy(round_duration_ms=4000)  # sub-rounds → deferred sets
     eng = FrontierEngine(
-        spark, str(tmp_path / "wh"), path, spec, EngineConfig(politeness=pol, use_bloom=True, seen_buckets=8)
+        spark, str(tmp_path / "wh"), path, spec, EngineConfig(politeness=pol, seen_buckets=8)
     )
     seed_i = next(i for i in range(spec.n) if len(C.out_links(i, spec)) >= 3)
     eng.run_job("v", C.url_of(seed_i, spec), 3)
@@ -62,7 +62,7 @@ def test_vacuum_mid_crawl_then_resume(spark, corpus_1k, tmp_path):
     spec, path = corpus_1k
     pol = PolitenessPolicy(round_duration_ms=4000)
     eng = FrontierEngine(
-        spark, str(tmp_path / "wh"), path, spec, EngineConfig(politeness=pol, use_bloom=True, seen_buckets=8)
+        spark, str(tmp_path / "wh"), path, spec, EngineConfig(politeness=pol, seen_buckets=8)
     )
     seed_i = next(i for i in range(spec.n) if len(C.out_links(i, spec)) >= 3)
     s1 = eng.run_job("mid", C.url_of(seed_i, spec), 3, max_rounds=1)
@@ -108,8 +108,8 @@ def test_verify_stats_survive_vacuum(spark, corpus_1k, tmp_path):
     pol = PolitenessPolicy(round_duration_ms=4000)
     eng = FrontierEngine(
         spark, str(tmp_path / "wh"), path, spec,
-        EngineConfig(politeness=pol, robots=RobotsPolicy(), use_bloom=True,
-                     seen_buckets=8, verify_payloads=True),
+        EngineConfig(politeness=pol, robots=RobotsPolicy(), seen_buckets=8,
+                     verify_payloads=True),
     )
     seed_i = next(i for i in range(spec.n) if len(C.out_links(i, spec)) >= 3)
     eng.run_job("v", C.url_of(seed_i, spec), 2)
