@@ -48,6 +48,33 @@ FETCH_ERR_MOD = 97  # 1-in-97 pages fail fetch → empty links
 MAX_OUT_DEGREE = 9  # out-degree in 0..8
 DANGLING_FACTOR = 11  # targets drawn from [0, N*11//10) → ~9% dangling
 N_BUCKETS = 32  # corpus storage partitions: bucket(i) = i % N_BUCKETS
+ALL_BUCKETS = (1 << N_BUCKETS) - 1  # corpus_mask of every storage bucket
+
+# functions.urls.page_index's full-URL rule. Java's `$` (the JVM regex
+# behind regexp_extract) also matches before ONE final line terminator, so
+# the twin accepts one too: a malformed seed ending in "\r" still joins
+_PAGE_URL = r"^https?://h[0-9]+\.test/p/([0-9]+)(?:\r\n|[\n\r\u0085\u2028\u2029])?\Z"
+
+
+def corpus_mask(urls) -> int:
+    """The corpus storage buckets a set of URLs can join, as an int64 bit
+    mask: the OR of ``1 << (page_index % N_BUCKETS)``. The numpy twin of
+    functions.urls.page_index, so a URL outside the corpus scheme sets no
+    bit (its page_index is NULL, it never joins). 10^5 is a multiple of 32,
+    so the index's last five digits fix its bucket at any length (an index
+    past int64 sets a bit it never joins: a harmless superset)."""
+    import pandas as pd
+
+    digits = pd.Series(urls, dtype=object).str.extract(_PAGE_URL, expand=False).dropna()
+    if digits.empty:
+        return 0
+    b = digits.str[-5:].astype(np.int64).to_numpy() % N_BUCKETS
+    return int(np.bitwise_or.reduce(np.left_shift(np.int64(1), b)))
+
+
+def mask_buckets(mask: int) -> List[int]:
+    """The storage buckets set in a corpus_mask, ascending."""
+    return [b for b in range(N_BUCKETS) if mask >> b & 1]
 
 _VOCAB = [
     "amber", "basalt", "cedar", "delta", "ember", "fjord", "garnet", "harbor",

@@ -16,7 +16,10 @@ Scale shape per round (what survives 1000 executors × 100 TB):
 * fetch: `broadcast(admitted) ⋈ corpus` with the corpus scan pruned to the
   storage buckets the round touches — never a full corpus scan, and the
   binary `bytes` column is only read by the optional payload-verify stage
-  (column pruning, SURVEY.md §7 risk (e)).
+  (column pruning, SURVEY.md §7 risk (e)). The buckets are manifest
+  arithmetic: each frontier file-set's write returns the corpus_mask of
+  its rows, and the round ORs the masks of the entries it drains, so no
+  job runs to find them.
 * dedup: no stage of its own. The raw candidate stream goes straight to
   the bucketed write (ONE exchange, by seen-bucket); each write task dedups
   its group with numpy, probes the bucket's Bloom blob (no broadcast of
@@ -59,6 +62,12 @@ from ..oracle.crawler import PolitenessPolicy, RobotsPolicy
 from ..session import sized_tasks
 
 FRONTIER_SCHEMA = "url string, host string, url_hash bigint, seen_bucket int, depth int"
+# the per-round metrics table, one column per RoundStats field of that name
+METRICS_SCHEMA = (
+    "round int, depth int, sub_round int, n_admitted bigint, n_candidates bigint, "
+    "n_new bigint, n_blocked bigint, n_pending_after bigint, wall_ms bigint, "
+    "n_probe_pos bigint, n_probe_fp bigint, n_recheck_rows bigint"
+)
 
 # driver-side pool for concurrent Spark actions within a round (independent
 # job DAGs: payload verify ∥ extract → fused write; the deferred-slice write)
@@ -178,6 +187,29 @@ def _seen_inserts(r: int, info: dict) -> int:
     return info.get("n_new", 0) + info.get("reseed", 0)
 
 
+def _entry_mask(entry: list) -> int:
+    """A manifest entry's corpus_mask. An entry committed before entries
+    carried one has 4 elements and may hold any corpus bucket."""
+    return entry[4] if len(entry) > 4 else C.ALL_BUCKETS
+
+
+def _or_masks(masks) -> int:
+    out = 0
+    for m in masks:
+        out |= m
+    return out
+
+
+def _slice_totals(stats: List[tuple]) -> dict:
+    """A sliced write's (slice, bucket, n, corpus_mask) stats folded per
+    slice: {slice: (rows, corpus_mask)}."""
+    out: dict = {}
+    for sl, _b, n, m in stats:
+        n0, m0 = out.get(sl, (0, 0))
+        out[sl] = (n0 + n, m0 | m)
+    return out
+
+
 def _n_seen(store: JobStateStore) -> int:
     """The live seen-set size, summed from the commits like every other
     count: each round's inserts minus its tombstones."""
@@ -205,11 +237,13 @@ class _Round:
     d: int = 0
     sub: int = 0
     # admission: the manifest entries drained, the admitted rows with
-    # their fetch keys, and (sub-round 0 under politeness) the rows
-    # scheduled for later sub-rounds
+    # their fetch key, the corpus buckets they may join (the OR of the
+    # drained entries' masks), and (sub-round 0 under politeness) the
+    # rows scheduled for later sub-rounds
     consumed: List[list] = field(default_factory=list)
     admitted: Optional[DataFrame] = None
     n_admitted: int = 0
+    corpus_buckets: List[int] = field(default_factory=list)
     deferred: Optional[DataFrame] = None
     n_deferred: int = 0
     # in-flight _POOL jobs
@@ -222,6 +256,7 @@ class _Round:
     n_probe_fp: int = 0
     n_recheck_rows: int = 0
     touched: List[int] = field(default_factory=list)  # Bloom buckets written
+    new_mask: int = 0  # corpus_mask of the new-URL set
 
     def mark(self, key: str) -> None:
         now = time.monotonic()
@@ -413,7 +448,8 @@ class FrontierEngine:
             store, store.new_path(0), df, bloom_round=0, approx_rows=len(seeds)
         )
         n = sum(s[1] for s in stats)
-        manifest = [[self._rel(store, store.new_path(0)), 0, n, 0]] if n > 0 else []
+        mask = _or_masks(s[2] for s in stats)
+        manifest = [[self._rel(store, store.new_path(0)), 0, n, 0, mask]] if n > 0 else []
         store.commit_round(
             0,
             {
@@ -448,6 +484,7 @@ class FrontierEngine:
         )
         rnd.touched = sorted({s[0] for s in stats})
         rnd.n_new = sum(s[1] for s in stats)
+        rnd.new_mask = _or_masks(s[2] for s in stats)
         rnd.n_candidates, rnd.n_blocked = task["n_candidates"], task["n_blocked"]
         rnd.n_probe_pos, rnd.n_probe_fp = task["n_probe_pos"], task["n_probe_fp"]
         rnd.n_recheck_rows = task["n_recheck_rows"]
@@ -465,7 +502,10 @@ class FrontierEngine:
         """ONE shuffle, one pass: group rows by seen_bucket; each task writes
         its bucket's parquet part (hive layout, `seen_bucket=<b>/`) AND — for
         new-URL sets — folds the bucket's hashes into the Bloom blob, then
-        returns (bucket, n). Fusing the writes replaces the three separate
+        returns (bucket, n, corpus_mask). The mask (fixtures.corpus
+        corpus_mask over the rows written) is what the file-set's manifest
+        entry carries, so the round that drains it prunes its fetch join
+        without a job. Fusing the writes replaces the three separate
         jobs of the v1 loop (stage `_new` parquet → read back → rewrite as
         seen delta + bloom pass + full next-frontier rewrite) that made
         the round's writes the only phase DEGRADING from 8→32 cores.
@@ -503,7 +543,8 @@ class FrontierEngine:
         are grouped by (slice, seen_bucket) and land under
         ``out_dir/<slice_col>=<v>/seen_bucket=<b>/`` so each slice is an
         independently-readable file-set root; stats become
-        (slice, bucket, n). Without it, stats are (bucket, n).
+        (slice, bucket, n, corpus_mask). Without it, stats are
+        (bucket, n, corpus_mask).
 
         Memory guard (`approx_rows`): each pandas group is one bucket's
         whole round in one task's memory. Call sites pass the row count
@@ -517,6 +558,13 @@ class FrontierEngine:
         filter | that chunk's bits, so the reader's OR over the files
         (bloom.load_blobs) reproduces the unchunked blob exactly and no
         two tasks ever write one file.
+
+        A known `approx_rows` also sets the write's width: the input is
+        hash-repartitioned by the group keys into sized_tasks(approx_rows)
+        partitions. The groupBy reuses that exchange (one shuffle), and an
+        explicit partition count is exempt from AQE coalescing, which sized
+        a bulk round's write by its bytes (1.2 MB) and ran all 64 bucket
+        groups in one task (traced bulk_drain: 718 ms, task skew 6.6).
 
         Returns ``(stats, task)``: the per-bucket stat tuples plus the
         summed worker-side numbers of THIS write job — phase timers
@@ -545,6 +593,8 @@ class FrontierEngine:
                 F.pmod(F.shiftrightunsigned(F.col("url_hash"), 20), F.lit(chunks)).cast("int"),
             )
             keys = keys + ["_wchunk"]
+        if approx_rows:
+            rows = rows.repartition(sized_tasks(self.spark, approx_rows), *keys)
 
         def bucket_seen(bucket: int):
             """The bucket's live seen hashes: every component's url_hash
@@ -613,7 +663,9 @@ class FrontierEngine:
             t_probe = _time.monotonic()
             n = len(pdf)
             t_conv = t_pq = t_probe
+            mask = 0
             if n:
+                mask = C.corpus_mask(pdf["url"].to_numpy())
                 table = pa.table(
                     {
                         "url": pa.array(pdf["url"], pa.string()),
@@ -645,12 +697,13 @@ class FrontierEngine:
                     B.write_blob(store.bloom_blob_path(r, bucket, chunk), filt)
             t_bloom = _time.monotonic()
             # per-task numbers ride back on the stats row (no extra job):
-            # probe = dedup + Bloom probe + exact re-check, conv = pandas→Arrow,
-            # pq = parquet write, bloom = blob fold+write. Worker-visible time
-            # only — shuffle/Arrow-IPC transfer cost is the gap between the
-            # job's wall and max-per-slot sums of these.
+            # probe = dedup + Bloom probe + exact re-check, conv = corpus
+            # mask + pandas→Arrow, pq = parquet write, bloom = blob
+            # fold+write. Worker-visible time only — shuffle/Arrow-IPC
+            # transfer cost is the gap between the job's wall and
+            # max-per-slot sums of these.
             return pd.DataFrame({
-                "slice": [sl], "bucket": [bucket], "n": [n],
+                "slice": [sl], "bucket": [bucket], "n": [n], "corpus_mask": [mask],
                 "probe_ms": [int((t_probe - t_entry) * 1000)],
                 "conv_ms": [int((t_conv - t_probe) * 1000)],
                 "pq_ms": [int((t_pq - t_conv) * 1000)],
@@ -663,7 +716,8 @@ class FrontierEngine:
                   "n_probe_pos", "n_probe_fp", "n_recheck_rows")
         stats = rows.groupBy(*keys).applyInPandas(
             build,
-            schema="slice int, bucket int, n long, " + ", ".join(f"{k} long" for k in summed),
+            schema="slice int, bucket int, n long, corpus_mask long, "
+            + ", ".join(f"{k} long" for k in summed),
         ).collect()
         task = {k: sum(row[k] for row in stats) for k in summed}
         task["n_tasks"] = len(stats)
@@ -671,8 +725,8 @@ class FrontierEngine:
         # callers take touched Bloom buckets from these tuples
         stats = [row for row in stats if row["n"] > 0]
         if slice_col:
-            return [(row["slice"], row["bucket"], row["n"]) for row in stats], task
-        return [(row["bucket"], row["n"]) for row in stats], task
+            return [(row["slice"], row["bucket"], row["n"], row["corpus_mask"]) for row in stats], task
+        return [(row["bucket"], row["n"], row["corpus_mask"]) for row in stats], task
 
     def _compact_manifest(
         self, store: JobStateStore, r: int, manifest: List[list], phases: dict
@@ -723,7 +777,7 @@ class FrontierEngine:
                 )
             vic_ids = {id(e) for e in victims}
             out = [e for e in out if id(e) not in vic_ids]
-            out.append([self._rel(store, dest), depth, n, 0])
+            out.append([self._rel(store, dest), depth, n, 0, _or_masks(s[2] for s in stats)])
             merged_any = True
         if merged_any:
             phases["fcompact_ms"] = round((time.monotonic() - t0) * 1000)
@@ -753,9 +807,11 @@ class FrontierEngine:
             if store.read_commit(r).get("n_admitted", 0) > 0 and r not in verified
         ]
 
-    def _verify_stats(self, admitted_keyed: DataFrame, n_admitted: int) -> dict:
+    def _verify_stats(self, admitted_keyed: DataFrame, n_admitted: int, buckets: List[int]) -> dict:
         return (
-            fetch_and_verify(self.spark, self.corpus_path, admitted_keyed, self.spec, n_admitted)
+            fetch_and_verify(
+                self.spark, self.corpus_path, admitted_keyed, buckets, self.spec, n_admitted
+            )
             .agg(
                 F.count("*").alias("n"),
                 F.sum(F.col("pixels_ok").cast("int")).alias("n_pixels_ok"),
@@ -935,14 +991,9 @@ class FrontierEngine:
                     rs.withColumn("due", F.col("depth")), None,
                     slice_col="due", approx_rows=n,
                 )
-                per_depth: dict = {}
-                for d0, _b, n_ in fr_stats:
-                    per_depth[d0] = per_depth.get(d0, 0) + n_
                 root = store.deferred_path(r)
-                for d0 in sorted(per_depth):
-                    manifest.append(
-                        [self._rel(store, os.path.join(root, f"due={d0}")), d0, per_depth[d0], 0]
-                    )
+                for d0, (n0, m0) in sorted(_slice_totals(fr_stats).items()):
+                    manifest.append([self._rel(store, os.path.join(root, f"due={d0}")), d0, n0, 0, m0])
                 n_rs = sum(s[1] for s in rs_stats)
             n_pending = sum(e[2] for e in manifest)
             # reseed entries reset the drain cursor to the seed round's
@@ -1062,8 +1113,10 @@ class FrontierEngine:
     def _cursor(self, rnd: _Round) -> None:
         """The depth and sub-round this round drains. The pending frontier
         is a MANIFEST of committed file-sets ([relpath, depth, n_rows,
-        due_sub]); the depth cursor, the no-politeness admitted count AND
-        every later sub-round's admitted count are manifest arithmetic —
+        due_sub, corpus_mask], the mask being the corpus storage buckets
+        of the set's rows, fixtures.corpus.corpus_mask); the depth cursor,
+        the no-politeness admitted count, every later sub-round's admitted
+        count AND the fetch join's corpus buckets are manifest arithmetic —
         zero Spark jobs — and only the file-sets the round actually drains
         are ever opened."""
         prev = rnd.store.read_commit(rnd.r - 1)
@@ -1104,31 +1157,38 @@ class FrontierEngine:
             [os.path.join(rnd.store.dir, e[0]) for e in rnd.consumed]
         )
         n_pending = sum(e[2] for e in rnd.consumed)
+        # the drained sets' masks: under politeness a superset of the
+        # admitted rows' buckets, which the exact fetch join makes harmless
+        rnd.corpus_buckets = C.mask_buckets(_or_masks(_entry_mask(e) for e in rnd.consumed))
         if rnd.sub == 0 and self.cfg.politeness is not None:
             # persisted `ranked` ancestor: the host-window shuffle runs
-            # ONCE, shared by the admitted count and the deferred write
+            # ONCE, shared by the admitted count and the deferred write.
+            # `admitted` is cached too, and the count fills the cache
+            # before the verify and the extract read it. A plain frontier
+            # read is not cached: both readers would race to fill it, and
+            # the loser's job count varied from run to run
             admitted, rnd.deferred = schedule(
                 admitted, self.cfg.politeness, rnd.persisted, grade=self._grade_col()
             )
-        rnd.persisted.append(admitted.persist())
-        rnd.n_admitted = n_pending if rnd.deferred is None else admitted.count()
+            rnd.persisted.append(admitted.persist())
+            rnd.n_admitted = admitted.count()
+        else:
+            rnd.n_admitted = n_pending
         rnd.n_deferred = n_pending - rnd.n_admitted
-        # fetch keys: the verify's bucket-pruned corpus scan ⋈
-        # broadcast(admitted), and the extraction input
-        rnd.admitted = admitted.withColumn("image_id", U.image_id_of(F.col("url"))).withColumn(
-            "corpus_bucket", F.pmod(U.page_index(F.col("url")), F.lit(C.N_BUCKETS)).cast("int")
-        )
+        # fetch key of the verify's bucket-pruned corpus scan ⋈
+        # broadcast(admitted); the extraction reads the url
+        rnd.admitted = admitted.withColumn("image_id", U.image_id_of(F.col("url")))
 
     def _submit_verify(self, rnd: _Round) -> None:
         """Start the payload fetch+decode+verify on _POOL, CONCURRENTLY
-        with extraction and the writes — they share only the cached
-        admitted frame (Spark actions are thread-safe; two independent job
-        DAGs). Construction runs in the pool thread too: fetch_join's
-        bucket-pruning collect would otherwise block this thread."""
+        with extraction and the writes — they share only the admitted
+        frame (Spark actions are thread-safe; two independent job DAGs).
+        The corpus buckets come from the manifest, so building the fetch
+        join submits no job of its own."""
         if self.cfg.verify_payloads and rnd.n_admitted > 0:
             rnd.phases["verify_tasks"] = sized_tasks(self.spark, rnd.n_admitted)
             rnd.verify = _pool_submit(
-                self.spark, self._verify_stats, rnd.admitted, rnd.n_admitted,
+                self.spark, self._verify_stats, rnd.admitted, rnd.n_admitted, rnd.corpus_buckets,
                 group=rnd.group("verify"),
             )
 
@@ -1142,13 +1202,8 @@ class FrontierEngine:
             return None
         # extraction parallelism must not be bound to the frontier's file
         # count — size it by the admitted rows (CPU-bound Python stage: a
-        # small round runs as 2 tasks, a bulk round at the 2× cores cap).
-        # Not 1: a 1-partition repartition plans as SinglePartition, which
-        # satisfies the write's seen_bucket clustering, so the write's
-        # exchange would vanish into the extract task. At 2 the round has
-        # one plan shape at every size — extract exchange, then the write's
-        # bucket exchange, which AQE coalesces for a small round
-        rnd.phases["extract_tasks"] = max(2, sized_tasks(self.spark, rnd.n_admitted))
+        # small round runs as 1 task, a bulk round at the 2× cores cap)
+        rnd.phases["extract_tasks"] = sized_tasks(self.spark, rnd.n_admitted)
         extract_input = rnd.admitted.repartition(rnd.phases["extract_tasks"])
         keyed = self._with_keys(extract_links(extract_input, self.spec).select("url", "host"))
         cols = ["url", "host", "url_hash", "seen_bucket", "depth"]
@@ -1191,13 +1246,10 @@ class FrontierEngine:
             raise AssertionError(
                 f"deferred write produced {n_written} rows, expected {rnd.n_deferred}"
             )
-        per_due: dict = {}
-        for due, _b, n in def_stats:
-            per_due[due] = per_due.get(due, 0) + n
         root = store.deferred_path(r)
         return [
-            [self._rel(store, os.path.join(root, f"due={due}")), rnd.d, per_due[due], due]
-            for due in sorted(per_due)
+            [self._rel(store, os.path.join(root, f"due={due}")), rnd.d, n, due, m]
+            for due, (n, m) in sorted(_slice_totals(def_stats).items())
         ]
 
     def _finalize_verify(self, rnd: _Round) -> Optional[dict]:
@@ -1215,7 +1267,9 @@ class FrontierEngine:
         consumed_ids = {id(e) for e in rnd.consumed}
         manifest = [e for e in rnd.manifest if id(e) not in consumed_ids] + sched_entries
         if rnd.n_new > 0:
-            manifest.append([self._rel(rnd.store, rnd.store.new_path(rnd.r)), rnd.d + 1, rnd.n_new, 0])
+            manifest.append(
+                [self._rel(rnd.store, rnd.store.new_path(rnd.r)), rnd.d + 1, rnd.n_new, 0, rnd.new_mask]
+            )
         return self._compact_manifest(rnd.store, rnd.r, manifest, rnd.phases)
 
     def _commit(self, rnd: _Round, manifest: List[list], payload: Optional[dict]) -> int:
@@ -1271,20 +1325,11 @@ class FrontierEngine:
         import pyarrow.parquet as pq
 
         os.makedirs(store.metrics_path(r), exist_ok=True)
+        arrow = {"int": pa.int32(), "bigint": pa.int64()}
         table = pa.table(
             {
-                "round": pa.array([s.round], pa.int32()),
-                "depth": pa.array([s.depth], pa.int32()),
-                "sub_round": pa.array([s.sub_round], pa.int32()),
-                "n_admitted": pa.array([s.n_admitted], pa.int64()),
-                "n_candidates": pa.array([s.n_candidates], pa.int64()),
-                "n_new": pa.array([s.n_new], pa.int64()),
-                "n_blocked": pa.array([s.n_blocked], pa.int64()),
-                "n_pending_after": pa.array([s.n_pending_after], pa.int64()),
-                "wall_ms": pa.array([s.wall_ms], pa.int64()),
-                "n_probe_pos": pa.array([s.n_probe_pos], pa.int64()),
-                "n_probe_fp": pa.array([s.n_probe_fp], pa.int64()),
-                "n_recheck_rows": pa.array([s.n_recheck_rows], pa.int64()),
+                name: pa.array([getattr(s, name)], arrow[kind])
+                for name, kind in (col.split() for col in METRICS_SCHEMA.split(", "))
             }
         )
         pq.write_table(table, os.path.join(store.metrics_path(r), "part-0.parquet"))
@@ -1436,7 +1481,7 @@ class FrontierEngine:
 
     def metrics_df(self, job_id: str) -> DataFrame:
         paths = self.store(job_id).metrics_paths()
-        return self.spark.read.parquet(*paths)
+        return self.spark.read.schema(METRICS_SCHEMA).parquet(*paths)
 
     def client_payload(self, job_id: str, depth: int) -> List[List[str]]:
         """The reference's DoneJob.Results [][]string (transferObjects.go:17-23):

@@ -87,7 +87,7 @@ def build_corpus(spark: SparkSession, spec: C.CorpusSpec, path: str, slices: int
 def read_corpus(spark: SparkSession, path: str, buckets: Iterable[int] | None = None) -> DataFrame:
     """Read corpus metadata+bytes, pruned to the given storage buckets when
     known (`.explain` shows them as PartitionFilters)."""
-    df = spark.read.parquet(path)
+    df = spark.read.schema(CORPUS_SCHEMA).parquet(path)
     if buckets is not None:
         df = df.filter(F.col("bucket").isin(list(buckets)))
     return df

@@ -4,23 +4,30 @@ to the frontier (SURVEY.md J5).
 Joins the admitted frontier against the corpus' SLIM metadata columns
 (image_id, fmt, caption, phash, blob_offset, blob_len — the bytes column is
 never touched), then point-reads each payload's byte range from the bucket's
-packed shard in an Arrow-batched pandas stage. Rows are exchanged by bucket
-and read in offset order, so each task opens one shard and seeks forward —
-the access pattern of ranged GETs against tar/WebDataset shards on object
+packed shard in an Arrow-batched pandas stage. The scan is pruned to the
+storage buckets the caller names: the engine holds them as manifest
+arithmetic (each frontier file-set's corpus_mask), so building the join
+submits no Spark job, and the explicit schema skips footer inference.
+Rows are exchanged by image_id hash (_exchange says why not by bucket),
+and each batch is read in offset order per shard, seeking forward — the
+access pattern of ranged GETs against tar/WebDataset shards on object
 storage. A fetched row's bytes are decoded in the same stage (no second
 pass over binary data).
 """
 
 from __future__ import annotations
 
+from typing import List
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..fixtures import corpus as C
 from ..functions.images import decode_any
 from ..session import sized_tasks
-from .corpus_source import blob_path
+from .corpus_source import CORPUS_SCHEMA, blob_path
 
 SLIM_COLS = ["image_id", "fmt", "caption", "phash", "bucket", "blob_offset", "blob_len"]
+SLIM_SCHEMA = ", ".join(f for f in CORPUS_SCHEMA.split(", ") if f.split()[0] in SLIM_COLS)
 
 VERIFY_SCHEMA = (
     "url string, psnr double, phash_ok boolean, caption_ok boolean, pixels_ok boolean"
@@ -54,13 +61,17 @@ def _exchange(df: DataFrame, n_rows: int) -> DataFrame:
     return df.repartition(sized_tasks(df.sparkSession, n_rows), F.col("image_id"))
 
 
-def fetch_join(spark: SparkSession, corpus_path: str, admitted: DataFrame) -> DataFrame:
-    """admitted: (url, image_id, corpus_bucket). Returns admitted ⋈ slim
-    metadata — a broadcast join against a bytes-free, bucket-pruned scan."""
-    buckets = [r["corpus_bucket"] for r in admitted.select("corpus_bucket").distinct().collect()]
+def fetch_join(
+    spark: SparkSession, corpus_path: str, admitted: DataFrame, buckets: List[int]
+) -> DataFrame:
+    """admitted: (url, image_id). Returns admitted ⋈ slim metadata — a
+    broadcast join against a bytes-free scan pruned to `buckets`, which
+    must hold the storage bucket of every admitted page that should join
+    (a superset is correct, the join is exact; fixtures.corpus.corpus_mask
+    computes them from URLs)."""
     slim = (
-        spark.read.parquet(corpus_path)
-        .filter(F.col("bucket").isin(buckets))
+        spark.read.schema(SLIM_SCHEMA).parquet(corpus_path)
+        .filter(F.col("bucket").isin(list(buckets)))
         .select(*SLIM_COLS)
     )
     return slim.join(F.broadcast(admitted.select("image_id", "url")), "image_id")
@@ -92,13 +103,15 @@ def _read_ranges(pdf, corpus_path):
 
 
 def fetch_and_verify(
-    spark, corpus_path: str, admitted: DataFrame, spec: C.CorpusSpec, n_rows: int
+    spark, corpus_path: str, admitted: DataFrame, buckets: List[int], spec: C.CorpusSpec,
+    n_rows: int,
 ) -> DataFrame:
     """Fetch + full per-row invariants vs the generator (input_hint):
     decoded pixels exact for PNG / PSNR≥40 dB for JPEG, phash equality,
-    caption equality. `n_rows`, the admitted row count the caller already
-    holds, sizes the verify stage's task count."""
-    fetched = fetch_join(spark, corpus_path, admitted)
+    caption equality. `buckets` prunes the corpus scan (fetch_join);
+    `n_rows`, the admitted row count the caller already holds, sizes the
+    verify stage's task count."""
+    fetched = fetch_join(spark, corpus_path, admitted, buckets)
 
     def verify(batches):
         import pandas as pd
@@ -121,11 +134,13 @@ def fetch_and_verify(
     return _exchange(fetched, n_rows).mapInPandas(verify, schema=VERIFY_SCHEMA)
 
 
-def fetch_and_decode(spark, corpus_path: str, admitted: DataFrame, n_rows: int) -> DataFrame:
+def fetch_and_decode(
+    spark, corpus_path: str, admitted: DataFrame, buckets: List[int], n_rows: int
+) -> DataFrame:
     """Fetch + decode + light features (the production fetch workload:
-    no generator oracle in the loop). `n_rows` sizes the stage as in
-    fetch_and_verify."""
-    fetched = fetch_join(spark, corpus_path, admitted)
+    no generator oracle in the loop). `buckets` and `n_rows` prune and
+    size the stage as in fetch_and_verify."""
+    fetched = fetch_join(spark, corpus_path, admitted, buckets)
 
     def feats(batches):
         import numpy as np

@@ -260,7 +260,7 @@ def audit_crawl_plans(spark, sections, failures):
     metadata scan must never read the bytes column."""
     import pandas as pd
 
-    from distributed_web_crawler_spark.fixtures.corpus import CorpusSpec, url_of, N_BUCKETS
+    from distributed_web_crawler_spark.fixtures.corpus import CorpusSpec, bucket_of, url_of
     from distributed_web_crawler_spark.functions import urls as UU
     from distributed_web_crawler_spark.sources.corpus_source import build_corpus
     from distributed_web_crawler_spark.sources.fetch import fetch_join
@@ -268,11 +268,10 @@ def audit_crawl_plans(spark, sections, failures):
 
     spec = CorpusSpec(n=2000)
     corpus = build_corpus(spark, spec, "/tmp/plan_audit_corpus")
-    adm = spark.createDataFrame(pd.DataFrame({"url": [url_of(i, spec) for i in (3, 7, 35)]}))
-    adm = adm.withColumn("image_id", UU.image_id_of(F.col("url"))).withColumn(
-        "corpus_bucket", F.pmod(UU.page_index(F.col("url")), F.lit(N_BUCKETS)).cast("int")
-    )
-    plan = plan_of(fetch_join(spark, corpus, adm))
+    idx = (3, 7, 35)
+    adm = spark.createDataFrame(pd.DataFrame({"url": [url_of(i, spec) for i in idx]}))
+    adm = adm.withColumn("image_id", UU.image_id_of(F.col("url")))
+    plan = plan_of(fetch_join(spark, corpus, adm, sorted({bucket_of(i) for i in idx})))
     checks = {
         "fetch join broadcasts the (small) frontier": "BroadcastHashJoin",
         "corpus scan pruned to touched buckets": "PartitionFilters: [bucket",

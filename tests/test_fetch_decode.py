@@ -15,10 +15,9 @@ def test_decode_features_match_metadata(spark, corpus_1k, tmp_path):
     spec, corpus_path = corpus_1k
     idx = [3, 7, 35, 64, 128, 255, 511, 999]
     adm = spark.createDataFrame(pd.DataFrame({"url": [C.url_of(i, spec) for i in idx]}))
-    adm = adm.withColumn("image_id", U.image_id_of(F.col("url"))).withColumn(
-        "corpus_bucket", F.pmod(U.page_index(F.col("url")), F.lit(C.N_BUCKETS)).cast("int")
-    )
-    feats = {r["url"]: r for r in fetch_and_decode(spark, corpus_path, adm, len(idx)).collect()}
+    adm = adm.withColumn("image_id", U.image_id_of(F.col("url")))
+    buckets = sorted({C.bucket_of(i) for i in idx})
+    feats = {r["url"]: r for r in fetch_and_decode(spark, corpus_path, adm, buckets, len(idx)).collect()}
     assert set(feats) == {C.url_of(i, spec) for i in idx}
     for i in idx:
         row = feats[C.url_of(i, spec)]

@@ -73,10 +73,11 @@ def test_one_seed_round_runs_few_tasks(spark, corpus_1k, tmp_path, monkeypatch):
     phases, verify_n, extract_n = _round_one(
         spark, tmp_path, corpus_1k, [C.url_of(3, spec)], monkeypatch
     )
-    # extraction floors at 2 tasks: 1 would plan as SinglePartition and
-    # drop the fused write's own exchange (test_new_url_path_has_one_exchange)
-    assert (verify_n, extract_n) == (1, 2)
-    assert (phases["verify_tasks"], phases["extract_tasks"]) == (1, 2)
+    # one task each: the fused write repartitions by its own keys, so a
+    # 1-partition extract no longer absorbs the write's exchange
+    # (test_new_url_path_has_one_exchange)
+    assert (verify_n, extract_n) == (1, 1)
+    assert (phases["verify_tasks"], phases["extract_tasks"]) == (1, 1)
 
 
 def test_bulk_round_keeps_the_cap(spark, tmp_path_factory, tmp_path, monkeypatch):
