@@ -35,7 +35,7 @@ from __future__ import annotations
 import hashlib
 import zlib
 from dataclasses import dataclass
-from typing import Iterator, List
+from typing import List
 
 import numpy as np
 
@@ -435,16 +435,6 @@ def make_row(i: int, spec: CorpusSpec, with_bytes: bool = True) -> dict:
     return row
 
 
-def generate_batches(indices: np.ndarray, spec: CorpusSpec, batch: int = 2048) -> Iterator["object"]:
-    """Yield pandas DataFrames of corpus rows for the given page indices —
-    shared by the Spark mapInPandas generator and local writers."""
-    import pandas as pd
-
-    for lo in range(0, len(indices), batch):
-        chunk = indices[lo : lo + batch]
-        yield pd.DataFrame([make_row(int(i), spec) for i in chunk])
-
-
 # ------------------------------------------------------- audio/video payloads
 #
 # The multimodal operators (operators/multimodal.py) need real, decodable
@@ -541,19 +531,6 @@ def encode_video(frames: list[np.ndarray]) -> bytes:
         out.append(len(blob).to_bytes(4, "little"))
         out.append(blob)
     return b"".join(out)
-
-
-def decode_video(data: bytes) -> list[np.ndarray]:
-    if data[:4] != VIDEO_MAGIC:
-        raise ValueError("not an FVID container")
-    n = int.from_bytes(data[8:10], "little")
-    frames, off = [], 10
-    for _ in range(n):
-        ln = int.from_bytes(data[off : off + 4], "little")
-        off += 4
-        frames.append(decode_image(data[off : off + ln])[0])
-        off += ln
-    return frames
 
 
 def iter_video_frame_blobs(data: bytes):

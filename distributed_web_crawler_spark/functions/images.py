@@ -1,8 +1,8 @@
 """Image payload decode + verification (north-rule X8, input_hint).
 
-Batch decode of the corpus' binary column in Arrow-fed pandas stages —
-never row-at-a-time Python, and the `bytes` column is column-pruned out of
-every other stage (SURVEY.md §7 risk (e)).
+Batch decode of point-read payloads in Arrow-fed pandas stages — never
+row-at-a-time Python; the corpus' `bytes` column is column-pruned out of
+the crawl (SURVEY.md §7 risk (e)).
 
 The container has no PIL/libjpeg, so the wire format is the deterministic
 fake codec from fixtures/corpus.py (zlib-lossless "png", step-4-quantized
@@ -11,8 +11,6 @@ if PIL appears, `decode_any` dispatches on magic bytes.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
 
 from ..fixtures import corpus as C
 
@@ -43,19 +41,12 @@ def decode_any(data: bytes):
     return np.asarray(Image.open(io.BytesIO(data)).convert("RGB"))
 
 
-VERIFY_SCHEMA = (
-    "url string, psnr double, phash_ok boolean, caption_ok boolean, pixels_ok boolean"
-)
-
-
 def verify_batch(urls, payloads, fmts, captions, phashes, spec: C.CorpusSpec) -> dict:
     """THE per-batch payload-invariant kernel (input_hint): decoded pixels
     exact for PNG / PSNR≥40 dB for JPEG, phash equality, caption equality.
     PSNR/exactness/gray32 are vectorized per decoded shape (≈3× faster than
-    per-image numpy calls — call overhead dominates at 16-64 px). Both
-    verify surfaces — the shard point-read path (sources/fetch.py) and the
-    in-row bytes-column path below — delegate here, so there is exactly one
-    implementation of the invariants."""
+    per-image numpy calls — call overhead dominates at 16-64 px). The
+    crawl's page pass (sources/fetch.py) runs it on point-read payloads."""
     import numpy as np
 
     n = len(urls)
@@ -120,26 +111,3 @@ def verify_batch(urls, payloads, fmts, captions, phashes, spec: C.CorpusSpec) ->
         "pixels_ok": pixels_ok,
     }
 
-
-def verify_payloads(fetched: DataFrame, spec: C.CorpusSpec) -> DataFrame:
-    """Per-row payload invariants over an IN-ROW binary column.
-    Input needs (url, bytes, fmt, caption, phash)."""
-
-    def verify(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = [bytes(x) for x in pdf["bytes"]]
-            yield pd.DataFrame(
-                verify_batch(
-                    pdf["url"].to_numpy(),
-                    payloads,
-                    pdf["fmt"].to_numpy(),
-                    pdf["caption"].to_numpy(),
-                    pdf["phash"].to_numpy(),
-                    spec,
-                )
-            )
-
-    cols = ["url", "bytes", "fmt", "caption", "phash"]
-    return fetched.select(*cols).mapInPandas(verify, schema=VERIFY_SCHEMA)

@@ -1,5 +1,5 @@
 """Link extraction — the reference's one UDTF (F1, Crawling.go:14-48),
-as a vectorized Arrow/pandas stage.
+vectorized over a batch of pages.
 
 The reference tokenizes HTML one token at a time per URL per RPC; here a
 whole Arrow batch of pages is expanded in ONE numpy pass — parse, round-
@@ -12,81 +12,65 @@ batching). The fixture link rule already encodes the reference's quirks
 filter) — see fixtures/corpus.py; parity with the scalar rule is pinned
 by tests/test_corpus.py and tests/test_extract.py.
 
-Output columns: (parent_url, url, host) — host computed in the same pass
-(it is a pure function of the target id), url_hash added JVM-side by the
-caller via functions.urls.url_hash.
+The crawl round calls expand_links from its one pandas stage per page
+(sources/fetch.py `expand`); url_hash is added JVM-side by the engine via
+functions.urls.url_hash.
 """
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 import numpy as np
-from pyspark.sql import DataFrame
 
 from ..fixtures import corpus as C
 
-EXTRACT_SCHEMA = "parent_url string, url string, host string"
+
+@lru_cache(maxsize=4)
+def _luts(spec: C.CorpusSpec) -> tuple:
+    """host id -> host name, and host id -> "http://hXXXX.test/p/": URL
+    assembly is then ONE np.char.add per batch (the naive 3-add chain was
+    the stage's next bottleneck after the hash batching)."""
+    names = [C.host_name(h) for h in range(spec.n_hosts)]
+    return np.array(names), np.array([f"http://{h}/p/" for h in names])
 
 
-def _host_name_lut(spec: C.CorpusSpec) -> np.ndarray:
-    return np.array([C.host_name(h) for h in range(spec.n_hosts)])
+def expand_links(urls: np.ndarray, spec: C.CorpusSpec) -> tuple:
+    """urls: a str array of fetched pages. Returns (parents, targets,
+    hosts): one entry per extracted+validated link (F1+F2+U1), parents as
+    positions into `urls`, in per-page extraction order."""
+    empty = np.empty(0, dtype=np.int64), np.empty(0, dtype=object), np.empty(0, dtype=object)
+    if not len(urls):
+        # np.char.rpartition on an empty str array returns a 1-D (0,)
+        # result under numpy 1.26, so [:, 2] would IndexError
+        return empty
+    import pandas as pd
 
-
-def _url_prefix_lut(spec: C.CorpusSpec) -> np.ndarray:
-    # host id -> "http://hXXXX.test/p/": URL assembly is then ONE np.char.add
-    # per batch (the naive 3-add chain was the stage's next bottleneck after
-    # the hash batching)
-    return np.array([f"http://{C.host_name(h)}/p/" for h in range(spec.n_hosts)])
-
-
-def extract_links(fetched: DataFrame, spec: C.CorpusSpec) -> DataFrame:
-    """fetched: DataFrame with at least (url) of successfully admitted
-    pages. Returns one row per extracted+validated link (F1+F2+U1)."""
-
-    def expand(batches):
-        import pandas as pd
-
-        host_names = _host_name_lut(spec)
-        prefixes = _url_prefix_lut(spec)
-        for pdf in batches:
-            if not len(pdf):
-                # np.char.rpartition on an empty str array returns a 1-D
-                # (0,) result under numpy 1.26, so [:, 2] would IndexError
-                yield pd.DataFrame({"parent_url": [], "url": [], "host": []}, dtype=object)
-                continue
-            urls = pdf["url"].to_numpy(str)
-            # corpus URLs end in /p/<i>; anything else is unfetchable ⇒ no
-            # links (worker.go:153). to_numeric(coerce) replaces the scalar
-            # int() ValueError guard.
-            tail = np.char.rpartition(urls, "/")[:, 2]
-            i = pd.to_numeric(pd.Series(tail), errors="coerce")
-            ok = i.notna().to_numpy()
-            idx = i.fillna(-1).to_numpy(np.int64)
-            ok &= (idx >= 0) & (idx < spec.n)
-            # round-trip check: a foreign-host URL that merely ends in
-            # /p/<i> must not resolve to page i's links — rebuild url_of(i)
-            # (canonical digits, so "/p/007" never passes for page 7) and
-            # require exact equality
-            if ok.any():
-                sub = idx[ok]
-                expect = np.char.add(
-                    prefixes[C.host_of_batch(sub, spec)], np.char.mod("%d", sub)
-                )
-                rt = np.zeros(len(idx), bool)
-                rt[ok] = urls[ok] == expect
-                ok = rt
-            parents = urls[ok]
-            pp, tt = C.out_links_batch(idx[ok], spec)
-            if len(tt) == 0:
-                # np.char.mod cannot infer a dtype from an empty int array
-                yield pd.DataFrame({"parent_url": [], "url": [], "host": []}, dtype=object)
-                continue
-            host_ids = C.host_of_batch(tt, spec)
-            yield pd.DataFrame(
-                {
-                    "parent_url": parents[pp],
-                    "url": np.char.add(prefixes[host_ids], np.char.mod("%d", tt)),
-                    "host": host_names[host_ids],
-                }
-            )
-
-    return fetched.select("url").mapInPandas(expand, schema=EXTRACT_SCHEMA)
+    host_names, prefixes = _luts(spec)
+    # corpus URLs end in /p/<i>; anything else is unfetchable ⇒ no links
+    # (worker.go:153). to_numeric(coerce) replaces the scalar int()
+    # ValueError guard.
+    tail = np.char.rpartition(urls, "/")[:, 2]
+    i = pd.to_numeric(pd.Series(tail), errors="coerce")
+    ok = i.notna().to_numpy()
+    idx = i.fillna(-1).to_numpy(np.int64)
+    ok &= (idx >= 0) & (idx < spec.n)
+    # round-trip check: a foreign-host URL that merely ends in /p/<i> must
+    # not resolve to page i's links — rebuild url_of(i) (canonical digits,
+    # so "/p/007" never passes for page 7) and require exact equality
+    if ok.any():
+        sub = idx[ok]
+        expect = np.char.add(prefixes[C.host_of_batch(sub, spec)], np.char.mod("%d", sub))
+        rt = np.zeros(len(idx), bool)
+        rt[ok] = urls[ok] == expect
+        ok = rt
+    pp, tt = C.out_links_batch(idx[ok], spec)
+    if len(tt) == 0:
+        # np.char.mod cannot infer a dtype from an empty int array
+        return empty
+    host_ids = C.host_of_batch(tt, spec)
+    return (
+        np.flatnonzero(ok)[pp],
+        np.char.add(prefixes[host_ids], np.char.mod("%d", tt)),
+        host_names[host_ids],
+    )

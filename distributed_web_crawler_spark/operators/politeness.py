@@ -17,8 +17,6 @@ splitting does not apply to windows, so the split must be in the key.
 
 from __future__ import annotations
 
-from typing import Tuple
-
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..oracle.crawler import PolitenessPolicy
@@ -171,11 +169,3 @@ def schedule(
     )
     return admitted, scheduled
 
-
-def admit(pending: DataFrame, policy: PolitenessPolicy | None) -> Tuple[DataFrame, DataFrame]:
-    """One-sub-round view of `schedule` (kept for tests/back-compat):
-    (admitted, deferred) where deferred is everything not yet admissible."""
-    if policy is None:
-        return pending, pending.limit(0)
-    admitted, scheduled = schedule(pending, policy)
-    return admitted, scheduled.drop("due")

@@ -3,8 +3,8 @@ analog). FIXTURES.md §4: hosts with h % 16 == 7 disallow prefix /p/3.
 
 Expressed as a pure Catalyst predicate so candidate filtering stays
 JVM-side. A real deployment replaces `blocked_expr` with a broadcast join
-against a `robots` table keyed by host with TTL'd `disallow_prefixes`
-(the table variant is provided too, used by the robots-table tests)."""
+against a `robots` table keyed by host with TTL'd `disallow_prefixes`;
+RobotsCache.to_table builds that table from the in-process cache."""
 
 from __future__ import annotations
 
@@ -20,17 +20,6 @@ def blocked_expr(url: Column) -> Column:
     drop it from both the survivors and the blocked count."""
     h = U.host_num(url)
     return F.coalesce((F.pmod(h, F.lit(16)) == 7) & U.path_of(url).startswith("/p/3"), F.lit(False))
-
-
-def robots_table(spark: SparkSession, n_hosts: int, policy: RobotsPolicy | None = None) -> DataFrame:
-    policy = policy or RobotsPolicy()
-    rows = [
-        (f"h{h:04d}.test", policy.disallow_prefixes(h), 0, 86400)
-        for h in range(n_hosts)
-    ]
-    return spark.createDataFrame(
-        rows, "host string, disallow_prefixes array<string>, fetched_at long, ttl_s long"
-    )
 
 
 class RobotsCache:
@@ -75,14 +64,3 @@ class RobotsCache:
             rows, "host string, disallow_prefixes array<string>, fetched_at long, ttl_s long"
         )
 
-
-def filter_blocked(candidates: DataFrame, robots: DataFrame) -> DataFrame:
-    """Table-driven variant: broadcast the robots table, drop candidates
-    whose path matches any disallow prefix of their host."""
-    joined = candidates.join(F.broadcast(robots.select("host", "disallow_prefixes")), "host", "left")
-    path = U.path_of(F.col("url"))
-    hit = F.exists(
-        F.coalesce(F.col("disallow_prefixes"), F.array()),
-        lambda p: path.startswith(p),
-    )
-    return joined.filter(~hit).drop("disallow_prefixes")

@@ -3,23 +3,28 @@
 This is the Spark-first re-expression of the reference master's drain loop
 (Server/Cluster/Master/master.go:270-299, 620-686): the per-depth task maps
 become a frontier table, the worker RPC fan-out becomes one vectorized
-fetch-join + extraction stage per sub-round, the mutex-guarded visited maps
-become a partitioned Bloom-filtered seen table probed inside the write, and the
-depth barrier becomes the natural action barrier between rounds. One atomic
-commit per sub-round (catalog/tables.py) is the resume anchor — strictly
-better than the reference's from-scratch job reassignment
-(lockServer.go:174-197; master.go:449), with identical final state because
-rounds are deterministic.
+Python pass per sub-round that fetches, verifies and extracts each page,
+the mutex-guarded visited maps become a partitioned Bloom-filtered seen
+table probed inside the write, and the depth barrier becomes the natural
+action barrier between rounds. One atomic commit per sub-round
+(catalog/tables.py) is the resume anchor — strictly better than the
+reference's from-scratch job reassignment (lockServer.go:174-197;
+master.go:449), with identical final state because rounds are
+deterministic.
 
 Scale shape per round (what survives 1000 executors × 100 TB):
 
 * fetch: `broadcast(admitted) ⋈ corpus` with the corpus scan pruned to the
   storage buckets the round touches — never a full corpus scan, and the
-  binary `bytes` column is only read by the optional payload-verify stage
-  (column pruning, SURVEY.md §7 risk (e)). The buckets are manifest
-  arithmetic: each frontier file-set's write returns the corpus_mask of
-  its rows, and the round ORs the masks of the entries it drains, so no
-  job runs to find them.
+  binary `bytes` column is never read: payloads are point-read from the
+  bucket shards (column pruning, SURVEY.md §7 risk (e)). The buckets are
+  manifest arithmetic: each frontier file-set's write returns the
+  corpus_mask of its rows, and the round ORs the masks of the entries it
+  drains, so no job runs to find them.
+* one Python pass per page (sources/fetch.py): one mapInPandas task
+  reads each payload, verifies it and expands its links. Its link rows
+  and per-batch verify partials (seen_bucket -1) flow into the fused
+  write, whose stats carry the partials' fold.
 * dedup: no stage of its own. The raw candidate stream goes straight to
   the bucketed write (ONE exchange, by seen-bucket); each write task dedups
   its group with numpy, probes the bucket's Bloom blob (no broadcast of
@@ -54,8 +59,9 @@ from ..catalog.tables import JobStateStore
 from ..fixtures import corpus as C
 from ..functions import bloom as B
 from ..functions import urls as U
-from ..operators.extract import extract_links
-from ..sources.fetch import fetch_and_verify
+from ..sources.fetch import (
+    PARTIALS, PARTIALS_SCHEMA, expand_admitted, fetch_and_verify, fold_partials,
+)
 from ..operators.politeness import schedule
 from ..operators.robots import blocked_expr
 from ..oracle.crawler import PolitenessPolicy, RobotsPolicy
@@ -69,8 +75,8 @@ METRICS_SCHEMA = (
     "n_probe_pos bigint, n_probe_fp bigint, n_recheck_rows bigint"
 )
 
-# driver-side pool for concurrent Spark actions within a round (independent
-# job DAGs: payload verify ∥ extract → fused write; the deferred-slice write)
+# thread pool for the politeness deferred-slice write, a job DAG that
+# overlaps the round's main-thread work
 _POOL = ThreadPoolExecutor(max_workers=4, thread_name_prefix="frontier-io")
 
 
@@ -79,8 +85,8 @@ def _pool_submit(spark: SparkSession, fn, *args, group: str | None = None):
     pool. spark.scheduler.mode=FAIR (session.py) only arbitrates BETWEEN
     pools; with no allocation file every job lands in the single default
     pool, whose internal mode is FIFO — i.e. FAIR-with-one-pool schedules
-    exactly like FIFO and the long verify job still starves the short write
-    job. Tagging each pool thread with its own spark.scheduler.pool local
+    exactly like FIFO and whichever of the round's two jobs comes first
+    starves the other. Tagging each pool thread with its own spark.scheduler.pool local
     property puts concurrent jobs in DISTINCT auto-created pools (weight 1,
     minShare 0), which the FAIR root genuinely round-robins. Local
     properties are per-Python-thread under PySpark's pinned-thread mode and
@@ -89,7 +95,7 @@ def _pool_submit(spark: SparkSession, fn, *args, group: str | None = None):
     `group` additionally tags the action's Spark jobs with a job-group id
     (_Round.group: kind, store, round) so a failing round can CANCEL them
     (sc.cancelJobGroup in _abandon) instead of blocking its cleanup path
-    behind a full verify run; the tag is cleared when unset so a reused
+    behind a full deferred write; the tag is cleared when unset so a reused
     worker thread never inherits a stale group."""
 
     def run():
@@ -145,8 +151,9 @@ class EngineConfig:
     politeness_grade: Optional[str] = None
     bloom: B.BloomParams = field(default_factory=B.BloomParams)
     # per-row PSNR/phash/caption invariants: each round verifies its
-    # admitted pages on _POOL alongside extract → write and commits the
-    # stats in its commit.json
+    # admitted pages in the same Python pass that extracts their links
+    # (at the last depth, in a pass of its own) and commits the stats in
+    # its commit.json
     verify_payloads: bool = False
     # accepted for perfbench; delete at the next benchmark change (Bloom
     # is the only seen path, so False raises; the other two are ignored)
@@ -230,7 +237,7 @@ class _Round:
     depth_limit: int
     phases: dict = field(default_factory=dict)
     t: float = field(default_factory=time.monotonic)
-    # frames cached for this round, released before the verify wait
+    # frames cached for this round, released once its jobs are done
     persisted: List[DataFrame] = field(default_factory=list)
     # cursor: the previous commit's manifest, the depth and sub-round drained
     manifest: List[list] = field(default_factory=list)
@@ -246,9 +253,10 @@ class _Round:
     corpus_buckets: List[int] = field(default_factory=list)
     deferred: Optional[DataFrame] = None
     n_deferred: int = 0
-    # in-flight _POOL jobs
-    verify: Optional[Future] = None
+    # the in-flight _POOL job, and the payload stats the page pass's
+    # partials folded to (None until a pass verified)
     deferred_write: Optional[Future] = None
+    payload: Optional[dict] = None
     n_candidates: int = 0
     n_new: int = 0
     n_blocked: int = 0
@@ -346,10 +354,14 @@ class FrontierEngine:
 
     def _with_keys(self, df: DataFrame) -> DataFrame:
         url = U.canonicalize(F.col("url"))
+        bucket = U.seen_bucket(F.col("url_hash"), self.cfg.seen_buckets)
+        if "seen_bucket" in df.columns:
+            # the page pass's verify-partials rows arrive with their bucket
+            bucket = F.coalesce(F.col("seen_bucket"), bucket)
         return (
             df.withColumn("url", url)
             .withColumn("url_hash", U.url_hash(F.col("url")))
-            .withColumn("seen_bucket", U.seen_bucket(F.col("url_hash"), self.cfg.seen_buckets))
+            .withColumn("seen_bucket", bucket)
         )
 
     def _seen_df(self, store: JobStateStore, buckets: Optional[List[int]] = None) -> Optional[DataFrame]:
@@ -474,7 +486,8 @@ class FrontierEngine:
         with probe=True) takes the raw candidates, drops the robots-blocked
         rows, dedups (U3), Bloom-probes and exact-checks them (U2/J1), and
         writes the rest as next frontier, seen delta and bucket blobs. Its
-        counts come back with the write's stats and are folded into `rnd`."""
+        counts, and the fold of the page pass's verify partials, come back
+        with the write's stats and are folded into `rnd`."""
         # upper bound on the write's input row count (raw candidates
         # <= admitted × max out-degree): over-estimating only shrinks
         # the chunked groups, never breaks the memory guard
@@ -488,6 +501,7 @@ class FrontierEngine:
         rnd.n_candidates, rnd.n_blocked = task["n_candidates"], task["n_blocked"]
         rnd.n_probe_pos, rnd.n_probe_fp = task["n_probe_pos"], task["n_probe_fp"]
         rnd.n_recheck_rows = task["n_recheck_rows"]
+        rnd.payload = task["payload"]
         # worker-side breakdown of THIS write job (summed across its
         # tasks): lets the bench attribute extract_write_ms to the
         # probe / Arrow conversion / parquet encode / bloom fold vs
@@ -537,7 +551,9 @@ class FrontierEngine:
         it). A group whose rows were all seen or blocked writes no part
         and no blob, and its bucket is left out of the returned stats — a
         commit must never point a bucket's bloom manifest at a round
-        without its blob.
+        without its blob. The page pass's verify-partials rows (seen_bucket
+        -1) form a group that only sums them onto its stats row; those
+        rows are folded into `task["payload"]`.
 
         With `slice_col` (the politeness schedule's `due` sub-round), rows
         are grouped by (slice, seen_bucket) and land under
@@ -570,7 +586,8 @@ class FrontierEngine:
         summed worker-side numbers of THIS write job — phase timers
         (conv/pq/probe/bloom_ms), its group count (n_tasks) and, with
         `probe`, the seen-chain counters (n_blocked, n_candidates,
-        n_probe_pos, n_probe_fp, n_recheck_rows). They are returned rather
+        n_probe_pos, n_probe_fp, n_recheck_rows) and the verify `payload`
+        (fetch.fold_partials). They are returned rather
         than stashed on the engine because the deferred-slice write runs
         concurrently in a pool thread alongside the main write."""
         update_blooms = bloom_round is not None
@@ -637,6 +654,11 @@ class FrontierEngine:
             else:
                 sl, bucket = -1, int(key[0])
                 part_dir = os.path.join(out_dir, f"seen_bucket={bucket}")
+            if bucket < 0:  # the page pass's verify partials
+                return pd.DataFrame(
+                    {"slice": [sl], "bucket": [bucket], "n_rows": [0], "corpus_mask": [0]}
+                    | {k: [0] for k in summed} | {k: [v] for k, v in fold_partials(pdf).items()}
+                )
             filt = None
             n_blk = n_cand = n_pos = n_fp = n_re = 0
             if probe:
@@ -703,30 +725,33 @@ class FrontierEngine:
             # transfer cost is the gap between the job's wall and
             # max-per-slot sums of these.
             return pd.DataFrame({
-                "slice": [sl], "bucket": [bucket], "n": [n], "corpus_mask": [mask],
+                "slice": [sl], "bucket": [bucket], "n_rows": [n], "corpus_mask": [mask],
                 "probe_ms": [int((t_probe - t_entry) * 1000)],
                 "conv_ms": [int((t_conv - t_probe) * 1000)],
                 "pq_ms": [int((t_pq - t_conv) * 1000)],
                 "bloom_ms": [int((t_bloom - t_pq) * 1000)],
                 "n_blocked": [n_blk], "n_candidates": [n_cand], "n_probe_pos": [n_pos],
                 "n_probe_fp": [n_fp], "n_recheck_rows": [n_re],
-            })
+            } | {k: [None] for k in PARTIALS})
 
         summed = ("probe_ms", "conv_ms", "pq_ms", "bloom_ms", "n_blocked", "n_candidates",
                   "n_probe_pos", "n_probe_fp", "n_recheck_rows")
-        stats = rows.groupBy(*keys).applyInPandas(
+        rows = rows.groupBy(*keys).applyInPandas(
             build,
-            schema="slice int, bucket int, n long, corpus_mask long, "
-            + ", ".join(f"{k} long" for k in summed),
+            schema="slice int, bucket int, n_rows long, corpus_mask long, "
+            + ", ".join(f"{k} long" for k in summed) + ", " + PARTIALS_SCHEMA,
         ).collect()
+        stats = [row for row in rows if row["bucket"] >= 0]
         task = {k: sum(row[k] for row in stats) for k in summed}
         task["n_tasks"] = len(stats)
+        parts = [row for row in rows if row["bucket"] < 0]
+        task["payload"] = fold_partials({k: [row[k] for row in parts] for k in PARTIALS})
         # groups that wrote nothing (all rows already seen) are not stats:
         # callers take touched Bloom buckets from these tuples
-        stats = [row for row in stats if row["n"] > 0]
+        stats = [row for row in stats if row["n_rows"] > 0]
         if slice_col:
-            return [(row["slice"], row["bucket"], row["n"], row["corpus_mask"]) for row in stats], task
-        return [(row["bucket"], row["n"], row["corpus_mask"]) for row in stats], task
+            return [(row["slice"], row["bucket"], row["n_rows"], row["corpus_mask"]) for row in stats], task
+        return [(row["bucket"], row["n_rows"], row["corpus_mask"]) for row in stats], task
 
     def _compact_manifest(
         self, store: JobStateStore, r: int, manifest: List[list], phases: dict
@@ -808,20 +833,12 @@ class FrontierEngine:
         ]
 
     def _verify_stats(self, admitted_keyed: DataFrame, n_admitted: int, buckets: List[int]) -> dict:
-        return (
-            fetch_and_verify(
-                self.spark, self.corpus_path, admitted_keyed, buckets, self.spec, n_admitted
-            )
-            .agg(
-                F.count("*").alias("n"),
-                F.sum(F.col("pixels_ok").cast("int")).alias("n_pixels_ok"),
-                F.sum(F.col("phash_ok").cast("int")).alias("n_phash_ok"),
-                F.sum(F.col("caption_ok").cast("int")).alias("n_caption_ok"),
-                F.min("psnr").alias("min_psnr"),
-            )
-            .collect()[0]
-            .asDict()
-        )
+        """The last depth's payload verify: the page pass without link
+        expansion, its partials rows collected and folded."""
+        rows = fetch_and_verify(
+            self.spark, self.corpus_path, admitted_keyed, buckets, self.spec, n_admitted, False
+        ).collect()
+        return fold_partials({k: [row[k] for row in rows] for k in PARTIALS})
 
     # ------------------------------------------------------------ compaction
     def compact_seen(self, job_id: str) -> dict:
@@ -1075,21 +1092,24 @@ class FrontierEngine:
 
     def _run_round(self, store: JobStateStore, r: int, depth_limit: int) -> RoundStats:
         """One BFS round as a list of named phases. The payload verify runs
-        on _POOL alongside extract → write and is awaited before the commit,
-        so a committed round always carries its own verify stats."""
+        in the same Python pass as the extraction (at the last depth, on
+        its own) before the commit, so a committed round always carries
+        its own verify stats. extract_write_ms times everything between
+        admission and the commit: that pass with the fused write, or the
+        last depth's verify, and the wait for the deferred-slice write."""
         rnd = _Round(store, r, depth_limit)
         try:
             self._cursor(rnd)
             self._admit(rnd)
             rnd.mark("admit_ms")
-            self._submit_verify(rnd)
-            rnd.mark("fetch_submit_ms")
+            self._submit_deferred(rnd)
             new_rows = self._extract(rnd)
-            sched_entries = self._writes(rnd, new_rows)
+            if new_rows is not None:
+                self._filter_new(rnd, new_rows)
+            payload = self._finalize_verify(rnd)
+            sched_entries = self._deferred_entries(rnd)
             rnd.release()
             rnd.mark("extract_write_ms")
-            payload = self._finalize_verify(rnd)
-            rnd.mark("fetch_verify_wait_ms")
             manifest = self._next_manifest(rnd, sched_entries)
             n_pending_after = self._commit(rnd, manifest, payload)
         except BaseException:
@@ -1164,9 +1184,7 @@ class FrontierEngine:
             # persisted `ranked` ancestor: the host-window shuffle runs
             # ONCE, shared by the admitted count and the deferred write.
             # `admitted` is cached too, and the count fills the cache
-            # before the verify and the extract read it. A plain frontier
-            # read is not cached: both readers would race to fill it, and
-            # the loser's job count varied from run to run
+            # before the page pass reads it
             admitted, rnd.deferred = schedule(
                 admitted, self.cfg.politeness, rnd.persisted, grade=self._grade_col()
             )
@@ -1175,38 +1193,33 @@ class FrontierEngine:
         else:
             rnd.n_admitted = n_pending
         rnd.n_deferred = n_pending - rnd.n_admitted
-        # fetch key of the verify's bucket-pruned corpus scan ⋈
-        # broadcast(admitted); the extraction reads the url
+        # key of the page pass's exchange and of its bucket-pruned corpus
+        # scan ⋈ broadcast(admitted); the extraction reads the url
         rnd.admitted = admitted.withColumn("image_id", U.image_id_of(F.col("url")))
-
-    def _submit_verify(self, rnd: _Round) -> None:
-        """Start the payload fetch+decode+verify on _POOL, CONCURRENTLY
-        with extraction and the writes — they share only the admitted
-        frame (Spark actions are thread-safe; two independent job DAGs).
-        The corpus buckets come from the manifest, so building the fetch
-        join submits no job of its own."""
-        if self.cfg.verify_payloads and rnd.n_admitted > 0:
-            rnd.phases["verify_tasks"] = sized_tasks(self.spark, rnd.n_admitted)
-            rnd.verify = _pool_submit(
-                self.spark, self._verify_stats, rnd.admitted, rnd.n_admitted, rnd.corpus_buckets,
-                group=rnd.group("verify"),
-            )
 
     def _extract(self, rnd: _Round) -> Optional[DataFrame]:
         """The next depth's keyed candidate rows (lazy), or None at the
-        last depth (F4) or when nothing was admitted. They keep duplicates,
-        seen URLs and (under robots, flagged `_blocked`) blocked URLs — the
-        fused write counts and drops the blocked rows, then dedups and
-        probes the rest."""
+        last depth (F4) or when nothing was admitted: the page pass
+        (sources/fetch.py), verifying each payload under verify_payloads.
+        The rows keep duplicates, seen URLs and (under robots, flagged
+        `_blocked`) blocked URLs — the fused write counts and drops the
+        blocked rows, then dedups and probes the rest — plus the pass's
+        verify-partials rows (seen_bucket -1)."""
         if rnd.d + 1 >= rnd.depth_limit or rnd.n_admitted == 0:
             return None
-        # extraction parallelism must not be bound to the frontier's file
+        # the pass's parallelism must not be bound to the frontier's file
         # count — size it by the admitted rows (CPU-bound Python stage: a
         # small round runs as 1 task, a bulk round at the 2× cores cap)
-        rnd.phases["extract_tasks"] = sized_tasks(self.spark, rnd.n_admitted)
-        extract_input = rnd.admitted.repartition(rnd.phases["extract_tasks"])
-        keyed = self._with_keys(extract_links(extract_input, self.spec).select("url", "host"))
-        cols = ["url", "host", "url_hash", "seen_bucket", "depth"]
+        rnd.phases["page_tasks"] = sized_tasks(self.spark, rnd.n_admitted)
+        if self.cfg.verify_payloads:
+            pages = fetch_and_verify(
+                self.spark, self.corpus_path, rnd.admitted, rnd.corpus_buckets, self.spec,
+                rnd.n_admitted,
+            )
+        else:
+            pages = expand_admitted(rnd.admitted, self.spec, rnd.n_admitted)
+        keyed = self._with_keys(pages)
+        cols = ["url", "host", "url_hash", "seen_bucket", "depth", *PARTIALS]
         if self.cfg.robots is not None:
             # blocked URLs never enter the seen set, so the filter commutes
             # with dedup and probe: the fused write counts and drops them
@@ -1214,16 +1227,12 @@ class FrontierEngine:
             cols.append("_blocked")
         return keyed.withColumn("depth", F.lit(rnd.d + 1)).select(*cols)
 
-    def _writes(self, rnd: _Round, new_rows: Optional[DataFrame]) -> List[list]:
-        """Stage the round's writes into its dir (visible only after
-        commit): ONE fused shuffle+write job for the new URLs
-        (_filter_new), so the new-URL path has one exchange; parquet +
-        seen delta + bloom blobs come from the same pass, counts from its
-        stats (no read-back). A second job, on _POOL, ONLY at sub-round 0 when politeness
-        scheduled future slices (written once, partitioned by due
-        sub-round), and NO next-frontier rewrite: untouched depths AND
-        not-yet-due slices carry over in the manifest by reference.
-        Returns the deferred slices' manifest entries."""
+    def _submit_deferred(self, rnd: _Round) -> None:
+        """Start the deferred-slice write on _POOL: at sub-round 0 under
+        politeness, the future sub-rounds' slices, written once,
+        partitioned by due sub-round. There is NO next-frontier rewrite:
+        untouched depths AND not-yet-due slices carry over in the manifest
+        by reference."""
         store, r = rnd.store, rnd.r
         if rnd.n_deferred > 0:
             rnd.deferred_write = _pool_submit(
@@ -1232,8 +1241,10 @@ class FrontierEngine:
                 rnd.n_deferred,
                 group=rnd.group("defwrite"),
             )
-        if new_rows is not None:
-            self._filter_new(rnd, new_rows)
+
+    def _deferred_entries(self, rnd: _Round) -> List[list]:
+        """Wait for the deferred-slice write; returns its manifest entries."""
+        store, r = rnd.store, rnd.r
         if rnd.deferred_write is None:
             return []
         def_stats, _ = rnd.deferred_write.result()
@@ -1253,12 +1264,15 @@ class FrontierEngine:
         ]
 
     def _finalize_verify(self, rnd: _Round) -> Optional[dict]:
-        """Wait for this round's payload verify and return its stats for
-        commit.json (None when the round verified nothing)."""
-        if rnd.verify is None:
+        """This round's payload stats for commit.json (None when the round
+        verified nothing): the fused write's fold, or at the last depth
+        the verify run here."""
+        if not self.cfg.verify_payloads or rnd.n_admitted == 0:
             return None
-        stats = rnd.verify.result()
-        return {k: (float(v) if v is not None else None) for k, v in stats.items()}
+        if rnd.payload is None:
+            rnd.phases["page_tasks"] = sized_tasks(self.spark, rnd.n_admitted)
+            rnd.payload = self._verify_stats(rnd.admitted, rnd.n_admitted, rnd.corpus_buckets)
+        return {k: (float(v) if v is not None else None) for k, v in rnd.payload.items()}
 
     def _next_manifest(self, rnd: _Round, sched_entries: List[list]) -> List[list]:
         """The pending frontier after this round: the manifest minus the
@@ -1293,22 +1307,19 @@ class FrontierEngine:
 
     def _abandon(self, rnd: _Round) -> None:
         """A mid-round failure must not leak the round's in-flight pool
-        jobs or cached frames: CANCEL their Spark jobs first — the verify
-        is the round's longest job and an interrupt (Ctrl-C, timeout) must
-        not block its own cleanup behind a full verify run — then drain
-        them and release the caches; the futures' own outcomes are moot
-        once the round failed."""
-        for g in ("verify", "defwrite"):
+        job or cached frames: CANCEL its Spark jobs first — an interrupt
+        (Ctrl-C, timeout) must not block its own cleanup behind a full
+        deferred write — then drain it and release the caches; the
+        future's own outcome is moot once the round failed."""
+        if rnd.deferred_write is not None:
             try:
-                self.spark.sparkContext.cancelJobGroup(rnd.group(g))
+                self.spark.sparkContext.cancelJobGroup(rnd.group("defwrite"))
             except Exception:  # pragma: no cover - cancellation is best-effort
                 pass
-        for fut in (rnd.verify, rnd.deferred_write):
-            if fut is not None:
-                try:
-                    fut.result()
-                except Exception:
-                    pass
+            try:
+                rnd.deferred_write.result()
+            except Exception:
+                pass
         for df_ in rnd.persisted:
             try:
                 df_.unpersist()

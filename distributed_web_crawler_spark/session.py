@@ -58,12 +58,12 @@ def get_spark(
         # 2048 keeps numpy fully vectorized with ~5% of the working set.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         # FAIR job scheduling: the engine deliberately runs independent job
-        # DAGs concurrently (a round's payload verify ∥ its extract →
-        # fused write ∥ its deferred-slice write — plans/frontier._POOL).
-        # Under the default FIFO scheduler the long verify job's stages
-        # hold every task slot and the short write job queues behind them
-        # (measured: writes_ms 10.6 s at local[32] vs 2.0 s at local[8] in
-        # scaling attempt 16).
+        # DAGs concurrently (a politeness round's deferred-slice write ∥
+        # its fetch → verify → extract → fused write — plans/frontier
+        # _POOL). Under the default FIFO scheduler the first job's stages
+        # hold every task slot and the other queues behind them
+        # (measured, when the verify was a pool job of its own: writes_ms
+        # 10.6 s at local[32] vs 2.0 s at local[8] in scaling attempt 16).
         # NOTE this flag alone is NOT enough: FAIR arbitrates BETWEEN
         # pools, and with no allocation file every job lands in the one
         # default pool whose internal mode is FIFO — so each concurrent

@@ -1,4 +1,4 @@
-"""Corpus table builder/reader (the engine's S4 "web" — SURVEY.md §2.1).
+"""Corpus table generation (the engine's S4 "web" — SURVEY.md §2.1).
 
 Storage layout (the 100 TB-honest design):
 
@@ -26,9 +26,8 @@ emits the metadata rows with offsets. At 10^10 pages a bucket becomes
 from __future__ import annotations
 
 import os
-from typing import Iterable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F
 
 from ..fixtures import corpus as C
 
@@ -83,11 +82,3 @@ def build_corpus(spark: SparkSession, spec: C.CorpusSpec, path: str, slices: int
         f.write(stamp)
     return path
 
-
-def read_corpus(spark: SparkSession, path: str, buckets: Iterable[int] | None = None) -> DataFrame:
-    """Read corpus metadata+bytes, pruned to the given storage buckets when
-    known (`.explain` shows them as PartitionFilters)."""
-    df = spark.read.schema(CORPUS_SCHEMA).parquet(path)
-    if buckets is not None:
-        df = df.filter(F.col("bucket").isin(list(buckets)))
-    return df

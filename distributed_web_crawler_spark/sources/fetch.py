@@ -11,8 +11,11 @@ submits no Spark job, and the explicit schema skips footer inference.
 Rows are exchanged by image_id hash (_exchange says why not by bucket),
 and each batch is read in offset order per shard, seeking forward — the
 access pattern of ranged GETs against tar/WebDataset shards on object
-storage. A fetched row's bytes are decoded in the same stage (no second
-pass over binary data).
+storage.
+
+A crawl round makes ONE Python pass over its pages: the same pandas task
+reads each payload, verifies it and expands the page's links, as the
+reference's worker fetches a page and returns its links in one task.
 """
 
 from __future__ import annotations
@@ -29,17 +32,20 @@ from .corpus_source import CORPUS_SCHEMA, blob_path
 SLIM_COLS = ["image_id", "fmt", "caption", "phash", "bucket", "blob_offset", "blob_len"]
 SLIM_SCHEMA = ", ".join(f for f in CORPUS_SCHEMA.split(", ") if f.split()[0] in SLIM_COLS)
 
-VERIFY_SCHEMA = (
-    "url string, psnr double, phash_ok boolean, caption_ok boolean, pixels_ok boolean"
-)
+# a verify-partials row: pages verified, how many pass each invariant, and
+# the least PSNR among them. A verified page is a partials row of one, and
+# a round's payload stats (commit.json "payload") are the fold of its rows.
+PARTIALS_SCHEMA = "n long, n_pixels_ok long, n_phash_ok long, n_caption_ok long, min_psnr double"
+PARTIALS = [c.split()[0] for c in PARTIALS_SCHEMA.split(", ")]
+# the page pass's rows: a link (url, host), or one batch's verify partials
+# with seen_bucket -1
+PAGES_SCHEMA = "url string, host string, seen_bucket int, " + PARTIALS_SCHEMA
 FEATURES_SCHEMA = "url string, phash_dec bigint, luma double"
 
 
-_CHUNK = 32 * 1024 * 1024  # shard sub-range per exchange key
-
-
 def _exchange(df: DataFrame, n_rows: int) -> DataFrame:
-    """Exchange for the point-read+decode stage, keyed by image_id hash.
+    """Exchange for the page pass (point-read, decode, verify, link
+    expansion), keyed by image_id hash.
 
     Keying by storage location — (bucket, offset-chunk) — looks natural but
     is a CPU-skew trap: the corpus buckets by `i % 64`, which also fixes the
@@ -102,36 +108,79 @@ def _read_ranges(pdf, corpus_path):
     return out
 
 
-def fetch_and_verify(
-    spark, corpus_path: str, admitted: DataFrame, buckets: List[int], spec: C.CorpusSpec,
-    n_rows: int,
-) -> DataFrame:
-    """Fetch + full per-row invariants vs the generator (input_hint):
-    decoded pixels exact for PNG / PSNR≥40 dB for JPEG, phash equality,
-    caption equality. `buckets` prunes the corpus scan (fetch_join);
-    `n_rows`, the admitted row count the caller already holds, sizes the
-    verify stage's task count."""
-    fetched = fetch_join(spark, corpus_path, admitted, buckets)
+def fold_partials(cols) -> dict:
+    """Fold verify-partials rows, given as {PARTIALS column: values} (a
+    pandas frame will do), into one: the counts add up, min_psnr is the
+    least. Over no rows n is 0 and the rest None, as Spark's count, sum
+    and min give."""
+    import numpy as np
 
-    def verify(batches):
+    if not len(cols["n"]):
+        return {k: 0 if k == "n" else None for k in PARTIALS}
+    out = {k: int(np.sum(cols[k])) for k in PARTIALS[:-1]}
+    out["min_psnr"] = float(np.min(cols["min_psnr"]))
+    return out
+
+
+def _page_pass(
+    pages: DataFrame, n_rows: int, spec: C.CorpusSpec, corpus_path: str | None, links: bool
+) -> DataFrame:
+    """The one pandas stage over a round's pages, behind one row-sized
+    image_id exchange. With `corpus_path` each batch's payloads are
+    point-read and verified (functions.images.verify_batch) into one
+    partials row; with `links` each page's links are expanded from its
+    `url` (operators.extract.expand_links)."""
+    cols = [c.split()[0] for c in PAGES_SCHEMA.split(", ")]
+
+    def expand(batches):
+        import numpy as np
         import pandas as pd
 
         from ..functions.images import verify_batch
+        from ..operators.extract import expand_links
 
         for pdf in batches:
-            payloads = _read_ranges(pdf, corpus_path)
-            yield pd.DataFrame(
-                verify_batch(
+            if corpus_path is not None and len(pdf):
+                v = verify_batch(
                     pdf["url"].to_numpy(),
-                    payloads,
+                    _read_ranges(pdf, corpus_path),
                     pdf["fmt"].to_numpy(),
                     pdf["caption"].to_numpy(),
                     pdf["phash"].to_numpy(),
                     spec,
                 )
-            )
+                part = fold_partials({
+                    "n": np.ones(len(pdf)), "n_pixels_ok": v["pixels_ok"],
+                    "n_phash_ok": v["phash_ok"], "n_caption_ok": v["caption_ok"],
+                    "min_psnr": v["psnr"],
+                })
+                yield pd.DataFrame([[None, None, -1, *part.values()]], columns=cols)
+            if links:
+                _, urls, hosts = expand_links(pdf["url"].to_numpy(str), spec)
+                if len(urls):
+                    yield pd.DataFrame({"url": urls, "host": hosts}).reindex(columns=cols)
 
-    return _exchange(fetched, n_rows).mapInPandas(verify, schema=VERIFY_SCHEMA)
+    return _exchange(pages, n_rows).mapInPandas(expand, schema=PAGES_SCHEMA)
+
+
+def fetch_and_verify(
+    spark, corpus_path: str, admitted: DataFrame, buckets: List[int], spec: C.CorpusSpec,
+    n_rows: int, links: bool = True,
+) -> DataFrame:
+    """Fetch + full per-row invariants vs the generator (input_hint):
+    decoded pixels exact for PNG / PSNR≥40 dB for JPEG, phash equality,
+    caption equality — and, with `links`, each page's links, in the same
+    pass. Returns PAGES_SCHEMA rows. `buckets` prunes the corpus scan
+    (fetch_join); `n_rows`, the admitted row count the caller already
+    holds, sizes the stage's task count."""
+    fetched = fetch_join(spark, corpus_path, admitted, buckets)
+    return _page_pass(fetched, n_rows, spec, corpus_path, links)
+
+
+def expand_admitted(admitted: DataFrame, spec: C.CorpusSpec, n_rows: int) -> DataFrame:
+    """The same pass without payload verify: the admitted rows' links,
+    with no corpus join."""
+    return _page_pass(admitted.select("image_id", "url"), n_rows, spec, None, True)
 
 
 def fetch_and_decode(

@@ -86,11 +86,11 @@ def main():
         a, b = p8.get(k, 0) / 1000, p32.get(k, 0) / 1000
         speedup = a / b if b else float("inf")
         phase_rows.append(f"| {k} | {a:.1f} | {b:.1f} | {speedup:.2f}× | {speedup/4:.2f} |")
-    # each round's decode+verify runs alongside its own extract → write, so
-    # fetch_verify_wait_ms is the verify time that job did not hide.
-    # The extract→dedup→probe→write pipeline executes as ONE Spark job with
-    # one exchange, timed as extract_write_ms — the representative compute
-    # phase; its worker-side cost rides in write_probe/conv/pq/bloom_ms.
+    # each round's fetch → decode+verify → extract runs as one Python pass
+    # feeding the dedup→probe→write task: ONE Spark job with one exchange
+    # into the write, timed as extract_write_ms (at the last depth, the
+    # verify alone) — the representative compute phase; the write's
+    # worker-side cost rides in write_probe/conv/pq/bloom_ms.
     extract_speedup = (p8.get("extract_write_ms", 0) or 1) / (p32.get("extract_write_ms", 1) or 1)
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     md = f"""# BENCH/BASELINE.md — scaling evidence ({date.today().isoformat()})
@@ -149,13 +149,12 @@ within-round dedup, the Bloom probe and the exact re-check of its
 positives all run inside the bucketed write task, so no per-round
 anti-join, probe stage or separate seen scan remains) speeds up
 {extract_speedup:.2f}× with 4× cores, and payload decode+verify (the heaviest real work at the 10^10
-target) runs concurrently with its own round's extract → write and is
-awaited before the commit, so its phase row shows only the wait that job
-did not hide. What does not
+target) runs in the same Python pass as the extraction, inside that job,
+so its time is part of `extract_write_ms`. What does not
 scale in this sandbox is what a single box shares: the Arrow-batched
 decode/verify kernel is memory-bandwidth-bound across 32 sibling
-processes on one socket, so as the fused job shrinks with cores the
-residual verify wait becomes the exposed non-scaling phase. On a real
+processes on one socket, so it becomes the job's exposed non-scaling
+part. On a real
 N→4N executor cluster those phases get 4× disks, NICs, and JVMs: every
 stage is partitioned by data keys (corpus bucket + offset chunk, seen
 bucket, host), there are no driver-side per-row loops, and per-round driver

@@ -328,12 +328,57 @@ def test_new_url_path_has_one_exchange(spark, corpus_1k, tmp_path, monkeypatch, 
     spec, _ = corpus_1k
     eng = engine_for(spark, tmp_path, corpus_1k, EngineConfig(robots=robots))
     eng.run_job("ex", C.url_of(pick_seed(spec), spec), 2)
-    # the extraction stage is operators/extract.py's mapInPandas `expand`
+    # the extraction stage is the page pass's mapInPandas `expand`
+    # (sources/fetch.py)
     writes = [p for p in plans if "MapInPandas expand(" in p]
     assert len(writes) == 1, plans  # round 1's new-URL write
     above_extract = writes[0].split("MapInPandas expand(")[0]
     assert above_extract.count("Exchange") == 1, writes[0]
     assert "InMemory" not in above_extract, writes[0]
+
+
+def test_verifying_round_runs_one_python_pass(spark, corpus_1k, tmp_path, monkeypatch):
+    """A verifying extracting round reads, verifies and extracts its pages
+    in ONE mapInPandas (the page pass `expand`) inside its fused write, and
+    the write's stats carry the verify partials: the commit's payload
+    covers every admitted page, and the partials touch no seen bucket."""
+    from pyspark.sql.group import GroupedData
+
+    DataFrame = type(spark.range(1))  # the concrete class, not the API base
+    stages, writes = [], []
+    orig_map, orig_apply = DataFrame.mapInPandas, GroupedData.applyInPandas
+
+    def spy_map(self, func, *a, **k):
+        stages.append(func.__name__)
+        return orig_map(self, func, *a, **k)
+
+    def spy_apply(self, *a, **k):
+        df = orig_apply(self, *a, **k)
+        writes.append(df._jdf.queryExecution().executedPlan().toString())
+        return df
+
+    monkeypatch.setattr(DataFrame, "mapInPandas", spy_map)
+    monkeypatch.setattr(GroupedData, "applyInPandas", spy_apply)
+    spec, _ = corpus_1k
+    seed_i = pick_seed(spec)
+    rounds = []
+    eng = engine_for(spark, tmp_path, corpus_1k, EngineConfig(verify_payloads=True))
+    eng.run_job("one", C.url_of(seed_i, spec), 2, max_rounds=1, on_round=rounds.append)
+    assert stages == ["expand"], stages
+    (write,) = [p for p in writes if "MapInPandas" in p]
+    assert write.count("MapInPandas") == 1, write
+    store = eng.store("one")
+    c = store.read_commit(1)
+    assert c["n_admitted"] == 1
+    assert c["payload"] == {
+        "n": 1.0, "n_pixels_ok": 1.0, "n_phash_ok": 1.0, "n_caption_ok": 1.0,
+        "min_psnr": c["payload"]["min_psnr"],
+    }
+    assert c["payload"]["min_psnr"] >= 40.0
+    assert c["phases"]["page_tasks"] == 1
+    assert rounds[0].n_candidates == len(C.out_links(seed_i, spec)) == c["n_new"]
+    assert all(int(b) >= 0 for b in c["bloom_manifest"])
+    assert not os.path.exists(os.path.join(store.new_path(1), "seen_bucket=-1"))
 
 
 def _check_verify_stats(eng, job_id):

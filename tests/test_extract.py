@@ -1,12 +1,19 @@
-"""extract_links vectorized path vs the scalar link rule — the batched
-numpy rewrite must preserve every guard the per-page loop had (F1 quirks,
-round-trip host validation, non-corpus shapes) and the per-parent
-extraction order."""
+"""expand_links, the batched link extraction the crawl round's page pass
+runs, vs the scalar link rule — the numpy rewrite must preserve every
+guard the per-page loop had (F1 quirks, round-trip host validation,
+non-corpus shapes) and the per-parent extraction order."""
 
-import pandas as pd
+import numpy as np
 
 from distributed_web_crawler_spark.fixtures import corpus as C
-from distributed_web_crawler_spark.operators.extract import extract_links
+from distributed_web_crawler_spark.operators.extract import expand_links
+
+
+def _links(urls, spec):
+    """(parent url, link url, link host) per extracted link, in order."""
+    urls = np.array(urls, dtype=str)
+    parents, targets, hosts = expand_links(urls, spec)
+    return list(zip(urls[parents], targets, hosts))
 
 
 def _scalar_expected(urls, spec):
@@ -23,7 +30,7 @@ def _scalar_expected(urls, spec):
     return sorted(exp)
 
 
-def test_extract_guards_and_parity(spark):
+def test_extract_guards_and_parity():
     spec = C.CorpusSpec(n=3000)
     urls = [C.url_of(i, spec) for i in range(0, 3000, 3)] + [
         "http://evil.test/p/5",  # foreign host ending in /p/<i>
@@ -33,29 +40,26 @@ def test_extract_guards_and_parity(spark):
         "not a url",
         "http://h0001.test/p/x",  # non-numeric suffix
     ]
-    df = spark.createDataFrame([(u,) for u in urls], ["url"])
-    got = sorted(
-        (r["parent_url"], r["url"], r["host"])
-        for r in extract_links(df, spec).collect()
-    )
+    got = sorted(_links(urls, spec))
     exp = _scalar_expected(urls, spec)
     assert got == exp
     assert len(got) > 2000
 
 
-def test_extract_order_within_parent(spark):
-    """Within one Arrow batch the links of a parent appear in extraction
-    order (row-major emission from the batched rule)."""
+def test_extract_order_within_parent():
+    """Within one batch the links of a parent appear in extraction order
+    (row-major emission from the batched rule)."""
     spec = C.CorpusSpec(n=3000)
-    # single-partition frame => single batch => order observable
-    df = spark.createDataFrame(
-        [(C.url_of(i, spec),) for i in range(300)], ["url"]
-    ).coalesce(1)
-    rows = extract_links(df, spec).collect()
     per_parent = {}
-    for r in rows:
-        per_parent.setdefault(r["parent_url"], []).append(r["url"])
+    for parent, url, _host in _links([C.url_of(i, spec) for i in range(300)], spec):
+        per_parent.setdefault(parent, []).append(url)
     for i in range(300):
         purl = C.url_of(i, spec)
         exp = [C.url_of(t, spec) for t in C.out_links(i, spec)]
         assert per_parent.get(purl, []) == exp
+
+
+def test_extract_empty_batches():
+    spec = C.CorpusSpec(n=3000)
+    assert _links([], spec) == []
+    assert _links(["http://h0000.test/nope", "not a url"], spec) == []

@@ -121,7 +121,7 @@ def test_with_lang_guess_matches_expression_form(spark):
 # ------------------------------------------------- verify schedule (engine)
 
 def test_one_verify_per_admitting_round(spark, tmp_path):
-    """Each admitting round submits exactly one payload verify, under its
+    """Each admitting round runs exactly one payload verify, under its
     own round number, including the final depth's round (which does no
     extraction), and every admitting round commits its stats."""
     import distributed_web_crawler_spark.plans.frontier as FR
@@ -134,25 +134,27 @@ def test_one_verify_per_admitting_round(spark, tmp_path):
         spark, str(tmp_path / "wh"), corpus, spec,
         FR.EngineConfig(verify_payloads=True),
     )
-    submits = []
-    orig = FR._pool_submit
+    rounds, verifies = [], []
+    orig_round, orig_verify = FR.FrontierEngine._run_round, FR.fetch_and_verify
 
-    def spy(spark_, fn, *a, **kw):
-        g = kw.get("group")
-        if g and "verify" in g:
-            submits.append(g)
-        return orig(spark_, fn, *a, **kw)
+    def round_spy(self, store, r, depth_limit):
+        rounds.append(r)
+        return orig_round(self, store, r, depth_limit)
 
-    FR._pool_submit = spy
+    def verify_spy(*a, **kw):
+        verifies.append(rounds[-1])
+        return orig_verify(*a, **kw)
+
+    FR.FrontierEngine._run_round, FR.fetch_and_verify = round_spy, verify_spy
     try:
         seed = url_of(next(i for i in range(spec.n) if len(out_links(i, spec)) >= 2), spec)
         res = eng.run_job("j9", [seed], 2)
     finally:
-        FR._pool_submit = orig
+        FR.FrontierEngine._run_round, FR.fetch_and_verify = orig_round, orig_verify
     assert res["done"]
     store = eng.store("j9")
     admitting = [r for r in store.committed_rounds() if store.read_commit(r).get("n_admitted", 0) > 0]
     assert len(admitting) == 2  # depth 0, then the final depth
-    assert sorted(submits) == sorted(f"verify:{store.dir}:r{r}" for r in admitting), submits
+    assert verifies == admitting, verifies
     assert eng.unverified_rounds("j9") == []
     assert sorted(eng.payload_stats("j9")) == admitting

@@ -1,8 +1,8 @@
-"""Row-sized Python stages: the exchanges in front of a round's payload
-verify and link extraction, and the seen compaction's write, take their
-task count from a row count the engine already holds
+"""Row-sized Python stages: the exchange in front of a round's page pass
+(payload verify and link extraction), and the seen compaction's write,
+take their task count from a row count the engine already holds
 (session.sized_tasks) — one task per 256 rows, 2× cores for a bulk round —
-and each round's commit records the counts it ran with."""
+and each round's commit records the count it ran with."""
 
 import os
 import re
@@ -63,21 +63,20 @@ def _round_one(spark, tmp_path, corpus, seeds, monkeypatch):
     eng.run_job("rs", seeds, 2, max_rounds=1)
     c = eng.store("rs").read_commit(1)
     assert c["payload"]["n"] == c["n_admitted"] == len(seeds)
-    verify, extract = plans["verify"], plans["expand"]
-    assert len(verify) == len(extract) == 1, plans
-    return c["phases"], _input_partitions(verify[0]), _input_partitions(extract[0])
+    (pages,) = plans["expand"]
+    return c["phases"], _input_partitions(pages)
 
 
 def test_one_seed_round_runs_few_tasks(spark, corpus_1k, tmp_path, monkeypatch):
     spec, _ = corpus_1k
-    phases, verify_n, extract_n = _round_one(
+    phases, pages_n = _round_one(
         spark, tmp_path, corpus_1k, [C.url_of(3, spec)], monkeypatch
     )
-    # one task each: the fused write repartitions by its own keys, so a
-    # 1-partition extract no longer absorbs the write's exchange
+    # one task: the fused write repartitions by its own keys, so a
+    # 1-partition page pass does not absorb the write's exchange
     # (test_new_url_path_has_one_exchange)
-    assert (verify_n, extract_n) == (1, 1)
-    assert (phases["verify_tasks"], phases["extract_tasks"]) == (1, 1)
+    assert pages_n == 1
+    assert phases["page_tasks"] == 1
 
 
 def test_bulk_round_keeps_the_cap(spark, tmp_path_factory, tmp_path, monkeypatch):
@@ -87,9 +86,9 @@ def test_bulk_round_keeps_the_cap(spark, tmp_path_factory, tmp_path, monkeypatch
     path = str(tmp_path_factory.mktemp("corpus_bulk") / "corpus")
     build_corpus(spark, spec, path, slices=8)
     seeds = [C.url_of(i, spec) for i in range(n)]
-    phases, verify_n, extract_n = _round_one(spark, tmp_path, (spec, path), seeds, monkeypatch)
-    assert verify_n == extract_n == cap
-    assert phases["verify_tasks"] == phases["extract_tasks"] == cap
+    phases, pages_n = _round_one(spark, tmp_path, (spec, path), seeds, monkeypatch)
+    assert pages_n == cap
+    assert phases["page_tasks"] == cap
 
 
 def test_compact_seen_writes_one_file_per_bucket_from_few_tasks(spark, corpus_1k, tmp_path):
