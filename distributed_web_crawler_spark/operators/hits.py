@@ -2,8 +2,8 @@
 frontier-prioritization signal next to operators/pagerank.py (the
 reference drains its queue FIFO, Server/Master/master.go; a production
 crawler ranks candidate pages by authority and seed lists by hub score —
-either column slots into politeness.schedule(priority=/grade=) exactly
-like pagerank's rank does).
+either column, quantized to a coarse grade, slots into
+politeness.schedule(grade=...) exactly like pagerank's rank does).
 
 Semantics (Kleinberg's iteration, unnormalized until the end):
     auth_t(v) = Σ_{(u,v)∈E} hub_{t-1}(u)

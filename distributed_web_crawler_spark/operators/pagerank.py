@@ -1,9 +1,10 @@
 """PageRank power iteration over an edge DataFrame — the crawl-frontier
 PRIORITIZATION signal (generalizes the reference's FIFO drain order,
 master.go job queue: a production crawler drains high-rank hosts/pages
-first — politeness.schedule(priority=...) consumes exactly such a rank
-column as its per-host order key, budgets and sub-round slicing
-unchanged; tests/test_politeness_schedule.py exercises the pairing).
+first — politeness.schedule(grade=...) consumes such a rank, quantized
+to a coarse grade, as its per-host order key, budgets and sub-round
+slicing unchanged; tests/test_politeness_schedule.py exercises the
+pairing).
 
 Semantics: the classic simple power iteration,
     rank_{t+1}(v) = (1-d)/N + d * Σ_{u→v} rank_t(u) / outdeg(u)

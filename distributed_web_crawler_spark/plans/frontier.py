@@ -33,8 +33,11 @@ Scale shape per round (what survives 1000 executors × 100 TB):
   seen deltas are merged by compact_seen every cfg.compact_seen_every
   rounds, so both the re-check and result reads list O(1) roots regardless
   of crawl age.
-* politeness window: one shuffle by host, budgets data-determined so
-  local[8] and local[32] produce identical admissions.
+* politeness window: sub-round 0 of a depth ranks its pending rows once
+  (one shuffle by host and url_hash range; budgets data-determined, so
+  local[8] and local[32] produce identical admissions) and writes the
+  whole schedule once, sliced by due sub-round; every sub-round, 0
+  included, then drains a written slice.
 * writes: the round's new URLs are written ONCE, bucket-partitioned, in a
   single fused pass that also updates the Bloom blobs and returns per-bucket
   row counts; the pending frontier is a manifest of such file-sets in the
@@ -49,7 +52,6 @@ from __future__ import annotations
 
 import os
 import time
-from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import List, Optional
 
@@ -75,38 +77,9 @@ METRICS_SCHEMA = (
     "n_probe_pos bigint, n_probe_fp bigint, n_recheck_rows bigint"
 )
 
-# thread pool for the politeness deferred-slice write, a job DAG that
-# overlaps the round's main-thread work
-_POOL = ThreadPoolExecutor(max_workers=4, thread_name_prefix="frontier-io")
-
-
+# only perfbench's tracer patches this; ROADMAP item 1's benchmark change deletes it
 def _pool_submit(spark: SparkSession, fn, *args, group: str | None = None):
-    """Submit a Spark action to _POOL under a PER-THREAD FAIR scheduler
-    pool. spark.scheduler.mode=FAIR (session.py) only arbitrates BETWEEN
-    pools; with no allocation file every job lands in the single default
-    pool, whose internal mode is FIFO — i.e. FAIR-with-one-pool schedules
-    exactly like FIFO and whichever of the round's two jobs comes first
-    starves the other. Tagging each pool thread with its own spark.scheduler.pool local
-    property puts concurrent jobs in DISTINCT auto-created pools (weight 1,
-    minShare 0), which the FAIR root genuinely round-robins. Local
-    properties are per-Python-thread under PySpark's pinned-thread mode and
-    setting is idempotent, so re-tagging on every submit is cheap.
-
-    `group` additionally tags the action's Spark jobs with a job-group id
-    (_Round.group: kind, store, round) so a failing round can CANCEL them
-    (sc.cancelJobGroup in _abandon) instead of blocking its cleanup path
-    behind a full deferred write; the tag is cleared when unset so a reused
-    worker thread never inherits a stale group."""
-
-    def run():
-        import threading
-
-        sc = spark.sparkContext
-        sc.setLocalProperty("spark.scheduler.pool", threading.current_thread().name)
-        sc.setLocalProperty("spark.jobGroup.id", group)
-        return fn(*args)
-
-    return _POOL.submit(run)
+    return fn(*args)
 
 
 @dataclass
@@ -217,6 +190,30 @@ def _slice_totals(stats: List[tuple]) -> dict:
     return out
 
 
+def _history(store: JobStateStore, lo: int, hi: int, what: str):
+    """Yield (round, kind, path) for the seen-set file-sets of the
+    committed rounds in (lo, hi], in round order: kind "insert" is a
+    round's new/ delta, "delete" its tombstones. Raises when a needed set
+    was compacted and vacuumed: `what` (the read) has expired."""
+    for r in store.committed_rounds():
+        if r > hi:
+            break
+        if r <= lo:
+            continue
+        info = store.read_commit(r)
+        for kind, n, p in (
+            ("insert", _seen_inserts(r, info), store.seen_delta_path(r)),
+            ("delete", info.get("tombstone", 0), store.tombstones_path(r)),
+        ):
+            if n > 0:
+                if not os.path.isdir(p):
+                    raise ValueError(
+                        f"{what} has expired: round {r}'s {kind} files were "
+                        "compacted and vacuumed"
+                    )
+                yield r, kind, p
+
+
 def _n_seen(store: JobStateStore) -> int:
     """The live seen-set size, summed from the commits like every other
     count: each round's inserts minus its tombstones."""
@@ -237,25 +234,21 @@ class _Round:
     depth_limit: int
     phases: dict = field(default_factory=dict)
     t: float = field(default_factory=time.monotonic)
-    # frames cached for this round, released once its jobs are done
-    persisted: List[DataFrame] = field(default_factory=list)
     # cursor: the previous commit's manifest, the depth and sub-round drained
     manifest: List[list] = field(default_factory=list)
     d: int = 0
     sub: int = 0
     # admission: the manifest entries drained, the admitted rows with
-    # their fetch key, the corpus buckets they may join (the OR of the
-    # drained entries' masks), and (sub-round 0 under politeness) the
-    # rows scheduled for later sub-rounds
+    # their fetch key, the corpus buckets they join, and (sub-round 0
+    # under politeness) the manifest entries of the later sub-rounds'
+    # slices
     consumed: List[list] = field(default_factory=list)
     admitted: Optional[DataFrame] = None
     n_admitted: int = 0
     corpus_buckets: List[int] = field(default_factory=list)
-    deferred: Optional[DataFrame] = None
-    n_deferred: int = 0
-    # the in-flight _POOL job, and the payload stats the page pass's
-    # partials folded to (None until a pass verified)
-    deferred_write: Optional[Future] = None
+    scheduled: List[list] = field(default_factory=list)
+    # the payload stats the page pass's partials folded to (None until a
+    # pass verified)
     payload: Optional[dict] = None
     n_candidates: int = 0
     n_new: int = 0
@@ -270,15 +263,6 @@ class _Round:
         now = time.monotonic()
         self.phases[key] = round((now - self.t) * 1000)
         self.t = now
-
-    def release(self) -> None:
-        for df_ in self.persisted:
-            df_.unpersist()
-        self.persisted = []
-
-    def group(self, kind: str) -> str:
-        """Job-group id of this round's `kind` pool job (cancel handle)."""
-        return f"{kind}:{self.store.dir}:r{self.r}"
 
 
 class FrontierEngine:
@@ -587,9 +571,7 @@ class FrontierEngine:
         (conv/pq/probe/bloom_ms), its group count (n_tasks) and, with
         `probe`, the seen-chain counters (n_blocked, n_candidates,
         n_probe_pos, n_probe_fp, n_recheck_rows) and the verify `payload`
-        (fetch.fold_partials). They are returned rather
-        than stashed on the engine because the deferred-slice write runs
-        concurrently in a pool thread alongside the main write."""
+        (fetch.fold_partials)."""
         update_blooms = bloom_round is not None
         blobs = store.bloom_blobs() if update_blooms else None
         params = self.cfg.bloom
@@ -972,73 +954,69 @@ class FrontierEngine:
     def _unsee_frame(self, store: JobStateStore, r: int, tomb: DataFrame, reseed: bool) -> dict:
         """Shared tombstone+reseed commit path; `tomb` must hold exact
         current seen rows (url, host, url_hash, seen_bucket, depth)."""
-        if reseed:
-            tomb = tomb.persist()  # shared by the tombstone and reseed writes
         prev = store.read_commit(r - 1)
         self._check_filter_meta(prev)
         # the tombstone write touches no blob (bloom cannot delete; the
         # probe's exact re-check rescues stale positives). The reseed write
         # re-adds into the previous blobs, a no-op for bits already set.
         touched: List[int] = []
-        try:
-            stats, _ = self._write_bucketed(
-                store, store.tombstones_path(r), tomb, bloom_round=None,
+        stats, _ = self._write_bucketed(
+            store, store.tombstones_path(r), tomb, bloom_round=None,
+        )
+        n = sum(s[1] for s in stats)
+        # replay the crawl cursor unchanged: the loop's depth/sub-round
+        # arithmetic sees the same state it would without this round
+        manifest = list(prev["frontier_manifest"])
+        n_rs = 0
+        if reseed and n > 0:
+            # the reseed rows are the tombstone rows just written: read
+            # back, so the gate join is not computed twice
+            rs = self._read_components([store.tombstones_path(r)])
+            if self.cfg.robots is not None:
+                rs = rs.filter(~blocked_expr(F.col("url")))
+            # the reseed delta is written twice on purpose: new/ (flat
+            # bucketed — the seen component + filter re-add) and
+            # deferred/due=<depth> slices (the frontier side needs one
+            # file-set PER DEPTH because manifest entries are
+            # single-depth; the politeness scheduler already committed
+            # this slice layout). Both are tiny — recrawl-list sized.
+            rs_stats, _ = self._write_bucketed(
+                store, store.new_path(r), rs, bloom_round=r, approx_rows=n
             )
-            n = sum(s[1] for s in stats)
-            # replay the crawl cursor unchanged: the loop's depth/sub-round
-            # arithmetic sees the same state it would without this round
-            manifest = list(prev["frontier_manifest"])
-            n_rs = 0
-            if reseed and n > 0:
-                rs = tomb if self.cfg.robots is None else tomb.filter(
-                    ~blocked_expr(F.col("url"))
-                )
-                # the reseed delta is written twice on purpose: new/ (flat
-                # bucketed — the seen component + filter re-add) and
-                # deferred/due=<depth> slices (the frontier side needs one
-                # file-set PER DEPTH because manifest entries are
-                # single-depth; the politeness scheduler already committed
-                # this slice layout). Both are tiny — recrawl-list sized.
-                rs_stats, _ = self._write_bucketed(
-                    store, store.new_path(r), rs, bloom_round=r, approx_rows=n
-                )
-                touched = sorted({s[0] for s in rs_stats})
-                fr_stats, _ = self._write_bucketed(
-                    store, store.deferred_path(r),
-                    rs.withColumn("due", F.col("depth")), None,
-                    slice_col="due", approx_rows=n,
-                )
-                root = store.deferred_path(r)
-                for d0, (n0, m0) in sorted(_slice_totals(fr_stats).items()):
-                    manifest.append([self._rel(store, os.path.join(root, f"due={d0}")), d0, n0, 0, m0])
-                n_rs = sum(s[1] for s in rs_stats)
-            n_pending = sum(e[2] for e in manifest)
-            # reseed entries reset the drain cursor to the seed round's
-            # state (depth -1 / sub -1): the next _run_round must start the
-            # min-depth's drain at sub-round 0 and re-schedule politeness
-            # over ALL its entries. Replaying the old cursor verbatim would
-            # deadlock when a reseed depth equals the cursor depth — the
-            # sub-round would advance and the reseed slice (due tag 0)
-            # would never be consumed. Without reseed the manifest is
-            # untouched and the cursor replays exactly.
-            reset = n_rs > 0
-            store.commit_round(
-                r,
-                {
-                    "depth": -1 if reset else prev["depth"],
-                    "sub_round": -1 if reset else prev["sub_round"],
-                    "depth_limit": prev.get("depth_limit"),
-                    "n_pending_after": n_pending,
-                    "frontier_manifest": manifest,
-                    "done": n_pending == 0,
-                    "tombstone": n,
-                    "reseed": n_rs,
-                },
-                touched_blooms=touched,
+            touched = sorted({s[0] for s in rs_stats})
+            fr_stats, _ = self._write_bucketed(
+                store, store.deferred_path(r),
+                rs.withColumn("due", F.col("depth")), None,
+                slice_col="due", approx_rows=n,
             )
-        finally:
-            if reseed:
-                tomb.unpersist()
+            root = store.deferred_path(r)
+            for d0, (n0, m0) in sorted(_slice_totals(fr_stats).items()):
+                manifest.append([self._rel(store, os.path.join(root, f"due={d0}")), d0, n0, 0, m0])
+            n_rs = sum(s[1] for s in rs_stats)
+        n_pending = sum(e[2] for e in manifest)
+        # reseed entries reset the drain cursor to the seed round's
+        # state (depth -1 / sub -1): the next _run_round must start the
+        # min-depth's drain at sub-round 0 and re-schedule politeness
+        # over ALL its entries. Replaying the old cursor verbatim would
+        # deadlock when a reseed depth equals the cursor depth — the
+        # sub-round would advance and the reseed slice (due tag 0)
+        # would never be consumed. Without reseed the manifest is
+        # untouched and the cursor replays exactly.
+        reset = n_rs > 0
+        store.commit_round(
+            r,
+            {
+                "depth": -1 if reset else prev["depth"],
+                "sub_round": -1 if reset else prev["sub_round"],
+                "depth_limit": prev.get("depth_limit"),
+                "n_pending_after": n_pending,
+                "frontier_manifest": manifest,
+                "done": n_pending == 0,
+                "tombstone": n,
+                "reseed": n_rs,
+            },
+            touched_blooms=touched,
+        )
         return {"round": r, "n_unseen": n, "n_reseeded": n_rs}
 
     # ------------------------------------------------------------ main loop
@@ -1091,30 +1069,24 @@ class FrontierEngine:
         return {"job_id": job_id, "done": True, "last_round": last, "n_seen": _n_seen(store)}
 
     def _run_round(self, store: JobStateStore, r: int, depth_limit: int) -> RoundStats:
-        """One BFS round as a list of named phases. The payload verify runs
-        in the same Python pass as the extraction (at the last depth, on
-        its own) before the commit, so a committed round always carries
-        its own verify stats. extract_write_ms times everything between
-        admission and the commit: that pass with the fused write, or the
-        last depth's verify, and the wait for the deferred-slice write."""
+        """One BFS round as a list of named phases, all on this thread. The
+        payload verify runs in the same Python pass as the extraction (at
+        the last depth, on its own) before the commit, so a committed round
+        always carries its own verify stats. admit_ms includes the
+        politeness schedule write of a sub-round 0; extract_write_ms times
+        everything between admission and the commit: that pass with the
+        fused write, or the last depth's verify. A round that fails leaves
+        only staged files, which abort_round sweeps on resume."""
         rnd = _Round(store, r, depth_limit)
-        try:
-            self._cursor(rnd)
-            self._admit(rnd)
-            rnd.mark("admit_ms")
-            self._submit_deferred(rnd)
-            new_rows = self._extract(rnd)
-            if new_rows is not None:
-                self._filter_new(rnd, new_rows)
-            payload = self._finalize_verify(rnd)
-            sched_entries = self._deferred_entries(rnd)
-            rnd.release()
-            rnd.mark("extract_write_ms")
-            manifest = self._next_manifest(rnd, sched_entries)
-            n_pending_after = self._commit(rnd, manifest, payload)
-        except BaseException:
-            self._abandon(rnd)
-            raise
+        self._cursor(rnd)
+        self._admit(rnd)
+        rnd.mark("admit_ms")
+        new_rows = self._extract(rnd)
+        if new_rows is not None:
+            self._filter_new(rnd, new_rows)
+        payload = self._finalize_verify(rnd)
+        rnd.mark("extract_write_ms")
+        n_pending_after = self._commit(rnd, self._next_manifest(rnd), payload)
         return RoundStats(
             round=r,
             depth=rnd.d,
@@ -1152,13 +1124,14 @@ class FrontierEngine:
         rnd.sub = int(prev["sub_round"] + 1 if prev["depth"] == rnd.d else 0)
 
     def _admit(self, rnd: _Round) -> None:
-        """Admission. Sub-round 0 ranks the depth's ENTIRE pending set once
-        and schedules each future sub-round's slice by its computed due
-        sub-round (`ceil(rn/budget)-1`), written ONCE by _writes; every
-        later sub-round admits its slice purely BY MANIFEST REFERENCE — no
+        """Admission. Under politeness, sub-round 0 ranks the depth's
+        ENTIRE pending set once and writes every sub-round's slice ONCE
+        (_schedule), then admits its own `due=0` slice; every later
+        sub-round admits its slice purely BY MANIFEST REFERENCE — no
         politeness window re-run, no deferred-set rewrite (re-ranking and
         rewriting the remainder every sub-round would write O(M²/k) rows
-        for a mega-host with M pending and budget k; this writes O(M))."""
+        for a mega-host with M pending and budget k; this writes O(M)).
+        Without politeness a round admits the drained sets whole."""
         d = rnd.d
         entries_d = [e for e in rnd.manifest if e[1] == d]
         if rnd.sub == 0:
@@ -1173,29 +1146,54 @@ class FrontierEngine:
                     "the pre-due-slice layout — rerun the job in a fresh "
                     "warehouse (old stores are not migrated)."
                 )
-        admitted = self._read_components(
-            [os.path.join(rnd.store.dir, e[0]) for e in rnd.consumed]
-        )
-        n_pending = sum(e[2] for e in rnd.consumed)
-        # the drained sets' masks: under politeness a superset of the
-        # admitted rows' buckets, which the exact fetch join makes harmless
-        rnd.corpus_buckets = C.mask_buckets(_or_masks(_entry_mask(e) for e in rnd.consumed))
+        paths = [os.path.join(rnd.store.dir, e[0]) for e in rnd.consumed]
+        n = sum(e[2] for e in rnd.consumed)
+        mask = _or_masks(_entry_mask(e) for e in rnd.consumed)
         if rnd.sub == 0 and self.cfg.politeness is not None:
-            # persisted `ranked` ancestor: the host-window shuffle runs
-            # ONCE, shared by the admitted count and the deferred write.
-            # `admitted` is cached too, and the count fills the cache
-            # before the page pass reads it
-            admitted, rnd.deferred = schedule(
-                admitted, self.cfg.politeness, rnd.persisted, grade=self._grade_col()
-            )
-            rnd.persisted.append(admitted.persist())
-            rnd.n_admitted = admitted.count()
-        else:
-            rnd.n_admitted = n_pending
-        rnd.n_deferred = n_pending - rnd.n_admitted
+            paths, n, mask = self._schedule(rnd, paths, n)
+        rnd.n_admitted = n
+        rnd.corpus_buckets = C.mask_buckets(mask)
         # key of the page pass's exchange and of its bucket-pruned corpus
         # scan ⋈ broadcast(admitted); the extraction reads the url
-        rnd.admitted = admitted.withColumn("image_id", U.image_id_of(F.col("url")))
+        rnd.admitted = self._read_components(paths).withColumn(
+            "image_id", U.image_id_of(F.col("url"))
+        )
+
+    def _schedule(self, rnd: _Round, paths: List[str], n_pending: int) -> tuple:
+        """Politeness sub-round 0: rank the depth's `n_pending` rows once
+        and write the whole schedule in one sliced write, partitioned by
+        due sub-round (`ceil(rn/budget)-1` ≥ 0). There is NO next-frontier
+        rewrite: untouched depths AND not-yet-due slices carry over in the
+        manifest by reference. The `due≥1` slices become `rnd.scheduled`'s
+        manifest entries; the `due=0` slice is this round's admitted set,
+        never committed in a manifest (vacuum sweeps it). Returns its
+        paths, rows and corpus_mask, the last two exact from the write's
+        stats."""
+        store = rnd.store
+        root = store.deferred_path(rnd.r)
+        scheduled = schedule(
+            self._read_components(paths), self.cfg.politeness, grade=self._grade_col()
+        )
+        stats, _ = self._write_bucketed(
+            store, root, scheduled, None, slice_col="due", approx_rows=n_pending
+        )
+        totals = _slice_totals(stats)
+        n_written = sum(n for n, _ in totals.values())
+        # self-check: the schedule must place every pending row exactly
+        # once — a divergence (e.g. a budget expression breaking the
+        # slicing) must fail loudly, not corrupt n_pending_after / done
+        if n_written != n_pending:
+            raise AssertionError(
+                f"schedule write produced {n_written} rows, expected {n_pending}"
+            )
+        rnd.scheduled = [
+            [self._rel(store, os.path.join(root, f"due={due}")), rnd.d, n, due, m]
+            for due, (n, m) in sorted(totals.items()) if due > 0
+        ]
+        # each host's first row is due at 0: the slice exists whenever
+        # rows are pending
+        n0, m0 = totals[0]
+        return [os.path.join(root, "due=0")], n0, m0
 
     def _extract(self, rnd: _Round) -> Optional[DataFrame]:
         """The next depth's keyed candidate rows (lazy), or None at the
@@ -1227,42 +1225,6 @@ class FrontierEngine:
             cols.append("_blocked")
         return keyed.withColumn("depth", F.lit(rnd.d + 1)).select(*cols)
 
-    def _submit_deferred(self, rnd: _Round) -> None:
-        """Start the deferred-slice write on _POOL: at sub-round 0 under
-        politeness, the future sub-rounds' slices, written once,
-        partitioned by due sub-round. There is NO next-frontier rewrite:
-        untouched depths AND not-yet-due slices carry over in the manifest
-        by reference."""
-        store, r = rnd.store, rnd.r
-        if rnd.n_deferred > 0:
-            rnd.deferred_write = _pool_submit(
-                self.spark,
-                self._write_bucketed, store, store.deferred_path(r), rnd.deferred, None, "due",
-                rnd.n_deferred,
-                group=rnd.group("defwrite"),
-            )
-
-    def _deferred_entries(self, rnd: _Round) -> List[list]:
-        """Wait for the deferred-slice write; returns its manifest entries."""
-        store, r = rnd.store, rnd.r
-        if rnd.deferred_write is None:
-            return []
-        def_stats, _ = rnd.deferred_write.result()
-        n_written = sum(s[2] for s in def_stats)
-        # self-check: the manifest records arithmetic (pending - admitted);
-        # the write stats come back for free — any divergence (e.g. a
-        # future budget expression breaking admit/schedule complementarity)
-        # must fail loudly, not corrupt n_pending_after / the done flag
-        if n_written != rnd.n_deferred:
-            raise AssertionError(
-                f"deferred write produced {n_written} rows, expected {rnd.n_deferred}"
-            )
-        root = store.deferred_path(r)
-        return [
-            [self._rel(store, os.path.join(root, f"due={due}")), rnd.d, n, due, m]
-            for due, (n, m) in sorted(_slice_totals(def_stats).items())
-        ]
-
     def _finalize_verify(self, rnd: _Round) -> Optional[dict]:
         """This round's payload stats for commit.json (None when the round
         verified nothing): the fused write's fold, or at the last depth
@@ -1274,12 +1236,12 @@ class FrontierEngine:
             rnd.payload = self._verify_stats(rnd.admitted, rnd.n_admitted, rnd.corpus_buckets)
         return {k: (float(v) if v is not None else None) for k, v in rnd.payload.items()}
 
-    def _next_manifest(self, rnd: _Round, sched_entries: List[list]) -> List[list]:
+    def _next_manifest(self, rnd: _Round) -> List[list]:
         """The pending frontier after this round: the manifest minus the
-        consumed entries, plus the deferred slices and the new-URL set,
+        consumed entries, plus the scheduled slices and the new-URL set,
         compacted when a group outgrows cfg.frontier_compact_every."""
         consumed_ids = {id(e) for e in rnd.consumed}
-        manifest = [e for e in rnd.manifest if id(e) not in consumed_ids] + sched_entries
+        manifest = [e for e in rnd.manifest if id(e) not in consumed_ids] + rnd.scheduled
         if rnd.n_new > 0:
             manifest.append(
                 [self._rel(rnd.store, rnd.store.new_path(rnd.r)), rnd.d + 1, rnd.n_new, 0, rnd.new_mask]
@@ -1304,27 +1266,6 @@ class FrontierEngine:
         info["phases"] = rnd.phases
         rnd.store.commit_round(rnd.r, info, touched_blooms=rnd.touched)
         return n_pending_after
-
-    def _abandon(self, rnd: _Round) -> None:
-        """A mid-round failure must not leak the round's in-flight pool
-        job or cached frames: CANCEL its Spark jobs first — an interrupt
-        (Ctrl-C, timeout) must not block its own cleanup behind a full
-        deferred write — then drain it and release the caches; the
-        future's own outcome is moot once the round failed."""
-        if rnd.deferred_write is not None:
-            try:
-                self.spark.sparkContext.cancelJobGroup(rnd.group("defwrite"))
-            except Exception:  # pragma: no cover - cancellation is best-effort
-                pass
-            try:
-                rnd.deferred_write.result()
-            except Exception:
-                pass
-        for df_ in rnd.persisted:
-            try:
-                df_.unpersist()
-            except Exception:
-                pass
 
     def _write_round_metrics(self, store: JobStateStore, r: int, s: RoundStats) -> None:
         """Per-round lineage/metrics row (north rule; generalizes the
@@ -1386,28 +1327,9 @@ class FrontierEngine:
             # rows and folded deletes all belong to rounds <= upto <= r
             comps.append((sc["upto"], os.path.join(store.dir, sc["path"])))
             lo = sc["upto"]
-        for rr in store.committed_rounds():
-            if rr > r:
-                break
-            if rr <= lo:
-                continue  # folded into the compaction prefix
-            info = store.read_commit(rr)
-            if _seen_inserts(rr, info) > 0:
-                p = store.seen_delta_path(rr)
-                if not os.path.isdir(p):
-                    raise ValueError(
-                        f"seen_df_at: snapshot at round {r} has expired — "
-                        f"round {rr}'s delta files were compacted and vacuumed"
-                    )
-                comps.append((rr, p))
-            if info.get("tombstone", 0) > 0:
-                p = store.tombstones_path(rr)
-                if not os.path.isdir(p):
-                    raise ValueError(
-                        f"seen_df_at: snapshot at round {r} has expired — "
-                        f"round {rr}'s delete files were vacuumed"
-                    )
-                tombs.append((rr, p))
+        # rounds <= lo are folded into the compaction prefix
+        for rr, kind, p in _history(store, lo, r, f"seen_df_at: snapshot at round {r}"):
+            (comps if kind == "insert" else tombs).append((rr, p))
         df = self._seen_view(comps, tombs)
         if df is None:
             return self.spark.createDataFrame(
@@ -1463,27 +1385,10 @@ class FrontierEngine:
                 .withColumn("change_type", F.lit(kind))
             )
 
-        parts = []
-        for r in store.committed_rounds():
-            if r <= from_round:
-                continue
-            info = store.read_commit(r)
-            if _seen_inserts(r, info) > 0:
-                p = store.seen_delta_path(r)
-                if not os.path.isdir(p):
-                    raise ValueError(
-                        f"seen_changes: round {r}'s insert files have expired "
-                        "(compacted and vacuumed) — start from a later round"
-                    )
-                parts.append(read(p, r, "insert"))
-            if info.get("tombstone", 0) > 0:
-                p = store.tombstones_path(r)
-                if not os.path.isdir(p):
-                    raise ValueError(
-                        f"seen_changes: round {r}'s delete files have expired "
-                        "(compacted and vacuumed) — start from a later round"
-                    )
-                parts.append(read(p, r, "delete"))
+        parts = [
+            read(p, r, kind)
+            for r, kind, p in _history(store, from_round, last, f"seen_changes from round {from_round}")
+        ]
         if not parts:
             return self.spark.createDataFrame([], out_schema)
         from functools import reduce

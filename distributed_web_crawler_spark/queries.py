@@ -170,7 +170,7 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hub/authority ranking over the DIRECTED order→part graph
     (operators/hits.py) — the second frontier-prioritization signal next
     to pagerank: orders are pure hubs, parts pure authorities, and either
-    score column drops into politeness.schedule(priority=/grade=). The
+    score column, quantized, drops into politeness.schedule(grade=). The
     iteration is integer-exact until one final max-normalization, so the
     chained-CTE oracle matches without pagerank's association-noise
     margin."""

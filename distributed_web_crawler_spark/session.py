@@ -57,20 +57,6 @@ def get_spark(
         # together; a 32-process control with 2k batches never does).
         # 2048 keeps numpy fully vectorized with ~5% of the working set.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # FAIR job scheduling: the engine deliberately runs independent job
-        # DAGs concurrently (a politeness round's deferred-slice write ∥
-        # its fetch → verify → extract → fused write — plans/frontier
-        # _POOL). Under the default FIFO scheduler the first job's stages
-        # hold every task slot and the other queues behind them
-        # (measured, when the verify was a pool job of its own: writes_ms
-        # 10.6 s at local[32] vs 2.0 s at local[8] in scaling attempt 16).
-        # NOTE this flag alone is NOT enough: FAIR arbitrates BETWEEN
-        # pools, and with no allocation file every job lands in the one
-        # default pool whose internal mode is FIFO — so each concurrent
-        # action thread must also set a distinct spark.scheduler.pool
-        # local property (plans/frontier._pool_submit does; auto-created
-        # pools fair-share against each other at weight 1).
-        .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))

@@ -1,6 +1,6 @@
-"""Round-5 hardening regressions: per-thread FAIR pools, round-failure
-cache release, seen-compact pointer read races, and the bfs helper's
-cache release."""
+"""Round-5 hardening regressions: a failed round leaves no cache, thread
+or half-committed state behind and resumes exact, seen-compact pointer
+read races, and the bfs helper's cache release."""
 
 import json
 import os
@@ -10,37 +10,12 @@ from pyspark.sql import functions as F
 
 from distributed_web_crawler_spark.catalog.tables import JobStateStore
 from distributed_web_crawler_spark.fixtures import corpus as C
-from distributed_web_crawler_spark.plans.frontier import (
-    EngineConfig,
-    FrontierEngine,
-    _pool_submit,
-)
-
-
-def test_pool_submit_tags_fair_pools(spark):
-    """Each _POOL worker thread runs its Spark actions under its OWN
-    spark.scheduler.pool (auto-created pools fair-share against each
-    other); without the tag every concurrent job lands in the single
-    FIFO default pool and FAIR mode schedules exactly like FIFO."""
-    import threading
-
-    def probe():
-        return (
-            threading.current_thread().name,
-            spark.sparkContext.getLocalProperty("spark.scheduler.pool"),
-        )
-
-    results = [_pool_submit(spark, probe).result() for _ in range(8)]
-    for tname, pool in results:
-        assert pool == tname
-        assert tname.startswith("frontier-io")
-    # the main thread is NOT tagged — its jobs stay in the default pool
-    assert spark.sparkContext.getLocalProperty("spark.scheduler.pool") in (None, "default")
+from distributed_web_crawler_spark.oracle.crawler import PolitenessPolicy, RobotsPolicy, crawl
+from distributed_web_crawler_spark.plans.frontier import EngineConfig, FrontierEngine
 
 
 def test_run_round_failure_releases_caches(spark, corpus_1k, tmp_path, monkeypatch):
-    """A mid-round failure (commit refused) must drain the concurrent
-    verify future and unpersist every frame the round cached."""
+    """A mid-round failure (commit refused) leaves no frame cached."""
     spec, path = corpus_1k
     eng = FrontierEngine(
         spark,
@@ -68,6 +43,60 @@ def test_run_round_failure_releases_caches(spark, corpus_1k, tmp_path, monkeypat
     # review) — what matters is that THIS call left nothing new behind
     after = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     assert not (after - before)
+
+
+def test_refused_schedule_round_leaves_nothing_and_resumes_exact(
+    spark, corpus_1k, tmp_path, monkeypatch
+):
+    """A politeness + robots crawl whose commit is refused at a sub-round
+    0 that defers rows: the round has already written its whole schedule,
+    yet it leaves no cached frame and no engine thread behind, only staged
+    files; a fresh engine resumes the job to the oracle's seen set and the
+    uninterrupted run's payload stats."""
+    import threading
+
+    spec, path = corpus_1k
+
+    def shares_a_host(i):
+        links = set(C.out_links(i, spec))
+        return len({C.host_of(j, spec) for j in links}) < len(links)
+
+    # budget 1 per host: two depth-1 links on one host need two sub-rounds
+    seed_i = next(i for i in range(spec.n) if shares_a_host(i))
+    seed = C.url_of(seed_i, spec)
+    pol, rob = PolitenessPolicy(round_duration_ms=500), RobotsPolicy()
+    cfg = EngineConfig(politeness=pol, robots=rob, verify_payloads=True, seen_buckets=8)
+    ref = FrontierEngine(spark, str(tmp_path / "ref"), path, spec, cfg)
+    assert ref.run_job("j", seed, 3)["done"]
+
+    wh = str(tmp_path / "wh")
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    orig = JobStateStore.commit_round
+    refused = []
+
+    def refuse_deferring_sub_round_0(self, r, info, touched_blooms=()):
+        if info.get("sub_round") == 0 and any(e[3] > 0 for e in info["frontier_manifest"]):
+            refused.append(r)
+            raise RuntimeError("simulated commit refusal")
+        return orig(self, r, info, touched_blooms)
+
+    monkeypatch.setattr(JobStateStore, "commit_round", refuse_deferring_sub_round_0)
+    with pytest.raises(RuntimeError, match="simulated commit refusal"):
+        FrontierEngine(spark, wh, path, spec, cfg).run_job("j", seed, 3)
+    monkeypatch.setattr(JobStateStore, "commit_round", orig)
+    (r,) = refused
+    after = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    assert not (after - before)
+    assert not [t for t in threading.enumerate() if t.name.startswith("frontier-io")]
+    store = JobStateStore(wh, "j")
+    assert store.last_committed() == r - 1
+    assert os.path.isdir(store.deferred_path(r))  # the schedule was staged
+
+    eng = FrontierEngine(spark, wh, path, spec, cfg)
+    assert eng.run_job("j", seed, 3)["done"]
+    want = crawl(seed_i, 3, spec, politeness=pol, robots=rob)
+    assert {row["url"] for row in eng.seen_df("j").collect()} == want.seen
+    assert eng.payload_stats("j") == ref.payload_stats("j")
 
 
 def test_read_seen_compact_tolerates_vanishing_and_corrupt_pointers(tmp_path):

@@ -148,10 +148,11 @@ def test_manifest_masks_are_exact_and_prune_the_fetch(spark, corpus_1k, tmp_path
     _check_payloads(eng, "mk")
 
 
-def test_politeness_masks_cover_the_admitted_rows(spark, corpus_1k, tmp_path, monkeypatch):
-    """Under politeness sub-round 0 admits part of the drained sets, so
-    the fetch join's buckets are a superset; deferred-slice and fcompact
-    entries still carry their own sets' exact buckets."""
+def test_politeness_masks_equal_the_admitted_rows(spark, corpus_1k, tmp_path, monkeypatch):
+    """Under politeness every round, sub-round 0 included, drains a
+    written schedule slice, so the fetch join's buckets equal the admitted
+    rows' buckets; deferred-slice and fcompact entries carry their own
+    sets' exact buckets."""
     spec, path = corpus_1k
     calls = _spy_verify(monkeypatch)
     # 12 mega-host seeds (i % 10 == 0 lives on host 0) at budget 1 per
@@ -166,8 +167,7 @@ def test_politeness_masks_cover_the_admitted_rows(spark, corpus_1k, tmp_path, mo
     )
     assert eng.run_job("pm", seeds, 2)["done"]
     assert len(calls) >= 12
-    assert all(buckets >= admitted for buckets, admitted in calls)
-    assert any(buckets > admitted for buckets, admitted in calls)
+    assert all(buckets == admitted for buckets, admitted in calls)
     store = eng.store("pm")
     kinds = {
         k for r in store.committed_rounds() for e in store.read_commit(r)["frontier_manifest"]
