@@ -14,13 +14,10 @@ deterministic.
 
 Scale shape per round (what survives 1000 executors × 100 TB):
 
-* fetch: `broadcast(admitted) ⋈ corpus` with the corpus scan pruned to the
-  storage buckets the round touches — never a full corpus scan, and the
-  binary `bytes` column is never read: payloads are point-read from the
-  bucket shards (column pruning, SURVEY.md §7 risk (e)). The buckets are
-  manifest arithmetic: each frontier file-set's write returns the
-  corpus_mask of its rows, and the round ORs the masks of the entries it
-  drains, so no job runs to find them.
+* fetch: by key. The page pass looks each admitted page up by its id in
+  its corpus bucket's fetch index and point-reads the payload from the
+  bucket's shard (sources/fetch.py) — no corpus scan, no join, and no job
+  runs before the page pass to find the pages.
 * one Python pass per page (sources/fetch.py): one mapInPandas task
   reads each payload, verifies it and expands its links. Its link rows
   and per-batch verify partials (seen_bucket -1) flow into the fused
@@ -167,26 +164,12 @@ def _seen_inserts(r: int, info: dict) -> int:
     return info.get("n_new", 0) + info.get("reseed", 0)
 
 
-def _entry_mask(entry: list) -> int:
-    """A manifest entry's corpus_mask. An entry committed before entries
-    carried one has 4 elements and may hold any corpus bucket."""
-    return entry[4] if len(entry) > 4 else C.ALL_BUCKETS
-
-
-def _or_masks(masks) -> int:
-    out = 0
-    for m in masks:
-        out |= m
-    return out
-
-
 def _slice_totals(stats: List[tuple]) -> dict:
-    """A sliced write's (slice, bucket, n, corpus_mask) stats folded per
-    slice: {slice: (rows, corpus_mask)}."""
+    """A sliced write's (slice, bucket, n) stats folded per slice:
+    {slice: rows}."""
     out: dict = {}
-    for sl, _b, n, m in stats:
-        n0, m0 = out.get(sl, (0, 0))
-        out[sl] = (n0 + n, m0 | m)
+    for sl, _b, n in stats:
+        out[sl] = out.get(sl, 0) + n
     return out
 
 
@@ -239,13 +222,11 @@ class _Round:
     d: int = 0
     sub: int = 0
     # admission: the manifest entries drained, the admitted rows with
-    # their fetch key, the corpus buckets they join, and (sub-round 0
-    # under politeness) the manifest entries of the later sub-rounds'
-    # slices
+    # their fetch key, and (sub-round 0 under politeness) the manifest
+    # entries of the later sub-rounds' slices
     consumed: List[list] = field(default_factory=list)
     admitted: Optional[DataFrame] = None
     n_admitted: int = 0
-    corpus_buckets: List[int] = field(default_factory=list)
     scheduled: List[list] = field(default_factory=list)
     # the payload stats the page pass's partials folded to (None until a
     # pass verified)
@@ -257,7 +238,6 @@ class _Round:
     n_probe_fp: int = 0
     n_recheck_rows: int = 0
     touched: List[int] = field(default_factory=list)  # Bloom buckets written
-    new_mask: int = 0  # corpus_mask of the new-URL set
 
     def mark(self, key: str) -> None:
         now = time.monotonic()
@@ -444,8 +424,7 @@ class FrontierEngine:
             store, store.new_path(0), df, bloom_round=0, approx_rows=len(seeds)
         )
         n = sum(s[1] for s in stats)
-        mask = _or_masks(s[2] for s in stats)
-        manifest = [[self._rel(store, store.new_path(0)), 0, n, 0, mask]] if n > 0 else []
+        manifest = [[self._rel(store, store.new_path(0)), 0, n, 0]] if n > 0 else []
         store.commit_round(
             0,
             {
@@ -481,7 +460,6 @@ class FrontierEngine:
         )
         rnd.touched = sorted({s[0] for s in stats})
         rnd.n_new = sum(s[1] for s in stats)
-        rnd.new_mask = _or_masks(s[2] for s in stats)
         rnd.n_candidates, rnd.n_blocked = task["n_candidates"], task["n_blocked"]
         rnd.n_probe_pos, rnd.n_probe_fp = task["n_probe_pos"], task["n_probe_fp"]
         rnd.n_recheck_rows = task["n_recheck_rows"]
@@ -500,10 +478,7 @@ class FrontierEngine:
         """ONE shuffle, one pass: group rows by seen_bucket; each task writes
         its bucket's parquet part (hive layout, `seen_bucket=<b>/`) AND — for
         new-URL sets — folds the bucket's hashes into the Bloom blob, then
-        returns (bucket, n, corpus_mask). The mask (fixtures.corpus
-        corpus_mask over the rows written) is what the file-set's manifest
-        entry carries, so the round that drains it prunes its fetch join
-        without a job. Fusing the writes replaces the three separate
+        returns (bucket, n). Fusing the writes replaces the three separate
         jobs of the v1 loop (stage `_new` parquet → read back → rewrite as
         seen delta + bloom pass + full next-frontier rewrite) that made
         the round's writes the only phase DEGRADING from 8→32 cores.
@@ -543,8 +518,7 @@ class FrontierEngine:
         are grouped by (slice, seen_bucket) and land under
         ``out_dir/<slice_col>=<v>/seen_bucket=<b>/`` so each slice is an
         independently-readable file-set root; stats become
-        (slice, bucket, n, corpus_mask). Without it, stats are
-        (bucket, n, corpus_mask).
+        (slice, bucket, n). Without it, stats are (bucket, n).
 
         Memory guard (`approx_rows`): each pandas group is one bucket's
         whole round in one task's memory. Call sites pass the row count
@@ -638,7 +612,7 @@ class FrontierEngine:
                 part_dir = os.path.join(out_dir, f"seen_bucket={bucket}")
             if bucket < 0:  # the page pass's verify partials
                 return pd.DataFrame(
-                    {"slice": [sl], "bucket": [bucket], "n_rows": [0], "corpus_mask": [0]}
+                    {"slice": [sl], "bucket": [bucket], "n_rows": [0]}
                     | {k: [0] for k in summed} | {k: [v] for k, v in fold_partials(pdf).items()}
                 )
             filt = None
@@ -667,9 +641,7 @@ class FrontierEngine:
             t_probe = _time.monotonic()
             n = len(pdf)
             t_conv = t_pq = t_probe
-            mask = 0
             if n:
-                mask = C.corpus_mask(pdf["url"].to_numpy())
                 table = pa.table(
                     {
                         "url": pa.array(pdf["url"], pa.string()),
@@ -701,13 +673,13 @@ class FrontierEngine:
                     B.write_blob(store.bloom_blob_path(r, bucket, chunk), filt)
             t_bloom = _time.monotonic()
             # per-task numbers ride back on the stats row (no extra job):
-            # probe = dedup + Bloom probe + exact re-check, conv = corpus
-            # mask + pandas→Arrow, pq = parquet write, bloom = blob
+            # probe = dedup + Bloom probe + exact re-check, conv =
+            # pandas→Arrow, pq = parquet write, bloom = blob
             # fold+write. Worker-visible time only — shuffle/Arrow-IPC
             # transfer cost is the gap between the job's wall and
             # max-per-slot sums of these.
             return pd.DataFrame({
-                "slice": [sl], "bucket": [bucket], "n_rows": [n], "corpus_mask": [mask],
+                "slice": [sl], "bucket": [bucket], "n_rows": [n],
                 "probe_ms": [int((t_probe - t_entry) * 1000)],
                 "conv_ms": [int((t_conv - t_probe) * 1000)],
                 "pq_ms": [int((t_pq - t_conv) * 1000)],
@@ -720,7 +692,7 @@ class FrontierEngine:
                   "n_probe_pos", "n_probe_fp", "n_recheck_rows")
         rows = rows.groupBy(*keys).applyInPandas(
             build,
-            schema="slice int, bucket int, n_rows long, corpus_mask long, "
+            schema="slice int, bucket int, n_rows long, "
             + ", ".join(f"{k} long" for k in summed) + ", " + PARTIALS_SCHEMA,
         ).collect()
         stats = [row for row in rows if row["bucket"] >= 0]
@@ -732,8 +704,8 @@ class FrontierEngine:
         # callers take touched Bloom buckets from these tuples
         stats = [row for row in stats if row["n_rows"] > 0]
         if slice_col:
-            return [(row["slice"], row["bucket"], row["n_rows"], row["corpus_mask"]) for row in stats], task
-        return [(row["bucket"], row["n_rows"], row["corpus_mask"]) for row in stats], task
+            return [(row["slice"], row["bucket"], row["n_rows"]) for row in stats], task
+        return [(row["bucket"], row["n_rows"]) for row in stats], task
 
     def _compact_manifest(
         self, store: JobStateStore, r: int, manifest: List[list], phases: dict
@@ -784,7 +756,7 @@ class FrontierEngine:
                 )
             vic_ids = {id(e) for e in victims}
             out = [e for e in out if id(e) not in vic_ids]
-            out.append([self._rel(store, dest), depth, n, 0, _or_masks(s[2] for s in stats)])
+            out.append([self._rel(store, dest), depth, n, 0])
             merged_any = True
         if merged_any:
             phases["fcompact_ms"] = round((time.monotonic() - t0) * 1000)
@@ -814,12 +786,10 @@ class FrontierEngine:
             if store.read_commit(r).get("n_admitted", 0) > 0 and r not in verified
         ]
 
-    def _verify_stats(self, admitted_keyed: DataFrame, n_admitted: int, buckets: List[int]) -> dict:
+    def _verify_stats(self, admitted_keyed: DataFrame, n_admitted: int) -> dict:
         """The last depth's payload verify: the page pass without link
         expansion, its partials rows collected and folded."""
-        rows = fetch_and_verify(
-            self.spark, self.corpus_path, admitted_keyed, buckets, self.spec, n_admitted, False
-        ).collect()
+        rows = fetch_and_verify(self.corpus_path, admitted_keyed, self.spec, n_admitted, False).collect()
         return fold_partials({k: [row[k] for row in rows] for k in PARTIALS})
 
     # ------------------------------------------------------------ compaction
@@ -990,8 +960,8 @@ class FrontierEngine:
                 slice_col="due", approx_rows=n,
             )
             root = store.deferred_path(r)
-            for d0, (n0, m0) in sorted(_slice_totals(fr_stats).items()):
-                manifest.append([self._rel(store, os.path.join(root, f"due={d0}")), d0, n0, 0, m0])
+            for d0, n0 in sorted(_slice_totals(fr_stats).items()):
+                manifest.append([self._rel(store, os.path.join(root, f"due={d0}")), d0, n0, 0])
             n_rs = sum(s[1] for s in rs_stats)
         n_pending = sum(e[2] for e in manifest)
         # reseed entries reset the drain cursor to the seed round's
@@ -1105,12 +1075,11 @@ class FrontierEngine:
     def _cursor(self, rnd: _Round) -> None:
         """The depth and sub-round this round drains. The pending frontier
         is a MANIFEST of committed file-sets ([relpath, depth, n_rows,
-        due_sub, corpus_mask], the mask being the corpus storage buckets
-        of the set's rows, fixtures.corpus.corpus_mask); the depth cursor,
-        the no-politeness admitted count, every later sub-round's admitted
-        count AND the fetch join's corpus buckets are manifest arithmetic —
-        zero Spark jobs — and only the file-sets the round actually drains
-        are ever opened."""
+        due_sub]; a fifth element, the corpus_mask of stores committed
+        before the fetch index, is ignored); the depth cursor, the
+        no-politeness admitted count and every later sub-round's admitted
+        count are manifest arithmetic — zero Spark jobs — and only the
+        file-sets the round actually drains are ever opened."""
         prev = rnd.store.read_commit(rnd.r - 1)
         manifest = prev.get("frontier_manifest")
         if manifest is None:
@@ -1148,13 +1117,11 @@ class FrontierEngine:
                 )
         paths = [os.path.join(rnd.store.dir, e[0]) for e in rnd.consumed]
         n = sum(e[2] for e in rnd.consumed)
-        mask = _or_masks(_entry_mask(e) for e in rnd.consumed)
         if rnd.sub == 0 and self.cfg.politeness is not None:
-            paths, n, mask = self._schedule(rnd, paths, n)
+            paths, n = self._schedule(rnd, paths, n)
         rnd.n_admitted = n
-        rnd.corpus_buckets = C.mask_buckets(mask)
-        # key of the page pass's exchange and of its bucket-pruned corpus
-        # scan ⋈ broadcast(admitted); the extraction reads the url
+        # key of the page pass's exchange and its fetch-index lookup; the
+        # extraction reads the url
         rnd.admitted = self._read_components(paths).withColumn(
             "image_id", U.image_id_of(F.col("url"))
         )
@@ -1167,8 +1134,7 @@ class FrontierEngine:
         manifest by reference. The `due≥1` slices become `rnd.scheduled`'s
         manifest entries; the `due=0` slice is this round's admitted set,
         never committed in a manifest (vacuum sweeps it). Returns its
-        paths, rows and corpus_mask, the last two exact from the write's
-        stats."""
+        paths and rows, the rows exact from the write's stats."""
         store = rnd.store
         root = store.deferred_path(rnd.r)
         scheduled = schedule(
@@ -1178,7 +1144,7 @@ class FrontierEngine:
             store, root, scheduled, None, slice_col="due", approx_rows=n_pending
         )
         totals = _slice_totals(stats)
-        n_written = sum(n for n, _ in totals.values())
+        n_written = sum(totals.values())
         # self-check: the schedule must place every pending row exactly
         # once — a divergence (e.g. a budget expression breaking the
         # slicing) must fail loudly, not corrupt n_pending_after / done
@@ -1187,13 +1153,12 @@ class FrontierEngine:
                 f"schedule write produced {n_written} rows, expected {n_pending}"
             )
         rnd.scheduled = [
-            [self._rel(store, os.path.join(root, f"due={due}")), rnd.d, n, due, m]
-            for due, (n, m) in sorted(totals.items()) if due > 0
+            [self._rel(store, os.path.join(root, f"due={due}")), rnd.d, n, due]
+            for due, n in sorted(totals.items()) if due > 0
         ]
         # each host's first row is due at 0: the slice exists whenever
         # rows are pending
-        n0, m0 = totals[0]
-        return [os.path.join(root, "due=0")], n0, m0
+        return [os.path.join(root, "due=0")], totals[0]
 
     def _extract(self, rnd: _Round) -> Optional[DataFrame]:
         """The next depth's keyed candidate rows (lazy), or None at the
@@ -1210,10 +1175,7 @@ class FrontierEngine:
         # small round runs as 1 task, a bulk round at the 2× cores cap)
         rnd.phases["page_tasks"] = sized_tasks(self.spark, rnd.n_admitted)
         if self.cfg.verify_payloads:
-            pages = fetch_and_verify(
-                self.spark, self.corpus_path, rnd.admitted, rnd.corpus_buckets, self.spec,
-                rnd.n_admitted,
-            )
+            pages = fetch_and_verify(self.corpus_path, rnd.admitted, self.spec, rnd.n_admitted)
         else:
             pages = expand_admitted(rnd.admitted, self.spec, rnd.n_admitted)
         keyed = self._with_keys(pages)
@@ -1233,7 +1195,7 @@ class FrontierEngine:
             return None
         if rnd.payload is None:
             rnd.phases["page_tasks"] = sized_tasks(self.spark, rnd.n_admitted)
-            rnd.payload = self._verify_stats(rnd.admitted, rnd.n_admitted, rnd.corpus_buckets)
+            rnd.payload = self._verify_stats(rnd.admitted, rnd.n_admitted)
         return {k: (float(v) if v is not None else None) for k, v in rnd.payload.items()}
 
     def _next_manifest(self, rnd: _Round) -> List[list]:
@@ -1244,7 +1206,7 @@ class FrontierEngine:
         manifest = [e for e in rnd.manifest if id(e) not in consumed_ids] + rnd.scheduled
         if rnd.n_new > 0:
             manifest.append(
-                [self._rel(rnd.store, rnd.store.new_path(rnd.r)), rnd.d + 1, rnd.n_new, 0, rnd.new_mask]
+                [self._rel(rnd.store, rnd.store.new_path(rnd.r)), rnd.d + 1, rnd.n_new, 0]
             )
         return self._compact_manifest(rnd.store, rnd.r, manifest, rnd.phases)
 

@@ -1,17 +1,16 @@
 """Keyed payload fetch — the crawl's S4 "HTTP GET" stand-in, IO-proportional
 to the frontier (SURVEY.md J5).
 
-Joins the admitted frontier against the corpus' SLIM metadata columns
-(image_id, fmt, caption, phash, blob_offset, blob_len — the bytes column is
-never touched), then point-reads each payload's byte range from the bucket's
-packed shard in an Arrow-batched pandas stage. The scan is pruned to the
-storage buckets the caller names: the engine holds them as manifest
-arithmetic (each frontier file-set's corpus_mask), so building the join
-submits no Spark job, and the explicit schema skips footer inference.
-Rows are exchanged by image_id hash (_exchange says why not by bucket),
-and each batch is read in offset order per shard, seeking forward — the
-access pattern of ranged GETs against tar/WebDataset shards on object
-storage.
+A page is fetched by key, as the reference's worker fetches a URL: the
+page pass takes page i from the row's image_id (functions.urls.page_index,
+computed in the JVM), reads record ``i // N_BUCKETS`` of bucket
+``i % N_BUCKETS``'s memory-mapped fetch index (sources/corpus_source.py)
+for its fmt, caption, phash and byte range, and point-reads the payload
+from the bucket's packed shard. No corpus scan, no join and no Spark job
+runs to find the pages. Rows are exchanged by image_id hash (_exchange
+says why not by bucket), and each batch is read in offset order per shard,
+seeking forward — the access pattern of ranged GETs against
+tar/WebDataset shards on object storage.
 
 A crawl round makes ONE Python pass over its pages: the same pandas task
 reads each payload, verifies it and expands the page's links, as the
@@ -20,17 +19,11 @@ reference's worker fetches a page and returns its links in one task.
 
 from __future__ import annotations
 
-from typing import List
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..fixtures import corpus as C
-from ..functions.images import decode_any
 from ..session import sized_tasks
-from .corpus_source import CORPUS_SCHEMA, blob_path
-
-SLIM_COLS = ["image_id", "fmt", "caption", "phash", "bucket", "blob_offset", "blob_len"]
-SLIM_SCHEMA = ", ".join(f for f in CORPUS_SCHEMA.split(", ") if f.split()[0] in SLIM_COLS)
+from .corpus_source import FORMATS, INDEX_DTYPE, blob_path, open_index
 
 # a verify-partials row: pages verified, how many pass each invariant, and
 # the least PSNR among them. A verified page is a partials row of one, and
@@ -40,7 +33,6 @@ PARTIALS = [c.split()[0] for c in PARTIALS_SCHEMA.split(", ")]
 # the page pass's rows: a link (url, host), or one batch's verify partials
 # with seen_bucket -1
 PAGES_SCHEMA = "url string, host string, seen_bucket int, " + PARTIALS_SCHEMA
-FEATURES_SCHEMA = "url string, phash_dec bigint, luma double"
 
 
 def _exchange(df: DataFrame, n_rows: int) -> DataFrame:
@@ -67,31 +59,44 @@ def _exchange(df: DataFrame, n_rows: int) -> DataFrame:
     return df.repartition(sized_tasks(df.sparkSession, n_rows), F.col("image_id"))
 
 
-def fetch_join(
-    spark: SparkSession, corpus_path: str, admitted: DataFrame, buckets: List[int]
-) -> DataFrame:
-    """admitted: (url, image_id). Returns admitted ⋈ slim metadata — a
-    broadcast join against a bytes-free scan pruned to `buckets`, which
-    must hold the storage bucket of every admitted page that should join
-    (a superset is correct, the join is exact; fixtures.corpus.corpus_mask
-    computes them from URLs)."""
-    slim = (
-        spark.read.schema(SLIM_SCHEMA).parquet(corpus_path)
-        .filter(F.col("bucket").isin(list(buckets)))
-        .select(*SLIM_COLS)
-    )
-    return slim.join(F.broadcast(admitted.select("image_id", "url")), "image_id")
+def _lookup(image_ids, corpus_path: str, indexes: dict):
+    """Look a batch's pages up by id in their buckets' fetch indexes
+    (`indexes` caches the ones this task has mapped). Returns the batch
+    positions that are corpus pages and, aligned with them, their index
+    records and captions. A row whose image_id holds no page id (its URL
+    is outside the corpus scheme) or whose id is past the index is left
+    out, as an inner join with the corpus leaves it out."""
+    import numpy as np
+    import pandas as pd
+
+    digits = pd.Series(image_ids, dtype=object).str[3:]
+    i = np.where(digits.str.fullmatch(r"[0-9]{1,18}", na=False), digits, -1).astype(np.int64)
+    out = np.zeros(len(i), INDEX_DTYPE)
+    captions = {}
+    for b in np.unique(i[i >= 0] % C.N_BUCKETS).tolist():
+        if b not in indexes:
+            indexes[b] = open_index(corpus_path, b)
+        rec, blob = indexes[b]
+        pos = np.flatnonzero((i >= 0) & (i % C.N_BUCKETS == b))
+        pos = pos[i[pos] // C.N_BUCKETS < len(rec)]
+        out[pos] = rec[i[pos] // C.N_BUCKETS]
+        if (out["id"][pos] != i[pos]).any():
+            raise ValueError(
+                f"corpus {corpus_path!r} bucket {b}'s fetch index is not dense in "
+                "page id; rebuild the corpus (delete it and run build_corpus)"
+            )
+        for p, o, n in zip(pos.tolist(), out["caption_off"][pos].tolist(), out["caption_len"][pos].tolist()):
+            captions[p] = str(blob[o : o + n], "utf-8")
+    pos = np.array(sorted(captions), np.int64)
+    return pos, out[pos], [captions[p] for p in pos.tolist()]
 
 
-def _read_ranges(pdf, corpus_path):
-    """Point-read payloads for one pandas batch. Returns a list aligned to
-    the batch's positional order; reads happen offset-ordered per shard."""
+def _read_ranges(buckets, offsets, lengths, corpus_path):
+    """Point-read payloads. Returns a list aligned to the inputs' order;
+    reads happen offset-ordered per shard."""
     import numpy as np
 
-    buckets = pdf["bucket"].to_numpy()
-    offsets = pdf["blob_offset"].to_numpy()
-    lengths = pdf["blob_len"].to_numpy()
-    out = [None] * len(pdf)
+    out = [None] * len(buckets)
     order = np.lexsort((offsets, buckets))
     handles = {}
     try:
@@ -123,13 +128,14 @@ def fold_partials(cols) -> dict:
 
 
 def _page_pass(
-    pages: DataFrame, n_rows: int, spec: C.CorpusSpec, corpus_path: str | None, links: bool
+    admitted: DataFrame, n_rows: int, spec: C.CorpusSpec, corpus_path: str | None, links: bool
 ) -> DataFrame:
     """The one pandas stage over a round's pages, behind one row-sized
-    image_id exchange. With `corpus_path` each batch's payloads are
-    point-read and verified (functions.images.verify_batch) into one
-    partials row; with `links` each page's links are expanded from its
-    `url` (operators.extract.expand_links)."""
+    image_id exchange. With `corpus_path` each batch's pages are looked up
+    in the fetch index (_lookup), point-read and verified
+    (functions.images.verify_batch) into one partials row, and a row that
+    is no corpus page yields nothing; with `links` each page's links are
+    expanded from its `url` (operators.extract.expand_links)."""
     cols = [c.split()[0] for c in PAGES_SCHEMA.split(", ")]
 
     def expand(batches):
@@ -139,79 +145,49 @@ def _page_pass(
         from ..functions.images import verify_batch
         from ..operators.extract import expand_links
 
+        indexes: dict = {}  # the bucket indexes this task has mapped
         for pdf in batches:
-            if corpus_path is not None and len(pdf):
-                v = verify_batch(
-                    pdf["url"].to_numpy(),
-                    _read_ranges(pdf, corpus_path),
-                    pdf["fmt"].to_numpy(),
-                    pdf["caption"].to_numpy(),
-                    pdf["phash"].to_numpy(),
-                    spec,
-                )
-                part = fold_partials({
-                    "n": np.ones(len(pdf)), "n_pixels_ok": v["pixels_ok"],
-                    "n_phash_ok": v["phash_ok"], "n_caption_ok": v["caption_ok"],
-                    "min_psnr": v["psnr"],
-                })
-                yield pd.DataFrame([[None, None, -1, *part.values()]], columns=cols)
+            urls = pdf["url"].to_numpy(str)
+            if corpus_path is not None:
+                pos, rec, captions = _lookup(pdf["image_id"].to_numpy(), corpus_path, indexes)
+                urls = urls[pos]
+                if len(pos):
+                    v = verify_batch(
+                        urls,
+                        _read_ranges(rec["id"] % C.N_BUCKETS, rec["blob_offset"], rec["blob_len"], corpus_path),
+                        np.asarray(FORMATS)[rec["fmt"]],
+                        captions,
+                        rec["phash"],
+                        spec,
+                    )
+                    part = fold_partials({
+                        "n": np.ones(len(pos)), "n_pixels_ok": v["pixels_ok"],
+                        "n_phash_ok": v["phash_ok"], "n_caption_ok": v["caption_ok"],
+                        "min_psnr": v["psnr"],
+                    })
+                    yield pd.DataFrame([[None, None, -1, *part.values()]], columns=cols)
             if links:
-                _, urls, hosts = expand_links(pdf["url"].to_numpy(str), spec)
-                if len(urls):
-                    yield pd.DataFrame({"url": urls, "host": hosts}).reindex(columns=cols)
+                _, out, hosts = expand_links(urls, spec)
+                if len(out):
+                    yield pd.DataFrame({"url": out, "host": hosts}).reindex(columns=cols)
 
+    pages = admitted.select("image_id", "url")
     return _exchange(pages, n_rows).mapInPandas(expand, schema=PAGES_SCHEMA)
 
 
 def fetch_and_verify(
-    spark, corpus_path: str, admitted: DataFrame, buckets: List[int], spec: C.CorpusSpec,
-    n_rows: int, links: bool = True,
+    corpus_path: str, admitted: DataFrame, spec: C.CorpusSpec, n_rows: int, links: bool = True,
 ) -> DataFrame:
     """Fetch + full per-row invariants vs the generator (input_hint):
     decoded pixels exact for PNG / PSNR≥40 dB for JPEG, phash equality,
     caption equality — and, with `links`, each page's links, in the same
-    pass. Returns PAGES_SCHEMA rows. `buckets` prunes the corpus scan
-    (fetch_join); `n_rows`, the admitted row count the caller already
-    holds, sizes the stage's task count."""
-    fetched = fetch_join(spark, corpus_path, admitted, buckets)
-    return _page_pass(fetched, n_rows, spec, corpus_path, links)
+    pass. `admitted` holds (url, image_id); returns PAGES_SCHEMA rows.
+    `n_rows`, the admitted row count the caller already holds, sizes the
+    stage's task count."""
+    return _page_pass(admitted, n_rows, spec, corpus_path, links)
 
 
 def expand_admitted(admitted: DataFrame, spec: C.CorpusSpec, n_rows: int) -> DataFrame:
     """The same pass without payload verify: the admitted rows' links,
-    with no corpus join."""
-    return _page_pass(admitted.select("image_id", "url"), n_rows, spec, None, True)
-
-
-def fetch_and_decode(
-    spark, corpus_path: str, admitted: DataFrame, buckets: List[int], n_rows: int
-) -> DataFrame:
-    """Fetch + decode + light features (the production fetch workload:
-    no generator oracle in the loop). `buckets` and `n_rows` prune and
-    size the stage as in fetch_and_verify."""
-    fetched = fetch_join(spark, corpus_path, admitted, buckets)
-
-    def feats(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = _read_ranges(pdf, corpus_path)
-            urls = pdf["url"].to_numpy()
-            n = len(urls)
-            lumas = np.empty(n)
-            grays = np.empty((n, 32, 32))
-            sub32 = np.arange(32)
-            for k in range(n):
-                dec = decode_any(payloads[k])
-                means = dec.reshape(-1, 3).mean(axis=0)
-                lumas[k] = 0.2126 * means[0] + 0.7152 * means[1] + 0.0722 * means[2]
-                # subsample before the channel mean (commutes; see
-                # images.verify_batch) — touches 32·32·3 values, not h·w·3
-                h, w = dec.shape[:2]
-                sub = dec[sub32 * h // 32][:, sub32 * w // 32]
-                grays[k] = sub.sum(axis=2, dtype=np.float64) / 3.0
-            ph = C.phash64_batch(grays) if n else np.zeros(0, dtype=np.int64)
-            yield pd.DataFrame({"url": urls, "phash_dec": ph, "luma": lumas})
-
-    return _exchange(fetched, n_rows).mapInPandas(feats, schema=FEATURES_SCHEMA)
+    with no corpus read."""
+    return _page_pass(admitted, n_rows, spec, None, True)

@@ -255,15 +255,18 @@ def plan_of(df) -> str:
 
 
 def audit_crawl_plans(spark, sections, failures):
-    """Plan properties of the crawl round's hot paths: the fetch join must
-    broadcast the frontier and prune corpus buckets at the scan; the slim
-    metadata scan must never read the bytes column."""
+    """Plan properties of the crawl round's page pass: pages are fetched
+    by key from the corpus's fetch index, so the plan holds no broadcast
+    join and no scan of the corpus parquet root, and exactly one
+    image_id-hash exchange feeds the MapInPandas."""
+    import re
+
     import pandas as pd
 
-    from distributed_web_crawler_spark.fixtures.corpus import CorpusSpec, bucket_of, url_of
+    from distributed_web_crawler_spark.fixtures.corpus import CorpusSpec, url_of
     from distributed_web_crawler_spark.functions import urls as UU
     from distributed_web_crawler_spark.sources.corpus_source import build_corpus
-    from distributed_web_crawler_spark.sources.fetch import fetch_join
+    from distributed_web_crawler_spark.sources.fetch import fetch_and_verify
     from pyspark.sql import functions as F
 
     spec = CorpusSpec(n=2000)
@@ -271,19 +274,20 @@ def audit_crawl_plans(spark, sections, failures):
     idx = (3, 7, 35)
     adm = spark.createDataFrame(pd.DataFrame({"url": [url_of(i, spec) for i in idx]}))
     adm = adm.withColumn("image_id", UU.image_id_of(F.col("url")))
-    plan = plan_of(fetch_join(spark, corpus, adm, sorted({bucket_of(i) for i in idx})))
-    checks = {
-        "fetch join broadcasts the (small) frontier": "BroadcastHashJoin",
-        "corpus scan pruned to touched buckets": "PartitionFilters: [bucket",
-        "bytes column never read by the fetch join": "blob_offset",  # slim cols present…
-    }
-    missing = [label for label, frag in checks.items() if frag not in plan]
-    if "ReadSchema" in plan and "bytes" in plan.split("ReadSchema", 1)[1].split("\n", 2)[0]:
-        missing.append("bytes column leaked into the fetch-join scan")
+    # sized as a bulk round: a one-task pass is a SinglePartition exchange
+    plan = plan_of(fetch_and_verify(corpus, adm, spec, spec.n))
+    below = plan.split("MapInPandas", 1)[1] if "MapInPandas" in plan else ""
+    missing = []
+    if "BroadcastHashJoin" in plan:
+        missing.append("the page pass broadcast-joins")
+    if re.search(r"FileScan|Scan parquet", plan) and corpus in plan:
+        missing.append("the page pass scans the corpus parquet root")
+    if len(re.findall(r"hashpartitioning\(image_id#\d+, \d+\)", below)) != 1:
+        missing.append("one hashpartitioning(image_id, …) exchange under the MapInPandas")
     if missing:
-        failures.append(("crawl_fetch_join", missing))
+        failures.append(("crawl_page_pass", missing))
     sections.append(
-        f"## crawl_fetch_join — {'OK' if not missing else 'MISSING ' + str(missing)}\n\n```\n{plan.strip()}\n```\n"
+        f"## crawl_page_pass — {'OK' if not missing else 'MISSING ' + str(missing)}\n\n```\n{plan.strip()}\n```\n"
     )
 
 

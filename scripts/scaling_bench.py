@@ -101,7 +101,7 @@ input, at local[8] (N cores) vs local[32] (4N cores) — NOT a real cluster:
 both "sizes" share one JVM, one OS page cache, one disk, and one driver.
 
 Job: drain a {seeds}-seed frontier to depth 2 over a {crawl_n}-page
-image+caption corpus — slim fetch join + blob point reads, vectorized
+image+caption corpus — fetch-index lookup + blob point reads, vectorized
 extraction, in-write Bloom probe + exact re-check, payload decode + per-row PSNR/
 phash/caption verification. Seed/bootstrap commit excluded (amortized to
 zero at the 10^10 target); drain rounds only.

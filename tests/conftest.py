@@ -23,7 +23,7 @@ def corpus_1k(spark, tmp_path_factory):
 
     spec = CorpusSpec(n=1000)
     path = str(tmp_path_factory.mktemp("corpus1k") / "corpus")
-    build_corpus(spark, spec, path, slices=8)
+    build_corpus(spark, spec, path)
     return spec, path
 
 

@@ -45,7 +45,7 @@ def test_two_masters_drain_shared_ledger(spark, tmp_path):
     corpus_path = str(tmp_path / "corpus")
     from distributed_web_crawler_spark.sources.corpus_source import build_corpus
 
-    build_corpus(spark, spec, corpus_path, slices=4)
+    build_corpus(spark, spec, corpus_path)
     wh = str(tmp_path / "wh")
 
     from distributed_web_crawler_spark.plans.ledger import JobLedger

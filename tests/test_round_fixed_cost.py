@@ -1,7 +1,7 @@
 """Every Spark job a crawl round submits does crawl work: frontier reads
-list their bucket dirs on the driver, the fetch join's corpus buckets come
-from the manifest (each entry's corpus_mask) instead of a collect, the
-corpus scan takes an explicit schema, and the fused write keeps the width
+list their bucket dirs on the driver, the page pass finds each page in the
+corpus's fetch index instead of a corpus scan or join, manifest entries
+carry no per-entry corpus bookkeeping, and the fused write keeps the width
 the engine sized for it instead of whatever AQE coalesces it to."""
 
 import json
@@ -14,44 +14,15 @@ from pyspark.sql import functions as F
 from distributed_web_crawler_spark.fixtures import corpus as C
 from distributed_web_crawler_spark.functions import urls as U
 from distributed_web_crawler_spark.oracle.crawler import PolitenessPolicy
-from distributed_web_crawler_spark.plans import frontier
 from distributed_web_crawler_spark.plans.frontier import EngineConfig, FrontierEngine
 from distributed_web_crawler_spark.session import sized_tasks
+from distributed_web_crawler_spark.sources import fetch
 
 
-def _corpus_buckets(df) -> set:
-    """The corpus buckets of a frame's URLs by the JVM's own page_index,
-    so the check does not lean on the numpy twin it checks."""
-    b = F.pmod(U.page_index(F.col("url")), F.lit(C.N_BUCKETS))
-    return {r[0] for r in df.select(b).distinct().collect() if r[0] is not None}
-
-
-def _spy_verify(monkeypatch):
-    """Record (buckets passed to the fetch join, JVM buckets of the
-    admitted rows) for every round's payload verify."""
-    calls = []
-    orig = frontier.fetch_and_verify
-
-    def spy(spark, corpus_path, admitted, buckets, *a):
-        calls.append((set(buckets), _corpus_buckets(admitted)))
-        return orig(spark, corpus_path, admitted, buckets, *a)
-
-    monkeypatch.setattr(frontier, "fetch_and_verify", spy)
-    return calls
-
-
-def _check_entry_masks(spark, eng, job_id) -> int:
-    """Every committed manifest entry carries the exact corpus buckets of
-    its file-set; returns how many entries were checked."""
+def _entries(eng, job_id) -> list:
+    """Every committed manifest entry of a job, as (round, entry)."""
     store = eng.store(job_id)
-    n = 0
-    for r in store.committed_rounds():
-        for e in store.read_commit(r)["frontier_manifest"]:
-            assert len(e) == 5, (r, e)
-            got = set(C.mask_buckets(e[4]))
-            assert got == _corpus_buckets(eng._read_components([os.path.join(store.dir, e[0])])), (r, e)
-            n += 1
-    return n
+    return [(r, e) for r in store.committed_rounds() for e in store.read_commit(r)["frontier_manifest"]]
 
 
 def _check_payloads(eng, job_id) -> None:
@@ -62,26 +33,37 @@ def _check_payloads(eng, job_id) -> None:
             assert c["payload"]["n"] == c["n_admitted"], (r, c["payload"])
 
 
-def test_corpus_mask_is_page_index_in_numpy(spark, corpus_1k):
-    spec, _ = corpus_1k
+def test_index_lookup_is_page_index(spark, corpus_1k):
+    """The page pass's lookup keeps a row exactly when the JVM's
+    page_index (the full-URL rule) names a corpus page, and finds that
+    page's record."""
+    spec, path = corpus_1k
     urls = [C.url_of(i, spec) for i in (0, 3, 31, 32, 77, 999)] + [
         "http://h0001.test/p/5\r",
         "http://h0001.test/p/6\n",
         "http://h0001.test/p/7\r\n",
-        "http://h0001.test/p/8 ",
+        "http://h0001.test/p/8 ",
         "http://h0001.test/p/9\n\n",
         "http://h0001.test/p/10 ",
         "http://h0001.test/p/١٢",
         "https://h0002.test/p/000011",
         "http://other.example/p/12",
         "http://h0001.test/p/13/x",
+        f"http://h0001.test/p/{spec.n}",
+        f"http://h0001.test/p/{spec.n + 5}",
+        "http://h0001.test/p/99999999999999999999",
         "",
     ]
-    for u in urls:
-        want = _corpus_buckets(spark.createDataFrame(pd.DataFrame({"url": [u]})))
-        assert set(C.mask_buckets(C.corpus_mask([u]))) == want, repr(u)
-    assert C.corpus_mask([]) == 0
-    assert C.mask_buckets(C.ALL_BUCKETS) == list(range(C.N_BUCKETS))
+    rows = (
+        spark.createDataFrame(pd.DataFrame({"url": urls}))
+        .select("url", U.page_index(F.col("url")).alias("i"), U.image_id_of(F.col("url")).alias("image_id"))
+        .collect()
+    )
+    pos, rec, captions = fetch._lookup([r["image_id"] for r in rows], path, {})
+    want = [k for k, r in enumerate(rows) if r["i"] is not None and 0 <= r["i"] < spec.n]
+    assert pos.tolist() == want, [rows[k]["url"] for k in pos]
+    assert rec["id"].tolist() == [rows[k]["i"] for k in want]
+    assert captions == [C.caption_of(rows[k]["i"], spec) for k in want]
 
 
 def _status_store(spark):
@@ -127,34 +109,31 @@ def test_every_round_job_belongs_to_a_sql_execution(spark, corpus_1k, tmp_path):
     _check_payloads(eng, "fx")
 
 
-def test_manifest_masks_are_exact_and_prune_the_fetch(spark, corpus_1k, tmp_path, monkeypatch):
-    """Without politeness every round drains whole file-sets, so the fetch
-    join's buckets equal the admitted rows' buckets; every entry kind —
-    seed, new-URL, reseed — carries its set's exact buckets."""
+def test_every_entry_kind_has_four_elements(spark, corpus_1k, tmp_path):
+    """Without politeness every entry kind — seed, new-URL, reseed — is
+    [relpath, depth, n_rows, due_sub], and every admitting round, the
+    reseed drain included, verifies each admitted page."""
     spec, path = corpus_1k
-    calls = _spy_verify(monkeypatch)
     eng = FrontierEngine(spark, str(tmp_path / "wh"), path, spec, EngineConfig(verify_payloads=True))
     seeds = [C.url_of(i, spec) for i in range(3, 40, 3)]
     assert eng.run_job("mk", seeds, 3)["done"]
-    assert len(calls) == 3
-    for buckets, admitted in calls:
-        assert buckets == admitted and len(admitted) > 1
-    # reseed entries: one deferred/due=<depth> set per depth
     victims = [C.url_of(i, spec) for i in (3, 6)]
     assert eng.unsee_urls("mk", victims, reseed=True)["n_reseeded"] == 2
     assert eng.run_job("mk", seeds, 3)["done"]
-    assert calls[-1][0] == calls[-1][1] == {C.bucket_of(3), C.bucket_of(6)}
-    assert _check_entry_masks(spark, eng, "mk") == 4  # seed, 2 new-URL, 1 reseed
+    entries = {e[0]: e for _, e in _entries(eng, "mk")}
+    assert len(entries) == 4  # seed, 2 new-URL, 1 reseed
+    assert all(len(e) == 4 for e in entries.values()), entries
+    store = eng.store("mk")
+    last = store.read_commit(store.last_committed())
+    assert last["n_admitted"] == last["payload"]["n"] == 2  # the reseed drain
     _check_payloads(eng, "mk")
 
 
-def test_politeness_masks_equal_the_admitted_rows(spark, corpus_1k, tmp_path, monkeypatch):
+def test_politeness_rounds_verify_every_admitted_page(spark, corpus_1k, tmp_path):
     """Under politeness every round, sub-round 0 included, drains a
-    written schedule slice, so the fetch join's buckets equal the admitted
-    rows' buckets; deferred-slice and fcompact entries carry their own
-    sets' exact buckets."""
+    written schedule slice and verifies each of its pages; deferred-slice
+    and fcompact entries are four-element entries too."""
     spec, path = corpus_1k
-    calls = _spy_verify(monkeypatch)
     # 12 mega-host seeds (i % 10 == 0 lives on host 0) at budget 1 per
     # sub-round, plus one page per other bucket
     seeds = [C.url_of(i, spec) for i in range(0, 120, 10)] + [C.url_of(i, spec) for i in (1, 2, 3)]
@@ -166,45 +145,41 @@ def test_politeness_masks_equal_the_admitted_rows(spark, corpus_1k, tmp_path, mo
         ),
     )
     assert eng.run_job("pm", seeds, 2)["done"]
-    assert len(calls) >= 12
-    assert all(buckets == admitted for buckets, admitted in calls)
     store = eng.store("pm")
-    kinds = {
-        k for r in store.committed_rounds() for e in store.read_commit(r)["frontier_manifest"]
-        for k in ("deferred", "fcompact") if k in e[0]
-    }
-    assert kinds == {"deferred", "fcompact"}
-    _check_entry_masks(spark, eng, "pm")
+    assert sum(store.read_commit(r).get("n_admitted", 0) > 0 for r in store.committed_rounds()) >= 12
+    entries = _entries(eng, "pm")
+    assert {k for _, e in entries for k in ("deferred", "fcompact") if k in e[0]} == {"deferred", "fcompact"}
+    assert all(len(e) == 4 for _, e in entries), entries
     _check_payloads(eng, "pm")
 
 
-def test_four_element_entries_resume(spark, corpus_1k, tmp_path, monkeypatch):
-    """A store whose entries predate corpus_mask resumes: a 4-element
-    entry stands for every corpus bucket, and the crawl and its payload
-    stats equal an uninterrupted run's."""
+def test_four_element_entries_resume(spark, corpus_1k, tmp_path):
+    """A store whose entries carry a fifth element (the corpus_mask of
+    stores committed before the fetch index) resumes with the element
+    ignored — even a mask naming no bucket — and so does one whose entries
+    have 4 elements: both crawls and payload stats equal an uninterrupted
+    run's."""
     spec, path = corpus_1k
     seeds = [C.url_of(i, spec) for i in range(5, 60, 5)]
-    ref = FrontierEngine(spark, str(tmp_path / "ref"), path, spec, EngineConfig(verify_payloads=True))
+    cfg = EngineConfig(verify_payloads=True)
+    ref = FrontierEngine(spark, str(tmp_path / "ref"), path, spec, cfg)
     assert ref.run_job("old", seeds, 3)["done"]
 
-    eng = FrontierEngine(spark, str(tmp_path / "wh"), path, spec, EngineConfig(verify_payloads=True))
-    assert not eng.run_job("old", seeds, 3, max_rounds=1)["done"]
-    store = eng.store("old")
-    last = store.last_committed()
-    commit = os.path.join(store.round_dir(last), "commit.json")
-    with open(commit) as f:
-        info = json.load(f)
-    info["frontier_manifest"] = [e[:4] for e in info["frontier_manifest"]]
-    with open(commit, "w") as f:
-        json.dump(info, f)
-
-    calls = _spy_verify(monkeypatch)
-    assert eng.run_job("old", seeds, 3)["done"]
-    assert calls[0][0] == set(range(C.N_BUCKETS))  # the old entry: all buckets
-    assert calls[1][0] == calls[1][1]  # the next round's entries carry masks
-    assert eng.client_payload("old", 3) == ref.client_payload("old", 3)
-    assert eng.payload_stats("old") == ref.payload_stats("old")
-    _check_payloads(eng, "old")
+    for wh, extra in (("five", [0]), ("four", [])):
+        eng = FrontierEngine(spark, str(tmp_path / wh), path, spec, cfg)
+        assert not eng.run_job("old", seeds, 3, max_rounds=1)["done"]
+        store = eng.store("old")
+        commit = os.path.join(store.round_dir(store.last_committed()), "commit.json")
+        with open(commit) as f:
+            info = json.load(f)
+        assert all(len(e) == 4 for e in info["frontier_manifest"])
+        info["frontier_manifest"] = [e + extra for e in info["frontier_manifest"]]
+        with open(commit, "w") as f:
+            json.dump(info, f)
+        assert eng.run_job("old", seeds, 3)["done"]
+        assert eng.client_payload("old", 3) == ref.client_payload("old", 3), wh
+        assert eng.payload_stats("old") == ref.payload_stats("old"), wh
+        _check_payloads(eng, "old")
 
 
 def test_bulk_write_is_not_coalesced(spark, corpus_1k, tmp_path, monkeypatch):

@@ -84,7 +84,7 @@ def test_bulk_round_keeps_the_cap(spark, tmp_path_factory, tmp_path, monkeypatch
     n = cap * ROWS_PER_TASK
     spec = C.CorpusSpec(n=n + 16)
     path = str(tmp_path_factory.mktemp("corpus_bulk") / "corpus")
-    build_corpus(spark, spec, path, slices=8)
+    build_corpus(spark, spec, path)
     seeds = [C.url_of(i, spec) for i in range(n)]
     phases, pages_n = _round_one(spark, tmp_path, (spec, path), seeds, monkeypatch)
     assert pages_n == cap
