@@ -269,21 +269,29 @@ def _splitmix64(z):
         return z ^ (z >> np.uint64(31))
 
 
-def raw_pixels(i: int, spec: CorpusSpec) -> np.ndarray:
-    """Deterministic per-image pixels: counter-mode SplitMix64, one
-    vectorized pass. The previous PCG64-per-image form spent ~60% of its
-    time CONSTRUCTING the generator (SeedSequence spin-up) — at 16-64 px
-    the setup dominated the bytes, and this function runs inside the
-    drain's verify kernel once per fetched URL (r7 verdict: the verify
-    kernel is the N→4N scaling residue). Streams are separated by mixing
-    the per-image seed through the finalizer before the counter ramp, so
-    adjacent i never see overlapping mixer inputs."""
-    w, h = dims_of(i)
+def raw_pixels_batch(ids, h: int, w: int, spec: CorpusSpec) -> np.ndarray:
+    """Deterministic pixels of pages `ids`, all drawn at (h, w), as one
+    (len(ids), h, w, 3) uint8 array: counter-mode SplitMix64. Each page's
+    stream seeds from the finalizer of ``seed * 10_000_019 + i`` (so
+    adjacent ids never see overlapping mixer inputs) and its bytes are
+    the finalizer of ``s0 + k * gamma`` for k = 1, 2, … — two
+    vectorized passes for the whole batch, not two per page (a per-page
+    call's numpy overhead dominated at 16-64 px; the drain's verify
+    kernel runs this for every fetched page, grouped by shape)."""
     n = h * w * 3
-    s0 = _splitmix64(np.uint64((spec.seed * 10_000_019 + i) & 0xFFFFFFFFFFFFFFFF))
-    k = np.arange(1, n // 8 + 2, dtype=np.uint64)
-    z = _splitmix64(s0 + k * _SM_GAMMA)
-    return z.view(np.uint8)[:n].reshape(h, w, 3)
+    ids = np.asarray(ids, np.int64).astype(np.uint64)
+    s0 = _splitmix64(np.uint64((spec.seed * 10_000_019) & 0xFFFFFFFFFFFFFFFF) + ids)
+    k = np.arange(1, -(-n // 8) + 1, dtype=np.uint64)
+    z = _splitmix64(s0[:, None] + k * _SM_GAMMA)
+    return z.view(np.uint8)[:, :n].reshape(len(ids), h, w, 3)
+
+
+def raw_pixels(i: int, spec: CorpusSpec) -> np.ndarray:
+    """Page i's pixels at its own dims_of(i): one row of raw_pixels_batch,
+    the generator the corpus build, the queries and the verify kernel
+    share."""
+    w, h = dims_of(i)
+    return raw_pixels_batch([i], h, w, spec)[0]
 
 
 def encode_image(arr: np.ndarray, fmt: str) -> bytes:

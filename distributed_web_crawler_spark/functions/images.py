@@ -1,8 +1,10 @@
 """Image payload decode + verification (north-rule X8, input_hint).
 
-Batch decode of point-read payloads in Arrow-fed pandas stages — never
-row-at-a-time Python; the corpus' `bytes` column is column-pruned out of
-the crawl (SURVEY.md §7 risk (e)).
+Verification of point-read payloads inside the crawl's Arrow-fed page
+pass, one batch at a time: each payload is inflated on its own, and
+everything after that (reference pixels, PSNR, gray32, phash) runs once
+per image shape on stacked arrays. The corpus' `bytes` column is
+column-pruned out of the crawl (SURVEY.md §7 risk (e)).
 
 The container has no PIL/libjpeg, so the wire format is the deterministic
 fake codec from fixtures/corpus.py (zlib-lossless "png", step-4-quantized
@@ -41,32 +43,58 @@ def decode_any(data: bytes):
     return np.asarray(Image.open(io.BytesIO(data)).convert("RGB"))
 
 
-def verify_batch(urls, payloads, fmts, captions, phashes, spec: C.CorpusSpec) -> dict:
-    """THE per-batch payload-invariant kernel (input_hint): decoded pixels
-    exact for PNG / PSNR≥40 dB for JPEG, phash equality, caption equality.
-    PSNR/exactness/gray32 are vectorized per decoded shape (≈3× faster than
-    per-image numpy calls — call overhead dominates at 16-64 px). The
-    crawl's page pass (sources/fetch.py) runs it on point-read payloads."""
+def verify_batch(ids, payloads, fmts, captions, phashes, spec: C.CorpusSpec) -> dict:
+    """THE per-batch payload-invariant kernel (input_hint) over pages `ids`:
+    decoded pixels exact for PNG / PSNR≥40 dB for JPEG, phash equality,
+    caption equality. The crawl's page pass (sources/fetch.py) runs it on
+    point-read payloads.
+
+    Work is grouped by shape, not done per page (call overhead dominates
+    at 16-64 px): each fake-codec payload is inflated and its bytes
+    joined with the rest of its (h, w) group into one (m, h, w, 3) array,
+    the group's reference pixels come from ONE
+    fixtures.corpus.raw_pixels_batch call, and PSNR, exactness and gray32
+    run on the whole group. A payload of another magic is decoded alone
+    by decode_any, whose PIL gate raises here. A payload that does not
+    decode, or whose dims are not dims_of(id), fails the page: pixels and
+    phash not ok, PSNR 0."""
+    import zlib
+
     import numpy as np
 
-    n = len(urls)
-    psnrs = np.empty(n)
-    pixels_ok = np.empty(n, dtype=bool)
+    ids = np.asarray(ids, np.int64)
+    n = len(ids)
+    psnrs = np.zeros(n)
+    pixels_ok = np.zeros(n, dtype=bool)
+    decoded = np.zeros(n, dtype=bool)
     caption_ok = np.empty(n, dtype=bool)
-    grays = np.empty((n, 32, 32))
-    decs, raws = [None] * n, [None] * n
-    by_shape: dict = {}
-    for k in range(n):
-        i = C.index_of_url(urls[k])
-        decs[k] = decode_any(payloads[k])
-        raws[k] = C.raw_pixels(i, spec)
+    grays = np.zeros((n, 32, 32))
+    ws, hs = C.dims_of(ids)
+    by_shape: dict = {}  # (h, w) -> ([batch position], [pixel bytes])
+    for k, (i, w, h, data) in enumerate(zip(ids.tolist(), ws.tolist(), hs.tolist(), payloads)):
         caption_ok[k] = captions[k] == C.caption_of(i, spec)
-        by_shape.setdefault(decs[k].shape, []).append(k)
-    for shape, ks in by_shape.items():
+        if data[:4] in (b"FPNG", b"FJPG"):
+            if data[4:8] != w.to_bytes(2, "little") + h.to_bytes(2, "little"):
+                continue
+            try:
+                buf = zlib.decompress(data[8:])
+            except zlib.error:
+                continue
+        else:
+            arr = decode_any(data)
+            if arr.shape != (h, w, 3):
+                continue
+            buf = arr.tobytes()
+        if len(buf) == h * w * 3:
+            ks, bufs = by_shape.setdefault((h, w), ([], []))
+            ks.append(k)
+            bufs.append(buf)
+    for (h, w), (ks, bufs) in by_shape.items():
         idx = np.asarray(ks)
-        d = np.stack([decs[k] for k in ks])  # uint8 — no float64 blow-up
-        rw = np.stack([raws[k] for k in ks])
         n_s = len(ks)
+        d = np.frombuffer(b"".join(bufs), np.uint8).reshape(n_s, h, w, 3)
+        rw = C.raw_pixels_batch(ids[idx], h, w, spec)
+        decoded[idx] = True
         # integer MSE: int16 diffs (range ±255) are EXACT — pixel diffs are
         # integers, so this is bit-identical to the float64 path at a
         # quarter of the memory traffic, and this kernel is bandwidth-bound
@@ -95,19 +123,17 @@ def verify_batch(urls, payloads, fmts, captions, phashes, spec: C.CorpusSpec) ->
         # previous fused 4-d fancy index was the verify stage's hot spot —
         # scattered (n,32,32,3) gathers ran 3.5× slower than this
         # stream-then-small-gather form.
-        h, w = shape[0], shape[1]
         yi = (np.arange(32) * h // 32).astype(np.intp)
         xi = (np.arange(32) * w // 32).astype(np.intp)
         g16 = d[..., 0].astype(np.uint16)
         g16 += d[..., 1]
         g16 += d[..., 2]
         grays[idx] = g16[:, yi[:, None], xi[None, :]] / 3.0
-    phash_ok = C.phash64_batch(grays) == np.asarray(phashes) if n else np.zeros(0, dtype=bool)
+    phash_ok = (C.phash64_batch(grays) == np.asarray(phashes)) & decoded if n else np.zeros(0, dtype=bool)
     return {
-        "url": urls,
+        "id": ids,
         "psnr": psnrs,
         "phash_ok": phash_ok,
         "caption_ok": caption_ok,
         "pixels_ok": pixels_ok,
     }
-

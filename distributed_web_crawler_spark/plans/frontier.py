@@ -18,8 +18,9 @@ Scale shape per round (what survives 1000 executors × 100 TB):
   its corpus bucket's fetch index and point-reads the payload from the
   bucket's shard (sources/fetch.py) — no corpus scan, no join, and no job
   runs before the page pass to find the pages.
-* one Python pass per page (sources/fetch.py): one mapInPandas task
-  reads each payload, verifies it and expands its links. Its link rows
+* one Python pass per page (sources/fetch.py): one mapInPandas task,
+  in the stage that scans the admitted frontier (no exchange in front of
+  it), reads each payload, verifies it and expands its links. Its link rows
   and per-batch verify partials (seen_bucket -1) flow into the fused
   write, whose stats carry the partials' fold.
 * dedup: no stage of its own. The raw candidate stream goes straight to
@@ -59,7 +60,7 @@ from ..fixtures import corpus as C
 from ..functions import bloom as B
 from ..functions import urls as U
 from ..sources.fetch import (
-    PARTIALS, PARTIALS_SCHEMA, expand_admitted, fetch_and_verify, fold_partials,
+    PARTIALS, PARTIALS_SCHEMA, expand_admitted, fetch_and_verify, fold_partials, page_tasks,
 )
 from ..operators.politeness import schedule
 from ..operators.robots import blocked_expr
@@ -1120,8 +1121,7 @@ class FrontierEngine:
         if rnd.sub == 0 and self.cfg.politeness is not None:
             paths, n = self._schedule(rnd, paths, n)
         rnd.n_admitted = n
-        # key of the page pass's exchange and its fetch-index lookup; the
-        # extraction reads the url
+        # the page pass's fetch-index key; the extraction reads the url
         rnd.admitted = self._read_components(paths).withColumn(
             "image_id", U.image_id_of(F.col("url"))
         )
@@ -1170,10 +1170,10 @@ class FrontierEngine:
         verify-partials rows (seen_bucket -1)."""
         if rnd.d + 1 >= rnd.depth_limit or rnd.n_admitted == 0:
             return None
-        # the pass's parallelism must not be bound to the frontier's file
-        # count — size it by the admitted rows (CPU-bound Python stage: a
-        # small round runs as 1 task, a bulk round at the 2× cores cap)
-        rnd.phases["page_tasks"] = sized_tasks(self.spark, rnd.n_admitted)
+        # the pass runs in the frontier scan's stage, narrowed by the
+        # admitted rows (CPU-bound Python stage: a small round runs as 1
+        # task, a bulk round as the scan's splits up to the 2× cores cap)
+        rnd.phases["page_tasks"] = page_tasks(rnd.admitted, rnd.n_admitted)
         if self.cfg.verify_payloads:
             pages = fetch_and_verify(self.corpus_path, rnd.admitted, self.spec, rnd.n_admitted)
         else:
@@ -1194,7 +1194,7 @@ class FrontierEngine:
         if not self.cfg.verify_payloads or rnd.n_admitted == 0:
             return None
         if rnd.payload is None:
-            rnd.phases["page_tasks"] = sized_tasks(self.spark, rnd.n_admitted)
+            rnd.phases["page_tasks"] = page_tasks(rnd.admitted, rnd.n_admitted)
             rnd.payload = self._verify_stats(rnd.admitted, rnd.n_admitted)
         return {k: (float(v) if v is not None else None) for k, v in rnd.payload.items()}
 

@@ -102,13 +102,34 @@ def open_index(corpus_path: str, bucket: int) -> tuple:
     return rec, memoryview(mm)[8 + rec.nbytes :]
 
 
+def _blobs_intact(corpus_path: str, n: int) -> bool:
+    """Every bucket's fetch index opens whole, holds the bucket's page
+    count and its last caption, and every shard holds the bytes its
+    index's last record points to."""
+    for b in range(C.N_BUCKETS):
+        try:
+            rec, captions = open_index(corpus_path, b)
+            if len(rec) != len(range(b, n, C.N_BUCKETS)):
+                return False
+            if len(rec) and (
+                len(captions) < rec["caption_off"][-1] + rec["caption_len"][-1]
+                or os.path.getsize(blob_path(corpus_path, b)) < rec["blob_offset"][-1] + rec["blob_len"][-1]
+            ):
+                return False
+        except (OSError, ValueError):  # missing, empty or shorter than its count
+            return False
+    return True
+
+
 def build_corpus(spark: SparkSession, spec: C.CorpusSpec, path: str) -> str:
-    """Distributed deterministic generation. Idempotent via a spec marker."""
+    """Distributed deterministic generation. Idempotent via a spec marker:
+    a corpus stamped with this spec is returned as is, unless a shard or
+    fetch index is missing or torn, which rebuilds it."""
     marker = os.path.join(path, "_SPEC")
     stamp = f"{_MARKER_VERSION}:{spec.n}:{spec.seed}:{spec.n_hosts}"
     if os.path.exists(marker):
         with open(marker) as f:
-            if f.read().strip() == stamp:
+            if f.read().strip() == stamp and _blobs_intact(path, spec.n):
                 return path
     # a stale shard or index of another build must never be read as this one's
     blob_dir = os.path.dirname(blob_path(path, 0))

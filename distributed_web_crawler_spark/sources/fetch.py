@@ -7,19 +7,20 @@ computed in the JVM), reads record ``i // N_BUCKETS`` of bucket
 ``i % N_BUCKETS``'s memory-mapped fetch index (sources/corpus_source.py)
 for its fmt, caption, phash and byte range, and point-reads the payload
 from the bucket's packed shard. No corpus scan, no join and no Spark job
-runs to find the pages. Rows are exchanged by image_id hash (_exchange
-says why not by bucket), and each batch is read in offset order per shard,
+runs to find the pages. Each batch is read in offset order per shard,
 seeking forward — the access pattern of ranged GETs against
 tar/WebDataset shards on object storage.
 
-A crawl round makes ONE Python pass over its pages: the same pandas task
-reads each payload, verifies it and expands the page's links, as the
-reference's worker fetches a page and returns its links in one task.
+A crawl round makes ONE Python pass over its pages, in the same stage
+that scans the frontier (no exchange in front of it; _page_pass says why
+none is needed): the same pandas task reads each payload, verifies it and
+expands the page's links, as the reference's worker fetches a page and
+returns its links in one task.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..fixtures import corpus as C
 from ..session import sized_tasks
@@ -35,28 +36,25 @@ PARTIALS = [c.split()[0] for c in PARTIALS_SCHEMA.split(", ")]
 PAGES_SCHEMA = "url string, host string, seen_bucket int, " + PARTIALS_SCHEMA
 
 
-def _exchange(df: DataFrame, n_rows: int) -> DataFrame:
-    """Exchange for the page pass (point-read, decode, verify, link
-    expansion), keyed by image_id hash.
+def _pages_in(admitted: DataFrame, n_rows: int) -> DataFrame:
+    """The page pass's input: the admitted frontier scan itself, narrowed
+    to session.sized_tasks(n_rows) partitions by a coalesce, which moves
+    no row. A round of a few dozen pages runs as 1 task, not one per scan
+    split, each paying a pandas-UDF task's fixed cost for a handful of
+    rows; a bulk round runs as the scan's own splits, at most the 2×
+    cores cap. The pass is never wider than the scan: Spark splits the
+    frontier's parts by bytes, a split holds whole parquet row groups,
+    and a part holds at most ~EngineConfig.max_group_rows rows (the
+    fused write's chunk guard)."""
+    pages = admitted.select("image_id", "url")
+    return pages.coalesce(sized_tasks(admitted.sparkSession, n_rows))
 
-    Keying by storage location — (bucket, offset-chunk) — looks natural but
-    is a CPU-skew trap: the corpus buckets by `i % 64`, which also fixes the
-    image DIMENSIONS, so a location-keyed task gets a single shape and the
-    64×64 tasks carry 16× the pixel work of the 16×16 ones; measured, that
-    skew alone capped the verify stage's 8→32-core speedup at ~1.3×.
-    Hashing on image_id gives every task the same shape mix (decode work is
-    uniform) while `_read_ranges` still seek-orders each batch per shard —
-    on object storage the per-task ranged GETs were independent anyway.
 
-    Row-sized (session.sized_tasks over the caller's row count): a round
-    of a few dozen pages runs as 1 task, not 2× cores tasks that each pay
-    a pandas-UDF task's fixed cost for a handful of rows; a bulk round
-    reaches the 2× cores cap, where finer tasks smooth residual
-    stragglers. The explicit numPartitions is also exempt from AQE
-    coalescing, which at bulk scale otherwise shrinks byte-small exchanges
-    under CPU-bound pandas stages (measured 17 tasks for a 330k-row decode
-    on 32 cores)."""
-    return df.repartition(sized_tasks(df.sparkSession, n_rows), F.col("image_id"))
+def page_tasks(admitted: DataFrame, n_rows: int) -> int:
+    """The page pass's task count, min(sized_tasks(n_rows), the scan's
+    splits), from the planned scan: planning lists no file (the frontier
+    reader listed them) and submits no Spark job."""
+    return _pages_in(admitted, n_rows).rdd.getNumPartitions()
 
 
 def _lookup(image_ids, corpus_path: str, indexes: dict):
@@ -130,12 +128,25 @@ def fold_partials(cols) -> dict:
 def _page_pass(
     admitted: DataFrame, n_rows: int, spec: C.CorpusSpec, corpus_path: str | None, links: bool
 ) -> DataFrame:
-    """The one pandas stage over a round's pages, behind one row-sized
-    image_id exchange. With `corpus_path` each batch's pages are looked up
-    in the fetch index (_lookup), point-read and verified
-    (functions.images.verify_batch) into one partials row, and a row that
-    is no corpus page yields nothing; with `links` each page's links are
-    expanded from its `url` (operators.extract.expand_links)."""
+    """The one pandas stage over a round's pages, run in the stage that
+    scans the admitted frontier (_pages_in). With `corpus_path` each
+    batch's pages are looked up in the fetch index (_lookup), point-read
+    and verified (functions.images.verify_batch) into one partials row,
+    and a row that is no corpus page yields nothing; with `links` each
+    page's links are expanded from its `url`
+    (operators.extract.expand_links).
+
+    No exchange feeds the pass, because every scan split already holds
+    the uniform shape mix that hashing on image_id would give. Per-page
+    work is set by the image DIMENSIONS, which page i takes
+    from `i % 16` (fixtures.corpus.dims_of), while every frontier
+    file-set is written bucketed on seen_bucket, a function of url_hash
+    that is independent of the page id. A split holding one storage
+    location would be the trap: the corpus buckets by `i % N_BUCKETS`,
+    which fixes the dims too, so a task keyed by (bucket, offset-chunk)
+    gets a single shape, and the 64×64 tasks carry 16× the pixel work of
+    the 16×16 ones (measured, that skew alone capped the verify stage's
+    8→32-core speedup at ~1.3×)."""
     cols = [c.split()[0] for c in PAGES_SCHEMA.split(", ")]
 
     def expand(batches):
@@ -153,7 +164,7 @@ def _page_pass(
                 urls = urls[pos]
                 if len(pos):
                     v = verify_batch(
-                        urls,
+                        rec["id"],
                         _read_ranges(rec["id"] % C.N_BUCKETS, rec["blob_offset"], rec["blob_len"], corpus_path),
                         np.asarray(FORMATS)[rec["fmt"]],
                         captions,
@@ -171,8 +182,7 @@ def _page_pass(
                 if len(out):
                     yield pd.DataFrame({"url": out, "host": hosts}).reindex(columns=cols)
 
-    pages = admitted.select("image_id", "url")
-    return _exchange(pages, n_rows).mapInPandas(expand, schema=PAGES_SCHEMA)
+    return _pages_in(admitted, n_rows).mapInPandas(expand, schema=PAGES_SCHEMA)
 
 
 def fetch_and_verify(

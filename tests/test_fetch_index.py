@@ -17,11 +17,16 @@ from distributed_web_crawler_spark.functions import urls as U
 from distributed_web_crawler_spark.oracle.crawler import crawl
 from distributed_web_crawler_spark.plans.frontier import EngineConfig, FrontierEngine
 from distributed_web_crawler_spark.sources import fetch
-from distributed_web_crawler_spark.sources.corpus_source import FORMATS, index_path, open_index
+from distributed_web_crawler_spark.sources.corpus_source import (
+    FORMATS, blob_path, build_corpus, index_path, open_index,
+)
 
 
 def test_fetch_index_equals_parquet_metadata(corpus_1k):
-    spec, path = corpus_1k
+    _check_index_equals_metadata(*corpus_1k)
+
+
+def _check_index_equals_metadata(spec, path):
     n = 0
     for b in range(C.N_BUCKETS):
         meta = pq.read_table(
@@ -48,8 +53,6 @@ def test_buckets_without_pages_have_empty_indexes(spark, tmp_path):
     """A corpus smaller than N_BUCKETS still has an index for every
     bucket, so a page id in a bucket without pages is past its (empty)
     index and dropped, never a missing-index error."""
-    from distributed_web_crawler_spark.sources.corpus_source import build_corpus
-
     spec = C.CorpusSpec(n=20)
     path = build_corpus(spark, spec, str(tmp_path / "corpus"))
     assert all(os.path.exists(index_path(path, b)) for b in range(C.N_BUCKETS))
@@ -73,6 +76,40 @@ def test_missing_index_raises(spark, corpus_1k, tmp_path):
         eng.run_job("nx", seed, 2)
     msg = str(err.value)
     assert repr(path) in msg and "rebuild" in msg, msg
+
+
+def _copy_corpus(src: str, path: str) -> str:
+    shutil.copytree(src, path)
+    shutil.copytree(src + "_blobs", path + "_blobs")
+    return path
+
+
+def test_build_corpus_rebuilds_a_missing_index(spark, corpus_1k, tmp_path):
+    """A corpus whose _SPEC stamp matches but whose index file is gone is
+    rebuilt, not returned as is."""
+    spec, src = corpus_1k
+    path = _copy_corpus(src, str(tmp_path / "corpus"))
+    os.remove(index_path(path, 5))
+    assert build_corpus(spark, spec, path) == path
+    assert os.path.exists(index_path(path, 5))
+    _check_index_equals_metadata(spec, path)
+
+
+def test_build_corpus_rebuilds_torn_files(spark, corpus_1k, tmp_path):
+    """A torn index (its count no longer fits the file) or a torn shard
+    (shorter than its index's last record reaches) rebuilds the corpus;
+    an intact one is kept."""
+    spec, src = corpus_1k
+    path = _copy_corpus(src, str(tmp_path / "corpus"))
+    assert build_corpus(spark, spec, path) == path
+    assert os.path.getmtime(index_path(path, 0)) == os.path.getmtime(index_path(src, 0))
+    sizes = {p: os.path.getsize(p) for p in (index_path(path, 9), blob_path(path, 12))}
+    for p in sizes:
+        with open(p, "r+b") as f:
+            f.truncate(sizes[p] - 100)
+    build_corpus(spark, spec, path)
+    assert {p: os.path.getsize(p) for p in sizes} == sizes
+    _check_index_equals_metadata(spec, path)
 
 
 def test_pages_outside_the_corpus_are_dropped(spark, corpus_1k, tmp_path):

@@ -1,24 +1,19 @@
-"""Row-sized Python stages: the exchange in front of a round's page pass
-(payload verify and link extraction), and the seen compaction's write,
-take their task count from a row count the engine already holds
-(session.sized_tasks) — one task per 256 rows, 2× cores for a bulk round —
-and each round's commit records the count it ran with."""
+"""Row-sized Python stages: a round's page pass (payload verify and link
+extraction) and the seen compaction's write take their task count from a
+row count the engine already holds (session.sized_tasks) — one task per
+256 rows, at most 2× cores. The page pass runs in the stage that scans
+the admitted frontier, with no exchange in front of it, so a bulk round
+runs as the scan's own splits below that cap; each round's commit
+records the count the pass ran with."""
 
 import os
 import re
 
 from distributed_web_crawler_spark.fixtures import corpus as C
 from distributed_web_crawler_spark.operators import components
-from distributed_web_crawler_spark.plans.frontier import EngineConfig, FrontierEngine
+from distributed_web_crawler_spark.plans.frontier import FRONTIER_SCHEMA, EngineConfig, FrontierEngine
 from distributed_web_crawler_spark.session import ROWS_PER_TASK, sized_tasks
 from distributed_web_crawler_spark.sources.corpus_source import build_corpus
-
-# the stage's own input exchange, first below it in the executed plan (a
-# 1-partition repartition plans as SinglePartition)
-_EXCHANGE = re.compile(
-    r"Exchange (SinglePartition|hashpartitioning\(image_id#\d+L?, (\d+)\)"
-    r"|RoundRobinPartitioning\((\d+)\))"
-)
 
 
 def test_sized_tasks(spark):
@@ -48,34 +43,69 @@ def _stage_plans(spark, monkeypatch):
     return plans
 
 
-def _input_partitions(plan: str) -> int:
-    m = _EXCHANGE.search(plan)
-    assert m, plan
-    return int(m.group(2) or m.group(3) or 1)
+def _status_store(spark):
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    return sc.statusStore()
+
+
+def _page_pass_stage_tasks(spark, after_job: int) -> list:
+    """Task counts of the completed stages, of jobs after `after_job`,
+    that run a MapInPandas (the page pass), from the status store's
+    stage data and RDD operation graphs."""
+    store = _status_store(spark)
+    graph = spark.sparkContext._jvm.org.apache.spark.ui.scope.RDDOperationGraph
+    jobs = store.jobsList(None)
+    stage_ids = set()
+    for i in range(jobs.size()):
+        if jobs.apply(i).jobId() > after_job:
+            ids = jobs.apply(i).stageIds()
+            stage_ids.update(ids.apply(k) for k in range(ids.size()))
+    out = []
+    for sid in sorted(stage_ids):
+        stage = store.lastStageAttempt(sid)
+        if stage.status().toString() != "COMPLETE":
+            continue  # a skipped copy of a stage an earlier job ran
+        if 'label="MapInPandas"' in graph.makeDotFile(store.operationGraphForStage(sid)):
+            out.append(stage.numTasks())
+    return out
+
+
+def _last_job(spark) -> int:
+    jobs = _status_store(spark).jobsList(None)
+    return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
 
 
 def _round_one(spark, tmp_path, corpus, seeds, monkeypatch):
+    """Run a verifying job's first extracting round. Returns its phases,
+    the page pass's executed plan and the task counts of the stages that
+    ran it."""
     spec, path = corpus
     plans = _stage_plans(spark, monkeypatch)
     eng = FrontierEngine(
         spark, str(tmp_path / "wh"), path, spec, EngineConfig(verify_payloads=True)
     )
+    eng.run_job("rs", seeds, 2, max_rounds=0)
+    before = _last_job(spark)
     eng.run_job("rs", seeds, 2, max_rounds=1)
     c = eng.store("rs").read_commit(1)
     assert c["payload"]["n"] == c["n_admitted"] == len(seeds)
     (pages,) = plans["expand"]
-    return c["phases"], _input_partitions(pages)
+    # the pass reads the frontier scan in its own stage: no exchange
+    # below the MapInPandas
+    assert "Exchange" not in pages.split("MapInPandas expand(", 1)[1], pages
+    return c["phases"], _page_pass_stage_tasks(spark, before), eng.store("rs")
 
 
 def test_one_seed_round_runs_few_tasks(spark, corpus_1k, tmp_path, monkeypatch):
     spec, _ = corpus_1k
-    phases, pages_n = _round_one(
+    phases, stage_tasks, _ = _round_one(
         spark, tmp_path, corpus_1k, [C.url_of(3, spec)], monkeypatch
     )
     # one task: the fused write repartitions by its own keys, so a
     # 1-partition page pass does not absorb the write's exchange
     # (test_new_url_path_has_one_exchange)
-    assert pages_n == 1
+    assert stage_tasks == [1]
     assert phases["page_tasks"] == 1
 
 
@@ -86,9 +116,13 @@ def test_bulk_round_keeps_the_cap(spark, tmp_path_factory, tmp_path, monkeypatch
     path = str(tmp_path_factory.mktemp("corpus_bulk") / "corpus")
     build_corpus(spark, spec, path)
     seeds = [C.url_of(i, spec) for i in range(n)]
-    phases, pages_n = _round_one(spark, tmp_path, (spec, path), seeds, monkeypatch)
-    assert pages_n == cap
-    assert phases["page_tasks"] == cap
+    phases, stage_tasks, store = _round_one(spark, tmp_path, (spec, path), seeds, monkeypatch)
+    # the pass runs as the seed frontier's scan splits, never more than
+    # the cap, and the commit records what it ran
+    splits = spark.read.schema(FRONTIER_SCHEMA).parquet(store.new_path(0)).rdd.getNumPartitions()
+    assert 1 < splits
+    assert stage_tasks == [min(cap, splits)]
+    assert phases["page_tasks"] == min(cap, splits)
 
 
 def test_compact_seen_writes_one_file_per_bucket_from_few_tasks(spark, corpus_1k, tmp_path):
