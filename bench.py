@@ -11,9 +11,6 @@ Env:
   BENCH_ONLY          'crawl' | 'queries' (default: both)
   BENCH_CRAWL_N       corpus pages for the crawl bench (default 500000)
   BENCH_CRAWL_SEEDS   frontier seed count (default 100000)
-  BENCH_VERIFY_PAYLOADS  '1' (default) decode+verify payloads; '0' drain
-                      metadata only — isolates the Spark dataflow's scaling
-                      from the decode kernel's memory-bandwidth ceiling
   BENCH_QUERY_TRIALS  best-of-k per query (default 2) — the min is the
                       recorded number; all trials land in queries_trials
   BENCH_GRADED        '1' runs the drain with politeness ON (budget wide
@@ -130,7 +127,6 @@ def _one_crawl_trial(spark, spec, corpus_path):
         EngineConfig(
             politeness=PolitenessPolicy(round_duration_ms=1_000_000_000) if graded else None,
             politeness_grade="pmod(url_hash, 8)" if graded else None,
-            verify_payloads=os.environ.get("BENCH_VERIFY_PAYLOADS", "1") != "0",
         ),
     )
     seeds = sorted({url_of(xxh64(f"bench:seed:{j}") % spec.n, spec) for j in range(CRAWL_SEEDS)})

@@ -38,17 +38,13 @@ def page_index(url: Column) -> Column:
     """Inverse of fixtures url_of — NULL unless the FULL URL matches the
     corpus scheme. The host anchor matters: a foreign-host URL that merely
     ends in /p/<i> (e.g. a malformed client seed) must not resolve to a
-    corpus page, or the fetch join would hand it another site's payload
-    and extraction would follow that page's links."""
+    corpus page, or the page pass (sources/fetch.py, keyed on this) would
+    fetch another site's payload for it."""
     return F.regexp_extract(url, r"^https?://h\d+\.test/p/(\d+)$", 1).try_cast("long")
 
 
 def path_of(url: Column) -> Column:
     return F.regexp_replace(url, r"^https?://[^/]+", "")
-
-
-def image_id_of(url: Column) -> Column:
-    return F.format_string("img%08d", page_index(url))
 
 
 def seen_bucket(hash_col: Column, n_buckets: int) -> Column:

@@ -18,11 +18,12 @@ Scale shape per round (what survives 1000 executors × 100 TB):
   its corpus bucket's fetch index and point-reads the payload from the
   bucket's shard (sources/fetch.py) — no corpus scan, no join, and no job
   runs before the page pass to find the pages.
-* one Python pass per page (sources/fetch.py): one mapInPandas task,
-  in the stage that scans the admitted frontier (no exchange in front of
-  it), reads each payload, verifies it and expands its links. Its link rows
-  and per-batch verify partials (seen_bucket -1) flow into the fused
-  write, whose stats carry the partials' fold.
+* one Python pass per page (sources/fetch.py): every round, one
+  mapInPandas task, in the stage that scans the admitted frontier (no
+  exchange in front of it), reads each payload, verifies it and expands its
+  links. Its link rows and per-batch verify partials (seen_bucket -1) flow
+  into the fused write, whose stats carry the partials' fold; at the last
+  depth the pass runs without links and its partials are collected.
 * dedup: no stage of its own. The raw candidate stream goes straight to
   the bucketed write (ONE exchange, by seen-bucket); each write task dedups
   its group with numpy, probes the bucket's Bloom blob (no broadcast of
@@ -59,9 +60,7 @@ from ..catalog.tables import JobStateStore
 from ..fixtures import corpus as C
 from ..functions import bloom as B
 from ..functions import urls as U
-from ..sources.fetch import (
-    PARTIALS, PARTIALS_SCHEMA, expand_admitted, fetch_and_verify, fold_partials, page_tasks,
-)
+from ..sources.fetch import PARTIALS, PARTIALS_SCHEMA, fetch_and_verify, fold_partials, page_tasks
 from ..operators.politeness import schedule
 from ..operators.robots import blocked_expr
 from ..oracle.crawler import PolitenessPolicy, RobotsPolicy
@@ -121,20 +120,20 @@ class EngineConfig:
     # without politeness.
     politeness_grade: Optional[str] = None
     bloom: B.BloomParams = field(default_factory=B.BloomParams)
-    # per-row PSNR/phash/caption invariants: each round verifies its
-    # admitted pages in the same Python pass that extracts their links
-    # (at the last depth, in a pass of its own) and commits the stats in
-    # its commit.json
-    verify_payloads: bool = False
-    # accepted for perfbench; delete at the next benchmark change (Bloom
-    # is the only seen path, so False raises; the other two are ignored)
+    # accepted for perfbench; delete at the next benchmark change. Bloom is
+    # the only seen path and every round fetches and verifies its pages
+    # (per-row PSNR/phash/caption invariants, committed in its commit.json),
+    # so False raises for the first two; the other two are ignored
     use_bloom: bool = True
+    verify_payloads: bool = True
     detailed_metrics: bool = True
     pipeline_verify: bool = False
 
     def __post_init__(self):
         if not self.use_bloom:
             raise ValueError("use_bloom=False: the Bloom seen path is the only one")
+        if not self.verify_payloads:
+            raise ValueError("verify_payloads=False: every round fetches and verifies its pages")
 
 
 @dataclass
@@ -776,9 +775,9 @@ class FrontierEngine:
 
     def unverified_rounds(self, job_id: str) -> List[int]:
         """Committed rounds that ADMITTED pages but carry no payload-verify
-        stats. A round's stats are part of its commit, so under
-        verify_payloads this is always empty; it lists the rounds a job
-        committed while verify_payloads was off."""
+        stats. Every round verifies its pages and commits their stats with
+        it, so only a store written while the verify could still be
+        switched off has such rounds."""
         store = self.store(job_id)
         verified = self.payload_stats(job_id)
         return [
@@ -1122,9 +1121,7 @@ class FrontierEngine:
             paths, n = self._schedule(rnd, paths, n)
         rnd.n_admitted = n
         # the page pass's fetch-index key; the extraction reads the url
-        rnd.admitted = self._read_components(paths).withColumn(
-            "image_id", U.image_id_of(F.col("url"))
-        )
+        rnd.admitted = self._read_components(paths).withColumn("page_id", U.page_index(F.col("url")))
 
     def _schedule(self, rnd: _Round, paths: List[str], n_pending: int) -> tuple:
         """Politeness sub-round 0: rank the depth's `n_pending` rows once
@@ -1163,21 +1160,18 @@ class FrontierEngine:
     def _extract(self, rnd: _Round) -> Optional[DataFrame]:
         """The next depth's keyed candidate rows (lazy), or None at the
         last depth (F4) or when nothing was admitted: the page pass
-        (sources/fetch.py), verifying each payload under verify_payloads.
-        The rows keep duplicates, seen URLs and (under robots, flagged
-        `_blocked`) blocked URLs — the fused write counts and drops the
-        blocked rows, then dedups and probes the rest — plus the pass's
-        verify-partials rows (seen_bucket -1)."""
+        (sources/fetch.py), which fetches and verifies each page before
+        expanding its links. The rows keep duplicates, seen URLs and
+        (under robots, flagged `_blocked`) blocked URLs — the fused write
+        counts and drops the blocked rows, then dedups and probes the rest
+        — plus the pass's verify-partials rows (seen_bucket -1)."""
         if rnd.d + 1 >= rnd.depth_limit or rnd.n_admitted == 0:
             return None
         # the pass runs in the frontier scan's stage, narrowed by the
         # admitted rows (CPU-bound Python stage: a small round runs as 1
         # task, a bulk round as the scan's splits up to the 2× cores cap)
         rnd.phases["page_tasks"] = page_tasks(rnd.admitted, rnd.n_admitted)
-        if self.cfg.verify_payloads:
-            pages = fetch_and_verify(self.corpus_path, rnd.admitted, self.spec, rnd.n_admitted)
-        else:
-            pages = expand_admitted(rnd.admitted, self.spec, rnd.n_admitted)
+        pages = fetch_and_verify(self.corpus_path, rnd.admitted, self.spec, rnd.n_admitted)
         keyed = self._with_keys(pages)
         cols = ["url", "host", "url_hash", "seen_bucket", "depth", *PARTIALS]
         if self.cfg.robots is not None:
@@ -1189,9 +1183,9 @@ class FrontierEngine:
 
     def _finalize_verify(self, rnd: _Round) -> Optional[dict]:
         """This round's payload stats for commit.json (None when the round
-        verified nothing): the fused write's fold, or at the last depth
+        admitted nothing): the fused write's fold, or at the last depth
         the verify run here."""
-        if not self.cfg.verify_payloads or rnd.n_admitted == 0:
+        if rnd.n_admitted == 0:
             return None
         if rnd.payload is None:
             rnd.phases["page_tasks"] = page_tasks(rnd.admitted, rnd.n_admitted)

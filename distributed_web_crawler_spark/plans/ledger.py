@@ -74,8 +74,7 @@ class Delta:
     upsert `ups` rows (existing keys update in place, new keys append) —
     the O(Δ)-per-op analog of the reference lock server's per-row SQL
     (Server/LockServer/Database/main.go:69-101) and the documented Iceberg
-    MERGE INTO swap point. The whole-table-rewrite fn contract remains
-    accepted for blind overwrites (write())."""
+    MERGE INTO swap point."""
 
     ups: Optional[pd.DataFrame] = None
     dels: Sequence = field(default_factory=tuple)
@@ -172,19 +171,11 @@ class _PandasTable:
             n += 1
         return n
 
-    def write(self, df: pd.DataFrame) -> None:
-        """Blind overwrite (single-writer contexts / tests) — always a full
-        snapshot."""
-        while not self.table.publish(self._stage(df)):
-            pass
-        self._memo = None  # blind write: version unknown, drop the memo
-
     def mutate(self, fn):
-        """Optimistic read-modify-write. `fn(df) -> (Delta | new_df | None,
-        result)`; None skips the write (read-only decision). A Delta stages
-        ONLY the touched rows/keys — O(Δ) write amplification per op — with
-        a full snapshot every FULL_EVERY versions to bound chains; a
-        DataFrame stages a full rewrite (legacy contract). On a CAS
+        """Optimistic read-modify-write. `fn(df) -> (Delta | None, result)`;
+        None skips the write (read-only decision). The Delta stages ONLY
+        the touched rows/keys — O(Δ) write amplification per op — with a
+        full snapshot every FULL_EVERY versions to bound chains. On a CAS
         conflict — another process committed between our read and publish —
         re-read and re-apply `fn`, so the decision is always made against
         the state it ends up being applied to (exactly-once across
@@ -201,15 +192,11 @@ class _PandasTable:
             out, result = fn(df)
             if out is None:
                 return result
-            if isinstance(out, Delta):
-                folded = fold_delta(df, out.ups, out.dels, self.key)
-                if self._chain_len(v0) + 1 >= self.FULL_EVERY:
-                    path = self._stage(folded)
-                else:
-                    path = self._stage_delta(out, v0)
+            folded = fold_delta(df, out.ups, out.dels, self.key)
+            if self._chain_len(v0) + 1 >= self.FULL_EVERY:
+                path = self._stage(folded)
             else:
-                folded = out
-                path = self._stage(out)
+                path = self._stage_delta(out, v0)
             if self.table.publish(path, expected_version=v0):
                 self._memo = ((v0 or 0) + 1, folded)
                 return result

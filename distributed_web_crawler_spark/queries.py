@@ -1028,7 +1028,7 @@ def q_cdc_changes(spark, sf_dir):
 
     from .catalog.changes import changes_df, snapshots
     from .catalog.tables import AtomicTable
-    from .plans.ledger import _PandasTable
+    from .plans.ledger import Delta, _PandasTable
 
     import shutil
 
@@ -1038,8 +1038,13 @@ def q_cdc_changes(spark, sf_dir):
     wh = tempfile.mkdtemp(prefix="cdc_wh_")
     try:
         t = _PandasTable(wh, "orders_cdc", {"o_orderkey": "int64", "o_orderstatus": "object"})
+
+        def commit(new):
+            # replace the table's rows by `new`, as one keyed delta
+            t.mutate(lambda df: (Delta(ups=new, dels=sorted(set(df.o_orderkey) - set(new.o_orderkey))), None))
+
         v1 = base[base.o_orderkey % 40 == 0].sort_values("o_orderkey").reset_index(drop=True)
-        t.write(v1)
+        commit(v1)
         v2 = v1[v1.o_orderkey % 120 != 0].copy()
         v2.loc[v2.o_orderkey % 80 == 0, "o_orderstatus"] = "X"
         v2 = (
@@ -1047,7 +1052,7 @@ def q_cdc_changes(spark, sf_dir):
             .sort_values("o_orderkey")
             .reset_index(drop=True)
         )
-        t.write(v2)
+        commit(v2)
         snaps = snapshots(AtomicTable(wh, "orders_cdc"))
         assert snaps == [1, 2], snaps  # fresh dir -> the oracle's literal _version
         # changes_df materializes the diff driver-side (createDataFrame from

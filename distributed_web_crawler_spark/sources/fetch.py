@@ -2,7 +2,7 @@
 to the frontier (SURVEY.md J5).
 
 A page is fetched by key, as the reference's worker fetches a URL: the
-page pass takes page i from the row's image_id (functions.urls.page_index,
+page pass takes page i from the row's page_id (functions.urls.page_index,
 computed in the JVM), reads record ``i // N_BUCKETS`` of bucket
 ``i % N_BUCKETS``'s memory-mapped fetch index (sources/corpus_source.py)
 for its fmt, caption, phash and byte range, and point-reads the payload
@@ -11,16 +11,16 @@ runs to find the pages. Each batch is read in offset order per shard,
 seeking forward — the access pattern of ranged GETs against
 tar/WebDataset shards on object storage.
 
-A crawl round makes ONE Python pass over its pages, in the same stage
-that scans the frontier (no exchange in front of it; _page_pass says why
-none is needed): the same pandas task reads each payload, verifies it and
-expands the page's links, as the reference's worker fetches a page and
-returns its links in one task.
+Every crawl round makes ONE Python pass over its pages (fetch_and_verify),
+in the same stage that scans the frontier (no exchange in front of it;
+fetch_and_verify says why none is needed): the same pandas task reads each
+payload, verifies it and expands the page's links, as the reference's
+worker fetches a page and returns its links in one task.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 from ..fixtures import corpus as C
 from ..session import sized_tasks
@@ -37,7 +37,8 @@ PAGES_SCHEMA = "url string, host string, seen_bucket int, " + PARTIALS_SCHEMA
 
 
 def _pages_in(admitted: DataFrame, n_rows: int) -> DataFrame:
-    """The page pass's input: the admitted frontier scan itself, narrowed
+    """The page pass's input: the admitted frontier scan's (page_id, url),
+    a NULL page_id (a URL outside the corpus scheme) mapped to -1, narrowed
     to session.sized_tasks(n_rows) partitions by a coalesce, which moves
     no row. A round of a few dozen pages runs as 1 task, not one per scan
     split, each paying a pandas-UDF task's fixed cost for a handful of
@@ -46,7 +47,7 @@ def _pages_in(admitted: DataFrame, n_rows: int) -> DataFrame:
     frontier's parts by bytes, a split holds whole parquet row groups,
     and a part holds at most ~EngineConfig.max_group_rows rows (the
     fused write's chunk guard)."""
-    pages = admitted.select("image_id", "url")
+    pages = admitted.select(F.coalesce("page_id", F.lit(-1)).alias("page_id"), "url")
     return pages.coalesce(sized_tasks(admitted.sparkSession, n_rows))
 
 
@@ -57,18 +58,16 @@ def page_tasks(admitted: DataFrame, n_rows: int) -> int:
     return _pages_in(admitted, n_rows).rdd.getNumPartitions()
 
 
-def _lookup(image_ids, corpus_path: str, indexes: dict):
+def _lookup(page_ids, corpus_path: str, indexes: dict):
     """Look a batch's pages up by id in their buckets' fetch indexes
     (`indexes` caches the ones this task has mapped). Returns the batch
     positions that are corpus pages and, aligned with them, their index
-    records and captions. A row whose image_id holds no page id (its URL
-    is outside the corpus scheme) or whose id is past the index is left
-    out, as an inner join with the corpus leaves it out."""
+    records and captions. A row whose page id is -1 (its URL is outside
+    the corpus scheme) or past its bucket's index is left out, as an
+    inner join with the corpus leaves it out."""
     import numpy as np
-    import pandas as pd
 
-    digits = pd.Series(image_ids, dtype=object).str[3:]
-    i = np.where(digits.str.fullmatch(r"[0-9]{1,18}", na=False), digits, -1).astype(np.int64)
+    i = np.asarray(page_ids, np.int64)
     out = np.zeros(len(i), INDEX_DTYPE)
     captions = {}
     for b in np.unique(i[i >= 0] % C.N_BUCKETS).tolist():
@@ -125,19 +124,22 @@ def fold_partials(cols) -> dict:
     return out
 
 
-def _page_pass(
-    admitted: DataFrame, n_rows: int, spec: C.CorpusSpec, corpus_path: str | None, links: bool
+def fetch_and_verify(
+    corpus_path: str, admitted: DataFrame, spec: C.CorpusSpec, n_rows: int, links: bool = True,
 ) -> DataFrame:
     """The one pandas stage over a round's pages, run in the stage that
-    scans the admitted frontier (_pages_in). With `corpus_path` each
-    batch's pages are looked up in the fetch index (_lookup), point-read
-    and verified (functions.images.verify_batch) into one partials row,
-    and a row that is no corpus page yields nothing; with `links` each
-    page's links are expanded from its `url`
-    (operators.extract.expand_links).
+    scans the admitted frontier (_pages_in). `admitted` holds (url,
+    page_id); `n_rows`, the admitted row count the caller already holds,
+    sizes the stage's task count. Each batch's pages are looked up in the
+    fetch index (_lookup), point-read and verified against the generator
+    (functions.images.verify_batch: decoded pixels exact for PNG /
+    PSNR≥40 dB for JPEG, phash equality, caption equality) into one
+    partials row, and a row that is no corpus page yields nothing; with
+    `links` each page's links are expanded from its `url`
+    (operators.extract.expand_links). Returns PAGES_SCHEMA rows.
 
     No exchange feeds the pass, because every scan split already holds
-    the uniform shape mix that hashing on image_id would give. Per-page
+    the uniform shape mix that hashing on the page id would give. Per-page
     work is set by the image DIMENSIONS, which page i takes
     from `i % 16` (fixtures.corpus.dims_of), while every frontier
     file-set is written bucketed on seen_bucket, a function of url_hash
@@ -158,46 +160,26 @@ def _page_pass(
 
         indexes: dict = {}  # the bucket indexes this task has mapped
         for pdf in batches:
-            urls = pdf["url"].to_numpy(str)
-            if corpus_path is not None:
-                pos, rec, captions = _lookup(pdf["image_id"].to_numpy(), corpus_path, indexes)
-                urls = urls[pos]
-                if len(pos):
-                    v = verify_batch(
-                        rec["id"],
-                        _read_ranges(rec["id"] % C.N_BUCKETS, rec["blob_offset"], rec["blob_len"], corpus_path),
-                        np.asarray(FORMATS)[rec["fmt"]],
-                        captions,
-                        rec["phash"],
-                        spec,
-                    )
-                    part = fold_partials({
-                        "n": np.ones(len(pos)), "n_pixels_ok": v["pixels_ok"],
-                        "n_phash_ok": v["phash_ok"], "n_caption_ok": v["caption_ok"],
-                        "min_psnr": v["psnr"],
-                    })
-                    yield pd.DataFrame([[None, None, -1, *part.values()]], columns=cols)
+            pos, rec, captions = _lookup(pdf["page_id"].to_numpy(), corpus_path, indexes)
+            if not len(pos):
+                continue
+            v = verify_batch(
+                rec["id"],
+                _read_ranges(rec["id"] % C.N_BUCKETS, rec["blob_offset"], rec["blob_len"], corpus_path),
+                np.asarray(FORMATS)[rec["fmt"]],
+                captions,
+                rec["phash"],
+                spec,
+            )
+            part = fold_partials({
+                "n": np.ones(len(pos)), "n_pixels_ok": v["pixels_ok"],
+                "n_phash_ok": v["phash_ok"], "n_caption_ok": v["caption_ok"],
+                "min_psnr": v["psnr"],
+            })
+            yield pd.DataFrame([[None, None, -1, *part.values()]], columns=cols)
             if links:
-                _, out, hosts = expand_links(urls, spec)
+                _, out, hosts = expand_links(pdf["url"].to_numpy(str)[pos], spec)
                 if len(out):
                     yield pd.DataFrame({"url": out, "host": hosts}).reindex(columns=cols)
 
     return _pages_in(admitted, n_rows).mapInPandas(expand, schema=PAGES_SCHEMA)
-
-
-def fetch_and_verify(
-    corpus_path: str, admitted: DataFrame, spec: C.CorpusSpec, n_rows: int, links: bool = True,
-) -> DataFrame:
-    """Fetch + full per-row invariants vs the generator (input_hint):
-    decoded pixels exact for PNG / PSNR≥40 dB for JPEG, phash equality,
-    caption equality — and, with `links`, each page's links, in the same
-    pass. `admitted` holds (url, image_id); returns PAGES_SCHEMA rows.
-    `n_rows`, the admitted row count the caller already holds, sizes the
-    stage's task count."""
-    return _page_pass(admitted, n_rows, spec, corpus_path, links)
-
-
-def expand_admitted(admitted: DataFrame, spec: C.CorpusSpec, n_rows: int) -> DataFrame:
-    """The same pass without payload verify: the admitted rows' links,
-    with no corpus read."""
-    return _page_pass(admitted, n_rows, spec, None, True)

@@ -273,7 +273,7 @@ def audit_crawl_plans(spark, sections, failures):
     corpus = build_corpus(spark, spec, "/tmp/plan_audit_corpus")
     idx = (3, 7, 35)
     adm = spark.createDataFrame(pd.DataFrame({"url": [url_of(i, spec) for i in idx]}))
-    adm = adm.withColumn("image_id", UU.image_id_of(F.col("url")))
+    adm = adm.withColumn("page_id", UU.page_index(F.col("url")))
     plan = plan_of(fetch_and_verify(corpus, adm, spec, len(idx)))
     below = plan.split("MapInPandas", 1)[1] if "MapInPandas" in plan else ""
     missing = []

@@ -49,7 +49,6 @@ def main():
     cfg = EngineConfig(
         politeness=PolitenessPolicy() if args.politeness else None,
         robots=RobotsPolicy(),
-        verify_payloads=True,
     )
     eng = FrontierEngine(spark, args.warehouse, args.corpus, spec, cfg)
     svc = CrawlService(engine=eng, ledger=JobLedger(args.warehouse), cache=JobCache(args.warehouse))

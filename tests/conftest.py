@@ -8,6 +8,21 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from distributed_web_crawler_spark.session import get_spark  # noqa: E402
 
 
+def _check_payloads(eng, job_id) -> None:
+    """Every round of the job that admitted pages fetched and verified
+    each of them: its committed payload stats count n_admitted pages, all
+    passing the pixel, phash and caption checks (the fixture's pages all
+    do), and no admitting round lacks stats."""
+    assert eng.unverified_rounds(job_id) == []
+    store = eng.store(job_id)
+    for r in store.committed_rounds():
+        c = store.read_commit(r)
+        if c.get("n_admitted", 0) > 0:
+            p = c["payload"]
+            counts = [p["n"], p["n_pixels_ok"], p["n_phash_ok"], p["n_caption_ok"]]
+            assert counts == [c["n_admitted"]] * 4, (r, p)
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app="tests", cores=4, shuffle_partitions=4)

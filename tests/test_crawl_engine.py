@@ -6,6 +6,7 @@ exactly. Also covers resume (W2) and payload verification (input_hint)."""
 import os
 
 import pytest
+from conftest import _check_payloads
 
 from distributed_web_crawler_spark.fixtures import corpus as C
 from distributed_web_crawler_spark.oracle.crawler import (
@@ -41,6 +42,7 @@ def assert_matches_oracle(engine, job_id, seed_i, depth, oracle_res, spec, check
         got = [(r["depth"], r["sub_round"], r["n_admitted"]) for r in m]
         want = [(d, s, len(urls)) for d, s, urls in oracle_res.schedule]
         assert got == want
+    _check_payloads(engine, job_id)
 
 
 @pytest.mark.parametrize("depth", [1, 2, 3])
@@ -167,7 +169,7 @@ def test_resume_mid_crawl(spark, corpus_1k, tmp_path):
 def test_payload_verification(spark, corpus_1k, tmp_path):
     spec, _ = corpus_1k
     seed_i = pick_seed(spec)
-    cfg = EngineConfig(verify_payloads=True)
+    cfg = EngineConfig()
     eng = engine_for(spark, tmp_path, corpus_1k, cfg)
     eng.run_job("pay", C.url_of(seed_i, spec), 2)
     store = eng.store("pay")
@@ -362,7 +364,7 @@ def test_verifying_round_runs_one_python_pass(spark, corpus_1k, tmp_path, monkey
     spec, _ = corpus_1k
     seed_i = pick_seed(spec)
     rounds = []
-    eng = engine_for(spark, tmp_path, corpus_1k, EngineConfig(verify_payloads=True))
+    eng = engine_for(spark, tmp_path, corpus_1k, EngineConfig())
     eng.run_job("one", C.url_of(seed_i, spec), 2, max_rounds=1, on_round=rounds.append)
     assert stages == ["expand"], stages
     (write,) = [p for p in writes if "MapInPandas" in p]
@@ -405,11 +407,11 @@ def test_pipelined_verify_same_stats_and_results(spark, corpus_1k, tmp_path):
     spec, _ = corpus_1k
     seed_i = pick_seed(spec)
     sync = engine_for(
-        spark, tmp_path / "a", corpus_1k, EngineConfig(verify_payloads=True)
+        spark, tmp_path / "a", corpus_1k, EngineConfig()
     )
     piped = engine_for(
         spark, tmp_path / "b", corpus_1k,
-        EngineConfig(verify_payloads=True, pipeline_verify=True),
+        EngineConfig(pipeline_verify=True),
     )
     rs = sync.run_job("pay", C.url_of(seed_i, spec), 3)
     rp = piped.run_job("pay", C.url_of(seed_i, spec), 3)
@@ -421,7 +423,7 @@ def test_pipelined_verify_same_stats_and_results(spark, corpus_1k, tmp_path):
     # a cut after one round commits that round's stats; the resume adds
     # the rest, equal to the uninterrupted run's
     cut = engine_for(
-        spark, tmp_path / "c", corpus_1k, EngineConfig(verify_payloads=True)
+        spark, tmp_path / "c", corpus_1k, EngineConfig()
     )
     assert not cut.run_job("res", C.url_of(seed_i, spec), 3, max_rounds=1)["done"]
     assert sorted(cut.payload_stats("res")) == [1]
@@ -447,7 +449,7 @@ def test_pipelined_verify_with_politeness_subrounds(spark, corpus_1k, tmp_path):
     pol = PolitenessPolicy(round_duration_ms=500)
     mk = lambda sub, pv: engine_for(  # noqa: E731
         spark, tmp_path / sub, corpus_1k,
-        EngineConfig(politeness=pol, verify_payloads=True, pipeline_verify=pv),
+        EngineConfig(politeness=pol, pipeline_verify=pv),
     )
     sync, piped, cut = mk("a", False), mk("b", True), mk("c", False)
     rs = sync.run_job("p", C.url_of(seed_i, spec), 2)

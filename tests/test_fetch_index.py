@@ -56,7 +56,7 @@ def test_buckets_without_pages_have_empty_indexes(spark, tmp_path):
     spec = C.CorpusSpec(n=20)
     path = build_corpus(spark, spec, str(tmp_path / "corpus"))
     assert all(os.path.exists(index_path(path, b)) for b in range(C.N_BUCKETS))
-    pos, rec, captions = fetch._lookup([C.image_id(i) for i in (3, 19, 20, 25, 57)], path, {})
+    pos, rec, captions = fetch._lookup([3, 19, 20, 25, 57], path, {})
     assert pos.tolist() == [0, 1] and rec["id"].tolist() == [3, 19]
     assert captions == [C.caption_of(3, spec), C.caption_of(19, spec)]
 
@@ -71,7 +71,7 @@ def test_missing_index_raises(spark, corpus_1k, tmp_path):
     shutil.copytree(src + "_blobs", path + "_blobs")
     seed = C.url_of(7, spec)
     os.remove(index_path(path, C.bucket_of(7)))
-    eng = FrontierEngine(spark, str(tmp_path / "wh"), path, spec, EngineConfig(verify_payloads=True))
+    eng = FrontierEngine(spark, str(tmp_path / "wh"), path, spec, EngineConfig())
     with pytest.raises(Exception) as err:
         eng.run_job("nx", seed, 2)
     msg = str(err.value)
@@ -128,7 +128,7 @@ def test_pages_outside_the_corpus_are_dropped(spark, corpus_1k, tmp_path):
         f"http://{wrong_host}/p/11",
         C.url_of(12, spec) + "\r",
     ]
-    eng = FrontierEngine(spark, str(tmp_path / "wh"), path, spec, EngineConfig(verify_payloads=True))
+    eng = FrontierEngine(spark, str(tmp_path / "wh"), path, spec, EngineConfig())
     assert eng.run_job("odd", [C.url_of(i, spec) for i in good] + odd, 2)["done"]
 
     want = set().union(*(crawl(i, 2, spec).seen for i in good))
@@ -165,7 +165,7 @@ def test_verifying_crawl_plans_read_no_corpus(spark, corpus_1k, tmp_path):
         return {xs.apply(k).executionId(): xs.apply(k).physicalPlanDescription() for k in range(xs.size())}
 
     before = max(executions(), default=-1)
-    eng = FrontierEngine(spark, str(tmp_path / "wh"), path, spec, EngineConfig(verify_payloads=True))
+    eng = FrontierEngine(spark, str(tmp_path / "wh"), path, spec, EngineConfig())
     seeds = [C.url_of(i, spec) for i in range(0, 60, 3)]
     assert eng.run_job("pl", seeds, 2)["done"]
     assert eng.store("pl").last_committed() == 2

@@ -22,7 +22,7 @@ def test_manifest_bounded_over_40_subrounds(spark, corpus_1k, tmp_path):
     # round_duration 500 ms -> max_per_round = 1 for every host
     seeds = [C.url_of(i, spec) for i in range(0, N_SEEDS * 10, 10)]
     assert all(C.host_of(i, spec) == 0 for i in range(0, N_SEEDS * 10, 10))
-    cfg = dict(seen_buckets=8, compact_seen_every=8, verify_payloads=False)
+    cfg = dict(seen_buckets=8, compact_seen_every=8)
     eng = FrontierEngine(
         spark, str(tmp_path / "wh"), corpus, spec,
         EngineConfig(

@@ -9,6 +9,8 @@ import json
 import multiprocessing as mp
 import os
 
+from conftest import _check_payloads
+
 from distributed_web_crawler_spark.fixtures import corpus as C
 from distributed_web_crawler_spark.oracle.crawler import crawl
 
@@ -73,9 +75,14 @@ def test_two_masters_drain_shared_ledger(spark, tmp_path):
     # none double-run (JVM startup skew can legitimately let one master
     # grab more — the invariant is the partition, not the balance)
     assert sorted(all_jobs) == [f"J{k}" for k in range(len(seeds))]
-    # every result equals the oracle crawl
+    # every result equals the oracle crawl, and every round fetched and
+    # verified its pages
+    from distributed_web_crawler_spark.plans.frontier import EngineConfig, FrontierEngine
+
+    eng = FrontierEngine(spark, wh, corpus_path, spec, EngineConfig(seen_buckets=8))
     by_job = {d["job_id"]: d for dm in per_master for d in dm}
     for k, s in enumerate(seeds):
         oracle = crawl(s, DEPTH, spec)
         got = [sorted(level) for level in by_job[f"J{k}"]["results"]]
         assert got == oracle.levels_sorted(), f"J{k}"
+        _check_payloads(eng, f"J{k}")

@@ -22,7 +22,7 @@ def test_run_round_failure_releases_caches(spark, corpus_1k, tmp_path, monkeypat
         str(tmp_path / "wh"),
         path,
         spec,
-        EngineConfig(verify_payloads=True),
+        EngineConfig(),
     )
     before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     calls = {"n": 0}
@@ -65,7 +65,7 @@ def test_refused_schedule_round_leaves_nothing_and_resumes_exact(
     seed_i = next(i for i in range(spec.n) if shares_a_host(i))
     seed = C.url_of(seed_i, spec)
     pol, rob = PolitenessPolicy(round_duration_ms=500), RobotsPolicy()
-    cfg = EngineConfig(politeness=pol, robots=rob, verify_payloads=True, seen_buckets=8)
+    cfg = EngineConfig(politeness=pol, robots=rob, seen_buckets=8)
     ref = FrontierEngine(spark, str(tmp_path / "ref"), path, spec, cfg)
     assert ref.run_job("j", seed, 3)["done"]
 

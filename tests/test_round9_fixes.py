@@ -132,7 +132,7 @@ def test_one_verify_per_admitting_round(spark, tmp_path):
     corpus = build_corpus(spark, spec, str(tmp_path / "corpus"))
     eng = FR.FrontierEngine(
         spark, str(tmp_path / "wh"), corpus, spec,
-        FR.EngineConfig(verify_payloads=True),
+        FR.EngineConfig(),
     )
     rounds, verifies = [], []
     orig_round, orig_verify = FR.FrontierEngine._run_round, FR.fetch_and_verify

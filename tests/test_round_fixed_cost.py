@@ -9,6 +9,7 @@ import os
 import re
 
 import pandas as pd
+from conftest import _check_payloads
 from pyspark.sql import functions as F
 
 from distributed_web_crawler_spark.fixtures import corpus as C
@@ -23,14 +24,6 @@ def _entries(eng, job_id) -> list:
     """Every committed manifest entry of a job, as (round, entry)."""
     store = eng.store(job_id)
     return [(r, e) for r in store.committed_rounds() for e in store.read_commit(r)["frontier_manifest"]]
-
-
-def _check_payloads(eng, job_id) -> None:
-    store = eng.store(job_id)
-    for r in store.committed_rounds():
-        c = store.read_commit(r)
-        if c.get("n_admitted", 0) > 0:
-            assert c["payload"]["n"] == c["n_admitted"], (r, c["payload"])
 
 
 def test_index_lookup_is_page_index(spark, corpus_1k):
@@ -54,12 +47,15 @@ def test_index_lookup_is_page_index(spark, corpus_1k):
         "http://h0001.test/p/99999999999999999999",
         "",
     ]
+    admitted = spark.createDataFrame(pd.DataFrame({"url": urls})).withColumn(
+        "page_id", U.page_index(F.col("url"))
+    )
     rows = (
-        spark.createDataFrame(pd.DataFrame({"url": urls}))
-        .select("url", U.page_index(F.col("url")).alias("i"), U.image_id_of(F.col("url")).alias("image_id"))
+        fetch._pages_in(admitted, len(urls))
+        .select("url", "page_id", U.page_index(F.col("url")).alias("i"))
         .collect()
     )
-    pos, rec, captions = fetch._lookup([r["image_id"] for r in rows], path, {})
+    pos, rec, captions = fetch._lookup([r["page_id"] for r in rows], path, {})
     want = [k for k, r in enumerate(rows) if r["i"] is not None and 0 <= r["i"] < spec.n]
     assert pos.tolist() == want, [rows[k]["url"] for k in pos]
     assert rec["id"].tolist() == [rows[k]["i"] for k in want]
@@ -93,7 +89,7 @@ def test_every_round_job_belongs_to_a_sql_execution(spark, corpus_1k, tmp_path):
     bucket dirs, inferring the corpus schema, finding the corpus buckets —
     submits no Spark job of its own."""
     spec, path = corpus_1k
-    eng = FrontierEngine(spark, str(tmp_path / "wh"), path, spec, EngineConfig(verify_payloads=True))
+    eng = FrontierEngine(spark, str(tmp_path / "wh"), path, spec, EngineConfig())
     seeds = [C.url_of(i, spec) for i in range(120)]
     before = max(_job_ids(spark), default=-1)
     assert eng.run_job("fx", seeds, 2)["done"]
@@ -114,7 +110,7 @@ def test_every_entry_kind_has_four_elements(spark, corpus_1k, tmp_path):
     [relpath, depth, n_rows, due_sub], and every admitting round, the
     reseed drain included, verifies each admitted page."""
     spec, path = corpus_1k
-    eng = FrontierEngine(spark, str(tmp_path / "wh"), path, spec, EngineConfig(verify_payloads=True))
+    eng = FrontierEngine(spark, str(tmp_path / "wh"), path, spec, EngineConfig())
     seeds = [C.url_of(i, spec) for i in range(3, 40, 3)]
     assert eng.run_job("mk", seeds, 3)["done"]
     victims = [C.url_of(i, spec) for i in (3, 6)]
@@ -141,7 +137,7 @@ def test_politeness_rounds_verify_every_admitted_page(spark, corpus_1k, tmp_path
         spark, str(tmp_path / "wh"), path, spec,
         EngineConfig(
             politeness=PolitenessPolicy(round_duration_ms=500), frontier_compact_every=2,
-            seen_buckets=8, verify_payloads=True,
+            seen_buckets=8,
         ),
     )
     assert eng.run_job("pm", seeds, 2)["done"]
@@ -161,7 +157,7 @@ def test_four_element_entries_resume(spark, corpus_1k, tmp_path):
     run's."""
     spec, path = corpus_1k
     seeds = [C.url_of(i, spec) for i in range(5, 60, 5)]
-    cfg = EngineConfig(verify_payloads=True)
+    cfg = EngineConfig()
     ref = FrontierEngine(spark, str(tmp_path / "ref"), path, spec, cfg)
     assert ref.run_job("old", seeds, 3)["done"]
 

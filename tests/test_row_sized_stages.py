@@ -83,7 +83,7 @@ def _round_one(spark, tmp_path, corpus, seeds, monkeypatch):
     spec, path = corpus
     plans = _stage_plans(spark, monkeypatch)
     eng = FrontierEngine(
-        spark, str(tmp_path / "wh"), path, spec, EngineConfig(verify_payloads=True)
+        spark, str(tmp_path / "wh"), path, spec, EngineConfig()
     )
     eng.run_job("rs", seeds, 2, max_rounds=0)
     before = _last_job(spark)

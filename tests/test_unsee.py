@@ -14,6 +14,7 @@ without disturbing the client payload's depth structure."""
 
 import pandas as pd
 import pytest
+from conftest import _check_payloads
 
 from distributed_web_crawler_spark.fixtures import corpus as C
 from distributed_web_crawler_spark.plans.frontier import EngineConfig, FrontierEngine
@@ -116,6 +117,7 @@ def test_unsee_reseed_recrawls_at_original_depths(spark, corpus_1k, tmp_path):
     # (hash, url, depth) row set matches the original crawl exactly
     assert _seen_rows(eng, "u3") == before
     assert eng.client_payload("u3", 3) == payload_before
+    _check_payloads(eng, "u3")
 
 
 def test_compaction_folds_tombstones_and_vacuum_reclaims(spark, corpus_1k, tmp_path):
@@ -376,6 +378,7 @@ def test_reseed_under_politeness_and_robots(spark, corpus_1k, tmp_path):
     assert res["n_unseen"] == len(victims) == res["n_reseeded"]
     assert eng.run_job("p1", seed, 3)["done"]
     assert _seen_rows(eng, "p1") == before
+    _check_payloads(eng, "p1")
 
 
 def test_service_recrawl_refreshes_cache(spark, corpus_1k, tmp_path):
@@ -470,9 +473,10 @@ def test_seen_filter_config_is_pinned_per_job(spark, corpus_1k, tmp_path):
         resumed(bloom=BloomParams(n_bits=1 << 16)).run_job("u9", seed, 2)
     # the ORIGINAL config keeps working (resume of a done job is a no-op)
     assert resumed().run_job("u9", seed, 2)["done"]
-    # the removed no-Bloom path is refused up front
-    with pytest.raises(ValueError, match="use_bloom"):
-        EngineConfig(use_bloom=False)
+    # the removed no-Bloom and unverified paths are refused up front
+    for removed in ("use_bloom", "verify_payloads"):
+        with pytest.raises(ValueError, match=removed):
+            EngineConfig(**{removed: False})
 
     def rewrite(key, value):
         for r in store.committed_rounds():

@@ -108,8 +108,7 @@ def test_verify_stats_survive_vacuum(spark, corpus_1k, tmp_path):
     pol = PolitenessPolicy(round_duration_ms=4000)
     eng = FrontierEngine(
         spark, str(tmp_path / "wh"), path, spec,
-        EngineConfig(politeness=pol, robots=RobotsPolicy(), seen_buckets=8,
-                     verify_payloads=True),
+        EngineConfig(politeness=pol, robots=RobotsPolicy(), seen_buckets=8),
     )
     seed_i = next(i for i in range(spec.n) if len(C.out_links(i, spec)) >= 3)
     eng.run_job("v", C.url_of(seed_i, spec), 2)
