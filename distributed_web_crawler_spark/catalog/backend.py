@@ -19,6 +19,8 @@ commit_round           one transaction: append the round's data files +
                        write the loop state into the snapshot's summary
                        properties (Iceberg snapshots carry a string map)
 read_commit            snapshot summary of the round's snapshot
+format (on every       table format-version: a reader refuses a table of a
+  commit)              version it does not implement
 last_committed         current snapshot pointer (catalog CAS)
 committed_rounds       snapshot log
 abort_round            no-op: uncommitted files are invisible; orphan

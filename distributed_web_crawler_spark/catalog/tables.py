@@ -14,13 +14,16 @@ tests/test_catalog_backend.py:
 * ``JobStateStore`` — per-crawl-job round log. Each round directory holds
   ONE bucket-partitioned parquet file-set of the round's newly-discovered
   URLs (``new/`` — doubling as the round's seen-set delta), an optional
-  ``deferred/`` set (politeness remainder), metrics, and touched Bloom
-  bucket blobs; the round becomes visible only when ``commit.json`` lands
-  via atomic rename. The PENDING FRONTIER is a manifest in the commit —
-  ``[relpath, depth, n_rows]`` file-set references — so depths the round
-  did not touch carry over by reference and are never rewritten, and both
-  Bloom blobs and frontier data inherit across rounds the way Iceberg
-  snapshots share unchanged data files.
+  ``deferred/`` set (the depth's whole politeness schedule, one
+  ``due=<s>`` slice per sub-round), metrics, and touched Bloom bucket
+  blobs; the round becomes visible only when ``commit.json`` lands via
+  atomic rename. The PENDING FRONTIER is a manifest in the commit —
+  ``[relpath, depth, n_rows, due_sub]`` file-set references — so depths
+  the round did not touch carry over by reference and are never
+  rewritten, and both Bloom blobs and frontier data inherit across rounds
+  the way Iceberg snapshots share unchanged data files. Every commit is
+  stamped ``"format": STORE_FORMAT`` (Iceberg's table ``format-version``);
+  read_commit refuses any other stamp, and no other layout is read.
 * ``AtomicTable`` — tiny versioned table (job ledger, job cache, robots
   cache): write new version dir, flip a CURRENT pointer file atomically.
 """
@@ -32,6 +35,9 @@ import os
 import shutil
 import tempfile
 from typing import Dict, List, Optional
+
+# the job-store layout this module writes and reads, stamped on every commit
+STORE_FORMAT = 1
 
 
 def _atomic_write(path: str, data: bytes) -> None:
@@ -71,7 +77,8 @@ class JobStateStore:
         return self.new_path(r)
 
     def deferred_path(self, r: int) -> str:
-        """Politeness remainder of the depth being drained (same layout)."""
+        """The politeness schedule of the depth being drained, one
+        ``due=<s>`` slice per sub-round (same layout)."""
         return os.path.join(self.round_dir(r), "deferred")
 
     def fcompact_path(self, r: int) -> str:
@@ -128,8 +135,7 @@ class JobStateStore:
         return os.path.join(self.seen_compact_dir(), f"c{upto:05d}_{uuid.uuid4().hex[:12]}")
 
     def bloom_blob_path(self, r: int, bucket: int, chunk: int = 0) -> str:
-        """Blob file for (round, bucket[, write-chunk]). Chunk 0 keeps the
-        historic name so unchunked stores read back unchanged."""
+        """Blob file for (round, bucket[, write-chunk])."""
         name = f"bucket_{bucket:05d}.bin" if chunk == 0 else f"bucket_{bucket:05d}.c{chunk}.bin"
         return os.path.join(self.round_dir(r), "blooms", name)
 
@@ -145,29 +151,37 @@ class JobStateStore:
         return best
 
     def read_commit(self, r: int) -> dict:
+        """Round r's commit. Raises ValueError for a commit of any store
+        format but STORE_FORMAT: no other layout is read."""
         with open(self._commit_path(r)) as f:
-            return json.load(f)
+            info = json.load(f)
+        if info.get("format") != STORE_FORMAT:
+            raise ValueError(
+                f"job store {self.dir!r}: round {r} was committed in store format "
+                f"{info.get('format')!r}, this engine reads format {STORE_FORMAT}; "
+                "rerun in a fresh warehouse"
+            )
+        return info
 
     def commit_round(self, r: int, info: dict, touched_blooms: Optional[List[int]] = None) -> None:
         """Atomically publish round r. `info` must carry the loop state
         needed for resume (depth, sub_round, pending count, done flag).
         Bloom manifest: bucket -> round whose blob is current."""
         prev = self.last_committed()
+        info = dict(info)
         manifest: Dict[str, int] = {}
         if prev is not None:
-            manifest = self.read_commit(prev).get("bloom_manifest", {})
+            prev_info = self.read_commit(prev)
+            manifest = prev_info["bloom_manifest"]
+            # the seen-filter identity (params/seen_buckets, written by the
+            # seed commit) inherits like the bloom manifest, so resume
+            # validation reads the LAST commit only — round 0 may be expired
+            info.setdefault("seen_filter", prev_info["seen_filter"])
         for b in touched_blooms or []:
             manifest[str(b)] = r
-        info = dict(info)
+        info["format"] = STORE_FORMAT
         info["round"] = r
         info["bloom_manifest"] = manifest
-        # the seen-filter identity (kind/params/seen_buckets, written by
-        # the seed commit) inherits like the bloom manifest, so resume
-        # validation reads the LAST commit only — round 0 may be expired
-        if "seen_filter" not in info and prev is not None:
-            meta = self.read_commit(prev).get("seen_filter")
-            if meta is not None:
-                info["seen_filter"] = meta
         _atomic_write(self._commit_path(r), json.dumps(info).encode())
 
     def abort_round(self, r: int) -> None:
@@ -210,6 +224,9 @@ class JobStateStore:
         }
         if last is None:
             return stats
+        # read first: a commit of another store format raises here, before
+        # any file is swept
+        commit = self.read_commit(last)
         import time
 
         for name in os.listdir(self.dir):
@@ -222,9 +239,8 @@ class JobStateStore:
                     continue  # possibly an ACTIVE round mid-write — keep
                 self.abort_round(int(name[1:]))
                 stats["aborted_rounds"] += 1
-        commit = self.read_commit(last)
-        live_blob = {int(b): rr for b, rr in commit.get("bloom_manifest", {}).items()}
-        live_paths = {os.path.join(self.dir, e[0]) for e in commit.get("frontier_manifest", [])}
+        live_blob = {int(b): rr for b, rr in commit["bloom_manifest"].items()}
+        live_paths = {os.path.join(self.dir, e[0]) for e in commit["frontier_manifest"]}
         for r in self.committed_rounds():
             blooms_dir = os.path.join(self.round_dir(r), "blooms")
             if os.path.isdir(blooms_dir):
@@ -235,12 +251,9 @@ class JobStateStore:
                         stats["stale_blooms"] += 1
             # deferred sets are laid out as deferred/due=<s>/... — one root
             # per scheduled sub-round; sweep each slice the manifest no
-            # longer references (it was admitted), then the empty root.
-            # A root that is ITSELF referenced (a store from the pre-due
-            # whole-root layout) is live in its entirety — never sweep its
-            # seen_bucket=* children out from under the manifest.
+            # longer references (it was admitted), then the empty root
             def_path = self.deferred_path(r)
-            if os.path.isdir(def_path) and def_path not in live_paths:
+            if os.path.isdir(def_path):
                 for child in os.listdir(def_path):
                     p = os.path.join(def_path, child)
                     if p not in live_paths:
@@ -253,7 +266,7 @@ class JobStateStore:
             # (drained, or re-merged into a later generation) — same rule
             # as deferred slices
             fc_path = self.fcompact_path(r)
-            if os.path.isdir(fc_path) and fc_path not in live_paths:
+            if os.path.isdir(fc_path):
                 for child in os.listdir(fc_path):
                     p = os.path.join(fc_path, child)
                     if p not in live_paths:
@@ -344,8 +357,7 @@ class JobStateStore:
     def read_seen_compact(self) -> Optional[dict]:
         """{"upto": r, "path": relpath} of the live compaction, or None —
         the HIGHEST-upto published pointer file (see set_seen_compact's
-        append-only scheme); the legacy single seen_compact.json (pre-r4
-        stores) participates with its own upto.
+        append-only scheme).
 
         Race handling: vacuum() deletes superseded pointer files, so a
         file from this listing may be GONE by the time it is opened. A
@@ -359,11 +371,6 @@ class JobStateStore:
         terminates (bounded here as a belt against pathological churn)."""
         for _ in range(16):
             best = None
-            try:
-                with open(os.path.join(self.dir, "seen_compact.json")) as f:
-                    best = json.load(f)
-            except FileNotFoundError:
-                pass
             vanished = False
             if os.path.isdir(self.dir):
                 for nm in os.listdir(self.dir):
@@ -433,7 +440,7 @@ class JobStateStore:
         r = self.last_committed() if r is None else r
         if r is None:
             return {}
-        manifest = self.read_commit(r).get("bloom_manifest", {})
+        manifest = self.read_commit(r)["bloom_manifest"]
         by_round: Dict[int, List[str]] = {}
         for rr in set(manifest.values()):
             d = os.path.join(self.round_dir(rr), "blooms")

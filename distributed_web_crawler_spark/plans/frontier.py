@@ -60,7 +60,7 @@ from ..catalog.tables import JobStateStore
 from ..fixtures import corpus as C
 from ..functions import bloom as B
 from ..functions import urls as U
-from ..sources.fetch import PARTIALS, PARTIALS_SCHEMA, fetch_and_verify, fold_partials, page_tasks
+from ..sources.fetch import PARTIALS, PARTIALS_SCHEMA, fetch_and_verify, fold_partials
 from ..operators.politeness import schedule
 from ..operators.robots import blocked_expr
 from ..oracle.crawler import PolitenessPolicy, RobotsPolicy
@@ -160,7 +160,7 @@ def _seen_inserts(r: int, info: dict) -> int:
     0 (the seed write is both frontier and seen delta), afterwards the
     round's crawl discoveries plus unsee reseeds."""
     if r == 0:
-        return info.get("n_pending_after", 0)
+        return info["n_pending_after"]
     return info.get("n_new", 0) + info.get("reseed", 0)
 
 
@@ -275,18 +275,12 @@ class FrontierEngine:
         """The blob-layout identity of this engine's seen-filter config,
         persisted in the seed commit and carried forward by commit_round.
         A job's blob files are only interpretable under the config that
-        wrote them: blob bytes of another filter kind, bloom bits read
-        under different size params, or the parquet layout read under a
-        different seen_buckets yield garbage probe verdicts whose FALSE
-        side is trusted as definitely-new, i.e. silent duplicate
-        crawling. `kind` stays in the identity so a store written by a
-        non-bloom filter is refused instead of read as bloom bits."""
+        wrote them: bloom bits read under different size params, or the
+        parquet layout read under a different seen_buckets, yield garbage
+        probe verdicts whose FALSE side is trusted as definitely-new,
+        i.e. silent duplicate crawling."""
         return {
-            "kind": "bloom",
             "seen_buckets": self.cfg.seen_buckets,
-            # stores written without the filter carry False and have no
-            # blobs for their rounds, so they must still be refused
-            "use_bloom": True,
             "n_bits": self.cfg.bloom.n_bits,
             "n_hashes": self.cfg.bloom.n_hashes,
         }
@@ -296,19 +290,25 @@ class FrontierEngine:
         config other than the one that wrote it (ADVICE r7: a silent
         filter swap reinterprets the blob bytes; false positives are
         rescued by the exact re-check but false negatives duplicate
-        crawls with no error). Pre-r8 stores carry no metadata — accepted
-        as-is, the caller owns config continuity for those."""
-        stored = info.get("seen_filter")
-        if stored is None:
-            return
-        current = self._filter_meta()
+        crawls with no error)."""
+        stored, current = info["seen_filter"], self._filter_meta()
         if stored != current:
             raise ValueError(
                 f"seen-filter config mismatch: job store was written under "
                 f"{stored}, engine configured with {current}; resume with "
-                "the original EngineConfig (filter kind, params, "
-                "seen_buckets) or start a fresh job"
+                "the original EngineConfig (filter params, seen_buckets) "
+                "or start a fresh job"
             )
+
+    def _last_checked(self, store: JobStateStore) -> Optional[int]:
+        """The store's last committed round (None for a new job), its
+        commit read and checked before the caller touches any file:
+        read_commit refuses another store format, _check_filter_meta
+        another seen-filter config."""
+        last = store.last_committed()
+        if last is not None:
+            self._check_filter_meta(store.read_commit(last))
+        return last
 
     def _grade_col(self):
         """cfg.politeness_grade as a Column (None when unset) — resolved
@@ -362,9 +362,7 @@ class FrontierEngine:
         # compacted table persists the column — compact_seen writes this
         # exact view). It powers aged/TTL recrawl:
         # unsee_matching("seen_round <= k") re-crawls everything discovered
-        # up to round k (round→time via commit-file mtimes). Pre-column
-        # compactions read NULL → coalesce to the compaction's upto — a
-        # conservative (newer-looking) migration default.
+        # up to round k (round→time via commit-file mtimes).
         schema = "url_hash long, url string, depth int, seen_bucket int, seen_round int"
 
         def read(p: str, c: int, cols: Optional[List[str]] = None) -> DataFrame:
@@ -734,7 +732,7 @@ class FrontierEngine:
 
         groups = defaultdict(list)
         for e in manifest:
-            if (e[3] if len(e) > 3 else 0) == 0:
+            if e[3] == 0:
                 groups[e[1]].append(e)
         out = list(manifest)
         t0 = time.monotonic()
@@ -775,9 +773,11 @@ class FrontierEngine:
 
     def unverified_rounds(self, job_id: str) -> List[int]:
         """Committed rounds that ADMITTED pages but carry no payload-verify
-        stats. Every round verifies its pages and commits their stats with
-        it, so only a store written while the verify could still be
-        switched off has such rounds."""
+        stats: perfbench's safety check. Every round verifies
+        its pages and commits their stats with it, and the read refuses a
+        store of any earlier format, so a store written while the verify
+        could be switched off can no longer be read; the list is empty
+        unless a round committed without its stats."""
         store = self.store(job_id)
         verified = self.payload_stats(job_id)
         return [
@@ -873,7 +873,7 @@ class FrontierEngine:
         import pandas as pd
 
         store = self.store(job_id)
-        last = store.last_committed()
+        last = self._last_checked(store)
         if last is None:
             raise ValueError(f"unsee_urls: job {job_id!r} has no committed rounds")
         store.abort_round(last + 1)  # crash cleanup, same as resume
@@ -908,7 +908,7 @@ class FrontierEngine:
         original depths — is shared with unsee_urls. One full seen scan,
         one pass: a maintenance-op cost profile, same as compact_seen."""
         store = self.store(job_id)
-        last = store.last_committed()
+        last = self._last_checked(store)
         if last is None:
             raise ValueError(f"unsee_matching: job {job_id!r} has no committed rounds")
         store.abort_round(last + 1)
@@ -925,7 +925,6 @@ class FrontierEngine:
         """Shared tombstone+reseed commit path; `tomb` must hold exact
         current seen rows (url, host, url_hash, seen_bucket, depth)."""
         prev = store.read_commit(r - 1)
-        self._check_filter_meta(prev)
         # the tombstone write touches no blob (bloom cannot delete; the
         # probe's exact re-check rescues stale positives). The reseed write
         # re-adds into the previous blobs, a no-op for bits already set.
@@ -978,7 +977,7 @@ class FrontierEngine:
             {
                 "depth": -1 if reset else prev["depth"],
                 "sub_round": -1 if reset else prev["sub_round"],
-                "depth_limit": prev.get("depth_limit"),
+                "depth_limit": prev["depth_limit"],
                 "n_pending_after": n_pending,
                 "frontier_manifest": manifest,
                 "done": n_pending == 0,
@@ -1003,7 +1002,7 @@ class FrontierEngine:
         hook (W2). Returns a summary dict."""
         assert depth >= 1
         store = self.store(job_id)
-        last = store.last_committed()
+        last = self._last_checked(store)
         if last is None:
             # crash cleanup for a death BETWEEN the round-0 staging writes
             # and commit_round(0): abort_round is a no-op unless an
@@ -1015,8 +1014,7 @@ class FrontierEngine:
         else:
             store.abort_round(last + 1)  # crash cleanup: drop uncommitted staging
         info = store.read_commit(last)
-        self._check_filter_meta(info)
-        depth_limit = info.get("depth_limit", depth)
+        depth_limit = info["depth_limit"]
         rounds_done = 0
 
         while not info.get("done"):
@@ -1075,21 +1073,13 @@ class FrontierEngine:
     def _cursor(self, rnd: _Round) -> None:
         """The depth and sub-round this round drains. The pending frontier
         is a MANIFEST of committed file-sets ([relpath, depth, n_rows,
-        due_sub]; a fifth element, the corpus_mask of stores committed
-        before the fetch index, is ignored); the depth cursor, the
-        no-politeness admitted count and every later sub-round's admitted
-        count are manifest arithmetic — zero Spark jobs — and only the
-        file-sets the round actually drains are ever opened."""
+        due_sub]); the depth cursor, the no-politeness admitted count and
+        every later sub-round's admitted count are manifest arithmetic —
+        zero Spark jobs — and only the file-sets the round actually drains
+        are ever opened."""
         prev = rnd.store.read_commit(rnd.r - 1)
-        manifest = prev.get("frontier_manifest")
-        if manifest is None:
-            raise ValueError(
-                f"job store at {rnd.store.dir!r} was committed by a pre-manifest layout "
-                "(no frontier_manifest in commit.json); rerun the job in a fresh "
-                "warehouse — old stores are not migrated"
-            )
-        rnd.manifest = manifest
-        rnd.d = int(min(e[1] for e in manifest))
+        rnd.manifest = prev["frontier_manifest"]
+        rnd.d = int(min(e[1] for e in rnd.manifest))
         rnd.sub = int(prev["sub_round"] + 1 if prev["depth"] == rnd.d else 0)
 
     def _admit(self, rnd: _Round) -> None:
@@ -1106,14 +1096,11 @@ class FrontierEngine:
         if rnd.sub == 0:
             rnd.consumed = entries_d
         else:
-            rnd.consumed = [e for e in entries_d if len(e) > 3 and e[3] == rnd.sub]
+            rnd.consumed = [e for e in entries_d if e[3] == rnd.sub]
             if not rnd.consumed:
                 raise ValueError(
                     f"no frontier slice due at depth {d} sub-round {rnd.sub}: "
-                    f"schedule slices must be contiguous ({entries_d}). A "
-                    "3-element entry here means the store was committed by "
-                    "the pre-due-slice layout — rerun the job in a fresh "
-                    "warehouse (old stores are not migrated)."
+                    f"schedule slices must be contiguous ({entries_d})"
                 )
         paths = [os.path.join(rnd.store.dir, e[0]) for e in rnd.consumed]
         n = sum(e[2] for e in rnd.consumed)
@@ -1170,7 +1157,6 @@ class FrontierEngine:
         # the pass runs in the frontier scan's stage, narrowed by the
         # admitted rows (CPU-bound Python stage: a small round runs as 1
         # task, a bulk round as the scan's splits up to the 2× cores cap)
-        rnd.phases["page_tasks"] = page_tasks(rnd.admitted, rnd.n_admitted)
         pages = fetch_and_verify(self.corpus_path, rnd.admitted, self.spec, rnd.n_admitted)
         keyed = self._with_keys(pages)
         cols = ["url", "host", "url_hash", "seen_bucket", "depth", *PARTIALS]
@@ -1188,7 +1174,6 @@ class FrontierEngine:
         if rnd.n_admitted == 0:
             return None
         if rnd.payload is None:
-            rnd.phases["page_tasks"] = page_tasks(rnd.admitted, rnd.n_admitted)
             rnd.payload = self._verify_stats(rnd.admitted, rnd.n_admitted)
         return {k: (float(v) if v is not None else None) for k, v in rnd.payload.items()}
 

@@ -309,14 +309,6 @@ class JobLedger:
         m = df[df["job_id"] == job_id]
         return None if m.empty else m.iloc[0].to_dict()
 
-    def to_spark(self, spark):
-        pdf = self._t.read()
-        return spark.createDataFrame(
-            pdf,
-            "job_id string, client_id string, seed_url string, depth long, priority long, "
-            "state string, owner string, assigned_at double, last_round long",
-        )
-
 
 _CACHE_COLS = {
     "seed_url": "object",

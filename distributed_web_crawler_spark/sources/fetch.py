@@ -51,13 +51,6 @@ def _pages_in(admitted: DataFrame, n_rows: int) -> DataFrame:
     return pages.coalesce(sized_tasks(admitted.sparkSession, n_rows))
 
 
-def page_tasks(admitted: DataFrame, n_rows: int) -> int:
-    """The page pass's task count, min(sized_tasks(n_rows), the scan's
-    splits), from the planned scan: planning lists no file (the frontier
-    reader listed them) and submits no Spark job."""
-    return _pages_in(admitted, n_rows).rdd.getNumPartitions()
-
-
 def _lookup(page_ids, corpus_path: str, indexes: dict):
     """Look a batch's pages up by id in their buckets' fetch indexes
     (`indexes` caches the ones this task has mapped). Returns the batch

@@ -5,18 +5,21 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from distributed_web_crawler_spark.catalog.tables import STORE_FORMAT  # noqa: E402
 from distributed_web_crawler_spark.session import get_spark  # noqa: E402
 
 
 def _check_payloads(eng, job_id) -> None:
-    """Every round of the job that admitted pages fetched and verified
-    each of them: its committed payload stats count n_admitted pages, all
-    passing the pixel, phash and caption checks (the fixture's pages all
-    do), and no admitting round lacks stats."""
+    """Every commit of the job carries the store format stamp, and every
+    round that admitted pages fetched and verified each of them: its
+    committed payload stats count n_admitted pages, all passing the pixel,
+    phash and caption checks (the fixture's pages all do), and no
+    admitting round lacks stats."""
     assert eng.unverified_rounds(job_id) == []
     store = eng.store(job_id)
     for r in store.committed_rounds():
         c = store.read_commit(r)
+        assert c["format"] == STORE_FORMAT, (r, c.get("format"))
         if c.get("n_admitted", 0) > 0:
             p = c["payload"]
             counts = [p["n"], p["n_pixels_ok"], p["n_phash_ok"], p["n_caption_ok"]]

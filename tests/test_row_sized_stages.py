@@ -3,8 +3,8 @@ extraction) and the seen compaction's write take their task count from a
 row count the engine already holds (session.sized_tasks) — one task per
 256 rows, at most 2× cores. The page pass runs in the stage that scans
 the admitted frontier, with no exchange in front of it, so a bulk round
-runs as the scan's own splits below that cap; each round's commit
-records the count the pass ran with."""
+runs as the scan's own splits below that cap; the status store's task
+counts of the stages that ran the pass check it."""
 
 import os
 import re
@@ -77,9 +77,8 @@ def _last_job(spark) -> int:
 
 
 def _round_one(spark, tmp_path, corpus, seeds, monkeypatch):
-    """Run a verifying job's first extracting round. Returns its phases,
-    the page pass's executed plan and the task counts of the stages that
-    ran it."""
+    """Run a verifying job's first extracting round. Returns the task
+    counts of the stages that ran its page pass, and the job's store."""
     spec, path = corpus
     plans = _stage_plans(spark, monkeypatch)
     eng = FrontierEngine(
@@ -94,19 +93,18 @@ def _round_one(spark, tmp_path, corpus, seeds, monkeypatch):
     # the pass reads the frontier scan in its own stage: no exchange
     # below the MapInPandas
     assert "Exchange" not in pages.split("MapInPandas expand(", 1)[1], pages
-    return c["phases"], _page_pass_stage_tasks(spark, before), eng.store("rs")
+    return _page_pass_stage_tasks(spark, before), eng.store("rs")
 
 
 def test_one_seed_round_runs_few_tasks(spark, corpus_1k, tmp_path, monkeypatch):
     spec, _ = corpus_1k
-    phases, stage_tasks, _ = _round_one(
+    stage_tasks, _ = _round_one(
         spark, tmp_path, corpus_1k, [C.url_of(3, spec)], monkeypatch
     )
     # one task: the fused write repartitions by its own keys, so a
     # 1-partition page pass does not absorb the write's exchange
     # (test_new_url_path_has_one_exchange)
     assert stage_tasks == [1]
-    assert phases["page_tasks"] == 1
 
 
 def test_bulk_round_keeps_the_cap(spark, tmp_path_factory, tmp_path, monkeypatch):
@@ -116,13 +114,12 @@ def test_bulk_round_keeps_the_cap(spark, tmp_path_factory, tmp_path, monkeypatch
     path = str(tmp_path_factory.mktemp("corpus_bulk") / "corpus")
     build_corpus(spark, spec, path)
     seeds = [C.url_of(i, spec) for i in range(n)]
-    phases, stage_tasks, store = _round_one(spark, tmp_path, (spec, path), seeds, monkeypatch)
+    stage_tasks, store = _round_one(spark, tmp_path, (spec, path), seeds, monkeypatch)
     # the pass runs as the seed frontier's scan splits, never more than
-    # the cap, and the commit records what it ran
+    # the cap
     splits = spark.read.schema(FRONTIER_SCHEMA).parquet(store.new_path(0)).rdd.getNumPartitions()
     assert 1 < splits
     assert stage_tasks == [min(cap, splits)]
-    assert phases["page_tasks"] == min(cap, splits)
 
 
 def test_compact_seen_writes_one_file_per_bucket_from_few_tasks(spark, corpus_1k, tmp_path):

@@ -443,8 +443,8 @@ def test_seen_filter_config_is_pinned_per_job(spark, corpus_1k, tmp_path):
     """ADVICE r7: resuming a job store under a different seen-filter
     config silently reinterprets the blob bytes — false negatives
     duplicate crawls with no error. The seed commit records the filter
-    identity; resume/unsee under any other kind, params or bucket count,
-    or of a store written without the Bloom filter, raises."""
+    identity; resume/unsee under any other params or bucket count raises,
+    and so does resuming a store whose commits carry no format stamp."""
     import json
 
     from distributed_web_crawler_spark.functions.bloom import BloomParams
@@ -453,11 +453,9 @@ def test_seen_filter_config_is_pinned_per_job(spark, corpus_1k, tmp_path):
     seed = C.url_of(seed_i, spec)
     eng.run_job("u9", seed, 2)
     store = eng.store("u9")
-    # the persisted identity keeps the layout every earlier bloom store
-    # was written with, so those stores resume unchanged
+    # the persisted identity: the bucket count and the Bloom params
     assert store.read_commit(0)["seen_filter"] == {
-        "kind": "bloom", "seen_buckets": 8, "use_bloom": True,
-        "n_bits": BloomParams().n_bits, "n_hashes": BloomParams().n_hashes,
+        "seen_buckets": 8, "n_bits": BloomParams().n_bits, "n_hashes": BloomParams().n_hashes,
     }
 
     def resumed(**cfg):
@@ -478,23 +476,13 @@ def test_seen_filter_config_is_pinned_per_job(spark, corpus_1k, tmp_path):
         with pytest.raises(ValueError, match=removed):
             EngineConfig(**{removed: False})
 
-    def rewrite(key, value):
-        for r in store.committed_rounds():
-            info = store.read_commit(r)
-            info["seen_filter"][key] = value
-            with open(store._commit_path(r), "w") as f:
-                json.dump(info, f)
-
-    # a store written without the filter has no blobs for its rounds, so
-    # probing them would trust empty filters: resuming it must fail
-    rewrite("use_bloom", False)
-    with pytest.raises(ValueError, match="seen-filter config mismatch"):
-        resumed().run_job("u9", seed, 2)
-    rewrite("use_bloom", True)
-    assert resumed().run_job("u9", seed, 2)["done"]
-
-    # a store left by the removed cuckoo filter: its blob bytes are not
-    # bloom bits, so resuming it must fail instead of probing them
-    rewrite("kind", "cuckoo")
-    with pytest.raises(ValueError, match="seen-filter config mismatch"):
+    # a store with no format stamp (the no-Bloom and cuckoo stores were
+    # all written before it) has blobs that are not this filter's bits:
+    # resuming it must fail instead of probing them
+    for r in store.committed_rounds():
+        info = store.read_commit(r)
+        del info["format"]
+        with open(store._commit_path(r), "w") as f:
+            json.dump(info, f)
+    with pytest.raises(ValueError, match="rerun in a fresh warehouse"):
         resumed().run_job("u9", seed, 2)
