@@ -6,13 +6,16 @@ A depth's pending frontier drains in sub-rounds; each sub-round admits at
 most ``max_per_round(host)`` URLs per host, chosen by ``row_number()`` over
 ``Window.partitionBy(host).orderBy(url_hash)``. Both the budget and the
 order are pure functions of the data — never of partition count — so runs
-at local[8] and local[32] admit identical sets (SURVEY.md §7 risk (d)) and
-the scaling-efficiency comparison is apples-to-apples.
+at any ``local[N]`` admit identical sets (SURVEY.md §7 risk (d)) and the
+scaling-efficiency comparison is apples-to-apples.
 
-Scale note (mega-hosts): ranking partitions by (host, url_hash-range), not
-by host alone — see `schedule` — so a single hot host's pending set spreads
-across up to 2^RANK_CHUNK_BITS tasks instead of one; AQE skew-join
-splitting does not apply to windows, so the split must be in the key.
+Scale note (mega-hosts): past ``RANK_CHUNK_ROWS`` pending rows the ranking
+partitions by (host, url_hash-range), not by host alone — see `schedule` —
+so a single hot host's pending set spreads across 2^RANK_CHUNK_BITS tasks
+instead of one; AQE skew-join splitting does not apply to windows, so the
+split must be in the key. A depth of at most ``RANK_CHUNK_ROWS`` rows (the
+service path's 1–50) ranks in one plain window over host: no chunk, no
+offset table, no join.
 """
 
 from __future__ import annotations
@@ -28,6 +31,11 @@ from ..oracle.crawler import PolitenessPolicy
 # ranks in ~1.5M-row tasks; raising it costs only a few more rows in the
 # (tiny) per-(host, chunk) offset table.
 RANK_CHUNK_BITS = 6
+# the pending-row count up to which a depth ranks in one plain window over
+# host; past it the rank uses the full RANK_CHUNK_BITS chunking. No workload
+# ranks between a service depth (< 100 rows) and 10^8 rows, so the
+# crossover is not tuned: any value between those keeps both measured plans
+RANK_CHUNK_ROWS = 1 << 16
 
 
 def budget_col(host_col, policy: PolitenessPolicy):
@@ -41,7 +49,7 @@ def budget_col(host_col, policy: PolitenessPolicy):
     return F.greatest(F.lit(1), F.floor(F.lit(policy.round_duration_ms) / delay)).cast("int")
 
 
-def schedule(pending: DataFrame, policy: PolitenessPolicy, grade=None) -> DataFrame:
+def schedule(pending: DataFrame, policy: PolitenessPolicy, grade=None, n_rows=None) -> DataFrame:
     """Compute a depth's ENTIRE politeness schedule in one window pass:
     returns `pending` with a `due` column = ``ceil(rn/budget) - 1`` ≥ 0,
     the sub-round at which the row becomes admissible (`due == 0` is
@@ -53,73 +61,78 @@ def schedule(pending: DataFrame, policy: PolitenessPolicy, grade=None) -> DataFr
     and rewriting the remainder every sub-round cost O(pending ×
     sub_rounds) (the r2 verdict's write-amplification item).
 
-    Scale note: the full ranking shuffles the depth's pending rows ONCE PER
-    DEPTH (the old loop re-shuffled the shrinking remainder every
-    sub-round), and it shuffles them by (host, url_hash-range), NOT by host
-    alone: a mega-host's pending set is range-partitioned into
-    2^RANK_CHUNK_BITS ordered url_hash chunks, each chunk is ranked locally
-    by `row_number()`, and the global per-host rank is recovered by adding
-    the host's prefix count of earlier chunks (a tiny broadcast-joined
-    offset table, ≤ hosts × 2^RANK_CHUNK_BITS rows). The chunk id
-    ``url_hash >> (64 - RANK_CHUNK_BITS)`` (arithmetic shift) is monotone in
-    the signed url_hash order and equal hashes share a chunk, so
-    local-rank + offset reproduces ``row_number() over (partition by host
-    order by url_hash, url)`` EXACTLY — the schedule stays a pure function
-    of the data, identical at any parallelism, while no single task ever
-    ranks more than ~1/2^RANK_CHUNK_BITS of one host (the r3 verdict's
-    single-task mega-host ceiling).
+    `n_rows`: the pending row count (the engine knows it exactly from the
+    manifest; None = unknown). It picks the rank's plan and never changes
+    the result. At ≤ RANK_CHUNK_ROWS rows — every service-sized depth —
+    the rank is ONE ``row_number()`` over ``partitionBy(host)``: no chunk,
+    no offset aggregate, no join, so the engine's schedule write runs in 3
+    Spark jobs, not 6. Past it, or when None, the rank is chunked.
+
+    Scale note: the chunked rank shuffles the depth's pending rows ONCE
+    PER DEPTH by (host, url_hash-range), NOT by host alone: a mega-host's
+    pending set is range-partitioned into 2^RANK_CHUNK_BITS ordered
+    url_hash chunks, each chunk is ranked locally by `row_number()`, and
+    the global per-host rank is recovered by adding the host's prefix
+    count of earlier chunks (a tiny broadcast-joined offset table, ≤ hosts
+    × 2^RANK_CHUNK_BITS rows). The chunk id ``url_hash >> (64 -
+    RANK_CHUNK_BITS)`` (arithmetic shift) is monotone in the signed
+    url_hash order and equal hashes share a chunk, so local-rank + offset
+    reproduces ``row_number() over (partition by host order by url_hash,
+    url)`` EXACTLY — the schedule stays a pure function of the data,
+    identical at any parallelism, while no single task ever ranks more
+    than ~1/2^RANK_CHUNK_BITS of one host (the r3 verdict's single-task
+    mega-host ceiling).
 
     The frame is meant for ONE action: the engine writes it whole, sliced
     by `due`, so the rank shuffle runs once and nothing is cached.
 
     `grade`: optional Column expression of a COARSE priority grade (small
     int, higher = drain first — e.g. a quantized pagerank). Per-host
-    order becomes (grade DESC, url_hash, url) and the ranking decomposes
-    over (host, grade, url_hash-chunk) windows: grade is a PREFIX of the
-    sort order and the hash-chunk is monotone within a grade, so each
-    window group is contiguous in the global per-host order and
-    local-rank + prefix-offset reproduces the single-window rank exactly
-    — a mega-host's priority drain runs in up to grades ×
+    order becomes (grade DESC, url_hash, url); when chunked, the ranking
+    decomposes over (host, grade, url_hash-chunk) windows: grade is a
+    PREFIX of the sort order and the hash-chunk is monotone within a
+    grade, so each window group is contiguous in the global per-host
+    order and local-rank + prefix-offset reproduces the single-window
+    rank exactly — a mega-host's priority drain runs in up to grades ×
     2^RANK_CHUNK_BITS tasks instead of one (the same discipline as the
-    plain path; r5 VERDICT Next #5). The offset table stays
-    control-plane sized (hosts × grades × chunks rows, broadcast)
-    provided the grade is genuinely coarse (≤ ~100 distinct values)."""
-    local = pending.withColumn(
-        "_chunk", F.shiftright(F.col("url_hash"), 64 - RANK_CHUNK_BITS)
-    )
-    # decomposition key: (host[, grade], chunk). grade (DESC) is a prefix
-    # of the per-host sort order and chunk is monotone within it, so each
-    # window group is CONTIGUOUS in the global order — local rank + the
-    # prefix-count offset of earlier groups equals the single-window rank.
-    gcols = []
-    off_order = [F.col("_chunk").asc()]
-    if grade is not None:
-        local = local.withColumn("_grade", grade.cast("int"))
-        gcols = ["_grade"]
-        off_order = [F.col("_grade").desc(), F.col("_chunk").asc()]
-    # per-group row counts -> per-group rank offsets (prefix sum over the
-    # host's earlier groups). The offset table is an aggregate — at most
-    # hosts × grades × 2^RANK_CHUNK_BITS rows — so its own window runs on
-    # control-plane-sized data and the join back is an explicit broadcast.
-    ow = (
-        Window.partitionBy("host")
-        .orderBy(*off_order)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        local.groupBy("host", *gcols, "_chunk")
-        .agg(F.count("*").alias("_c"))
-        .withColumn("_off", F.coalesce(F.sum("_c").over(ow), F.lit(0)))
-        .select("host", *gcols, "_chunk", "_off")
-    )
-    w = Window.partitionBy("host", *gcols, "_chunk").orderBy(
-        F.col("url_hash").asc(), F.col("url").asc()
-    )
-    return (
-        local.withColumn("_lrn", F.row_number().over(w))
-        .join(F.broadcast(offsets), ["host", *gcols, "_chunk"])
-        .withColumn("_rn", F.col("_lrn") + F.col("_off"))
-        .withColumn("_budget", budget_col(F.col("host"), policy))
-        .withColumn("due", (F.ceil(F.col("_rn") / F.col("_budget")) - 1).cast("int"))
-        .drop("_chunk", "_lrn", "_off", "_rn", "_budget", *gcols)
-    )
+    plain path; r5 VERDICT Next #5). The offset table stays control-plane sized
+    (hosts × grades × chunks rows, broadcast) provided the grade is
+    genuinely coarse (≤ ~100 distinct values)."""
+    hash_order = [F.col("url_hash").asc(), F.col("url").asc()]
+    if n_rows is not None and n_rows <= RANK_CHUNK_ROWS:
+        g = [] if grade is None else [grade.cast("int").desc()]
+        rn = F.row_number().over(Window.partitionBy("host").orderBy(*g, *hash_order))
+        ranked = pending
+    else:
+        # decomposition key: (host[, grade], chunk). grade (DESC) is a
+        # prefix of the per-host sort order and chunk is monotone within
+        # it, so each window group is CONTIGUOUS in the global order —
+        # local rank + the prefix-count offset of earlier groups equals the
+        # single-window rank.
+        cols = {"_chunk": F.shiftright(F.col("url_hash"), 64 - RANK_CHUNK_BITS)}
+        gcols, off_order = [], [F.col("_chunk").asc()]
+        if grade is not None:
+            cols["_grade"] = grade.cast("int")
+            gcols, off_order = ["_grade"], [F.col("_grade").desc(), F.col("_chunk").asc()]
+        keys = ["host", *gcols, "_chunk"]
+        local = pending.withColumns(cols)
+        # per-group row counts -> per-group rank offsets (prefix sum over
+        # the host's earlier groups). The offset table is an aggregate — at
+        # most hosts × grades × 2^RANK_CHUNK_BITS rows — so its own window
+        # runs on control-plane-sized data and the join back is an explicit
+        # broadcast.
+        ow = (
+            Window.partitionBy("host")
+            .orderBy(*off_order)
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        offsets = (
+            local.groupBy(*keys)
+            .agg(F.count("*").alias("_c"))
+            .select(*keys, F.coalesce(F.sum("_c").over(ow), F.lit(0)).alias("_off"))
+        )
+        w = Window.partitionBy(*keys).orderBy(*hash_order)
+        rn = F.row_number().over(w) + F.col("_off")
+        ranked = local.join(F.broadcast(offsets), keys)
+    due = (F.ceil(rn / budget_col(F.col("host"), policy)) - 1).cast("int")
+    return ranked.select(*pending.columns, due.alias("due"))

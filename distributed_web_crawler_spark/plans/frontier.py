@@ -33,10 +33,11 @@ Scale shape per round (what survives 1000 executors × 100 TB):
   rounds, so both the re-check and result reads list O(1) roots regardless
   of crawl age.
 * politeness window: sub-round 0 of a depth ranks its pending rows once
-  (one shuffle by host and url_hash range; budgets data-determined, so
-  local[8] and local[32] produce identical admissions) and writes the
-  whole schedule once, sliced by due sub-round; every sub-round, 0
-  included, then drains a written slice.
+  (one shuffle by host, and by url_hash range too once the pending count
+  passes politeness.RANK_CHUNK_ROWS; budgets data-determined, so any
+  `local[N]` produces identical admissions) and writes the whole schedule
+  once, sliced by due sub-round; every sub-round, 0 included, then drains
+  a written slice.
 * writes: the round's new URLs are written ONCE, bucket-partitioned, in a
   single fused pass that also updates the Bloom blobs and returns per-bucket
   row counts; the pending frontier is a manifest of such file-sets in the
@@ -1122,7 +1123,8 @@ class FrontierEngine:
         store = rnd.store
         root = store.deferred_path(rnd.r)
         scheduled = schedule(
-            self._read_components(paths), self.cfg.politeness, grade=self._grade_col()
+            self._read_components(paths), self.cfg.politeness, grade=self._grade_col(),
+            n_rows=n_pending,
         )
         stats, _ = self._write_bucketed(
             store, root, scheduled, None, slice_col="due", approx_rows=n_pending

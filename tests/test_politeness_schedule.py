@@ -27,7 +27,9 @@ def _deferred_rows_written(store) -> int:
     return sum(pq.read_metadata(f).num_rows for f in files)
 
 
-def test_megahost_deferred_bytes_linear(spark, corpus_1k, tmp_path):
+def _megahost_drain(spark, corpus_1k, tmp_path):
+    """Drain 2,000 seeds of ONE mega-host at depth 1 and check the exact
+    iterative-admission schedule and the O(M) schedule rows written."""
     spec, path = corpus_1k
     pol = PolitenessPolicy(round_duration_ms=4000)  # host 0 budget = 8
     eng = FrontierEngine(
@@ -57,6 +59,10 @@ def test_megahost_deferred_bytes_linear(spark, corpus_1k, tmp_path):
     # was): vacuum clears them all
     stats = eng.store("mega").vacuum(staging_age_s=0.0)
     assert stats["stale_deferred"] == len(schedule)
+
+
+def test_megahost_deferred_bytes_linear(spark, corpus_1k, tmp_path):
+    _megahost_drain(spark, corpus_1k, tmp_path)
 
 
 def test_schedule_slices_match_iterative_admission(spark, corpus_1k, tmp_path):
@@ -416,3 +422,81 @@ def test_engine_graded_drain_identical_results(spark, corpus_1k, tmp_path):
     assert res["plain"][2] == res["graded_wide"][2]
     # the tight budget really rate-limited (more committed rounds)
     assert res["graded_tight"][2] > res["plain"][2]
+
+
+def test_rank_plan_chosen_from_pending_count(spark):
+    """`schedule(n_rows=...)` picks the rank's plan from the pending count:
+    at ≤ RANK_CHUNK_ROWS rows it is one row_number() over host with no
+    chunk and no join; past it, or with n_rows unknown, the row_number()
+    is keyed by chunk. On both plans, with and without a grade, `due`
+    equals the single-window rank's ``(rn + b - 1) // b - 1`` row for
+    row."""
+    import pandas as pd
+    from pyspark.sql import Window, functions as F
+
+    from distributed_web_crawler_spark.functions import urls as U
+    from distributed_web_crawler_spark.operators.politeness import (
+        RANK_CHUNK_ROWS,
+        budget_col,
+        schedule,
+    )
+
+    pol = PolitenessPolicy(round_duration_ms=2000)
+    # a mega-host plus three smaller hosts with other budgets
+    urls = [f"http://h0000.test/p/{i}" for i in range(600)] + [
+        f"http://h{h:04d}.test/p/{i}" for h in (1, 2, 3) for i in range(100)
+    ]
+    df = (
+        spark.createDataFrame(pd.DataFrame({"url": urls, "prio": [(i * 13) % 997 for i in range(len(urls))]}))
+        .withColumn("url_hash", U.url_hash(F.col("url")))
+        .withColumn("host", U.host_of(F.col("url")))
+        .withColumn("seen_bucket", F.lit(0))
+        .withColumn("depth", F.lit(0))
+    )
+    g = (F.col("prio") / F.lit(125)).cast("int")
+
+    def plan(frame):
+        return frame._jdf.queryExecution().optimizedPlan().toString()
+
+    for n_rows in (1000, RANK_CHUNK_ROWS):
+        small = plan(schedule(df, pol, n_rows=n_rows))
+        assert "_chunk" not in small and "Join" not in small, small
+    for n_rows in (RANK_CHUNK_ROWS + 1, 10**8, None):
+        rn_lines = [ln for ln in plan(schedule(df, pol, n_rows=n_rows)).splitlines() if "row_number()" in ln]
+        assert rn_lines and all("_chunk" in ln for ln in rn_lines), (n_rows, rn_lines)
+
+    budgets = {r["host"]: r["b"] for r in df.select("host", budget_col(F.col("host"), pol).alias("b")).distinct().collect()}
+    assert len(set(budgets.values())) > 1
+    for grade in (None, g):
+        order = ([] if grade is None else [grade.desc()]) + [F.col("url_hash").asc(), F.col("url").asc()]
+        w = Window.partitionBy("host").orderBy(*order)
+        want = {}
+        for r in df.select("url", "host", F.row_number().over(w).alias("rn")).collect():
+            b = budgets[r["host"]]
+            want[r["url"]] = (r["rn"] + b - 1) // b - 1
+        for n_rows in (1000, 10**8):
+            got = {r["url"]: r["due"] for r in schedule(df, pol, grade=grade, n_rows=n_rows).collect()}
+            assert got == want, (n_rows, grade is not None)
+
+
+def test_megahost_drain_on_the_chunked_rank(spark, corpus_1k, tmp_path, monkeypatch):
+    """The mega-host drain of test_megahost_deferred_bytes_linear with
+    RANK_CHUNK_ROWS shrunk to 64, so the engine's schedule takes the
+    chunked rank (offsets aggregate + broadcast join) where the default
+    run ranks in one plain window: the same schedule, n_seen and schedule
+    rows written."""
+    from distributed_web_crawler_spark.operators import politeness
+    from distributed_web_crawler_spark.plans import frontier
+
+    monkeypatch.setattr(politeness, "RANK_CHUNK_ROWS", 64)
+    chunked = []
+    orig = frontier.schedule
+
+    def spy(*a, **k):
+        out = orig(*a, **k)
+        chunked.append("_chunk" in out._jdf.queryExecution().analyzed().toString())
+        return out
+
+    monkeypatch.setattr(frontier, "schedule", spy)
+    _megahost_drain(spark, corpus_1k, tmp_path)
+    assert chunked == [True]

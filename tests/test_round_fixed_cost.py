@@ -195,3 +195,36 @@ def test_bulk_write_is_not_coalesced(spark, corpus_1k, tmp_path, monkeypatch):
     m = re.search(r"Exchange hashpartitioning\(seen_bucket#\d+, (\d+)\)", plan)
     assert m and int(m.group(1)) == width, plan
     assert "AQEShuffleRead" not in plan, plan
+
+
+def test_small_schedule_runs_three_jobs(spark, corpus_1k, tmp_path, monkeypatch):
+    """A politeness sub-round 0 whose depth holds at most
+    politeness.RANK_CHUNK_ROWS pending rows ranks in one plain window over
+    host, so its schedule write runs at most 3 Spark jobs (the window's
+    shuffle, the write's shuffle, the write) — for 1 pending row and for
+    1,000 alike. Counted from the status store, by a job group set
+    around each `_schedule` call."""
+    spec, path = corpus_1k
+    sc = spark.sparkContext
+    calls = []
+    orig = FrontierEngine._schedule
+
+    def grouped(self, rnd, paths, n_pending):
+        group = f"schedule-{len(calls)}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            return orig(self, rnd, paths, n_pending)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            calls.append((n_pending, group))
+
+    monkeypatch.setattr(FrontierEngine, "_schedule", grouped)
+    pol = PolitenessPolicy(round_duration_ms=20_000)
+    for job_id, seeds in (("one", [C.url_of(5, spec)]), ("all", [C.url_of(i, spec) for i in range(spec.n)])):
+        eng = FrontierEngine(spark, str(tmp_path / job_id), path, spec, EngineConfig(politeness=pol, seen_buckets=8))
+        assert eng.run_job(job_id, seeds, 1)["done"]
+        _check_payloads(eng, job_id)
+    _status_store(spark)  # drain the listener bus
+    jobs = {n: len(sc.statusTracker().getJobIdsForGroup(g)) for n, g in calls}
+    assert sorted(jobs) == [1, spec.n], jobs
+    assert all(0 < k <= 3 for k in jobs.values()), jobs
