@@ -24,14 +24,17 @@ Scale shape per round (what survives 1000 executors × 100 TB):
   links. Its link rows and per-batch verify partials (seen_bucket -1) flow
   into the fused write, whose stats carry the partials' fold; at the last
   depth the pass runs without links and its partials are collected.
-* dedup: no stage of its own. The raw candidate stream goes straight to
-  the bucketed write (ONE exchange, by seen-bucket); each write task dedups
-  its group with numpy, probes the bucket's Bloom blob (no broadcast of
-  blobs) and exact-checks only the positives against that bucket's seen
-  hashes, so false positives are rescued and URLs are never lost. Per-round
-  seen deltas are merged by compact_seen every cfg.compact_seen_every
-  rounds, so both the re-check and result reads list O(1) roots regardless
-  of crawl age.
+* dedup: no stage of its own, the seed round's included. The raw
+  candidate stream goes straight to the bucketed write (ONE exchange, by
+  seen-bucket); each write task dedups its group with numpy, probes the
+  bucket's Bloom blob (no broadcast of blobs) and exact-checks only the
+  positives against that bucket's seen hashes, so false positives are
+  rescued and URLs are never lost. Per-round seen deltas are merged by
+  compact_seen every cfg.compact_seen_every rounds, so both the re-check
+  and result reads list O(1) roots regardless of crawl age. One
+  merge-on-read bucket reader (_live_seen, pyarrow + numpy) serves the
+  re-check, the compaction (one Spark job over the bucket ids, no
+  exchange) and the client payload (no Spark job).
 * politeness window: sub-round 0 of a depth ranks its pending rows once
   (one shuffle by host, and by url_hash range too once the pending count
   passes politeness.RANK_CHUNK_ROWS; budgets data-determined, so any
@@ -196,6 +199,47 @@ def _history(store: JobStateStore, lo: int, hi: int, what: str):
                         "compacted and vacuumed"
                     )
                 yield r, kind, p
+
+
+def _live_seen(bucket: int, seen_roots: List[tuple], tomb_roots: List[tuple], columns=("url_hash",)):
+    """One bucket's live seen rows, merge-on-read, file by file: yield a
+    pyarrow table of `columns` per component file, minus the hashes of
+    tombstones from strictly later rounds (the t > c rule of _seen_view).
+    `seen_roots` and `tomb_roots` are (round, root) pairs. A `seen_round`
+    column a delta file lacks is filled with its component round. The
+    exact re-check, the seen compaction and the client payload all read
+    through this one reader: executor-side by the first two, on the
+    driver by the last."""
+    import glob
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def files(root: str) -> List[str]:
+        return sorted(glob.glob(os.path.join(root, f"seen_bucket={bucket}", "*.parquet")))
+
+    tombs = [
+        (t, pq.read_table(f, columns=["url_hash"])["url_hash"].to_numpy())
+        for t, root in tomb_roots
+        for f in files(root)
+    ]
+    want = list(columns)
+    for c, root in seen_roots:
+        kills = [h for t, h in tombs if t > c and len(h)]
+        kill = np.concatenate(kills) if kills else None
+        for f in files(root):
+            # only the compacted table's files carry seen_round
+            fill = "seen_round" in want and "seen_round" not in pq.read_schema(f).names
+            read = [k for k in want if not (fill and k == "seen_round")]
+            if kill is not None and "url_hash" not in read:
+                read.append("url_hash")
+            table = pq.read_table(f, columns=read)
+            if kill is not None:
+                table = table.filter(pa.array(~np.isin(table["url_hash"].to_numpy(), kill)))
+            if fill:
+                table = table.append_column("seen_round", pa.array(np.full(len(table), c, np.int32)))
+            yield table.select(want)
 
 
 def _n_seen(store: JobStateStore) -> int:
@@ -411,16 +455,17 @@ class FrontierEngine:
         seeds = [seed_url] if isinstance(seed_url, str) else list(seed_url)
         # Arrow path (a plain tuple list would serialize row-by-row via py4j)
         df = self.spark.createDataFrame(pd.DataFrame({"url": seeds}))
-        # dedup AFTER canonicalization: spellings of one URL share a hash
-        df = self._with_keys(df).dropDuplicates(["url_hash"]).withColumn("host", U.host_of(F.col("url")))
+        df = self._with_keys(df).withColumn("host", U.host_of(F.col("url")))
         if self.cfg.robots is not None:
             df = df.filter(~blocked_expr(F.col("url")))
         df = df.withColumn("depth", F.lit(0)).select("url", "host", "url_hash", "seen_bucket", "depth")
         # len(seeds) bounds the write for free: a 10^10-scenario whole-
         # frontier seed batch must hit the same max_group_rows chunk guard
-        # as round writes
+        # as round writes. The probing write dedups the canonical seeds
+        # (spellings of one URL share a hash, hence a group); with no
+        # commit yet its Bloom probe has no positives, so no re-check runs
         stats, _ = self._write_bucketed(
-            store, store.new_path(0), df, bloom_round=0, approx_rows=len(seeds)
+            store, store.new_path(0), df, bloom_round=0, approx_rows=len(seeds), probe=True
         )
         n = sum(s[1] for s in stats)
         manifest = [[self._rel(store, store.new_path(0)), 0, n, 0]] if n > 0 else []
@@ -497,9 +542,9 @@ class FrontierEngine:
         2. Bloom probe against the bucket's previous blob — negatives are
            definitely new;
         3. exact re-check of the positives against the bucket's committed
-           seen hashes (tombstones applied under the t > c rule of
-           _seen_view), so a false positive or an unseen URL's stale bits
-           never lose a URL;
+           seen hashes (_live_seen: tombstones applied under the t > c
+           rule of _seen_view), so a false positive or an unseen URL's
+           stale bits never lose a URL;
         4. the parquet part, only if fresh rows are left;
         5. the blob fold into the filter step 2 already loaded.
         The round's new-URL path thus has ONE exchange (extract → this
@@ -568,30 +613,6 @@ class FrontierEngine:
         if approx_rows:
             rows = rows.repartition(sized_tasks(self.spark, approx_rows), *keys)
 
-        def bucket_seen(bucket: int):
-            """The bucket's live seen hashes: every component's url_hash
-            column minus the hashes of tombstones from strictly later
-            rounds."""
-            import glob
-
-            import numpy as np
-            import pyarrow.parquet as pq
-
-            def load(root: str):
-                files = sorted(glob.glob(os.path.join(root, f"seen_bucket={bucket}", "*.parquet")))
-                cols = [pq.read_table(f, columns=["url_hash"])["url_hash"].to_numpy() for f in files]
-                return np.concatenate(cols) if cols else np.empty(0, dtype=np.int64)
-
-            tombs = [(t, load(root)) for t, root in tomb_roots]
-            parts = []
-            for c, root in seen_roots:
-                a = load(root)
-                kills = [ta for t, ta in tombs if t > c and len(ta)]
-                if len(a) and kills:
-                    a = a[~np.isin(a, np.concatenate(kills))]
-                parts.append(a)
-            return np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
-
         def build(key, pdf):
             import time as _time
             import uuid
@@ -631,7 +652,8 @@ class FrontierEngine:
                 maybe = B.contains(filt, hashes, params)
                 n_pos = int(maybe.sum())
                 if n_pos:
-                    seen = bucket_seen(bucket)
+                    seen = [t["url_hash"].to_numpy() for t in _live_seen(bucket, seen_roots, tomb_roots)]
+                    seen = np.concatenate(seen) if seen else np.empty(0, dtype=np.int64)
                     n_re = len(seen)
                     fresh = ~maybe
                     fresh[maybe] = ~np.isin(hashes[maybe], seen)
@@ -796,44 +818,92 @@ class FrontierEngine:
     # ------------------------------------------------------------ compaction
     def compact_seen(self, job_id: str) -> dict:
         """Merge all current seen components (previous compaction + later
-        per-round deltas) into ONE bucket-partitioned table and flip the
-        store's compaction pointer to it — the Iceberg rewrite_data_files
-        maintenance job for the seen set. Readers are unchanged during and
-        after (seen_paths() swaps components for an identical row set);
-        deltas stay on disk until vacuum() observes the new pointer, so a
-        crash at any step leaves a consistent store. Deltas are disjoint by
-        construction (a URL enters seen in exactly one round), so the merge
-        is a plain union."""
+        per-round deltas, minus their tombstones) into ONE
+        bucket-partitioned table and flip the store's compaction pointer
+        to it — the Iceberg rewrite_data_files maintenance job for the
+        seen set. One Spark job over the bucket ids, no exchange: each
+        task streams each of its buckets through _live_seen (the
+        re-check's reader) into one parquet file,
+        ``seen_bucket=<b>/part-<b:05d>.parquet`` (url_hash, url, depth,
+        seen_round), one input file at a time; an empty bucket writes
+        nothing. Readers are unchanged during and after (seen_paths()
+        swaps components for an identical row set); deltas stay on disk
+        until vacuum() observes the new pointer, so a crash at any step
+        leaves a consistent store. Deltas are disjoint by construction (a
+        URL enters seen in exactly one round), so the merge is a plain
+        union. Self-check: the rows written must equal the live count the
+        commits sum to (_n_seen), or this raises before the flip."""
         store = self.store(job_id)
-        last = store.last_committed()
-        paths = store.seen_paths()
+        # checked: the merge walks cfg.seen_buckets' ids, so the store's
+        # seen filter must be this config's
+        last = self._last_checked(store)
+        comps = store.seen_components()
+        tombs = store.tombstone_components()
         # one component with NO live tombstones is already compact; with
         # tombstones, compaction is what folds the deletes physically (and
         # lets vacuum drop the delete files), so it must proceed
-        if last is None or not paths or (len(paths) == 1 and not store.tombstone_components()):
-            return {"compacted": False, "n_components": len(paths)}
+        if last is None or not comps or (len(comps) == 1 and not tombs):
+            return {"compacted": False, "n_components": len(comps)}
         # staging name is unique per attempt (see seen_compact_staging):
         # a concurrent compactor can never collide with — or delete — the
         # dir this attempt is about to flip the pointer to; crashed
-        # attempts are swept by vacuum once aged
+        # attempts are swept by vacuum once aged. It exists even when no
+        # bucket has a live row, so the pointer never names a missing dir.
         staging = store.seen_compact_staging(last)
-        df = self._seen_df(store)
-        # one file per bucket (repartition BY the partition column before
-        # partitionBy, else every input partition writes a file per bucket);
-        # hashing puts each bucket in exactly one task, so the task count
-        # is free to follow the live row count (commit arithmetic) instead
-        # of paying seen_buckets tasks for a small crawl's few rows
-        n_tasks = min(self.cfg.seen_buckets, sized_tasks(self.spark, _n_seen(store)))
-        (
-            df.repartition(n_tasks, F.col("seen_bucket"))
-            .write.partitionBy("seen_bucket")
-            .parquet(staging)
+        os.makedirs(staging)
+        seen_roots = [(c, os.path.abspath(p)) for c, p in comps]
+        tomb_roots = [(t, os.path.abspath(p)) for t, p in tombs]
+
+        def merge(batches):
+            import uuid
+
+            import pandas as pd
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+
+            schema = pa.schema(
+                [("url_hash", pa.int64()), ("url", pa.string()), ("depth", pa.int32()), ("seen_round", pa.int32())]
+            )
+            n = 0
+            for pdf in batches:
+                for bucket in pdf["id"].tolist():
+                    part_dir = os.path.join(staging, f"seen_bucket={bucket}")
+                    stem = f"part-{bucket:05d}"
+                    # per-attempt tmp name + atomic replace, as in _write_bucketed
+                    tmp = os.path.join(part_dir, f".{stem}.{uuid.uuid4().hex[:12]}.tmp")
+                    writer = None
+                    try:
+                        for table in _live_seen(bucket, seen_roots, tomb_roots, schema.names):
+                            if len(table):
+                                if writer is None:
+                                    os.makedirs(part_dir, exist_ok=True)
+                                    writer = pq.ParquetWriter(tmp, schema)
+                                writer.write_table(table.cast(schema))
+                                n += len(table)
+                    finally:
+                        if writer is not None:
+                            writer.close()
+                    if writer is not None:
+                        os.replace(tmp, os.path.join(part_dir, f"{stem}.parquet"))
+            yield pd.DataFrame({"n": [n]})
+
+        # the task count follows the live row count (commit arithmetic)
+        # instead of paying seen_buckets tasks for a small crawl's few rows
+        n_seen = _n_seen(store)
+        nb = self.cfg.seen_buckets
+        rows = (
+            self.spark.range(nb, numPartitions=min(nb, sized_tasks(self.spark, n_seen)))
+            .mapInPandas(merge, "n long")
+            .collect()
         )
+        n = sum(row["n"] for row in rows)
+        if n != n_seen:
+            raise AssertionError(f"seen compaction wrote {n} rows, the commits count {n_seen} live")
         # flip is monotonic: if a concurrent compactor already published a
         # newer (or same-upto) generation, this attempt's staging dir is
         # left as an aged-out orphan for vacuum and readers keep the winner
         flipped = store.set_seen_compact(last, os.path.relpath(staging, store.dir))
-        return {"compacted": flipped, "upto": last, "n_components": len(paths)}
+        return {"compacted": flipped, "upto": last, "n_components": len(comps)}
 
     # ------------------------------------------------------------ unsee / recrawl
     def unsee_urls(self, job_id: str, urls, reseed: bool = False) -> dict:
@@ -1345,12 +1415,17 @@ class FrontierEngine:
     def client_payload(self, job_id: str, depth: int) -> List[List[str]]:
         """The reference's DoneJob.Results [][]string (transferObjects.go:17-23):
         outer index = depth, inner = sorted URLs (within-depth order is
-        nondeterministic in the reference — compare as sets)."""
-        rows = (
-            self.results_df(job_id)
-            .groupBy("depth")
-            .agg(F.sort_array(F.collect_set("url")).alias("urls"))
-            .collect()
-        )
-        by_depth = {row["depth"]: row["urls"] for row in rows}
-        return [sorted(by_depth.get(i, [])) for i in range(depth)]
+        nondeterministic in the reference — compare as sets). Read on the
+        driver through _live_seen, bucket by bucket, with no Spark job:
+        the same live rows as results_df."""
+        store = self.store(job_id)
+        levels: List[set] = [set() for _ in range(depth)]
+        last = store.last_committed()
+        if last is not None:
+            comps, tombs = store.seen_components(), store.tombstone_components()
+            for bucket in range(store.read_commit(last)["seen_filter"]["seen_buckets"]):
+                for table in _live_seen(bucket, comps, tombs, ("url", "depth")):
+                    for url, d in zip(table["url"].to_pylist(), table["depth"].to_pylist()):
+                        if 0 <= d < depth:
+                            levels[d].add(url)
+        return [sorted(urls) for urls in levels]

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from distributed_web_crawler_spark.fixtures import corpus as C
 from distributed_web_crawler_spark.functions import urls as U
-from distributed_web_crawler_spark.oracle.crawler import PolitenessPolicy
+from distributed_web_crawler_spark.oracle.crawler import PolitenessPolicy, RobotsPolicy, crawl
 from distributed_web_crawler_spark.plans.frontier import EngineConfig, FrontierEngine
 from distributed_web_crawler_spark.session import sized_tasks
 from distributed_web_crawler_spark.sources import fetch
@@ -228,3 +228,53 @@ def test_small_schedule_runs_three_jobs(spark, corpus_1k, tmp_path, monkeypatch)
     jobs = {n: len(sc.statusTracker().getJobIdsForGroup(g)) for n, g in calls}
     assert sorted(jobs) == [1, spec.n], jobs
     assert all(0 < k <= 3 for k in jobs.values()), jobs
+
+
+def test_service_job_fixed_work_job_counts(spark, corpus_1k, tmp_path, monkeypatch):
+    """Around the rounds of a service-shaped job (politeness, robots,
+    compact_seen_every=2, depth 3), the seen compaction runs exactly 1
+    Spark job (a mapInPandas over the bucket ids), the client payload
+    none (it is read on the driver) and the seed round at most 2 (the
+    write's shuffle and the write). Counted from the status store, by a
+    job group set around each call."""
+    spec, path = corpus_1k
+    sc = spark.sparkContext
+    calls = []
+
+    def grouping(name):
+        orig = getattr(FrontierEngine, name)
+
+        def grouped(self, *a, **k):
+            group = f"{name}-{len(calls)}"
+            sc.setLocalProperty("spark.jobGroup.id", group)
+            try:
+                return orig(self, *a, **k)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                calls.append((name, group))
+
+        monkeypatch.setattr(FrontierEngine, name, grouped)
+
+    for name in ("_seed_round", "compact_seen", "client_payload"):
+        grouping(name)
+    pol, rob = PolitenessPolicy(round_duration_ms=4000), RobotsPolicy()
+    eng = FrontierEngine(
+        spark, str(tmp_path / "wh"), path, spec,
+        EngineConfig(politeness=pol, robots=rob, compact_seen_every=2),
+    )
+    seed_i = next(i for i in range(spec.n) if len(C.out_links(i, spec)) >= 4)
+    assert eng.run_job("svc", C.url_of(seed_i, spec), 3)["done"]
+    assert eng.store("svc").read_seen_compact() is not None
+    assert eng.client_payload("svc", 3) == crawl(seed_i, 3, spec, pol, rob).levels_sorted()
+    _check_payloads(eng, "svc")
+    _status_store(spark)  # drain the listener bus
+    ids = {group: set(sc.statusTracker().getJobIdsForGroup(group)) for _, group in calls}
+    jobs: dict = {}
+    for name, group in calls:
+        jobs.setdefault(name, []).append(len(ids[group]))
+    assert jobs["compact_seen"] and all(k == 1 for k in jobs["compact_seen"]), jobs
+    # the compaction's mapInPandas job is a SQL execution's, like a round's
+    compacts = set().union(*(ids[g] for name, g in calls if name == "compact_seen"))
+    assert compacts <= _sql_owned_jobs(spark), compacts
+    assert jobs["client_payload"] == [0], jobs
+    assert jobs["_seed_round"] and all(0 < k <= 2 for k in jobs["_seed_round"]), jobs

@@ -7,7 +7,6 @@ runs as the scan's own splits below that cap; the status store's task
 counts of the stages that ran the pass check it."""
 
 import os
-import re
 
 from distributed_web_crawler_spark.fixtures import corpus as C
 from distributed_web_crawler_spark.operators import components
@@ -51,8 +50,8 @@ def _status_store(spark):
 
 def _page_pass_stage_tasks(spark, after_job: int) -> list:
     """Task counts of the completed stages, of jobs after `after_job`,
-    that run a MapInPandas (the page pass), from the status store's
-    stage data and RDD operation graphs."""
+    that run a MapInPandas (a page pass, or the seen compaction), from
+    the status store's stage data and RDD operation graphs."""
     store = _status_store(spark)
     graph = spark.sparkContext._jvm.org.apache.spark.ui.scope.RDDOperationGraph
     jobs = store.jobsList(None)
@@ -136,6 +135,7 @@ def test_compact_seen_writes_one_file_per_bucket_from_few_tasks(spark, corpus_1k
     live = {r["seen_bucket"] for r in eng.seen_df("cs").select("seen_bucket").distinct().collect()}
     assert len(live) > want_tasks  # several buckets share a task
 
+    before = _last_job(spark)
     assert eng.compact_seen("cs")["compacted"]
     (root,) = eng.store("cs").seen_paths()
     files = {
@@ -145,6 +145,7 @@ def test_compact_seen_writes_one_file_per_bucket_from_few_tasks(spark, corpus_1k
     }
     assert {int(d.split("=")[1]) for d in files} == live
     assert all(len(fs) == 1 for fs in files.values()), files
-    # a part file's name carries the index of the task that wrote it
-    tasks = {int(re.match(r"part-(\d+)-", fs[0]).group(1)) for fs in files.values()}
-    assert tasks <= set(range(want_tasks)), tasks
+    # the compaction is one job whose one stage (a mapInPandas over the
+    # bucket ids) ran the row-sized task count
+    assert _last_job(spark) == before + 1
+    assert _page_pass_stage_tasks(spark, before) == [min(nb, want_tasks)]
